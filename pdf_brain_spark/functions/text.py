@@ -14,12 +14,14 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from pdf_brain_spark.functions.sql import Fragment, sql_ref
+
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def tokenize_sql(col: str) -> str:
+def tokenize_sql(col: str) -> Fragment:
     """Spark-SQL FRAGMENT twin of tokenize() for a column name (or SQL
     fragment). r17 (guide §7.3): building these chains as strings parsed
     JVM-side by F.expr/selectExpr instead of python-lambda Column trees
@@ -27,7 +29,7 @@ def tokenize_sql(col: str) -> str:
     (one `docs.select(tokenize("text"))` measured 0.24 s to CONSTRUCT vs
     0.04 s via expr — the resolved plan is identical, pinned by
     tests/test_r17_optimizations.py)."""
-    return rf"filter(split(lower(trim({col})), '\\s+'), x -> x != '')"
+    return Fragment(rf"filter(split(lower(trim({sql_ref(col)})), '\\s+'), x -> x != '')")
 
 
 def tokenize(text: Column | str) -> Column:
@@ -121,17 +123,18 @@ def quality_score(text: Column | str) -> Column:
     return len_factor * wlen_factor * punct_factor * stop_factor
 
 
-def shingles_sql(tokens: str, k: int = 3) -> str:
+def shingles_sql(tokens: str, k: int = 3) -> Fragment:
     """Spark-SQL FRAGMENT twin of shingles() over a token-array column
     name or SQL fragment (compose with tokenize_sql for the full
     text→k-gram chain in one JVM parse). The fragment duplicates the
     `tokens` subtree exactly as the Column form's expression tree did,
     so the resolved plan is unchanged."""
+    tokens = sql_ref(tokens)
     out = tokens
     for j in range(1, k):
         shifted = f"slice({tokens}, {j + 1}, greatest(size({tokens}) - {j}, 0))"
         out = f"zip_with({out}, {shifted}, (a, b) -> concat(a, ' ', b))"
-    return f"filter({out}, x -> x IS NOT NULL)"
+    return Fragment(f"filter({out}, x -> x IS NOT NULL)")
 
 
 def shingles(tokens: Column | str, k: int = 3) -> Column:
@@ -146,7 +149,7 @@ def shingles(tokens: Column | str, k: int = 3) -> Column:
     row level. Trailing partial shingles become null (concat propagates
     null past the array end) and are filtered.
 
-    A str argument is a SQL FRAGMENT for the token array (usually
+    A str argument is a token-array column name or SQL FRAGMENT (usually
     tokenize_sql(...)) rendered through shingles_sql — one JVM parse
     instead of k+1 python-lambda conversions (r17, guide §7.3);
     identical resolved expressions either way."""

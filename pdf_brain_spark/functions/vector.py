@@ -6,19 +6,31 @@ similarity score with ``score = 1 - distance/2``
 (reference: src/services/LibSQLDatabase.ts:205,332,386-387). We replicate
 those formulas exactly as named expressions so parity is testable.
 
-Everything here is built without Python UDFs. Two expression strategies:
+Everything here is built without Python UDFs, by one renderer that writes
+each expression as a single Spark SQL fragment (functions/sql.py) and hands
+it to one ``F.expr``. A Column tree costs a py4j round trip per node
+(~3,700 for one 64-dim cosine distance); the fragment costs a handful. An
+operand is a column name or a literal vector (a list of floats). The
+fragment has two shapes:
 
-  * higher-order functions (``zip_with``/``aggregate``) when the vector
-    dimension is not statically known — correct everywhere, but Spark
-    evaluates HOF lambdas INTERPRETED (outside whole-stage codegen),
-    ~10-20 µs/row on 64-dim arrays;
-  * unrolled ``element_at`` multiply-add chains when the dimension IS
-    known (``dim=`` kwarg or a literal query vector) — a flat codegen'd
-    arithmetic expression, measured ~4× faster on the exhaustive-scan
-    hot path, which at 100 TB is the difference between the scan being
-    compute-bound and codegen-bound.
+  * dimension known (``dim=`` or a literal operand): a flat left-to-right
+    ``CAST(element_at(`v`, i) AS DOUBLE) * …`` multiply-add chain — codegen'd
+    arithmetic, measured ~4× faster on the exhaustive-scan hot path than
+    the higher-order form, which at 100 TB is the difference between the
+    scan being compute-bound and codegen-bound;
+  * dimension unknown: ``aggregate(zip_with(…))`` — correct for any
+    length, but Spark evaluates HOF lambdas INTERPRETED (outside whole-
+    stage codegen), ~10-20 µs/row on 64-dim arrays.
 
-Both strategies accumulate left-to-right in double precision, so they are
+A literal vector's components are written as double literals: ``repr(x)``
+is the shortest string that parses back to ``x``, and Spark parses it
+(with a ``D`` suffix) back to that same double. Its norm is folded on the
+driver into one constant, with the same left-to-right accumulation and a
+correctly rounded sqrt. Python floats and JVM doubles are the same
+IEEE-754 binary64 operations, so the constant is the value Spark computes
+for that chain, and the scan evaluates the same expression, bit for bit.
+
+Both shapes accumulate left-to-right in double precision, so they are
 bit-identical to each other (FP addition is deterministic for a fixed
 order; the fold's 0.0+x₁ equals x₁ exactly) and to the sequential DuckDB
 oracle fold. Elements are cast to double before multiply/accumulate:
@@ -28,54 +40,112 @@ double-precision oracle.
 
 from __future__ import annotations
 
+import math
+from collections.abc import Sequence
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from pdf_brain_spark.functions.sql import sql_ref
 
-def dot(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
-    """Σ aᵢ·bᵢ in double precision, sequential (deterministic) order."""
-    a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
-    if dim is not None:
+Vec = str | Sequence[float]  # column name, or a literal vector
+
+
+def _double(x: float) -> str:
+    """A double literal that parses back to exactly `x`."""
+    x = float(x)
+    return f"{x!r}D" if math.isfinite(x) else f"CAST('{x}' AS DOUBLE)"
+
+
+def _resolve_dim(dim: int | None, *vecs: Vec) -> int | None:
+    """`dim`, defaulting to the length of the first literal operand; a
+    literal shorter than `dim` is an error, a longer one is used as its
+    `dim`-prefix."""
+    if dim is None:
+        dim = next((len(v) for v in vecs if not isinstance(v, str)), None)
+    for v in vecs:
+        if not isinstance(v, str) and len(v) < dim:
+            raise ValueError(f"literal vector of length {len(v)} is shorter than dim={dim}")
+    return dim
+
+
+def _elem(v: Vec, i: int) -> str:
+    """Component i (0-based) of `v` as a double."""
+    if isinstance(v, str):
+        return f"CAST(element_at({sql_ref(v)}, {i + 1}) AS DOUBLE)"
+    return _double(v[i])
+
+
+def _product(x: str, y: str) -> str:
+    return f"{x} * {y}"
+
+
+def _squared_difference(x: str, y: str) -> str:
+    return f"({x} - {y}) * ({x} - {y})"
+
+
+def _sum_sql(a: Vec, b: Vec, dim: int | None, term) -> str:
+    """Σ term(aᵢ, bᵢ), accumulated left to right in double precision."""
+    if dim is None:
+        t = term("CAST(x AS DOUBLE)", "CAST(y AS DOUBLE)")
+        return (
+            f"aggregate(zip_with({sql_ref(a)}, {sql_ref(b)}, (x, y) -> {t}), "
+            "0.0D, (acc, x) -> acc + x)"
+        )
+    return " + ".join(term(_elem(a, i), _elem(b, i)) for i in range(dim))
+
+
+def _norm_sql(a: Vec, dim: int | None) -> str:
+    if not isinstance(a, str):
         acc = None
-        for i in range(1, dim + 1):
-            term = F.element_at(a, i).cast("double") * F.element_at(b, i).cast("double")
-            acc = term if acc is None else acc + term
-        return acc
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm(a: Column | str, dim: int | None = None) -> Column:
-    """L2 norm ‖a‖ in double precision."""
-    a = F.col(a) if isinstance(a, str) else a
-    if dim is not None:
-        acc = None
-        for i in range(1, dim + 1):
-            x = F.element_at(a, i).cast("double")
-            sq = x * x
+        for x in a[:dim]:
+            sq = float(x) * float(x)
             acc = sq if acc is None else acc + sq
-        return F.sqrt(acc)
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
-    )
+        return _double(math.sqrt(acc))
+    if dim is None:
+        return (
+            f"sqrt(aggregate({sql_ref(a)}, 0.0D, "
+            "(acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+        )
+    return f"sqrt({_sum_sql(a, a, dim, _product)})"
 
 
-def cosine_similarity(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
-    return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
+def _cosine_similarity_sql(a: Vec, b: Vec, dim: int | None) -> str:
+    dim = _resolve_dim(dim, a, b)
+    return f"({_sum_sql(a, b, dim, _product)}) / ({_norm_sql(a, dim)} * {_norm_sql(b, dim)})"
 
 
-def cosine_distance(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
+def _cosine_distance_sql(a: Vec, b: Vec, dim: int | None) -> str:
+    return f"1.0D - {_cosine_similarity_sql(a, b, dim)}"
+
+
+def _score_sql(distance: str) -> str:
+    return f"1.0D - {distance} / 2.0D"
+
+
+def dot(a: Vec, b: Vec, dim: int | None = None) -> Column:
+    """Σ aᵢ·bᵢ in double precision, sequential (deterministic) order."""
+    return F.expr(_sum_sql(a, b, _resolve_dim(dim, a, b), _product))
+
+
+def norm(a: Vec, dim: int | None = None) -> Column:
+    """L2 norm ‖a‖ in double precision."""
+    return F.expr(_norm_sql(a, _resolve_dim(dim, a)))
+
+
+def cosine_similarity(a: Vec, b: Vec, dim: int | None = None) -> Column:
+    return F.expr(_cosine_similarity_sql(a, b, dim))
+
+
+def cosine_distance(a: Vec, b: Vec, dim: int | None = None) -> Column:
     """libSQL ``vector_distance_cos`` semantics: 1 - cos_sim, range [0, 2]."""
-    return F.lit(1.0) - cosine_similarity(a, b, dim)
+    return F.expr(_cosine_distance_sql(a, b, dim))
 
 
-def distance_to_score(distance: Column) -> Column:
-    """Reference score mapping: ``score = 1 - distance/2`` ∈ [0, 1]
-    (LibSQLDatabase.ts:386-387)."""
-    return F.lit(1.0) - distance / F.lit(2.0)
+def distance_to_score(distance: str) -> Column:
+    """Reference score mapping over the `distance` column: ``score = 1 -
+    distance/2`` ∈ [0, 1] (LibSQLDatabase.ts:386-387)."""
+    return F.expr(_score_sql(sql_ref(distance)))
 
 
 def score_threshold_to_distance(threshold: float) -> float:
@@ -85,35 +155,21 @@ def score_threshold_to_distance(threshold: float) -> float:
     return 2.0 * (1.0 - threshold)
 
 
-def similarity_score(a: Column | str, b: Column | str) -> Column:
+def similarity_score(a: Vec, b: Vec, dim: int | None = None) -> Column:
     """End-to-end score = 1 - cos_distance/2 = (1 + cos_sim)/2."""
-    return distance_to_score(cosine_distance(a, b))
+    return F.expr(_score_sql(f"({_cosine_distance_sql(a, b, dim)})"))
 
 
-def euclidean_distance(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
+def euclidean_distance(a: Vec, b: Vec, dim: int | None = None) -> Column:
     """√Σ(aᵢ-bᵢ)² (reference Clustering.ts:189-191)."""
-    a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
-    if dim is not None:
-        acc = None
-        for i in range(1, dim + 1):
-            d = F.element_at(a, i).cast("double") - F.element_at(b, i).cast("double")
-            sq = d * d
-            acc = sq if acc is None else acc + sq
-        return F.sqrt(acc)
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
+    return F.expr(f"sqrt({_sum_sql(a, b, _resolve_dim(dim, a, b), _squared_difference)})")
 
 
-def is_valid_embedding(a: Column | str, dim: int) -> Column:
+def is_valid_embedding(a: str, dim: int) -> Column:
     """Embedding validation gate (reference Ollama.ts:70-106): correct
     dimension and every component finite."""
-    a = F.col(a) if isinstance(a, str) else a
-    return (
-        (F.size(a) == dim)
-        & ~F.exists(a, lambda x: F.isnan(x) | (F.abs(x) == F.lit(float("inf"))))
+    a = sql_ref(a)
+    return F.expr(
+        f"size({a}) = {dim} AND NOT exists({a}, "
+        "x -> isnan(x) OR abs(x) = CAST('Infinity' AS DOUBLE))"
     )

@@ -2439,13 +2439,13 @@ def multiscale_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = label_centroids(emb)
     sum_hits = (
         cents.crossJoin(F.broadcast(qdf))
-        .withColumn("distance", cosine_distance(F.col("centroid"), F.col("query_vec")))
+        .withColumn("distance", cosine_distance("centroid", "query_vec"))
         .orderBy(F.col("distance").asc(), F.col("label").asc())
         .limit(3)
         .select(
             F.col("label").cast("long").alias("entity_id"),
             F.lit("cluster_summary").alias("granularity"),
-            F.round(distance_to_score(F.col("distance")), 6).alias("score"),
+            F.round(distance_to_score("distance"), 6).alias("score"),
         )
     )
     return (
@@ -2494,7 +2494,7 @@ def cluster_concept_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     crossed = (
         a.crossJoin(F.broadcast(b))
         .filter(F.col("cluster_id") != F.col("concept_id"))
-        .withColumn("sim", cosine_similarity(F.col("centroid"), F.col("c_emb")))
+        .withColumn("sim", cosine_similarity("centroid", "c_emb"))
     )
     w = Window.partitionBy("cluster_id").orderBy(F.col("sim").desc(), F.col("concept_id").asc())
     return (

@@ -2170,7 +2170,7 @@ def rag_concept_context(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").cast("long").alias("concept_id"), F.col("centroid")
     )
     scored = queries_.crossJoin(F.broadcast(concepts)).withColumn(
-        "sim", cosine_similarity(F.col("centroid"), F.col("qv"))
+        "sim", cosine_similarity("centroid", "qv")
     )
     w = Window.partitionBy("doc_id").orderBy(F.col("sim").desc(), F.col("concept_id").asc())
     return (
@@ -2711,7 +2711,7 @@ def grouped_topk_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("query_vec"))
     )
     scored = emb.crossJoin(qvec).select(
-        "label", "vec_id", cosine_distance(F.col("embedding"), F.col("query_vec")).alias("d")
+        "label", "vec_id", cosine_distance("embedding", "query_vec").alias("d")
     )
     w = Window.partitionBy("label").orderBy(F.col("d").asc(), F.col("vec_id").asc())
     return (

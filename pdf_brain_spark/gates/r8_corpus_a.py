@@ -710,10 +710,10 @@ def matryoshka_truncation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlap for a pinned query between prefix-cosine and full-cosine
     ranking, the metric that decides whether serving can run truncated
     vectors at 1/8 the scan bytes. Prefix math reuses the deterministic
-    left-to-right dot/norm kernels (functions/vector.py) with dim=d —
+    left-to-right cosine/norm kernels (functions/vector.py) with dim=d —
     NO slicing or copying of the arrays, the same plan a production
     truncated-serving path would run."""
-    from pdf_brain_spark.functions.vector import dot, norm
+    from pdf_brain_spark.functions.vector import cosine_similarity, norm
 
     emb = load_table(spark, "embeddings", sf_dir)
     qvec = [
@@ -723,10 +723,7 @@ def matryoshka_truncation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     dims = [8, 16, 32, full_dim]
 
     def top10(d):
-        qlit = F.array(*[F.lit(x) for x in qvec])
-        cos = dot(F.col("embedding"), qlit, dim=d) / (
-            norm(F.col("embedding"), dim=d) * norm(qlit, dim=d)
-        )
+        cos = cosine_similarity("embedding", qvec, dim=d)
         return (
             emb.filter(F.col("vec_id") != 0)
             .select("vec_id", cos.alias("cos"))
@@ -740,8 +737,8 @@ def matryoshka_truncation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     for d in dims:
         frac_ppm = F.round(
             F.lit(1_000_000.0)
-            * norm(F.col("embedding"), dim=d)
-            / norm(F.col("embedding"), dim=full_dim)
+            * norm("embedding", dim=d)
+            / norm("embedding", dim=full_dim)
         ).cast("long")
         energy = emb.agg(
             F.round(
@@ -1155,7 +1152,7 @@ def semdedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("a_id") < F.col("b_id"))
         .select(
             F.col("b_id").alias("vec_id"),
-            cosine_similarity(F.col("a_emb"), F.col("b_emb")).alias("cos"),
+            cosine_similarity("a_emb", "b_emb").alias("cos"),
         )
     )
     dups = (
@@ -1592,7 +1589,6 @@ def prefiltered_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qvec = [
         float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]
     ]
-    qlit = F.array(*[F.lit(x) for x in qvec])
     filtered = emb.filter(F.col("label").isin([1, 3, 5]) & (F.col("vec_id") != 0))
     from pyspark.sql import Window
 
@@ -1602,7 +1598,7 @@ def prefiltered_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         filtered.select(
             "vec_id",
             F.col("label").cast("int").alias("label"),
-            cosine_similarity(F.col("embedding"), qlit).alias("cos"),
+            cosine_similarity("embedding", qvec).alias("cos"),
         )
         .orderBy(F.col("cos").desc(), F.col("vec_id").asc())
         .limit(20)

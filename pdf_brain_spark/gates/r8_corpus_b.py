@@ -2995,7 +2995,7 @@ def retrieval_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qid",
             "vec_id",
             F.when(F.col("label") == F.col("ql"), 1).otherwise(0).alias("rel"),
-            cosine_distance(F.col("embedding"), F.col("qv")).alias("d"),
+            cosine_distance("embedding", "qv").alias("d"),
         )
         .localCheckpoint(eager=True)  # nrel + the rank window reuse it
     )
@@ -3301,7 +3301,7 @@ def cosine_label_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = a.join(b, F.col("va") < F.col("vb")).select(
         F.when(F.col("la") == F.col("lb"), 1).otherwise(0).alias("same"),
-        cosine_similarity(F.col("ea"), F.col("eb")).alias("cos"),
+        cosine_similarity("ea", "eb").alias("cos"),
     )
     binned = pairs.select(
         F.least(
@@ -4536,7 +4536,7 @@ def knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "true_label",
             "vec_id",
             "label",
-            cosine_distance(F.col("embedding"), F.col("qv")).alias("d"),
+            cosine_distance("embedding", "qv").alias("d"),
         )
         .localCheckpoint(eager=True)
     )

@@ -881,7 +881,7 @@ def ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)  # bounded: one row per label
     )
     w_assign = Window.partitionBy("vec_id").orderBy(
-        euclidean_distance(F.col("embedding"), F.col("centroid")).asc(),
+        euclidean_distance("embedding", "centroid").asc(),
         F.col("clabel").asc(),
     )
     assign = (
@@ -895,7 +895,7 @@ def ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
     w_probe = Window.partitionBy("query_id").orderBy(
-        euclidean_distance(F.col("qv"), F.col("centroid")).asc(),
+        euclidean_distance("qv", "centroid").asc(),
         F.col("clabel").asc(),
     )
     pr = (
@@ -907,7 +907,7 @@ def ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     w_exact = Window.partitionBy("query_id").orderBy(
-        cosine_distance(F.col("embedding"), F.col("qv")).asc(),
+        cosine_distance("embedding", "qv").asc(),
         F.col("vec_id").asc(),
     )
     exact10 = (

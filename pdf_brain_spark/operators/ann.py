@@ -85,7 +85,7 @@ def label_ivf_index(
         "list_id int, _clabel int, _cent array<double>",
     )
     w = Window.partitionBy(id_col).orderBy(
-        euclidean_distance(F.col(vec_col), F.col("_cent")).asc(),
+        euclidean_distance(vec_col, "_cent").asc(),
         F.col("_clabel").asc(),
     )
     indexed = (
@@ -114,12 +114,11 @@ def ivf_search(
     q = np.asarray(query_vec, dtype=np.float64)
     cents = np.asarray(centroids, dtype=np.float64)
     sims = cents @ q / (np.linalg.norm(cents, axis=1) * np.linalg.norm(q) + 1e-12)
-    probe_ids = [int(i) for i in np.argsort(-sims)[:n_probes]]
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec])
+    probe_ids = ", ".join(str(int(i)) for i in np.argsort(-sims)[:n_probes])
     return (
-        indexed.filter(F.col("list_id").isin(probe_ids))
-        .withColumn("distance", cosine_distance(F.col(vec_col), qcol, len(query_vec)))
-        .withColumn("score", distance_to_score(F.col("distance")))
+        indexed.filter(F.expr(f"list_id IN ({probe_ids})"))
+        .withColumn("distance", cosine_distance(vec_col, query_vec))
+        .withColumn("score", distance_to_score("distance"))
         .orderBy(F.col("distance").asc(), F.col(id_col).asc())
         .limit(k)
     )
@@ -172,11 +171,10 @@ def lsh_search(
     planes = _hyperplanes(dim, n_planes, seed)
     q = np.asarray(query_vec, dtype=np.float64)
     qbucket = int(sum((1 << i) for i, h in enumerate(planes) if float(h @ q) > 0))
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
         sketched.filter(F.bit_count(F.col("bucket").bitwiseXOR(F.lit(qbucket))) <= max_hamming)
-        .withColumn("distance", cosine_distance(F.col(vec_col), qcol, len(query_vec)))
-        .withColumn("score", distance_to_score(F.col("distance")))
+        .withColumn("distance", cosine_distance(vec_col, query_vec))
+        .withColumn("score", distance_to_score("distance"))
         .orderBy(F.col("distance").asc(), F.col(id_col).asc())
         .limit(k)
     )
@@ -258,7 +256,7 @@ def ivf_search_topk_batch(
     return (
         partials.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .withColumn("score", distance_to_score(F.col("distance")))
+        .withColumn("score", distance_to_score("distance"))
     )
 
 

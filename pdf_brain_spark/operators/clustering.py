@@ -423,7 +423,7 @@ def nearest_concept(
     from pdf_brain_spark.functions.vector import cosine_similarity
 
     crossed = centroids_df.crossJoin(F.broadcast(concepts)).withColumn(
-        "sim", cosine_similarity(F.col(cent_col), F.col(concept_vec_col))
+        "sim", cosine_similarity(cent_col, concept_vec_col)
     )
     w = Window.partitionBy("cluster_id").orderBy(F.col("sim").desc())
     return (
@@ -700,6 +700,12 @@ def assign_stats_exact_int(
     dim = len(cmat[0])
     comp_bound = math.isqrt((1 << 51) // dim)
     c_np_src = [list(c) for c in cmat]
+    if max(abs(int(x)) for c in c_np_src for x in c) >= comp_bound:
+        raise ValueError(
+            f"assign_stats_exact_int: centroid |component| >= "
+            f"sqrt(2^51/dim) = {comp_bound} (dim={dim}) breaks "
+            "the float64-exact distance contract; lower the scale"
+        )
 
     def fn(it):
         c_np = np.array(c_np_src, dtype=np.float64)

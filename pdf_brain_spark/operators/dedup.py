@@ -29,13 +29,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdf_brain_spark.functions.sql import sql_ref
 from pdf_brain_spark.functions.text import (
     md5_long,
     shingles,
     tokenize,
     tokenize_sql,
 )
-from pdf_brain_spark.functions.vector import cosine_similarity
 
 # Shingles shared by more than this many DISTINCT contents are dropped from
 # the inverted index: a stop-shingle shared by m docs emits m²/2 pairs, so
@@ -420,11 +420,11 @@ def minhash_signatures_from_sets(
     tests/test_r17_optimizations.py. Same-session A/B: signature plan
     construction 0.23-0.28 → 0.04-0.05 s."""
     base = (
-        f"transform({set_col}, "
+        f"transform({sql_ref(set_col)}, "
         "s -> CAST(conv(substring(md5(s), 1, 7), 16, 10) AS BIGINT))"
     )
-    d = sets.selectExpr(id_col, f"{base} AS _bases")
-    exprs = [id_col]
+    d = sets.selectExpr(sql_ref(id_col), f"{base} AS _bases")
+    exprs = [sql_ref(id_col)]
     for j in range(MINHASH_HASHES):
         a, b = _minhash_coeffs(j)
         exprs.append(

@@ -247,7 +247,7 @@ def pq_topk_adc_rerank(
     scored = (
         cand.join(vectors.select(id_col, vec_col), id_col)
         .join(F.broadcast(queries.select(query_id, query_col)), query_id)
-        .withColumn("distance", cosine_distance(F.col(vec_col), F.col(query_col)))
+        .withColumn("distance", cosine_distance(vec_col, query_col))
         .drop(vec_col, query_col)
     )
     w = Window.partitionBy(query_id).orderBy(F.col("distance").asc(), F.col(id_col).asc())
@@ -771,7 +771,7 @@ def ivfpq_topk_exact_rerank_residual(
     withv = emb.select(id_col, vec_col).join(F.broadcast(cand), id_col)
     scored = (
         withv.join(F.broadcast(queries.select(query_id, query_col)), query_id)
-        .withColumn("distance", cosine_distance(F.col(vec_col), F.col(query_col)))
+        .withColumn("distance", cosine_distance(vec_col, query_col))
     )
     w = Window.partitionBy(query_id).orderBy(F.col("distance").asc(), F.col(id_col).asc())
     return (
@@ -900,16 +900,15 @@ def hamming_rerank_topk(
         .orderBy(F.col("hamming_dist").asc(), F.col(id_col).asc())
         .limit(n_candidates)
     )
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec])
     w = Window.orderBy(F.col("distance").asc(), F.col(id_col).asc())
     return (
-        cands.withColumn("distance", cosine_distance(F.col(vec_col), qcol, len(query_vec)))
+        cands.withColumn("distance", cosine_distance(vec_col, query_vec))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
             id_col,
             "hamming_dist",
-            F.round(distance_to_score(F.col("distance")), 6).alias("score"),
+            F.round(distance_to_score("distance"), 6).alias("score"),
             "rank",
         )
     )
@@ -1023,7 +1022,7 @@ def hamming_rerank_topk_batch(
     )
     return (
         with_vecs.withColumn(
-            "distance", cosine_distance(F.col(vec_col), F.col(query_col), dim)
+            "distance", cosine_distance(vec_col, query_col, dim)
         )
         .withColumn("rank", F.row_number().over(wr))
         .filter(F.col("rank") <= k)
@@ -1031,7 +1030,7 @@ def hamming_rerank_topk_batch(
             query_id,
             id_col,
             "hamming_dist",
-            F.round(distance_to_score(F.col("distance")), 6).alias("score"),
+            F.round(distance_to_score("distance"), 6).alias("score"),
             "rank",
         )
     )

@@ -49,12 +49,12 @@ def topk_by_query_df(
     """
     q = F.broadcast(query)
     scored = vectors.crossJoin(q).withColumn(
-        "distance", cosine_distance(F.col(vec_col), F.col(query_col))
+        "distance", cosine_distance(vec_col, query_col)
     )
     if threshold is not None:
         scored = scored.filter(F.col("distance") <= F.lit(score_threshold_to_distance(threshold)))
     return (
-        scored.withColumn("score", distance_to_score(F.col("distance")))
+        scored.withColumn("score", distance_to_score("distance"))
         .drop(query_col)
         .orderBy(F.col("distance").asc(), F.col("vec_id").asc())
         .limit(k)
@@ -63,7 +63,7 @@ def topk_by_query_df(
 
 def topk(
     vectors: DataFrame,
-    query_vec: list[float] | Column,
+    query_vec: list[float],
     k: int = 10,
     vec_col: str = "embedding",
     threshold: float | None = None,
@@ -71,18 +71,13 @@ def topk(
 ) -> DataFrame:
     """Exact cosine top-k against a literal query vector, with the
     reference's over-fetch-then-post-filter semantics when `post_filter`
-    is given (fetch k×3 candidates, filter, re-limit to k)."""
-    if isinstance(query_vec, list):
-        qcol = F.array(*[F.lit(float(x)) for x in query_vec])
-        # literal query ⇒ dimension statically known ⇒ unrolled codegen'd
-        # multiply-add chain instead of interpreted HOF (~4× on the scan)
-        dim = len(query_vec)
-    else:
-        qcol, dim = query_vec, None
-    scored = vectors.withColumn("distance", cosine_distance(F.col(vec_col), qcol, dim))
+    is given (fetch k×3 candidates, filter, re-limit to k). A literal
+    query has a known dimension: the score is the unrolled codegen'd
+    multiply-add chain with the query norm folded to one constant."""
+    scored = vectors.withColumn("distance", cosine_distance(vec_col, query_vec))
     if threshold is not None:
         scored = scored.filter(F.col("distance") <= F.lit(score_threshold_to_distance(threshold)))
-    scored = scored.withColumn("score", distance_to_score(F.col("distance")))
+    scored = scored.withColumn("score", distance_to_score("distance"))
     # vec_id tiebreaker everywhere: tied distances must select the same
     # candidate set as the oracle's ORDER BY d, vec_id
     if post_filter is not None:
@@ -120,8 +115,8 @@ def similarity_join(
 
     scored = (
         vectors.crossJoin(F.broadcast(queries))
-        .withColumn("distance", cosine_distance(F.col(vec_col), F.col(query_col)))
-        .withColumn("score", distance_to_score(F.col("distance")))
+        .withColumn("distance", cosine_distance(vec_col, query_col))
+        .withColumn("score", distance_to_score("distance"))
         .drop(query_col, vec_col)
     )
     w = Window.partitionBy(query_id).orderBy(F.col("distance").asc(), F.col("vec_id").asc())
@@ -308,7 +303,7 @@ def similarity_join_topk(
     return (
         partials.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .withColumn("score", distance_to_score(F.col("distance")))
+        .withColumn("score", distance_to_score("distance"))
     )
 
 
@@ -542,8 +537,8 @@ def hard_negatives(
     scored = (
         vectors.crossJoin(F.broadcast(anchors))
         .filter(F.col(id_col) != F.col(anchor_id))
-        .withColumn("distance", cosine_distance(F.col(vec_col), F.col(anchor_col)))
-        .withColumn("score", F.round(distance_to_score(F.col("distance")), 6))
+        .withColumn("distance", cosine_distance(vec_col, anchor_col))
+        .withColumn("score", F.round(distance_to_score("distance"), 6))
         .filter(F.col("score") < F.lit(float(dup_threshold)))
         .drop(anchor_col, vec_col)
     )

@@ -90,31 +90,17 @@ def ivf_search_persisted(
     """IVF top-k against the PERSISTED streaming-maintained index: read
     the accumulated batch generations as one partitioned table, prune to
     the probed lists (PartitionFilter on list_id across every batch_id
-    subdir), exact cosine re-rank inside. Mirrors operators/ann.py::
-    ivf_search but from storage instead of an in-memory DataFrame; the
-    tie-break orders on `id_col`, whatever the persisted id column is
-    named."""
-    import numpy as np
-
-    from pdf_brain_spark.functions.vector import cosine_distance, distance_to_score
+    subdir), exact cosine re-rank inside: operators/ann.py::ivf_search
+    over storage instead of an in-memory DataFrame; the tie-break orders
+    on `id_col`, whatever the persisted id column is named."""
+    from pdf_brain_spark.operators.ann import ivf_search
     from pdf_brain_spark.streaming.generations import kept_index_rows
 
-    q = np.asarray(query_vec, dtype=np.float64)
-    cents = np.asarray(centroids, dtype=np.float64)
-    sims = cents @ q / (np.linalg.norm(cents, axis=1) * np.linalg.norm(q) + 1e-12)
-    probe_ids = [int(i) for i in np.argsort(-sims)[:n_probes]]
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec])
     # live generations minus tombstoned vectors (generation protocol):
     # safe to search mid-compaction, after a compactor crash, and after
     # deletions (delete_vectors) that have not yet been materialized
     indexed = kept_index_rows(spark, index_dir, [id_col])
-    return (
-        indexed.filter(F.col("list_id").isin(probe_ids))
-        .withColumn("distance", cosine_distance(F.col(vec_col), qcol, len(query_vec)))
-        .withColumn("score", distance_to_score(F.col("distance")))
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    return ivf_search(indexed, centroids, query_vec, k, n_probes, vec_col, id_col)
 
 
 def compact_ann_index(

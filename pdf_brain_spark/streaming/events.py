@@ -2180,7 +2180,7 @@ def make_novelty_batch_fn(
     """Per-micro-batch first-seen partial: each 4-gram type in the batch
     with the batch id and the min doc id that carried it, replay-
     idempotent (batch_id=N overwrite)."""
-    from pdf_brain_spark.functions.text import shingles, tokenize, tokenize_sql
+    from pdf_brain_spark.functions.text import shingles, tokenize_sql
 
     def _each_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -2188,9 +2188,7 @@ def make_novelty_batch_fn(
         partial = (
             batch_df.select(
                 F.col(id_col).alias("_id"),
-                F.explode(
-                    shingles(tokenize(F.col(text_col)), NOVELTY_NGRAM_K)
-                ).alias("ng"),
+                F.explode(shingles(tokenize_sql(text_col), NOVELTY_NGRAM_K)).alias("ng"),
             )
             .groupBy("ng")
             .agg(F.min("_id").cast("long").alias("fd"))

@@ -129,6 +129,19 @@ def test_assign_stats_bound_guard(spark):
         assign_stats_exact_int(q, [[0, 0], [1, 1]]).collect()
 
 
+def test_assign_stats_centroid_bound_guard(spark):
+    """An out-of-bound CENTROID component raises by name when the plan is
+    built, before any row is read."""
+    import math
+
+    from pdf_brain_spark.operators.clustering import assign_stats_exact_int
+
+    bound = math.isqrt((1 << 51) // 2)
+    q = spark.createDataFrame([(0, [1, 0])], "vec_id long, q array<long>")
+    with pytest.raises(ValueError, match="centroid .*float64-exact"):
+        assign_stats_exact_int(q, [[0, 0], [-bound, 1]])
+
+
 def test_minhash_signatures_exprstr_matches_lambda_form(spark):
     """The selectExpr string form of minhash_signatures_from_sets must
     reproduce the former python-lambda Column construction exactly."""

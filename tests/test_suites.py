@@ -57,7 +57,7 @@ def test_reattest_picks_match_seed_rule():
         _reattest_picks,
     )
 
-    assert REATTEST == _reattest_picks(REATTEST_ROUND, N_REATTEST) if N_REATTEST else REATTEST == []
+    assert REATTEST == (_reattest_picks(REATTEST_ROUND, N_REATTEST) if N_REATTEST else [])
     # r17: the 9-slot tail is ENTIRELY changed-plan slots (VERDICT r16
     # item 8 — the r16 optimization round's DAG-changed gates take
     # precedence over the re-attest pool), so the re-attest pick is
