@@ -22,8 +22,8 @@ def _c(col: Column | str) -> Column:
 
 
 def tokenize_sql(col: str) -> Fragment:
-    """Spark-SQL FRAGMENT twin of tokenize() for a column name (or SQL
-    fragment). r17 (guide §7.3): building these chains as strings parsed
+    """Spark-SQL FRAGMENT twin of tokenize() for a column name or a
+    `Fragment` (a plain str is quoted as one identifier). r17 (guide §7.3): building these chains as strings parsed
     JVM-side by F.expr/selectExpr instead of python-lambda Column trees
     cuts the py4j chatter that dominated gate plan-construction time
     (one `docs.select(tokenize("text"))` measured 0.24 s to CONSTRUCT vs
@@ -125,7 +125,7 @@ def quality_score(text: Column | str) -> Column:
 
 def shingles_sql(tokens: str, k: int = 3) -> Fragment:
     """Spark-SQL FRAGMENT twin of shingles() over a token-array column
-    name or SQL fragment (compose with tokenize_sql for the full
+    name or a `Fragment` (compose with tokenize_sql for the full
     text→k-gram chain in one JVM parse). The fragment duplicates the
     `tokens` subtree exactly as the Column form's expression tree did,
     so the resolved plan is unchanged."""

@@ -123,11 +123,6 @@ def _score_sql(distance: str) -> str:
     return f"1.0D - {distance} / 2.0D"
 
 
-def dot(a: Vec, b: Vec, dim: int | None = None) -> Column:
-    """Σ aᵢ·bᵢ in double precision, sequential (deterministic) order."""
-    return F.expr(_sum_sql(a, b, _resolve_dim(dim, a, b), _product))
-
-
 def norm(a: Vec, dim: int | None = None) -> Column:
     """L2 norm ‖a‖ in double precision."""
     return F.expr(_norm_sql(a, _resolve_dim(dim, a)))
@@ -155,9 +150,9 @@ def score_threshold_to_distance(threshold: float) -> float:
     return 2.0 * (1.0 - threshold)
 
 
-def similarity_score(a: Vec, b: Vec, dim: int | None = None) -> Column:
+def similarity_score(a: Vec, b: Vec) -> Column:
     """End-to-end score = 1 - cos_distance/2 = (1 + cos_sim)/2."""
-    return F.expr(_score_sql(f"({_cosine_distance_sql(a, b, dim)})"))
+    return F.expr(_score_sql(f"({_cosine_distance_sql(a, b, None)})"))
 
 
 def euclidean_distance(a: Vec, b: Vec, dim: int | None = None) -> Column:

@@ -442,10 +442,10 @@ def quantized_d2(vec_col, const: list[int]):
 
     Stays inside whole-stage codegen: zip_with squared diffs + an
     integer fold, no UDF. (r16 A/B: an unrolled element_at multiply-add
-    chain — the functions/vector.py dot() precedent — was tried and
+    chain — the functions/vector.py known-dimension form — was tried and
     REJECTED: at k=8 consumers per row the 512-node expression tree
     more than doubled the gates that use it, kmeans_clusters 2.26 →
-    5.31 s warm min; the dot() unroll wins only for a FEW instances of
+    5.31 s warm min; the unroll wins only for a FEW instances of
     a dim-sized chain, not k-per-row fan-outs.)"""
     col = vec_col if not isinstance(vec_col, str) else F.col(vec_col)
     return F.aggregate(

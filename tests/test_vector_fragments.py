@@ -9,6 +9,7 @@ the (distance, vec_id) order. Every comparison is exact — no tolerance.
 
 from __future__ import annotations
 
+import gc
 import math
 
 import numpy as np
@@ -202,9 +203,14 @@ def test_topk_build_chatter_guard(spark, corpus):
         calls += 1
         return send(*args, **kwargs)
 
+    # py4j releases collected JavaObjects with commands of its own; keep
+    # the collector from sending them while the count runs.
+    gc.collect()
+    gc.disable()
     client.send_command = counting_send
     try:
         topk(emb, q, k=10)
     finally:
         del client.send_command
+        gc.enable()
     assert calls <= 100, calls
