@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_brain_spark.functions.guards import bounded_axis  # noqa: F401
+from pdf_brain_spark.functions.sql import Fragment
+from pdf_brain_spark.functions.text import md5_long
 from pdf_brain_spark.registry import (  # noqa: F401
     CONSOLIDATED,
     ORACLES,
@@ -1857,11 +1859,7 @@ def split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_brain_spark.functions.text import shingles, tokenize, tokenize_sql
 
     docs = load_table(spark, "documents", sf_dir)
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = md5_long(Fragment("CAST(doc_id AS STRING)"), 4) % 100
     grams = docs.select(
         "doc_id",
         bucket.alias("_b"),
@@ -2122,12 +2120,8 @@ def aqp_sum_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (keyed on the row id, not values) — unbiased for any value column,
     identical membership on every engine."""
     li = load_table(spark, "lineitem", sf_dir)
-    key = F.concat(
-        F.col("l_orderkey").cast("string"), F.lit("-"), F.col("l_linenumber").cast("string")
-    )
-    in_sample = (
-        F.conv(F.substring(F.md5(key), 1, 4), 16, 10).cast("long") % 100 < 10
-    )
+    key = Fragment("concat(CAST(l_orderkey AS STRING), '-', CAST(l_linenumber AS STRING))")
+    in_sample = md5_long(key, 4) % 100 < 10
     cents = F.round(F.col("l_extendedprice") * 100).cast("long")
     agg = li.select(in_sample.alias("_s"), cents.alias("_c")).agg(
         F.sum(F.when(F.col("_s"), F.col("_c")).otherwise(F.lit(0))).alias("_sc"),

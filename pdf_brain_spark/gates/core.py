@@ -637,17 +637,17 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         stopword_hits,
         subword_token_count,
         tokenize,
+        tokenize_sql,
     )
 
     docs = load_table(spark, "documents", sf_dir)
-    toks = tokenize("text")
     return (
         docs.select(
             "doc_id",
             "lang",
-            F.size(toks).alias("n_tokens"),
+            F.size(tokenize("text")).alias("n_tokens"),
             F.round(punct_ratio("text"), 6).alias("punct_ratio"),
-            stopword_hits(toks, "en").alias("en_stopwords"),
+            stopword_hits(tokenize_sql("text"), "en").alias("en_stopwords"),
             subword_token_count("text").alias("subword_tokens"),
             F.ceil(F.length("text") / 4.0).cast("long").alias("chars4_estimate"),
         )

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_brain_spark.functions.guards import bounded_axis  # noqa: F401
+from pdf_brain_spark.functions.sql import Fragment
+from pdf_brain_spark.functions.text import md5_long
 from pdf_brain_spark.registry import (  # noqa: F401
     CONSOLIDATED,
     ORACLES,
@@ -2486,11 +2488,7 @@ def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-shards (a row's split never depends on what else is in the corpus),
     which is the property a 100 TB training pipeline needs."""
     docs = load_table(spark, "documents", sf_dir)
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = md5_long(Fragment("CAST(doc_id AS STRING)"), 4) % 100
     split = (
         F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
     )
@@ -2564,11 +2562,7 @@ def corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(quality_score("text") < 0.35, "low_quality")
         .otherwise("kept")
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = md5_long(Fragment("CAST(doc_id AS STRING)"), 4) % 100
     split = F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
     return (
         docs.select(split.alias("split"), reason.alias("reason"), "doc_id")
@@ -3319,11 +3313,7 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_brain_spark.functions.text import tokenize
 
     docs = load_table(spark, "documents", sf_dir)
-    shard = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long")
-        % 8
-    )
+    shard = md5_long(Fragment("CAST(doc_id AS STRING)"), 4) % 8
     n_tok = F.size(tokenize("text"))
     toks = docs.select("doc_id", shard.alias("shard"), n_tok.alias("n_tok"))
     w = (
@@ -3381,11 +3371,7 @@ def domain_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     weight = 1.0 / (
         1 + F.substring(F.col("source"), 4, 10).cast("long") % 4
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long")
-        % 1000
-    )
+    bucket = md5_long(Fragment("CAST(doc_id AS STRING)"), 4) % 1000
     keep = F.when(bucket < weight * 1000, 1).otherwise(0)
     return (
         docs.select("doc_id", "source", weight.alias("weight"), keep.alias("_keep"))

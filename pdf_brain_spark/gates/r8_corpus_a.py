@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_brain_spark.functions.guards import bounded_axis  # noqa: F401
+from pdf_brain_spark.functions.sql import Fragment
+from pdf_brain_spark.functions.text import md5_long
 from pdf_brain_spark.registry import (  # noqa: F401
     CONSOLIDATED,
     ORACLES,
@@ -841,7 +843,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     needed."""
     from pyspark.sql import Window
 
-    from pdf_brain_spark.functions.text import md5_long, tokenize
+    from pdf_brain_spark.functions.text import tokenize
 
     docs = load_table(spark, "documents", sf_dir)
     hashed = docs.select(
@@ -1513,11 +1515,9 @@ def kmv_distinct_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-shuffles the world."""
     from pyspark.sql import Window
 
-    from pdf_brain_spark.functions.text import md5_long
-
     ev = load_table(spark, "events", sf_dir)
     hashed = ev.select(
-        "event_type", md5_long(F.col("user_id").cast("string")).alias("h")
+        "event_type", md5_long(Fragment("CAST(user_id AS STRING)")).alias("h")
     ).distinct()
     w = Window.partitionBy("event_type").orderBy(F.col("h").asc())
     ranked = hashed.withColumn("rn", F.row_number().over(w))
@@ -3552,7 +3552,7 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     toks = docs.select("doc_id", tokenize("text").alias("tokens"))
     grams = toks.select(
-        "doc_id", F.explode(shingles(F.col("tokens"), 3)).alias("term")
+        "doc_id", F.explode(shingles("tokens", 3)).alias("term")
     )
     tf = grams.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     stats = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_brain_spark.functions.guards import bounded_axis  # noqa: F401
+from pdf_brain_spark.functions.sql import Fragment
+from pdf_brain_spark.functions.text import md5_long
 from pdf_brain_spark.registry import (  # noqa: F401
     CONSOLIDATED,
     ORACLES,
@@ -1187,8 +1189,6 @@ def bloom_semijoin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     build = one tiny shuffle to 128 words, broadcast everywhere; probe
     = map-only + broadcast join — the shape that turns a 100 TB
     shuffled semi-join into a scan-side filter."""
-    from pdf_brain_spark.functions.text import md5_long
-
     orders = load_table(spark, "orders", sf_dir)
     cust = load_table(spark, "customer", sf_dir)
     buyers = (
@@ -1204,11 +1204,7 @@ def bloom_semijoin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         return df.crossJoin(F.broadcast(i3)).select(
             "k",
             (
-                md5_long(
-                    F.concat(
-                        F.col("k").cast("string"), F.lit("#"), F.col("i").cast("string")
-                    )
-                )
+                md5_long(Fragment("concat(CAST(k AS STRING), '#', CAST(i AS STRING))"))
                 % 4096
             ).alias("p"),
         )
@@ -2043,11 +2039,9 @@ def stratified_kfold_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the law of large numbers, not construction, so the report is the
     evidence). Fold assignment is a map-only projection any engine
     reproduces; one cell-grain aggregate + broadcast fold totals."""
-    from pdf_brain_spark.functions.text import md5_long
-
     docs = load_table(spark, "documents", sf_dir)
     folds = docs.select(
-        (md5_long(F.col("doc_id").cast("string")) % 5).alias("fold"), "source"
+        (md5_long(Fragment("CAST(doc_id AS STRING)")) % 5).alias("fold"), "source"
     )
     cells = folds.groupBy("fold", "source").agg(
         F.count(F.lit(1)).alias("n")
@@ -2138,7 +2132,7 @@ def g2_collocations(
     # the tokenize pass; the 2-gram shingle runs off the checkpoint.
     if shared_toks is not None:
         bi = shared_toks.select(
-            F.explode(shingles(F.col("_toks"), 2)).alias("bigram")
+            F.explode(shingles("_toks", 2)).alias("bigram")
         )
     else:
         docs = load_table(spark, "documents", sf_dir)
@@ -2653,8 +2647,6 @@ def random_projection_jl(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimensions). Plan: the sign matrix (64×16) broadcasts; projection
     is one (vec, k) aggregate over exploded components; the audit runs
     on a bounded 20-pair sample."""
-    from pdf_brain_spark.functions.text import md5_long
-
     emb = load_table(spark, "embeddings", sf_dir).filter(F.col("vec_id") < 40)
     x = emb.select(
         "vec_id", F.posexplode("embedding").alias("i0", "v")
@@ -2670,9 +2662,7 @@ def random_projection_jl(spark: SparkSession, sf_dir: str) -> DataFrame:
         "i",
         "k",
         F.when(
-            md5_long(
-                F.concat(F.col("i").cast("string"), F.lit("#"), F.col("k").cast("string"))
-            )
+            md5_long(Fragment("concat(CAST(i AS STRING), '#', CAST(k AS STRING))"))
             % 2
             == 0,
             1,
@@ -3095,7 +3085,6 @@ def bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     order statistics (ranks 2 and 39 of 40) hash-match. One scan
     fans out ×40 map-side into a combinable per-replicate aggregate —
     shuffle volume is 40 groups, never the event stream."""
-    from pdf_brain_spark.functions.text import md5_long
     from pyspark.sql import Window
 
     ev = load_table(spark, "events", sf_dir).filter(
@@ -3105,11 +3094,7 @@ def bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", F.round(F.col("value") * 100).cast("long").alias("cents")
     ).localCheckpoint(eager=True)  # the full-sample mean + the fan-out reuse it
     reps = spark.range(40).select(F.col("id").cast("int").alias("rep"))
-    h = md5_long(
-        F.concat(
-            F.col("event_id").cast("string"), F.lit("#"), F.col("rep").cast("string")
-        )
-    )
+    h = md5_long(Fragment("concat(CAST(event_id AS STRING), '#', CAST(rep AS STRING))"))
     wcol = (
         F.when(h < _POISSON_T[0], 0)
         .when(h < _POISSON_T[1], 1)

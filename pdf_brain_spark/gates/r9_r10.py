@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_brain_spark.functions.guards import bounded_axis  # noqa: F401
+from pdf_brain_spark.functions.sql import Fragment
+from pdf_brain_spark.functions.text import md5_long
 from pdf_brain_spark.registry import (  # noqa: F401
     CONSOLIDATED,
     ORACLES,
@@ -149,11 +151,7 @@ def weighted_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine parity) is tested against true uniforms in
     tests/test_randomized_references.py."""
     docs = load_table(spark, "documents", sf_dir)
-    u = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 1000000
-    ) + 1
+    u = md5_long(Fragment("CAST(doc_id AS STRING)"), 8) % 1000000 + 1
     ln_micro = F.round(F.log(u.cast("double") / F.lit(1000000.0)) * 1000000).cast(
         "long"
     )
@@ -733,11 +731,7 @@ def held_out_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_brain_spark.functions.text import tokenize
 
     docs = load_table(spark, "documents", sf_dir)
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = md5_long(Fragment("CAST(doc_id AS STRING)"), 4) % 100
     toks = docs.select(
         "doc_id", "source", bucket.alias("_b"),
         F.explode(tokenize("text")).alias("term"),
@@ -2065,11 +2059,7 @@ def shard_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_brain_spark.functions.text import tokenize
 
     docs = load_table(spark, "documents", sf_dir)
-    shard = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long")
-        % 64
-    )
+    shard = md5_long(Fragment("CAST(doc_id AS STRING)"), 4) % 64
     per = (
         docs.select(shard.alias("shard"), F.size(tokenize("text")).alias("n_tok"))
         .groupBy("shard")
@@ -2199,11 +2189,7 @@ def kneser_ney_heldout(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r16 A/B: spread_scan here measured +0.53 s (1.31→1.84 warm min) —
     # reverted (tokenize-only chain; see OPTIMIZATION_r16.md).
     docs = load_table(spark, "documents", sf_dir)
-    b = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long")
-        % 100
-    )
+    b = md5_long(Fragment("CAST(doc_id AS STRING)"), 4) % 100
     d = docs.select(
         "source", b.alias("b"), tokenize("text").alias("arr")
     ).localCheckpoint(eager=True)  # scanned by the train AND val arms
@@ -2579,16 +2565,7 @@ def dedup_transitivity_audit(
             f"({int(sample_pairs)} * 1000000 + sz * (sz - 1) div 2 - 1) "
             "div (sz * (sz - 1) div 2)"
         )
-        draw = (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws("_", "doc_a", "doc_b")), 1, 8
-                ),
-                16,
-                10,
-            ).cast("long")
-            % F.lit(1000000)
-        )
+        draw = md5_long(Fragment("concat_ws('_', doc_a, doc_b)"), 8) % F.lit(1000000)
         prs = prs.filter(
             (F.col("sz") <= F.lit(max_cluster_size)) | (draw < ceiling)
         )

@@ -301,13 +301,14 @@ def curation_weighted_sample(
 
     Returns the kept docs: (id_col, novelty, quality, weight,
     draw) with weight/draw in [0, 1) at micro-unit resolution."""
-    from pdf_brain_spark.functions.text import quality_score
+    from pdf_brain_spark.functions.sql import Fragment, sql_ref
+    from pdf_brain_spark.functions.text import md5_long, quality_score
     from pdf_brain_spark.operators.dedup import novelty_scores
 
     nov = novelty_scores(docs, k=novelty_k, id_col=id_col, text_col=text_col).select(
         id_col, "novelty"
     )
-    q = quality_score(F.col(text_col))
+    q = quality_score(text_col)
     weighted = (
         docs.select(id_col, text_col)
         .join(nov, id_col)
@@ -317,9 +318,7 @@ def curation_weighted_sample(
         )
         .withColumn(
             "_draw",
-            F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10)
-            .cast("long")
-            % F.lit(1_000_000),
+            md5_long(Fragment(f"CAST({sql_ref(id_col)} AS STRING)")) % F.lit(1_000_000),
         )
     )
     return (

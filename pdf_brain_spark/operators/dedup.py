@@ -29,9 +29,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pdf_brain_spark.functions.sql import sql_ref
+from pdf_brain_spark.functions.guards import spread_scan
+from pdf_brain_spark.functions.sql import Fragment, sql_ref
 from pdf_brain_spark.functions.text import (
+    kgrams_sql,
     md5_long,
+    md5_long_sql,
     shingles,
     tokenize,
     tokenize_sql,
@@ -57,31 +60,6 @@ def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     )
 
 
-def _parallelize(docs: DataFrame, id_col: str) -> DataFrame:
-    """Single-file parquet sources scan as one partition; the tokenize/
-    shingle/hash map chain is CPU-bound, so spread it across the cluster
-    first. CONDITIONAL: a well-laid-out many-file table already scans with
-    enough parallelism, and repartitioning it again would be one avoidable
-    full shuffle per operator at 100 TB — so only shuffle when the scan is
-    under-parallel (fewer partitions than half the cluster's slots).
-
-    Probe choice (VERDICT r3 raised the `df.rdd` plan-to-RDD conversion):
-    a file-count probe (`inputFiles()`, no RDD conversion) was tried and
-    REJECTED — it reads the leaf relation, so any plan that reduces
-    parallelism between scan and operator (coalesce, AQE-coalesced
-    shuffle) looks well-parallel while actually executing on few tasks,
-    and skipping the spread there serializes the CPU-bound map chain: a
-    far worse failure at scale than the probe's planning-time cost. The
-    RDD probe reports the df's actual pre-AQE execution parallelism,
-    errs only toward a redundant repartition, and runs once per operator
-    invocation (no job)."""
-    sess = docs.sparkSession
-    target = sess.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() * 2 >= target:
-        return docs
-    return docs.repartition(target, id_col)
-
-
 def _shingle_set_df(docs: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
     """(doc_id, sh_set): per-doc distinct shingle set, computed ONCE so
     callers that need both the set (exact verify) and derived values
@@ -89,7 +67,7 @@ def _shingle_set_df(docs: DataFrame, id_col: str, text_col: str, k: int) -> Data
     Docs with < k tokens have no shingles and are dropped (cheap
     pushdown-safe predicate, no hash chain in the filter)."""
     return (
-        _parallelize(docs, id_col)
+        spread_scan(docs, id_col)
         .filter(F.size(tokenize(text_col)) >= k)
         .select(
             F.col(id_col),
@@ -186,7 +164,7 @@ def ngram_jaccard_pairs(
     what makes this survive duplicate-heavy 100 TB crawls. Identical docs
     have Jaccard 1 by definition, so the expansion is semantics-free.
     """
-    hashed = _parallelize(docs, id_col).select(
+    hashed = spread_scan(docs, id_col).select(
         F.col(id_col), F.md5(F.col(text_col)).alias("_chash"), F.col(text_col)
     )
     # one shuffle builds both the member lists and the representatives
@@ -419,10 +397,7 @@ def minhash_signatures_from_sets(
     the resolved plan and every result row are unchanged — pinned by
     tests/test_r17_optimizations.py. Same-session A/B: signature plan
     construction 0.23-0.28 → 0.04-0.05 s."""
-    base = (
-        f"transform({sql_ref(set_col)}, "
-        "s -> CAST(conv(substring(md5(s), 1, 7), 16, 10) AS BIGINT))"
-    )
+    base = f"transform({sql_ref(set_col)}, s -> {md5_long_sql(Fragment('s'), 7)})"
     d = sets.selectExpr(sql_ref(id_col), f"{base} AS _bases")
     exprs = [sql_ref(id_col)]
     for j in range(MINHASH_HASHES):
@@ -720,8 +695,8 @@ def simhash_fingerprints(
     """(doc_id, simhash): bitwise-majority fingerprint of per-token hashes.
     32 bits keeps the bit-position explode cheap; near-dup = small hamming
     distance (bit_count(xor))."""
-    toks = _parallelize(docs, id_col).select(F.col(id_col), F.explode(tokenize(text_col)).alias("tok"))
-    hashed = toks.withColumn("th", md5_long(F.col("tok")))
+    toks = spread_scan(docs, id_col).select(F.col(id_col), F.explode(tokenize(text_col)).alias("tok"))
+    hashed = toks.withColumn("th", md5_long("tok"))
     bit = hashed.select(
         id_col,
         F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("bit"),
@@ -952,9 +927,9 @@ def duplicate_spans(
     documents; span detection is what lets a training pipeline CUT the
     duplicated region and keep the rest.
 
-    Shape: one map-side pass builds positional k-grams per doc (zip_with
-    shingling — same idiom as `shingles()`, but keeping the start
-    position via posexplode of the unfiltered array); grams hash to
+    Shape: one map-side pass builds positional k-grams per doc (the
+    unfiltered `kgrams_sql` array that `shingles()` filters, so
+    posexplode's index is the start position); grams hash to
     int64 (xxhash64) so the shuffle key is 8 bytes, not the gram text.
     One groupBy on the hash finds grams with >= min_docs distinct docs;
     a left_semi join marks the duplicated positions; one per-doc window
@@ -970,19 +945,11 @@ def duplicate_spans(
     Returns one row per maximal span: (id_col, span_start, span_end,
     span_tokens, n_seeds) with token positions 0-based inclusive.
     """
-    toks = tokenize(text_col)
-    n = F.size(toks)
-    # unfiltered positional shingles: gram[i] = tokens i..i+k-1, null past
-    # the end (concat propagates null), so posexplode's index IS the
-    # 0-based start position
-    out = toks
-    for j in range(1, k):
-        shifted = F.slice(toks, j + 1, F.greatest(n - j, F.lit(0)))
-        out = F.zip_with(out, shifted, lambda a, b: F.concat(a, F.lit(" "), b))
+    toks = tokenize_sql(text_col)
     grams = (
-        _parallelize(docs, id_col)
-        .filter(n >= k)
-        .select(F.col(id_col), F.posexplode(out).alias("pos", "gram"))
+        spread_scan(docs, id_col)
+        .filter(F.expr(f"size({toks}) >= {k}"))
+        .select(F.col(id_col), F.posexplode(F.expr(kgrams_sql(toks, k))).alias("pos", "gram"))
         .filter(F.col("gram").isNotNull())
         .select(id_col, "pos", F.xxhash64("gram").alias("gh"))
         .localCheckpoint(eager=True)
@@ -1110,10 +1077,9 @@ def novelty_scores(
 
     Returns (id_col, n_grams, n_novel, novelty = n_novel / n_grams
     rounded 6, or NULL when n_grams = 0)."""
-    toks = tokenize(text_col)
     grams = (
-        _parallelize(docs, id_col)
-        .select(F.col(id_col), F.explode(shingles(toks, k)).alias("gram"))
+        spread_scan(docs, id_col)
+        .select(F.col(id_col), F.explode(shingles(tokenize_sql(text_col), k)).alias("gram"))
         .select(id_col, F.xxhash64("gram").alias("gh"))
         .localCheckpoint(eager=True)
     )
@@ -1196,9 +1162,7 @@ def winnowing_fingerprints(
         "doc_id",
         "n_grams",
         F.col("g.pos").alias("pos"),
-        F.conv(F.substring(F.md5("g.gram"), 1, 8), 16, 10)
-        .cast("long")
-        .alias("h"),
+        md5_long(Fragment("g.gram"), 8).alias("h"),
     )
     keyed = grams.withColumn(
         "key",

@@ -22,31 +22,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdf_brain_spark.functions.guards import spread_scan
 from pdf_brain_spark.functions.text import tokenize
 
 BM25_K1 = 1.2
 BM25_B = 0.75
 
 
-def _parallelize(docs: DataFrame, id_col: str) -> DataFrame:
-    """Spread an under-parallel scan before the CPU-bound tokenize map
-    stage (single-file test sources scan as one partition). Conditional:
-    a many-file table that already scans with ≥ half the cluster's slots
-    is left alone — no avoidable full shuffle at scale. The RDD probe is
-    deliberate — a file-count probe misjudges post-scan coalesce /
-    AQE-reduced parallelism; see operators/dedup.py::_parallelize for the
-    full rationale."""
-    sess = docs.sparkSession
-    target = sess.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() * 2 >= target:
-        return docs
-    return docs.repartition(target, id_col)
-
-
 def build_postings(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(term, doc_id, tf, doc_len) postings list. Tokenizes once; the doc
     side is spread first because tokenization is the CPU-bound map stage."""
-    docs = _parallelize(docs, id_col)
+    docs = spread_scan(docs, id_col)
     toked = docs.select(id_col, tokenize(text_col).alias("_tokens"))
     toks = toked.select(
         id_col, F.explode(F.col("_tokens")).alias("term"), F.size(F.col("_tokens")).alias("doc_len")
@@ -65,7 +51,7 @@ def tokenized_corpus(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     by the ContextCleaner when the plan is GC'd (same rationale as
     temporal.py tiered rollup)."""
     return (
-        _parallelize(docs, id_col)
+        spread_scan(docs, id_col)
         .select(id_col, tokenize(text_col).alias("_tokens"))
         .localCheckpoint(eager=True)
     )
@@ -170,7 +156,7 @@ def phrase_bm25_scores(
     # localCheckpoint, not cache() — see bm25_scores for the lifecycle
     # rationale.
     toked = (
-        _parallelize(docs, id_col)
+        spread_scan(docs, id_col)
         .select(id_col, tokenize(text_col).alias("_tokens"))
         .localCheckpoint(eager=True)
     )

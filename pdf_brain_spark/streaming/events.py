@@ -899,7 +899,7 @@ def make_fts_postings_batch_fn(index_dir: str, id_col: str = "doc_id", text_col:
             f"{docs_store}/batch_id={batch_id}"
         )
         rows.withColumn(
-            "term_bucket", _term_bucket_col(F.col("term"), n_buckets)
+            "term_bucket", _term_bucket_col("term", n_buckets)
         ).write.partitionBy("term_bucket").mode("overwrite").parquet(
             f"{index_dir}/batch_id={batch_id}"
         )
@@ -1032,11 +1032,12 @@ def portable_term_bucket(term: str, n_buckets: int = FTS_TERM_BUCKETS) -> int:
     return int(hashlib.md5(term.encode("utf-8")).hexdigest()[:4], 16) % n_buckets
 
 
-def _term_bucket_col(term_col, n_buckets: int = FTS_TERM_BUCKETS):
+def _term_bucket_col(term_col: str, n_buckets: int = FTS_TERM_BUCKETS):
     """Spark expression computing portable_term_bucket(term)."""
-    return F.when(term_col.isNull(), F.lit(0)).otherwise(
-        F.conv(F.substring(F.md5(term_col), 1, 4), 16, 10).cast("int")
-        % F.lit(n_buckets)
+    from pdf_brain_spark.functions.text import md5_long
+
+    return F.when(F.col(term_col).isNull(), F.lit(0)).otherwise(
+        md5_long(term_col, 4).cast("int") % F.lit(n_buckets)
     )
 
 
@@ -1503,6 +1504,7 @@ def _kmv_merge_exprs():
 def make_kmv_batch_fn(store_dir: str, key_col: str = "user_id", type_col: str = "event_type"):
     """Per-micro-batch KMV partial: bottom-K sorted distinct hashes of
     the key per group, replay-idempotent (batch_id=N overwrite)."""
+    from pdf_brain_spark.functions.sql import Fragment, sql_ref
     from pdf_brain_spark.functions.text import md5_long
 
     def _each_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1511,7 +1513,7 @@ def make_kmv_batch_fn(store_dir: str, key_col: str = "user_id", type_col: str = 
         partial = (
             batch_df.select(
                 F.col(type_col).alias("event_type"),
-                md5_long(F.col(key_col).cast("string")).alias("h"),
+                md5_long(Fragment(f"CAST({sql_ref(key_col)} AS STRING)")).alias("h"),
             )
             .groupBy("event_type")
             .agg(
@@ -1924,11 +1926,10 @@ def cms_col_expr(term_col: str, row_idx: int):
     """Portable CMS column index: md5_long(term '#' row) % CMS_COLS —
     the twin SQL is the same concat/substr/CAST chain every other
     portable-hash gate uses."""
+    from pdf_brain_spark.functions.sql import Fragment, sql_ref
     from pdf_brain_spark.functions.text import md5_long
 
-    return (
-        md5_long(F.concat(F.col(term_col), F.lit(f"#{row_idx}"))) % CMS_COLS
-    )
+    return md5_long(Fragment(f"concat({sql_ref(term_col)}, '#{row_idx}')")) % CMS_COLS
 
 
 def make_cms_batch_fn(store_dir: str, text_col: str = "text"):
@@ -2048,6 +2049,7 @@ MINHASH_SIG_K = 16
 
 
 def _minhash_partial(df: DataFrame, group_col: str, text_col: str) -> DataFrame:
+    from pdf_brain_spark.functions.sql import Fragment
     from pdf_brain_spark.functions.text import md5_long, shingles, tokenize_sql
 
     sh = df.select(
@@ -2060,9 +2062,7 @@ def _minhash_partial(df: DataFrame, group_col: str, text_col: str) -> DataFrame:
         .select(
             "grp",
             "k",
-            md5_long(
-                F.concat(F.col("k").cast("string"), F.lit("#"), F.col("shingle"))
-            ).alias("h"),
+            md5_long(Fragment("concat(CAST(k AS STRING), '#', shingle)")).alias("h"),
         )
         .groupBy("grp", "k")
         .agg(F.min("h").cast("long").alias("sig"))

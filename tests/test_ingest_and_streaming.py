@@ -1665,6 +1665,7 @@ def test_streaming_kmv_replay_merge_compact(spark, tmp_path):
     equals the one-shot sketch over all rows (bottom-K union-truncate
     associativity exercised through real splits), and compaction with
     the set-union monoid preserves serving exactly."""
+    from pdf_brain_spark.functions.sql import Fragment
     from pdf_brain_spark.functions.text import md5_long
     from pdf_brain_spark.streaming.events import (
         KMV_K,
@@ -1704,7 +1705,7 @@ def test_streaming_kmv_replay_merge_compact(spark, tmp_path):
     import pandas as pd  # noqa: F401
 
     one_shot = (
-        ev.select("event_type", md5_long(F.col("user_id").cast("string")).alias("h"))
+        ev.select("event_type", md5_long(Fragment("CAST(user_id AS STRING)")).alias("h"))
         .distinct()
         .groupBy("event_type")
         .agg(F.slice(F.array_sort(F.collect_set("h")), 1, KMV_K).alias("hashes"))
@@ -1948,11 +1949,12 @@ def test_streaming_checkpoint_resume_processes_only_new_files(spark, tmp_path):
         assert mt == gen_mtimes[d], d
 
     # served result == one-shot over ALL events
+    from pdf_brain_spark.functions.sql import Fragment
     from pdf_brain_spark.functions.text import md5_long
     from pdf_brain_spark.streaming.events import KMV_K
 
     one_shot = (
-        ev.select("event_type", md5_long(F.col("user_id").cast("string")).alias("h"))
+        ev.select("event_type", md5_long(Fragment("CAST(user_id AS STRING)")).alias("h"))
         .distinct()
         .groupBy("event_type")
         .agg(F.slice(F.array_sort(F.collect_set("h")), 1, KMV_K).alias("hashes"))

@@ -138,13 +138,13 @@ def test_range_clustering_enables_file_pruning(spark, tmp_path):
 
 
 def test_map_stage_repartition_is_conditional(spark, tmp_path):
-    """The dedup/FTS map-stage spread must NOT shuffle a well-partitioned
-    multi-file input (at 100 TB that's one avoidable full shuffle per
-    operator), and MUST spread a single-file scan. Asserted on the plan:
-    a multi-file input's shingle/tokenize chain has no Exchange before the
-    first aggregation; a single-file input's does."""
-    from pdf_brain_spark.operators.dedup import _parallelize as dedup_par
-    from pdf_brain_spark.operators.fts import _parallelize as fts_par
+    """The map-stage spread the dedup/FTS operators share (spread_scan)
+    must NOT shuffle a well-partitioned multi-file input (at 100 TB
+    that's one avoidable full shuffle per operator), and MUST spread a
+    single-file scan. Asserted on the plan: a multi-file input's map
+    chain has no Exchange; a single-file input is spread to cluster
+    parallelism."""
+    from pdf_brain_spark.functions.guards import spread_scan
     from pdf_brain_spark.sources.loaders import load_table
 
     docs = load_table(spark, "documents", "/root/testdata/sf0.001")
@@ -154,14 +154,13 @@ def test_map_stage_repartition_is_conditional(spark, tmp_path):
     multi = spark.read.parquet(many)
     assert multi.rdd.getNumPartitions() * 2 >= target
 
-    for par in (dedup_par, fts_par):
-        # multi-file: identity — no Exchange anywhere in the map chain
-        spread = par(multi, "doc_id").select("doc_id", F.length("text").alias("n"))
-        assert "Exchange" not in _plan(spread)
-        # single-file: must spread to cluster parallelism
-        one = spark.read.parquet(many).coalesce(1)
-        spread1 = par(one, "doc_id")
-        assert spread1.rdd.getNumPartitions() == target
+    # multi-file: identity — no Exchange anywhere in the map chain
+    spread = spread_scan(multi, "doc_id").select("doc_id", F.length("text").alias("n"))
+    assert "Exchange" not in _plan(spread)
+    # single-file: must spread to cluster parallelism
+    one = spark.read.parquet(many).coalesce(1)
+    spread1 = spread_scan(one, "doc_id")
+    assert spread1.rdd.getNumPartitions() == target
 
 
 def test_ivf_partitioned_probe_prunes_partitions(spark, tmp_path):

@@ -10,7 +10,7 @@ from pdf_brain_spark.functions.text import (
     extract_author,
     normalize_tag,
     shingles,
-    tokenize,
+    tokenize_sql,
 )
 
 
@@ -33,7 +33,7 @@ def test_shingles_edge_cases(spark, text_df):
     rows = {
         r["name"]: r["sh"]
         for r in text_df.select(
-            "name", shingles(tokenize("text"), 3).alias("sh")
+            "name", shingles(tokenize_sql("text"), 3).alias("sh")
         ).collect()
     }
     assert rows["empty"] == []
@@ -49,7 +49,7 @@ def test_shingles_k2(spark, text_df):
     rows = {
         r["name"]: r["sh"]
         for r in text_df.select(
-            "name", shingles(tokenize("text"), 2).alias("sh")
+            "name", shingles(tokenize_sql("text"), 2).alias("sh")
         ).collect()
     }
     assert rows["one"] == []
