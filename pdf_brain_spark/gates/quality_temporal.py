@@ -1829,7 +1829,7 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     member is served iff its list's probe rank ≤ 8' reproduces the
     serving result exactly (a probed true neighbor's within-probe rank
     can only improve on its global rank). A dropped candidate, a wrong
-    slack merge, or a probe mis-assignment in the production scorer
+    partial-top-k merge, or a probe mis-assignment in the production scorer
     flips the hash. Recall of the stochastic production FIT remains a
     bench/pytest claim (test_graph_and_ann); this gate pins the SERVING
     path. Hits are integer counts; recall is exact ppm."""

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pdf_brain_spark.functions.vector import cosine_distance, distance_to_score
-from pdf_brain_spark.operators.vector_search import topk_rows_tiebroken_batch
+from pdf_brain_spark.operators.vector_search import cosine_scorer, partial_topk_batch
 
 # DERIVED constant, not folklore: the `ivf_recall_curve` gate
 # (queries.py) hash-attests recall@10 at probe depths 1/2/4/8 (of 16
@@ -190,74 +190,37 @@ def ivf_search_topk_batch(
     query_col: str = "query_vec",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    batch_slack: int = 8,
 ) -> DataFrame:
     """Batched IVF: every query probes only its n_probes nearest lists.
 
     Probe assignment happens on the driver against the tiny centroid
-    matrix (L×d); the corpus side then streams ONCE through an Arrow-
-    batched scorer that, per pandas batch, groups rows by list_id and
-    scores each group against only the queries probing that list — one
-    BLAS matmul per (batch, probed-list) pair, partial top-(k+slack) per
-    query emitted, exact merge via a final rank window. Scanned work is
-    the probed fraction (n_probes/n_lists) of Q×N; at 100 TB `list_id`
-    is a partition column and unprobed lists are never read at all
-    (partition pruning), while the shuffle stays partitions×Q×k rows.
-    Returned distances are exact; only candidate generation is
-    approximate (recall tunable via n_probes)."""
-    import pandas as pd
-    from pyspark.sql import Window
-
-    q_rows = queries.select(query_id, query_col).collect()
-    qids = np.array([r[0] for r in q_rows])
-    qmat = np.asarray([r[1] for r in q_rows], dtype=np.float64)
-    qmat = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
+    matrix (L×d); the corpus side then streams ONCE through
+    `partial_topk_batch` with probe routing: the scan is filtered to
+    the union of the probed lists (at 100 TB `list_id` is a partition
+    column, so unprobed lists are never read at all), and each Arrow
+    batch's `list_id` groups are scored — one BLAS matmul per (batch,
+    probed list) — against only the queries probing that list. Scanned
+    work is the probed fraction (n_probes/n_lists) of Q×N, while the
+    shuffle stays partitions × Q × k rows per probed list. Returned
+    distances are exact; only candidate generation is approximate
+    (recall tunable via n_probes)."""
     cents = np.asarray(centroids, dtype=np.float64)
     cents = cents / (np.linalg.norm(cents, axis=1, keepdims=True) + 1e-12)
-    probe_lists = np.argsort(-(qmat @ cents.T), axis=1)[:, :n_probes]
-    by_list: dict[int, list[int]] = {}
-    for qi, lists in enumerate(probe_lists):
-        for lid in lists:
-            by_list.setdefault(int(lid), []).append(qi)
-    m_take = k + batch_slack
 
-    def _partial_topk(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out_q, out_v, out_d = [], [], []
-            for lid, grp in pdf.groupby("list_id"):
-                qsel = by_list.get(int(lid))
-                if not qsel:
-                    continue
-                vmat = np.asarray(list(grp[vec_col]), dtype=np.float64)
-                vmat = vmat / np.linalg.norm(vmat, axis=1, keepdims=True)
-                dist = 1.0 - vmat @ qmat[qsel].T  # B×|qsel|
-                take = min(m_take, dist.shape[0])
-                vid = grp[id_col].to_numpy()
-                # vectorized per-column (distance, vec_id) top-take over
-                # this list's query subset — identical rows/order to the
-                # former per-query loop (tiebreak matches the merge window)
-                rows = topk_rows_tiebroken_batch(dist, vid, take)
-                t = rows.shape[0]
-                out_q.extend(np.repeat(np.asarray([qids[qi] for qi in qsel]), t))
-                out_v.extend(vid[rows.T.reshape(-1)])
-                out_d.extend(dist[rows, np.arange(len(qsel))[None, :]].T.reshape(-1))
-            if out_q:
-                yield pd.DataFrame({query_id: out_q, id_col: out_v, "distance": out_d})
+    def prepare(qmat):
+        probes = np.argsort(-(qmat @ cents.T), axis=1)[:, :n_probes]
+        return cosine_scorer(qmat, vec_col), probes
 
-    qid_type = dict(queries.dtypes)[query_id]
-    id_type = dict(indexed.dtypes)[id_col]
-    partials = indexed.select("list_id", id_col, vec_col).mapInPandas(
-        _partial_topk,
-        schema=f"{query_id} {qid_type}, {id_col} {id_type}, distance double",
-    )
-    w = Window.partitionBy(query_id).orderBy(F.col("distance").asc(), F.col(id_col).asc())
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .withColumn("score", distance_to_score("distance"))
-    )
+    return partial_topk_batch(
+        queries,
+        indexed,
+        k,
+        prepare,
+        [vec_col],
+        query_id=query_id,
+        query_col=query_col,
+        id_col=id_col,
+    ).withColumn("score", distance_to_score("distance"))
 
 
 def synthetic_clustered_embeddings(

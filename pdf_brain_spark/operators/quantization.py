@@ -22,10 +22,10 @@ Spark shape, same discipline as the rest of the engine:
     of an Arrow-batched pandas UDF; one BLAS matmul per subspace per
     batch. Zero shuffles; the output (id, m smallint codes) is what a
     100 TB pipeline persists — 32× less to scan than the float column.
-  * SERVE with the partial-top-k mapInPandas pattern of
-    similarity_join_topk: each Arrow batch of codes scores every query
-    via LUT gathers (no float vectors touched), emits per-query partial
-    top-(k+slack), and a final (distance, vec_id) rank window merges
+  * SERVE through the one partial-top-k pipeline,
+    vector_search.partial_topk_batch: each Arrow batch of codes scores
+    every query via LUT gathers (no float vectors touched), keeps each
+    query's top-k, and a final (distance, vec_id) rank window merges
     exactly. Post-map shuffle is partitions × Q × k rows.
 
 Distances are cosine via the unit sphere: vectors are L2-normalized
@@ -39,6 +39,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pdf_brain_spark.operators.vector_search import partial_topk_batch
 
 PQ_SUBSPACES = 8
 PQ_CODES = 256  # one byte per subspace code
@@ -149,6 +151,26 @@ def adc_lut(qmat, codebooks):
     return lut
 
 
+def _adc_scorer(lut_of):
+    """`partial_topk_batch` scorer over a pandas batch of PQ codes:
+    ``lut_of(list_id)`` is the (m, Q, n_codes) LUT that list's rows
+    gather from. Each (query, row) distance is the m gathers summed in
+    subspace order, then halved (‖q̂−v̂‖²/2 == cosine distance on the
+    unit sphere) — the float embedding column is never touched."""
+    import numpy as np
+
+    def score(pdf, list_id, qsel):
+        lut = lut_of(list_id)[:, qsel]  # (m, |qsel|, c)
+        codes = np.asarray(list(pdf["codes"]), dtype=np.int64)  # (b, m)
+        dist = np.zeros((lut.shape[1], codes.shape[0]), dtype=np.float64)
+        for j in range(lut.shape[0]):
+            dist += lut[j][:, codes[:, j]]
+        dist *= 0.5
+        return dist.T
+
+    return score
+
+
 def pq_topk_adc_batch(
     codes_df: DataFrame,
     codebooks,
@@ -157,60 +179,20 @@ def pq_topk_adc_batch(
     query_id: str = "query_id",
     query_col: str = "query_vec",
     id_col: str = "vec_id",
-    batch_slack: int = 8,
 ) -> DataFrame:
     """Batch cosine top-k served ENTIRELY from PQ codes: per Arrow batch,
     every (query, vector) distance is m LUT gathers + a sum — the float
-    embedding column is never read (at 100 TB: a 32×-smaller scan). Same
-    partial-top-k + exact merge-window shape as similarity_join_topk;
-    ties break (distance, id) in both the batch truncation and the final
-    window, so slack is a perf knob, not a correctness crutch."""
-    import numpy as np
-    from pyspark.sql import Window
+    embedding column is never read (at 100 TB: a 32×-smaller scan). The
+    shared `partial_topk_batch` pipeline with the ADC scorer; ties break
+    (distance, id) in both the batch truncation and the merge window."""
 
-    from pdf_brain_spark.operators.vector_search import topk_rows_tiebroken_batch
+    def prepare(qmat):
+        lut = adc_lut(qmat, codebooks)  # (m, nq, c)
+        return _adc_scorer(lambda _list_id: lut), None
 
-    q_rows = queries.select(query_id, query_col).collect()
-    qids = np.array([r[0] for r in q_rows])
-    qmat = np.asarray([r[1] for r in q_rows], dtype=np.float64)
-    qmat = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
-    LUT = adc_lut(qmat, codebooks)  # (m, nq, c)
-    m = LUT.shape[0]
-    m_take = k + batch_slack
-
-    def _partial_topk(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            codes = np.asarray(list(pdf["codes"]), dtype=np.int64)  # (b, m)
-            dist = np.zeros((len(qids), codes.shape[0]), dtype=np.float64)
-            for j in range(m):
-                dist += LUT[j][:, codes[:, j]]
-            dist *= 0.5  # ‖q̂−v̂‖²/2 == cosine distance on the unit sphere
-            take = min(m_take, codes.shape[0])
-            vid = pdf[id_col].to_numpy()
-            # vectorized per-column (distance, id) top-take — identical
-            # rows/order to the former per-query Python loop
-            rows = topk_rows_tiebroken_batch(dist.T, vid, take)
-            t = rows.shape[0]
-            yield pd.DataFrame(
-                {
-                    query_id: np.repeat(qids, t),
-                    id_col: vid[rows.T.reshape(-1)],
-                    "distance": dist.T[rows, np.arange(len(qids))[None, :]].T.reshape(-1),
-                }
-            )
-
-    qid_type = dict(queries.dtypes)[query_id]
-    id_type = dict(codes_df.dtypes)[id_col]
-    partials = codes_df.select(id_col, "codes").mapInPandas(
-        _partial_topk,
-        schema=f"{query_id} {qid_type}, {id_col} {id_type}, distance double",
-    )
-    w = Window.partitionBy(query_id).orderBy(F.col("distance").asc(), F.col(id_col).asc())
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return partial_topk_batch(
+        queries, codes_df, k, prepare, ["codes"],
+        query_id=query_id, query_col=query_col, id_col=id_col,
     )
 
 
@@ -380,87 +362,38 @@ def ivfpq_topk_adc_batch(
     query_id: str = "query_id",
     query_col: str = "query_vec",
     id_col: str = "vec_id",
-    batch_slack: int = 8,
 ) -> DataFrame:
     """Batch cosine top-k over the IVF-PQ index: each query probes its
     `n_probes` centroid-nearest lists and scores ONLY those lists' rows,
-    from codes (m LUT gathers per row), never reading floats. The scan
-    is filtered to the UNION of all queries' probe sets — a partition
-    filter against the persisted layout — and inside the kernel a
-    per-(query, list) boolean mask routes each row to exactly the
-    queries probing its list, so a 256-query batch still makes one pass
-    over the probed fraction of the corpus (the FAISS batch-serving
-    shape re-expressed as mapInPandas + merge window).
+    from codes (m LUT gathers per row), never reading floats. The probe
+    routing of `partial_topk_batch` filters the scan to the UNION of all
+    queries' probe sets — a partition filter against the persisted
+    layout — and scores each Arrow batch's `list_id` groups against
+    exactly the queries probing that list, so a 256-query batch still
+    makes one pass over the probed fraction of the corpus (the FAISS
+    batch-serving shape re-expressed as mapInPandas + merge window).
 
-    Invariant (pytest-asserted): with n_probes = n_lists the mask is
-    all-true and the result EQUALS pq_topk_adc_batch over the full codes
-    table — probe routing loses nothing beyond the probe choice itself.
-    Recall at n_probes < n_lists is the product of the IVF candidate
-    recall and the PQ code resolution; measure with ivfpq_recall_report
-    before trusting an operating point."""
+    Invariant (pytest-asserted): with n_probes = n_lists every query
+    scores every row and the result EQUALS pq_topk_adc_batch over the
+    full codes table — probe routing loses nothing beyond the probe
+    choice itself. Recall at n_probes < n_lists is the product of the
+    IVF candidate recall and the PQ code resolution; measure with
+    ivfpq_recall_report before trusting an operating point."""
     import numpy as np
-    from pyspark.sql import Window
 
-    from pdf_brain_spark.operators.vector_search import topk_rows_tiebroken
-
-    q_rows = queries.select(query_id, query_col).collect()
-    qids = np.array([r[0] for r in q_rows])
-    qmat = np.asarray([r[1] for r in q_rows], dtype=np.float64)
-    qmat = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
     C = np.asarray(centroids, dtype=np.float64)
     Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-    n_lists = C.shape[0]
-    n_probes = min(n_probes, n_lists)
-    # per-query probe sets from the coarse quantizer (driver-side: the
-    # centroid table is k rows, corpus-independent)
-    probe_rank = np.argsort(-(qmat @ Cn.T), axis=1)[:, :n_probes]  # (nq, p)
-    probe_mask = np.zeros((len(qids), n_lists), dtype=bool)
-    np.put_along_axis(probe_mask, probe_rank, True, axis=1)
-    probe_union = sorted(int(l) for l in np.unique(probe_rank))
 
-    LUT = adc_lut(qmat, codebooks)
-    m = LUT.shape[0]
-    m_take = k + batch_slack
+    def prepare(qmat):
+        lut = adc_lut(qmat, codebooks)
+        # per-query probe sets from the coarse quantizer (driver-side: the
+        # centroid table is n_lists rows, corpus-independent)
+        probes = np.argsort(-(qmat @ Cn.T), axis=1)[:, :n_probes]
+        return _adc_scorer(lambda _list_id: lut), probes
 
-    def _partial_topk(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            codes = np.asarray(list(pdf["codes"]), dtype=np.int64)
-            lists = pdf["list_id"].to_numpy(dtype=np.int64)
-            vid = pdf[id_col].to_numpy()
-            dist = np.zeros((len(qids), codes.shape[0]), dtype=np.float64)
-            for j in range(m):
-                dist += LUT[j][:, codes[:, j]]
-            dist *= 0.5
-            mask = probe_mask[:, lists]  # (nq, b): does q probe this row's list
-            out_q, out_v, out_d = [], [], []
-            for qi in range(len(qids)):
-                rows = np.flatnonzero(mask[qi])
-                if rows.size == 0:
-                    continue
-                sel = topk_rows_tiebroken(dist[qi, rows], vid[rows], min(m_take, rows.size))
-                picked = rows[sel]
-                out_q.extend([qids[qi]] * len(picked))
-                out_v.extend(vid[picked])
-                out_d.extend(dist[qi, picked])
-            if out_q:
-                yield pd.DataFrame({query_id: out_q, id_col: out_v, "distance": out_d})
-
-    qid_type = dict(queries.dtypes)[query_id]
-    id_type = dict(indexed_codes.dtypes)[id_col]
-    partials = (
-        indexed_codes.filter(F.col("list_id").isin(probe_union))
-        .select(id_col, "codes", "list_id")
-        .mapInPandas(
-            _partial_topk,
-            schema=f"{query_id} {qid_type}, {id_col} {id_type}, distance double",
-        )
-    )
-    w = Window.partitionBy(query_id).orderBy(F.col("distance").asc(), F.col(id_col).asc())
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return partial_topk_batch(
+        queries, indexed_codes, k, prepare, ["codes"],
+        query_id=query_id, query_col=query_col, id_col=id_col,
     )
 
 
@@ -644,82 +577,28 @@ def ivfpq_topk_adc_batch_residual(
     query_id: str = "query_id",
     query_col: str = "query_vec",
     id_col: str = "vec_id",
-    batch_slack: int = 8,
 ) -> DataFrame:
     """Residual-ADC batch serving: distance to a stored vector in list l
     decomposes as ||q̂ − c_l − r_recon||² = Σ_j ||(q̂ − c_l)_j −
-    codebook_j[code_j]||², so each (query, PROBED list) pair gets its own
-    m × n_codes LUT built from q̂ − c_l. LUT tensor is (m, nq,
-    |probe_union|, n_codes) — corpus-independent, ~134 MB at nq=256,
-    16 lists, m=8, c=256 doubles; rows gather from their list's slab.
-    Per-(query, list) probe masking, partial-top-k truncation, and the
-    exact merge window are identical to the raw variant."""
+    codebook_j[code_j]||², so each PROBED list gets its own (m, nq,
+    n_codes) LUT built from q̂ − c_l — corpus-independent, ~134 MB at
+    nq=256, 16 probed lists, m=8, c=256 doubles; each `list_id` group
+    gathers from its list's LUT. Probe routing, partial-top-k
+    truncation, and the exact merge window are the raw variant's
+    (`partial_topk_batch`)."""
     import numpy as np
-    from pyspark.sql import Window
-
-    from pdf_brain_spark.operators.vector_search import topk_rows_tiebroken
 
     CB = np.asarray(codebooks, dtype=np.float64)
-    m, n_codes, dsub = CB.shape
-    q_rows = queries.select(query_id, query_col).collect()
-    qids = np.array([r[0] for r in q_rows])
-    qmat = np.asarray([r[1] for r in q_rows], dtype=np.float64)
-    qmat = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
     Cn = np.asarray(centroids, dtype=np.float64)
-    n_lists = Cn.shape[0]
-    n_probes = min(n_probes, n_lists)
-    probe_rank = np.argsort(-(qmat @ Cn.T), axis=1)[:, :n_probes]
-    probe_mask = np.zeros((len(qids), n_lists), dtype=bool)
-    np.put_along_axis(probe_mask, probe_rank, True, axis=1)
-    probe_union = sorted(int(l) for l in np.unique(probe_rank))
-    slot_of = {l: i for i, l in enumerate(probe_union)}
 
-    # per-(query, probed list) LUTs: adc_lut of (q̂ − c_l)
-    LUT = np.empty((m, len(qids), len(probe_union), n_codes), dtype=np.float64)
-    for si, l in enumerate(probe_union):
-        LUT[:, :, si, :] = adc_lut(qmat - Cn[l][None, :], CB)
-    m_take = k + batch_slack
+    def prepare(qmat):
+        probes = np.argsort(-(qmat @ Cn.T), axis=1)[:, :n_probes]
+        luts = {int(l): adc_lut(qmat - Cn[l][None, :], CB) for l in np.unique(probes)}
+        return _adc_scorer(luts.__getitem__), probes
 
-    def _partial_topk(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            codes = np.asarray(list(pdf["codes"]), dtype=np.int64)
-            lists = pdf["list_id"].to_numpy(dtype=np.int64)
-            vid = pdf[id_col].to_numpy()
-            slots = np.asarray([slot_of[int(l)] for l in lists], dtype=np.int64)
-            dist = np.zeros((len(qids), codes.shape[0]), dtype=np.float64)
-            for j in range(m):
-                dist += LUT[j][:, slots, codes[:, j]]
-            dist *= 0.5
-            mask = probe_mask[:, lists]
-            out_q, out_v, out_d = [], [], []
-            for qi in range(len(qids)):
-                rows = np.flatnonzero(mask[qi])
-                if rows.size == 0:
-                    continue
-                sel = topk_rows_tiebroken(dist[qi, rows], vid[rows], min(m_take, rows.size))
-                picked = rows[sel]
-                out_q.extend([qids[qi]] * len(picked))
-                out_v.extend(vid[picked])
-                out_d.extend(dist[qi, picked])
-            if out_q:
-                yield pd.DataFrame({query_id: out_q, id_col: out_v, "distance": out_d})
-
-    qid_type = dict(queries.dtypes)[query_id]
-    id_type = dict(indexed_codes.dtypes)[id_col]
-    partials = (
-        indexed_codes.filter(F.col("list_id").isin(probe_union))
-        .select(id_col, "codes", "list_id")
-        .mapInPandas(
-            _partial_topk,
-            schema=f"{query_id} {qid_type}, {id_col} {id_type}, distance double",
-        )
-    )
-    w = Window.partitionBy(query_id).orderBy(F.col("distance").asc(), F.col(id_col).asc())
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return partial_topk_batch(
+        queries, indexed_codes, k, prepare, ["codes"],
+        query_id=query_id, query_col=query_col, id_col=id_col,
     )
 
 
@@ -930,88 +809,57 @@ def hamming_rerank_topk_batch(
     (similarity_join_topk, mmr_rerank_batch): Q queries amortize ONE
     pass over the packed corpus.
 
-    Candidate stage = the PARTIAL-TOP-K mapInPandas pattern of
-    similarity_join_topk: the bounded query batch is COLLECTED to a
-    Q × n_words word matrix and closed over an Arrow-batched scan of
-    the packed corpus words; each batch XOR-popcounts against all
-    queries vectorized (byte-LUT popcount — numpy<2 has no
-    bitwise_count) and emits only per-query partial top-n_candidates,
-    so the post-map shuffle carries partitions × Q × n_candidates
-    SCALAR rows — corpus-size-independent, never the corpus itself. (A
-    crossJoin + rank-window cut was measured 2.4x slower than even the
-    exact BLAS path at 8k×256: that window shuffled all B×Q rows.)
-    The bounded shortlist then re-attaches vectors by broadcast and
-    exact-reranks under a (query, distance, id) rank window.
+    Candidate stage = `partial_topk_batch` with a popcount scorer: each
+    Arrow batch of packed corpus words XOR-popcounts against the Q ×
+    n_words query words vectorized (byte-LUT popcount — numpy<2 has no
+    bitwise_count), so the post-map shuffle carries partitions × Q ×
+    n_candidates SCALAR rows — corpus-size-independent, never the corpus
+    itself. (A crossJoin + rank-window cut was measured 2.4x slower than
+    even the exact BLAS path at 8k×256: that window shuffled all B×Q
+    rows.) Query words are the signs of the normalized query, which are
+    the raw query's signs. The bounded shortlist then re-attaches
+    vectors by broadcast and exact-reranks under a (query, distance, id)
+    rank window.
 
     Returns (query_id, id_col, hamming_dist, score, rank 1..k)."""
     import numpy as np
-    import pandas as pd
 
     from pdf_brain_spark.functions.vector import cosine_distance, distance_to_score
-    from pdf_brain_spark.operators.vector_search import topk_rows_tiebroken_batch
     from pyspark.sql import Window
 
     n_words = dim // BSQ_WORD_BITS
-    q_rows = queries.select(query_id, query_col).collect()
-    if not q_rows:
-        # empty serving batch: empty result, not an executor IndexError
-        qid_type = dict(queries.dtypes)[query_id]
-        id_type = dict(vectors.dtypes)[id_col]
-        return vectors.sparkSession.createDataFrame(
-            [],
-            f"{query_id} {qid_type}, {id_col} {id_type}, hamming_dist long, "
-            "score double, rank int",
-        )
-    qids = np.array([r[0] for r in q_rows])
-    qw = np.array(
-        [pack_query_words([float(x) for x in r[1]]) for r in q_rows],
-        dtype=np.int64,
-    )  # Q × n_words
     # uint8 LUT: the fancy-indexed popcount intermediate is B×Q×(8·n_words)
     # bytes at uint8 vs 8x that at int64 — the sum accumulates in int64
     popcnt8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
 
-    def _partial_topk(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
+    def prepare(qmat):
+        qw = np.array([pack_query_words(q.tolist()) for q in qmat], dtype=np.int64)
+
+        def score(pdf, _list_id, _qsel):
             W = np.stack(
                 [pdf[f"bsq_w{w}"].to_numpy(dtype=np.int64) for w in range(n_words)],
                 axis=1,
             )  # B × n_words
             x = W[:, None, :] ^ qw[None, :, :]  # B × Q × n_words int64
-            dist = popcnt8[x.view(np.uint8).reshape(x.shape[0], x.shape[1], -1)].sum(
+            return popcnt8[x.view(np.uint8).reshape(x.shape[0], x.shape[1], -1)].sum(
                 axis=2, dtype=np.int64
             )  # B × Q
-            vid = pdf[id_col].to_numpy()
-            take = min(n_candidates, dist.shape[0])
-            # vectorized per-column (distance, id) top-take — identical
-            # rows/order to the former per-query Python loop
-            rows = topk_rows_tiebroken_batch(dist, vid, take)
-            t = rows.shape[0]
-            yield pd.DataFrame(
-                {
-                    query_id: np.repeat(qids, t),
-                    id_col: vid[rows.T.reshape(-1)],
-                    "hamming_dist": dist[rows, np.arange(len(qids))[None, :]].T.reshape(-1),
-                }
-            )
 
-    qid_type = dict(queries.dtypes)[query_id]
-    id_type = dict(vectors.dtypes)[id_col]
-    cp = binary_sign_pack(vectors.select(id_col, vec_col), vec_col=vec_col, dim=dim).drop(
-        vec_col
-    )
-    partials = cp.mapInPandas(
-        _partial_topk,
-        schema=f"{query_id} {qid_type}, {id_col} {id_type}, hamming_dist long",
-    )
-    wc = Window.partitionBy(query_id).orderBy(
-        F.col("hamming_dist").asc(), F.col(id_col).asc()
-    )
-    cands = partials.withColumn("_crank", F.row_number().over(wc)).filter(
-        F.col("_crank") <= n_candidates
-    )
+        return score, None
+
+    packed = binary_sign_pack(vectors.select(id_col, vec_col), vec_col=vec_col, dim=dim)
+    cands = partial_topk_batch(
+        queries,
+        packed,
+        n_candidates,
+        prepare,
+        [f"bsq_w{w}" for w in range(n_words)],
+        query_id=query_id,
+        query_col=query_col,
+        id_col=id_col,
+        dist_col="hamming_dist",
+        dist_type="long",
+    ).select(query_id, id_col, "hamming_dist")
     with_vecs = (
         vectors.select(id_col, vec_col)
         .join(F.broadcast(cands), id_col)

@@ -126,55 +126,31 @@ def similarity_join(
     )
 
 
-def topk_rows_tiebroken(dist_col, vid, take: int):
-    """Indices of the `take` smallest entries under the total order
-    (distance, vec_id) — the SAME order as the final merge window, so a
-    distance tie straddling a batch's truncation boundary selects exactly
-    the candidates the exhaustive plan would. argpartition finds the kth
-    distance in O(B); only the tied tail (usually ~take rows) pays the
-    lexsort."""
-    import numpy as np
-
-    b = dist_col.shape[0]
-    if take >= b:
-        cand = np.arange(b)
-    else:
-        part = np.argpartition(dist_col, take - 1)[:take]
-        kth = dist_col[part].max()
-        cand = np.flatnonzero(dist_col <= kth)
-    order = np.lexsort((vid[cand], dist_col[cand]))
-    return cand[order[:take]]
-
-
 def topk_rows_tiebroken_batch(dist, vid, take: int):
-    """Column-wise `topk_rows_tiebroken` for a B×Q distance matrix in ONE
-    vectorized pass (r16 optimization, guide §4.2): the serving kernels
-    previously looped `for each query: topk_rows_tiebroken(...)` in
-    Python — Q interpreted iterations per Arrow batch.
+    """Indices of each column's `take` smallest entries of a B×Q
+    distance matrix under the total order (distance, vec_id) — the SAME
+    order as the merge window of `partial_topk_batch`, so a distance tie
+    straddling a batch's truncation boundary selects exactly the
+    candidates the exhaustive plan would. One vectorized pass for all
+    Q columns (guide §4.2), not a Python loop per query.
 
-    r17 (VERDICT r16 item 1): the first vectorization stable-argsorted
-    EVERY row of every column — O(B·log B) per column where the
-    per-query path paid O(B) argpartition + a tied-tail sort, a real
-    asymptotic regression for the full-scan consumers (B = 32k codes
-    per batch; driver: pq_adc_batch256_32k −17%, mmr_batch64 −15%)
-    even though the small-B pruned-list consumers improved. This
-    version keeps the single vectorized pass but restores the O(B)
-    selection: ONE `np.argpartition(..., axis=0)` cuts every column to
-    its `take` smallest, then only the take-row head is sorted — per
-    column by (distance, vid-rank), so the output is the identical
-    (distance, vec_id) total order. Columns where a distance tie
-    straddles the partition boundary (detected exactly via the per-
-    column kth value) fall back to a tie-inclusive per-column lexsort —
-    the rare case under float distances, and each such sort touches
-    only the take+ties candidate rows, never B.
+    Cost stays O(B) per column: ONE `np.argpartition(..., axis=0)` cuts
+    every column to its `take` smallest, then only the take-row head is
+    sorted — per column by (distance, vid-rank). (A first vectorization
+    stable-argsorted every row of every column, O(B·log B) per column —
+    a real regression for the full-scan consumers at B = 32k codes per
+    batch.) Columns where a distance tie straddles the partition
+    boundary (detected exactly via the per-column kth value) fall back
+    to a tie-inclusive per-column lexsort — the rare case under float
+    distances, and each such sort touches only the take+ties candidate
+    rows, never B.
 
     Equivalence is pinned by the tests/test_r16_optimizations.py fuzz
-    (300 trials incl. heavy integer-distance ties, vs both the
-    per-query path and a verbatim reference).
+    (300 trials incl. heavy integer-distance ties, vs a verbatim
+    argpartition + tied-tail lexsort reference).
     Contract: distances are NaN-free — every caller scores normalized
-    vectors/integer codes (the per-query path silently returned an
-    EMPTY column when a NaN landed inside the argpartition boundary,
-    so NaN inputs were never a supported regime there either).
+    vectors/integer codes, and `partial_topk_batch` rejects a query with
+    zero norm or a non-finite component before any job runs.
     Returns a (min(take, B) × Q) matrix of row indices."""
     import numpy as np
 
@@ -221,6 +197,130 @@ def topk_rows_tiebroken_batch(dist, vid, take: int):
     return out.T
 
 
+def partial_topk_batch(
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    prepare,
+    cols: list[str],
+    query_id: str = "query_id",
+    query_col: str = "query_vec",
+    id_col: str = "vec_id",
+    dist_col: str = "distance",
+    dist_type: str = "double",
+    carry: str | None = None,
+) -> DataFrame:
+    """The one batched partial-top-k pipeline every serving kernel runs:
+    each Arrow batch keeps a local top-k per query, and one exact merge
+    window combines them (the distributed top-k shape of REPOSE, ICDE
+    2021). Callers supply only their scorer and probe choice.
+
+      1. The query batch (bounded: a *serving batch*, not a fact table)
+         is collected to an L2-normalized Q×d matrix. A query with zero
+         norm or a non-finite component has no cosine direction: it
+         raises ValueError naming its ids before any corpus job runs.
+      2. ``prepare(qmat)`` returns ``(score, probes)``. ``score(pdf,
+         list_id, qsel)`` is the caller's B×|qsel| distance matrix of a
+         pandas batch against the query rows ``qsel`` (a transposed view
+         is fine). ``probes`` is None — every query scores every row —
+         or a Q×n_probes array of the list ids each query probes.
+      3. Per Arrow batch (routed: per ``list_id`` group of it, scored
+         against only the queries probing that list; the scan is
+         filtered to ``list_id IN (probe union)``, a partition filter on
+         the persisted IVF layout) each query keeps its `k` smallest
+         under (distance, id) and emits (query_id, id_col, dist_col
+         [, carry]). The post-map shuffle is partitions × Q × k rows —
+         independent of corpus size.
+      4. A (distance, id) rank window keeps ``rank <= k`` per query.
+
+    Truncation and merge use the same total order, so the result equals
+    the exhaustive ranking under the scorer even when exact distance
+    ties cross Arrow-batch boundaries. An empty query batch returns zero
+    rows with the same columns and types as a non-empty one."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import Window
+
+    q_rows = queries.select(query_id, query_col).collect()
+    schema = (
+        f"{query_id} {dict(queries.dtypes)[query_id]}, "
+        f"{id_col} {dict(corpus.dtypes)[id_col]}, {dist_col} {dist_type}"
+    )
+    if carry is not None:
+        schema += f", {carry} {dict(corpus.dtypes)[carry]}"
+    if not q_rows:
+        partials = corpus.sparkSession.createDataFrame([], schema)
+    else:
+        qids = np.array([r[0] for r in q_rows])
+        qmat = np.asarray([r[1] for r in q_rows], dtype=np.float64)
+        norm = np.linalg.norm(qmat, axis=1)
+        bad = ~(np.isfinite(qmat).all(axis=1) & np.isfinite(norm) & (norm > 0))
+        if bad.any():
+            raise ValueError(
+                f"{query_col}: zero norm or non-finite component for "
+                f"{query_id} {sorted(qids[bad].tolist())}"
+            )
+        # every accepted norm is > 0: plain division gives the same bits
+        # as the np.maximum(norm, 1e-12) form for every norm >= 1e-12, and
+        # the true direction below it
+        score, probes = prepare(qmat / norm[:, None])
+
+        def _top(pdf, lid, qsel):
+            dist = score(pdf, lid, qsel)
+            vid = pdf[id_col].to_numpy()
+            rows = topk_rows_tiebroken_batch(dist, vid, min(k, dist.shape[0]))
+            flat = rows.T.reshape(-1)
+            data = {
+                query_id: np.repeat(qids[qsel], rows.shape[0]),
+                id_col: vid[flat],
+                dist_col: dist[rows, np.arange(dist.shape[1])[None, :]].T.reshape(-1),
+            }
+            if carry is not None:
+                data[carry] = list(pdf[carry].to_numpy()[flat])
+            return pd.DataFrame(data)
+
+        scan = corpus.select(id_col, *cols)
+        by_list = None
+        if probes is not None:
+            # ascending query rows per probed list
+            by_list = {int(l): np.flatnonzero((probes == l).any(axis=1)) for l in np.unique(probes)}
+            probed = ", ".join(map(str, by_list)) or "NULL"  # no probes: IN (NULL) keeps no row
+            scan = corpus.filter(F.expr(f"list_id IN ({probed})")).select(id_col, *cols, "list_id")
+
+        def _partial_topk(batches):
+            for pdf in batches:
+                if pdf.empty:
+                    continue
+                if by_list is None:
+                    yield _top(pdf, None, slice(None))
+                else:
+                    yield pd.concat(
+                        [_top(g, int(l), by_list[int(l)]) for l, g in pdf.groupby("list_id")],
+                        ignore_index=True,
+                    )
+
+        partials = scan.mapInPandas(_partial_topk, schema=schema)
+    w = Window.partitionBy(query_id).orderBy(F.col(dist_col).asc(), F.col(id_col).asc())
+    return partials.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def cosine_scorer(qmat, vec_col: str):
+    """`partial_topk_batch` scorer: cosine distance of a pandas batch's
+    L2-normalized vectors to the selected queries as ONE BLAS matmul
+    (B×d @ d×|qsel|). The pure-expression path scores with zip_with/
+    aggregate, which Spark evaluates interpreted per row (higher-order
+    functions are outside whole-stage codegen) — fine at 8 queries,
+    dominant at 256+."""
+    import numpy as np
+
+    def score(pdf, _list_id, qsel):
+        vmat = np.asarray(list(pdf[vec_col]), dtype=np.float64)
+        vmat = vmat / np.linalg.norm(vmat, axis=1, keepdims=True)
+        return 1.0 - vmat @ qmat[qsel].T
+
+    return score
+
+
 def similarity_join_topk(
     queries: DataFrame,
     vectors: DataFrame,
@@ -229,82 +329,31 @@ def similarity_join_topk(
     query_col: str = "query_vec",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    batch_slack: int = 8,
     keep_vec: bool = False,
 ) -> DataFrame:
     """Vectorized batch top-k: the serving-path version of
-    `similarity_join` for large query batches.
+    `similarity_join` for large query batches — `partial_topk_batch`
+    with the BLAS `cosine_scorer`, so each Arrow batch scores as one
+    matmul and the result equals the exhaustive `similarity_join`
+    (ids and ranks; distances to float rounding).
 
     ``keep_vec=True`` carries each candidate's vector through the
     partial-top-k shuffle (r13, for mmr_rerank_batch): the pandas batch
     already holds the vectors, so emitting them costs only shuffle bytes
-    at partitions × Q × (k+slack) rows — still corpus-size-independent —
-    and saves the consumer a second corpus scan to re-attach them.
-
-    The pure-expression path scores with zip_with/aggregate, which Spark
-    evaluates interpreted per row (higher-order functions are outside
-    whole-stage codegen) — fine at 8 queries, dominant at 256+. Here the
-    query batch (bounded: it is a *serving batch*, not a fact table) is
-    collected to an L2-normalized numpy matrix and closed over an Arrow-
-    batched mapInPandas: each batch scores as ONE BLAS matmul (B×d @ d×Q)
-    and emits only its per-query partial top-(k+slack) rows, so the
-    post-map shuffle is partitions × Q × k rows — independent of corpus
-    size. A final rank window (distance, vec_id) merges partials exactly.
-
-    Per-batch truncation breaks ties by (distance, vec_id) — the same
-    total order as the merge window — so the result is byte-identical to
-    the exhaustive `similarity_join` even under adversarial distance
-    ties (slack is a perf knob, not a correctness crutch).
+    at partitions × Q × k rows — still corpus-size-independent — and
+    saves the consumer a second corpus scan to re-attach them.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-
-    q_rows = queries.select(query_id, query_col).collect()
-    qids = np.array([r[0] for r in q_rows])
-    qmat = np.asarray([r[1] for r in q_rows], dtype=np.float64)
-    qmat = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-    m_take = k + batch_slack
-
-    def _partial_topk(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            raw = pdf[vec_col].to_numpy()
-            vmat = np.asarray(list(raw), dtype=np.float64)
-            vmat = vmat / np.linalg.norm(vmat, axis=1, keepdims=True)
-            dist = 1.0 - vmat @ qmat.T  # B×Q cosine distance
-            take = min(m_take, dist.shape[0])
-            vid = pdf[id_col].to_numpy()
-            # one vectorized (distance, vec_id) top-take per column — the
-            # per-query Python loop this replaces produced the identical
-            # rows in the identical order (see topk_rows_tiebroken_batch)
-            rows = topk_rows_tiebroken_batch(dist, vid, take)
-            t = rows.shape[0]
-            flat = rows.T.reshape(-1)
-            data = {
-                query_id: np.repeat(qids, t),
-                id_col: vid[flat],
-                "distance": dist[rows, np.arange(len(qids))[None, :]].T.reshape(-1),
-            }
-            if keep_vec:
-                data[vec_col] = list(raw[flat])
-            yield pd.DataFrame(data)
-
-    qid_type = dict(queries.dtypes)[query_id]
-    id_type = dict(vectors.dtypes)[id_col]
-    schema = f"{query_id} {qid_type}, {id_col} {id_type}, distance double"
-    if keep_vec:
-        schema += f", {vec_col} {dict(vectors.dtypes)[vec_col]}"
-    partials = vectors.select(id_col, vec_col).mapInPandas(
-        _partial_topk, schema=schema
-    )
-    w = Window.partitionBy(query_id).orderBy(F.col("distance").asc(), F.col(id_col).asc())
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .withColumn("score", distance_to_score("distance"))
-    )
+    return partial_topk_batch(
+        queries,
+        vectors,
+        k,
+        lambda qmat: (cosine_scorer(qmat, vec_col), None),
+        [vec_col],
+        query_id=query_id,
+        query_col=query_col,
+        id_col=id_col,
+        carry=vec_col if keep_vec else None,
+    ).withColumn("score", distance_to_score("distance"))
 
 
 def mmr_rerank(

@@ -341,3 +341,46 @@ def test_deflated_power_iteration_tracks_second_eigenvector(spark):
     assert c1 > 0.98, c1
     assert c2 > 0.98, c2
     assert ortho < 0.1, ortho
+
+
+def test_ivf_batch_exact_ties_across_batches(spark, exact_tie_corpus, small_arrow_batches):
+    """Tied copies of every vector in 37-row Arrow batches: probing
+    every list returns exactly the exhaustive
+    `similarity_join` rows, and probing 3 of 8 lists returns exactly a
+    driver-local (distance, vec_id) top-k over each query's probed
+    lists — computed with the kernel's own probe arithmetic."""
+    import numpy as np
+
+    from pdf_brain_spark.operators.ann import ivf_index, ivf_search_topk_batch
+    from pdf_brain_spark.operators.vector_search import similarity_join
+
+    vdf, qdf = exact_tie_corpus
+    indexed, centroids = ivf_index(vdf, n_lists=8, seed=1)
+    # keep the copies adjacent in descending id order (see tied_copies)
+    indexed = indexed.orderBy(F.col("vec_id") % 1000, F.col("vec_id").desc())
+    indexed = indexed.localCheckpoint(eager=True)
+    key = lambda r: (r.query_id, r.rank, r.vec_id, r.distance)
+    exact = sorted(map(key, similarity_join(qdf, vdf, k=5).collect()))
+    full = ivf_search_topk_batch(indexed, centroids, qdf, k=5, n_probes=8).collect()
+    assert sorted(map(key, full)) == exact
+
+    rows = indexed.select("vec_id", "embedding", "list_id").collect()
+    vids = np.array([r.vec_id for r in rows])
+    lists = np.array([r.list_id for r in rows])
+    V = np.array([r.embedding for r in rows], dtype=np.float64)
+    V = V / np.linalg.norm(V, axis=1, keepdims=True)
+    q_rows = qdf.collect()
+    Q = np.array([r.query_vec for r in q_rows], dtype=np.float64)
+    Q = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+    C = np.asarray(centroids, dtype=np.float64)
+    C = C / (np.linalg.norm(C, axis=1, keepdims=True) + 1e-12)
+    probes = np.argsort(-(Q @ C.T), axis=1)[:, :3]
+    want = set()
+    for qi, qr in enumerate(q_rows):
+        cand = np.flatnonzero(np.isin(lists, probes[qi]))
+        dist = 1.0 - V[cand] @ Q[qi]
+        order = np.lexsort((vids[cand], dist))[:5]
+        want |= {(qr.query_id, rank, int(vids[cand][i]), float(dist[i]))
+                 for rank, i in enumerate(order, start=1)}
+    got = ivf_search_topk_batch(indexed, centroids, qdf, k=5, n_probes=3).collect()
+    assert set(map(key, got)) == want and len(got) == len(want)

@@ -489,3 +489,132 @@ def test_hamming_batch_of_one_matches_single(spark):
         .collect()
     ]
     assert batched == single
+
+
+# --------------------------------------------------------------------------
+# Exact ties across Arrow batches: the copies of a vector (tied_copies)
+# get identical codes and sign words, so their ADC / Hamming distances tie
+# exactly; 37-row batches cut inside and across those tie groups. Each
+# kernel must return exactly its reference's rows.
+# --------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def dup_emb(spark, tied_copies):
+    from pdf_brain_spark.sources.loaders import load_table
+
+    rows = load_table(spark, "embeddings", SF_DIR).filter(F.col("vec_id") < 40).orderBy("vec_id")
+    return tied_copies([r["embedding"] for r in rows.collect()], "float")
+
+
+def _adc_reference(codes_rows, q_rows, lut_of, probes, k):
+    """Driver-local ADC top-k: each (query, row) distance is the m LUT
+    gathers of the row's list summed in subspace order, halved; rows
+    outside a query's probed lists are skipped; ranked by (distance, id)."""
+    codes = np.asarray([r["codes"] for r in codes_rows], dtype=np.int64)
+    vids = np.asarray([r["vec_id"] for r in codes_rows])
+    lists = np.asarray([r["list_id"] if probes is not None else -1 for r in codes_rows])
+    want = set()
+    for qi, qr in enumerate(q_rows):
+        cand = np.arange(len(vids)) if probes is None else np.flatnonzero(np.isin(lists, probes[qi]))
+        dist = np.zeros(len(cand))
+        for n, i in enumerate(cand):
+            lut = lut_of(int(lists[i]))
+            d = 0.0
+            for j in range(codes.shape[1]):
+                d += lut[j, qi, codes[i, j]]
+            dist[n] = d * 0.5
+        order = np.lexsort((vids[cand], dist))[:k]
+        want |= {(qr["query_id"], rank, int(vids[cand][i]), float(dist[i]))
+                 for rank, i in enumerate(order, start=1)}
+    return want
+
+
+def _queries_of(emb, n):
+    return emb.filter(F.col("vec_id") < n).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+
+
+def _qmat(q_rows):
+    Q = np.asarray([r["query_vec"] for r in q_rows], dtype=np.float64)
+    return Q / np.linalg.norm(Q, axis=1, keepdims=True)
+
+
+def test_pq_adc_exact_ties_across_batches(spark, dup_emb, small_arrow_batches):
+    from pdf_brain_spark.operators.quantization import (
+        adc_lut,
+        ivfpq_index,
+        ivfpq_topk_adc_batch,
+        pq_topk_adc_batch,
+    )
+
+    indexed, centroids, books = ivfpq_index(dup_emb, n_lists=6, n_codes=32, seed=7)
+    # the index build joins: restore adjacent, descending-id copies
+    indexed = indexed.orderBy(F.col("vec_id") % 1000, F.col("vec_id").desc())
+    indexed = indexed.localCheckpoint(eager=True)
+    queries = _queries_of(dup_emb, 12)
+    q_rows = queries.collect()
+    Q = _qmat(q_rows)
+    lut = adc_lut(Q, books)
+    codes_rows = indexed.collect()
+    key = lambda r: (r["query_id"], r["rank"], r["vec_id"], r["distance"])
+
+    flat = pq_topk_adc_batch(indexed.drop("list_id"), books, queries, k=5).collect()
+    assert set(map(key, flat)) == _adc_reference(codes_rows, q_rows, lambda _l: lut, None, 5)
+    assert len(flat) == 12 * 5
+    # n_probes = n_lists: probe routing loses nothing — equals flat ADC
+    routed = ivfpq_topk_adc_batch(indexed, centroids, books, queries, k=5, n_probes=6)
+    assert sorted(map(key, routed.collect())) == sorted(map(key, flat))
+    C = np.asarray(centroids, dtype=np.float64)
+    C = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
+    probes = np.argsort(-(Q @ C.T), axis=1)[:, :2]
+    got = ivfpq_topk_adc_batch(indexed, centroids, books, queries, k=5, n_probes=2).collect()
+    assert set(map(key, got)) == _adc_reference(codes_rows, q_rows, lambda _l: lut, probes, 5)
+
+
+def test_residual_adc_exact_ties_across_batches(spark, dup_emb, small_arrow_batches):
+    from pdf_brain_spark.operators.quantization import (
+        adc_lut,
+        ivfpq_index_residual,
+        ivfpq_topk_adc_batch_residual,
+    )
+
+    indexed, cents, books = ivfpq_index_residual(dup_emb, n_lists=6, n_codes=32, seed=7)
+    indexed = indexed.localCheckpoint(eager=True)
+    queries = _queries_of(dup_emb, 10)
+    q_rows = queries.collect()
+    Q = _qmat(q_rows)
+    C = np.asarray(cents, dtype=np.float64)
+    probes = np.argsort(-(Q @ C.T), axis=1)[:, :3]
+    luts = {l: adc_lut(Q - C[l][None, :], books) for l in range(C.shape[0])}
+    got = ivfpq_topk_adc_batch_residual(indexed, cents, books, queries, k=5, n_probes=3)
+    key = lambda r: (r["query_id"], r["rank"], r["vec_id"], r["distance"])
+    want = _adc_reference(indexed.collect(), q_rows, luts.__getitem__, probes, 5)
+    assert set(map(key, got.collect())) == want and len(want) == 10 * 5
+
+
+def test_hamming_batch_exact_ties_across_batches(spark, dup_emb, small_arrow_batches):
+    """Integer Hamming distances tie massively, and every twin ties
+    exactly; the batched candidate cut must equal the single-query
+    TakeOrdered cut for every query (n_candidates below the six tied
+    copies of each query's own vector)."""
+    from pdf_brain_spark.operators.quantization import (
+        hamming_rerank_topk,
+        hamming_rerank_topk_batch,
+    )
+
+    queries = _queries_of(dup_emb, 6)
+    batch = {}
+    for r in hamming_rerank_topk_batch(dup_emb, queries, k=5, n_candidates=5).collect():
+        batch.setdefault(r["query_id"], []).append(
+            (r["vec_id"], r["hamming_dist"], r["score"], r["rank"])
+        )
+    for q in queries.collect():
+        single = [
+            (r["vec_id"], r["hamming_dist"], r["score"], r["rank"])
+            for r in hamming_rerank_topk(
+                dup_emb, [float(x) for x in q["query_vec"]], k=5, n_candidates=5
+            ).collect()
+        ]
+        assert sorted(batch[q["query_id"]], key=lambda t: t[3]) == single, q["query_id"]

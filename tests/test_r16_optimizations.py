@@ -12,8 +12,9 @@ import pytest
 
 
 def _topk_per_query_reference(dist_col, vid, take):
-    """The pre-r16 per-query selection (argpartition + tied-tail lexsort),
-    kept verbatim as the reference the vectorized path must match."""
+    """The per-query selection (argpartition + tied-tail lexsort) the
+    serving kernels once called in a Python loop, kept verbatim as the
+    reference the vectorized path must match."""
     b = dist_col.shape[0]
     if take >= b:
         cand = np.arange(b)
@@ -26,10 +27,7 @@ def _topk_per_query_reference(dist_col, vid, take):
 
 
 def test_topk_rows_tiebroken_batch_matches_per_query():
-    from pdf_brain_spark.operators.vector_search import (
-        topk_rows_tiebroken,
-        topk_rows_tiebroken_batch,
-    )
+    from pdf_brain_spark.operators.vector_search import topk_rows_tiebroken_batch
 
     rng = np.random.default_rng(0)
     for trial in range(300):
@@ -45,9 +43,7 @@ def test_topk_rows_tiebroken_batch_matches_per_query():
         got = topk_rows_tiebroken_batch(dist, vid, take)
         assert got.shape == (min(take, b), q)
         for j in range(q):
-            want = topk_rows_tiebroken(dist[:, j], vid, min(take, b))
             ref = _topk_per_query_reference(dist[:, j], vid, min(take, b))
-            assert np.array_equal(got[:, j], want)
             assert np.array_equal(got[:, j], ref)
 
 

@@ -323,3 +323,47 @@ def test_similarity_join_topk_keep_vec_identity(spark):
     by_id = dict(vecs)
     for r in kept:
         assert list(r.embedding) == by_id[r.vec_id], r.vec_id
+
+
+def test_similarity_join_topk_exact_ties_across_batches(
+    spark, exact_tie_corpus, small_arrow_batches
+):
+    """Every vector under six ids, 17 distinct distances and 37-row
+    Arrow batches: batches cut inside groups of exactly tied copies, and
+    the groups straddle batch boundaries. The partial top-k and its
+    merge window use the exhaustive plan's (distance, vec_id) order, so
+    the rows are IDENTICAL to `similarity_join`, distances included
+    (they are exact here), with and without the carried vector."""
+    from pdf_brain_spark.operators.vector_search import (
+        similarity_join,
+        similarity_join_topk,
+    )
+
+    vdf, qdf = exact_tie_corpus
+    key = lambda r: (r.query_id, r.rank, r.vec_id, r.distance, r.score)
+    exact = sorted(map(key, similarity_join(qdf, vdf, k=5).collect()))
+    assert len(exact) == 50
+    assert sorted(map(key, similarity_join_topk(qdf, vdf, k=5).collect())) == exact
+    kept = similarity_join_topk(qdf, vdf, k=5, keep_vec=True).collect()
+    assert sorted(map(key, kept)) == exact
+    assert len({tuple(r.embedding) for r in kept}) < len(kept)  # tied copies were served
+
+
+def test_mmr_rerank_batch_exact_ties_across_batches(
+    spark, exact_tie_corpus, small_arrow_batches
+):
+    """The batched MMR candidate fetch cuts inside and across groups of
+    tied copies; every query's picks still equal the
+    single-query operator's."""
+    from pdf_brain_spark.operators.vector_search import mmr_rerank, mmr_rerank_batch
+
+    vdf, qdf = exact_tie_corpus
+    batch = {}
+    for r in mmr_rerank_batch(vdf, qdf, k=4, n_candidates=10, lam=0.7).collect():
+        batch.setdefault(r.query_id, []).append((r.rank, r.vec_id, r.rel, r.mmr_score))
+    for q in qdf.collect():
+        single = [
+            (r.rank, r.vec_id, r.rel, r.mmr_score)
+            for r in mmr_rerank(vdf, list(q.query_vec), k=4, n_candidates=10, lam=0.7).collect()
+        ]
+        assert sorted(batch[q.query_id]) == single, q.query_id
