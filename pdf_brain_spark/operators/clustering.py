@@ -442,7 +442,7 @@ def quantized_d2(vec_col, const: list[int]):
 
     Stays inside whole-stage codegen: zip_with squared diffs + an
     integer fold, no UDF. (r16 A/B: an unrolled element_at multiply-add
-    chain — the functions/vector.py known-dimension form — was tried and
+    chain — then the functions/vector.py known-dimension form — was tried and
     REJECTED: at k=8 consumers per row the 512-node expression tree
     more than doubled the gates that use it, kmeans_clusters 2.26 →
     5.31 s warm min; the unroll wins only for a FEW instances of

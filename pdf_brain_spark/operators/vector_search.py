@@ -71,9 +71,9 @@ def topk(
 ) -> DataFrame:
     """Exact cosine top-k against a literal query vector, with the
     reference's over-fetch-then-post-filter semantics when `post_filter`
-    is given (fetch k×3 candidates, filter, re-limit to k). A literal
-    query has a known dimension: the score is the unrolled codegen'd
-    multiply-add chain with the query norm folded to one constant."""
+    is given (fetch k×3 candidates, filter, re-limit to k). The query is
+    one array constant in the score expression, with its norm folded on
+    the driver (functions/vector.py)."""
     scored = vectors.withColumn("distance", cosine_distance(vec_col, query_vec))
     if threshold is not None:
         scored = scored.filter(F.col("distance") <= F.lit(score_threshold_to_distance(threshold)))
@@ -372,13 +372,13 @@ def mmr_rerank(
     search surface returns raw similarity order (LibSQLDatabase.ts:
     325-376); MMR is the standard diversity layer on top of it.
 
-    Two-stage distributed shape: stage 1 is the exact cosine top-N
-    candidate fetch — the same scan → codegen'd score →
-    TakeOrderedAndProject(N) plan as `topk` (no shuffle of the corpus;
-    only N rows move). Stage 2 is the greedy selection, which is
-    INHERENTLY sequential in k — it runs as one bounded applyInPandas
-    task over the N candidate rows (N ≤ ~100 by construction, the same
-    bounded-kernel discipline as the k-means fit). Both terms are on the
+    Two-stage distributed shape: stage 1 is `topk` itself, the exact
+    cosine top-N candidate fetch — scan → score → TakeOrderedAndProject(N)
+    (no shuffle of the corpus, no query-side join; only N rows move).
+    Stage 2 is the greedy selection, which is INHERENTLY sequential in
+    k — it runs as one bounded applyInPandas task over the N candidate
+    rows (N ≤ ~100 by construction, the same bounded-kernel discipline as
+    the k-means fit). Both terms are on the
     engine's score scale 1 − d/2 ∈ [0, 1] — rel IS the search score, and
     the pairwise penalty is (1 + cos)/2. Raw cosine ∈ [−1, 1] in the
     penalty would PAY candidates for being anti-correlated with the
@@ -394,11 +394,9 @@ def mmr_rerank(
     import pandas as pd
 
     cand = (
-        topk_by_query_df(
+        topk(
             vectors.select(F.col(id_col).alias("vec_id"), F.col(vec_col)),
-            vectors.sparkSession.createDataFrame(
-                [([float(x) for x in query_vec],)], "query_vec array<double>"
-            ),
+            [float(x) for x in query_vec],
             k=n_candidates,
             vec_col=vec_col,
         )
