@@ -22,7 +22,7 @@ from pdf_brain_spark.queries import get_oracles, get_queries  # noqa: E402
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: exact brute-force cosine top-k vector search with the
     reference's score semantics (score = 1 - cos_distance/2)."""
-    from pdf_brain_spark.queries import vector_topk
+    from pdf_brain_spark.gates.core import vector_topk
 
     return vector_topk(spark, "/root/testdata/sf0.001")
 

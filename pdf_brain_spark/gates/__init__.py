@@ -1,4 +1,5 @@
-"""Gate definition modules (split from queries.py at round 12 —
-VERDICT r11 item 5). Do NOT import these directly for registration:
-pdf_brain_spark.queries imports them in registration order.
+"""Gate definition modules. pdf_brain_spark.queries imports them in
+registration order and exports only the registry API; import a gate
+function or helper from the module that defines it. replay.py holds the
+stream-replay harness the streaming gates share.
 """

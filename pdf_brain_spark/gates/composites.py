@@ -31,6 +31,7 @@ from pdf_brain_spark.registry import (  # noqa: F401
     query,
 )
 from pdf_brain_spark.sources.loaders import load_table  # noqa: F401
+from pdf_brain_spark.gates.replay import replayed_stream
 from pdf_brain_spark.gates.core import FTS_QUERY_TERMS, _DUCK_QUANT_X, _duck_cosine_distance  # noqa: F401
 from pdf_brain_spark.gates.quality_temporal import _duck_kmeans_rss  # noqa: F401
 
@@ -859,29 +860,16 @@ def streaming_incremental_topk_terms(spark: SparkSession, sf_dir: str) -> DataFr
     generation store; the served top-25 must equal the one-shot count
     over the whole corpus — integer partials merge exactly whatever
     order generations land in. A real AvailableNow run per invocation."""
-    import shutil
-    import tempfile
-
     from pdf_brain_spark.streaming.events import (
         read_top_terms,
         streaming_incremental_term_counts,
     )
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="sgraft_terms_")
-    stage, store, ckpt = (f"{root}/{d}" for d in ("stage", "store", "ckpt"))
-    try:
-        docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-        docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        streaming_incremental_term_counts(spark, stream, store, ckpt).awaitTermination()
+    with replayed_stream(spark, docs, F.col("doc_id") % 2 == 0) as (stream, root):
+        store = f"{root}/store"
+        streaming_incremental_term_counts(spark, stream, store, f"{root}/ckpt").awaitTermination()
         return read_top_terms(spark, store, k=25).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(
@@ -1590,32 +1578,19 @@ def streaming_incremental_fts(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical DuckDB twin the fts_bm25 gate uses. A real AvailableNow
     run per invocation; completes the incremental-index trio (band
     index for dedup, IVF for vectors, postings for text)."""
-    import shutil
-    import tempfile
-
     from pdf_brain_spark.streaming.events import (
         fts_search_persisted,
         streaming_fts_ingest,
     )
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="sgraft_fts_")
-    stage, idx, ckpt = (f"{root}/{d}" for d in ("stage", "index", "ckpt"))
-    try:
-        docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-        docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        streaming_fts_ingest(spark, stream, idx, ckpt).awaitTermination()
+    with replayed_stream(spark, docs, F.col("doc_id") % 2 == 0) as (stream, root):
+        idx = f"{root}/index"
+        streaming_fts_ingest(spark, stream, idx, f"{root}/ckpt").awaitTermination()
         res = fts_search_persisted(spark, idx, FTS_QUERY_TERMS, k=10)
         return res.select(
             "doc_id", F.round("bm25", 6).alias("bm25"), "terms_matched"
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def _register_streaming_fts_oracle() -> None:
@@ -1637,9 +1612,6 @@ def streaming_incremental_ohlc_gate(spark: SparkSession, sf_dir: str) -> DataFra
     events_ohlc_bars oracle). A real AvailableNow run per invocation;
     no watermark — a late event is one more partial row whose struct
     wins or loses the min/max."""
-    import shutil
-    import tempfile
-
     from pdf_brain_spark.streaming.events import (
         read_ohlc,
         streaming_incremental_ohlc,
@@ -1648,20 +1620,10 @@ def streaming_incremental_ohlc_gate(spark: SparkSession, sf_dir: str) -> DataFra
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "ts", "value"
     )
-    root = tempfile.mkdtemp(prefix="sgraft_ohlc_")
-    stage, store, ckpt = (f"{root}/{d}" for d in ("stage", "store", "ckpt"))
-    try:
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        streaming_incremental_ohlc(spark, stream, store, ckpt).awaitTermination()
+    with replayed_stream(spark, ev, F.col("event_id") % 2 == 0) as (stream, root):
+        store = f"{root}/store"
+        streaming_incremental_ohlc(spark, stream, store, f"{root}/ckpt").awaitTermination()
         return read_ohlc(spark, store).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 ORACLES["streaming_incremental_ohlc"] = ORACLES["events_ohlc_bars"]
@@ -1772,16 +1734,9 @@ def streaming_rollup_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     is what makes an earlier training run's input reproducible without
     extra bookkeeping. A real AvailableNow run per invocation.
 
-    Unlike every other streaming gate here, this one DEPENDS on which
-    staged file becomes batch 0 — the file source orders by
-    ms-granularity modification time with nondeterministic tie order,
-    so the even-parity file's mtime is explicitly backdated below to
-    pin the batch order (the merged-result gates are order-independent
-    and don't need this)."""
-    import os
-    import shutil
-    import tempfile
-
+    Unlike the merged-result streaming gates, this one DEPENDS on which
+    staged file becomes batch 0; replayed_stream pins batch 0 to the
+    even-parity half."""
     from pdf_brain_spark.streaming.events import (
         read_rollup,
         streaming_incremental_rollup,
@@ -1790,26 +1745,10 @@ def streaming_rollup_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "ts", "value"
     )
-    root = tempfile.mkdtemp(prefix="sgraft_tt_")
-    stage, roll, ckpt = (f"{root}/{d}" for d in ("stage", "rollup", "ckpt"))
-    try:
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-        first_files = [
-            f"{stage}/{f}" for f in os.listdir(stage) if f.endswith(".parquet")
-        ]
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-        for f in first_files:
-            st = os.stat(f)
-            os.utime(f, (st.st_atime, st.st_mtime - 10))
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        streaming_incremental_rollup(spark, stream, roll, ckpt).awaitTermination()
+    with replayed_stream(spark, ev, F.col("event_id") % 2 == 0) as (stream, root):
+        roll = f"{root}/rollup"
+        streaming_incremental_rollup(spark, stream, roll, f"{root}/ckpt").awaitTermination()
         return read_rollup(spark, roll, asof_batch_id=0).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(

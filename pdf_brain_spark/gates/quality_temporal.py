@@ -32,6 +32,7 @@ from pdf_brain_spark.registry import (  # noqa: F401
     query,
 )
 from pdf_brain_spark.sources.loaders import load_table  # noqa: F401
+from pdf_brain_spark.gates.replay import replayed_stream
 from pdf_brain_spark.gates.core import _CHUNK_ORACLE_CTE, _DUCK_CENTROIDS, _DUCK_COS, _DUCK_EUCLID, _DUCK_MINHASH_BANDED, _DUCK_MINHASH_SIG, _DUCK_NORM, _DUCK_SHINGLES, _duck_cosine_distance  # noqa: F401
 
 # --------------------------------------------------------------------------
@@ -3543,23 +3544,12 @@ def streaming_incremental_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame
     probing the batch_id < N index partitions, nothing lost. Replay
     idempotency of the per-batch writes is separately pytest-attested
     (tests/test_ingest_and_streaming.py)."""
-    import shutil
-    import tempfile
-
     from pdf_brain_spark.streaming.events import streaming_incremental_dedup
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="sgraft_sid_")
-    stage, idx, cands, ckpt = (f"{root}/{d}" for d in ("stage", "idx", "cands", "ckpt"))
-    try:
-        docs.filter(F.col("doc_id") < 400).coalesce(1).write.mode("append").parquet(stage)
-        docs.filter(F.col("doc_id") >= 400).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = streaming_incremental_dedup(spark, stream, idx, cands, ckpt)
+    with replayed_stream(spark, docs, F.col("doc_id") < 400) as (stream, root):
+        cands = f"{root}/cands"
+        q = streaming_incremental_dedup(spark, stream, f"{root}/idx", cands, f"{root}/ckpt")
         q.awaitTermination()
         return (
             spark.read.parquet(cands)
@@ -3568,8 +3558,6 @@ def streaming_incremental_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame
             .orderBy("doc_a", "doc_b")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(
@@ -3601,9 +3589,6 @@ def streaming_incremental_ann_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing in two batch generations would appear twice in the ordered
     top-k and flip the hash). Probe pruning and replay idempotency are
     pytest-attested (tests/test_ingest_and_streaming.py)."""
-    import shutil
-    import tempfile
-
     from pdf_brain_spark.operators.clustering import kmeans_assign
     from pdf_brain_spark.streaming.ann_ingest import (
         ivf_search_persisted,
@@ -3616,18 +3601,10 @@ def streaming_incremental_ann_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the centroids are used, each micro-batch runs its own map-only assign
     _, centroids = kmeans_assign(emb, k=16, seed=42)
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 9).first()["embedding"]]
-    root = tempfile.mkdtemp(prefix="sgraft_sann_")
-    stage, idx, ckpt = (f"{root}/{d}" for d in ("stage", "idx", "ckpt"))
-    try:
-        mid = emb.agg(F.expr("percentile(vec_id, 0.5)")).first()[0]
-        emb.filter(F.col("vec_id") <= mid).coalesce(1).write.mode("append").parquet(stage)
-        emb.filter(F.col("vec_id") > mid).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        streaming_ann_ingest(spark, stream, idx, centroids, ckpt).awaitTermination()
+    mid = emb.agg(F.expr("percentile(vec_id, 0.5)")).first()[0]
+    with replayed_stream(spark, emb, F.col("vec_id") <= mid) as (stream, root):
+        idx = f"{root}/idx"
+        streaming_ann_ingest(spark, stream, idx, centroids, f"{root}/ckpt").awaitTermination()
         res = ivf_search_persisted(
             spark, idx, centroids, qvec, k=12, n_probes=16
         )
@@ -3637,8 +3614,6 @@ def streaming_incremental_ann_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.round("distance", 6) + F.lit(0.0)).alias("distance"),
             F.round("score", 6).alias("score"),
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(
@@ -3670,9 +3645,6 @@ def streaming_ann_deletion_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     lost. The tombstone dir's reader-safety, compaction
     materialization, and post-floor re-ingest semantics are
     pytest-attested (test_index_deletion_tombstones)."""
-    import shutil
-    import tempfile
-
     from pdf_brain_spark.operators.clustering import kmeans_assign
     from pdf_brain_spark.streaming.ann_ingest import (
         delete_vectors,
@@ -3683,18 +3655,10 @@ def streaming_ann_deletion_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir).select("vec_id", "label", "embedding")
     _, centroids = kmeans_assign(emb, k=16, seed=42)
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 9).first()["embedding"]]
-    root = tempfile.mkdtemp(prefix="sgraft_sdel_")
-    stage, idx, ckpt = (f"{root}/{d}" for d in ("stage", "idx", "ckpt"))
-    try:
-        mid = emb.agg(F.expr("percentile(vec_id, 0.5)")).first()[0]
-        emb.filter(F.col("vec_id") <= mid).coalesce(1).write.mode("append").parquet(stage)
-        emb.filter(F.col("vec_id") > mid).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        streaming_ann_ingest(spark, stream, idx, centroids, ckpt).awaitTermination()
+    mid = emb.agg(F.expr("percentile(vec_id, 0.5)")).first()[0]
+    with replayed_stream(spark, emb, F.col("vec_id") <= mid) as (stream, root):
+        idx = f"{root}/idx"
+        streaming_ann_ingest(spark, stream, idx, centroids, f"{root}/ckpt").awaitTermination()
         delete_vectors(
             spark, idx, emb.filter(F.col("vec_id") % 7 == 3).select("vec_id"), 1
         )
@@ -3705,8 +3669,6 @@ def streaming_ann_deletion_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.round("distance", 6) + F.lit(0.0)).alias("distance"),
             F.round("score", 6).alias("score"),
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(
@@ -3732,9 +3694,6 @@ def streaming_incremental_rollup_q(spark: SparkSession, sf_dir: str) -> DataFram
     (type, hour) must combine losslessly, which is the whole design
     (count/sum are associative; no read-modify-write of existing
     buckets, no watermark needed for correctness)."""
-    import shutil
-    import tempfile
-
     from pdf_brain_spark.streaming.events import (
         read_rollup,
         streaming_incremental_rollup,
@@ -3743,20 +3702,10 @@ def streaming_incremental_rollup_q(spark: SparkSession, sf_dir: str) -> DataFram
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "ts", "value"
     )
-    root = tempfile.mkdtemp(prefix="sgraft_sroll_")
-    stage, roll, ckpt = (f"{root}/{d}" for d in ("stage", "rollup", "ckpt"))
-    try:
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        streaming_incremental_rollup(spark, stream, roll, ckpt).awaitTermination()
+    with replayed_stream(spark, ev, F.col("event_id") % 2 == 0) as (stream, root):
+        roll = f"{root}/rollup"
+        streaming_incremental_rollup(spark, stream, roll, f"{root}/ckpt").awaitTermination()
         return read_rollup(spark, roll).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(
@@ -4087,9 +4036,6 @@ def streaming_incremental_percentiles_q(spark: SparkSession, sf_dir: str) -> Dat
     arithmetic on BOTH sides). Events staged as two parity-split arrival
     files so the second micro-batch reshapes every bucket the first
     already wrote."""
-    import shutil
-    import tempfile
-
     from pdf_brain_spark.streaming.events import (
         read_histogram_percentiles,
         streaming_incremental_percentiles,
@@ -4098,20 +4044,10 @@ def streaming_incremental_percentiles_q(spark: SparkSession, sf_dir: str) -> Dat
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "ts", "value"
     )
-    root = tempfile.mkdtemp(prefix="sgraft_spct_")
-    stage, hist, ckpt = (f"{root}/{d}" for d in ("stage", "hist", "ckpt"))
-    try:
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        streaming_incremental_percentiles(spark, stream, hist, ckpt).awaitTermination()
+    with replayed_stream(spark, ev, F.col("event_id") % 2 == 0) as (stream, root):
+        hist = f"{root}/hist"
+        streaming_incremental_percentiles(spark, stream, hist, f"{root}/ckpt").awaitTermination()
         return read_histogram_percentiles(spark, hist).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(
@@ -4143,9 +4079,6 @@ def streaming_rollup_backfill_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     reader-safe by namespace precedence. Served result must equal the
     one-shot batch rollup over the corrected fact table, which is the
     DuckDB oracle."""
-    import shutil
-    import tempfile
-
     from pdf_brain_spark.streaming.events import (
         backfill_rollup,
         read_rollup,
@@ -4155,25 +4088,15 @@ def streaming_rollup_backfill_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "ts", "value"
     )
-    root = tempfile.mkdtemp(prefix="sgraft_sbf_")
-    stage, roll, ckpt = (f"{root}/{d}" for d in ("stage", "rollup", "ckpt"))
-    try:
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        streaming_incremental_rollup(spark, stream, roll, ckpt).awaitTermination()
+    with replayed_stream(spark, ev, F.col("event_id") % 2 == 0) as (stream, root):
+        roll = f"{root}/rollup"
+        streaming_incremental_rollup(spark, stream, roll, f"{root}/ckpt").awaitTermination()
         h0 = ev.agg(F.date_trunc("hour", F.min("ts")).alias("h")).first()["h"]
         corrected = ev.filter(
             F.date_trunc("hour", F.col("ts")) == F.lit(h0)
         ).withColumn("value", F.round(F.col("value") * 2, 2))
         backfill_rollup(spark, roll, corrected, floor_batch_id=1)
         return read_rollup(spark, roll).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(

@@ -30,6 +30,7 @@ from pdf_brain_spark.registry import (  # noqa: F401
     query,
 )
 from pdf_brain_spark.sources.loaders import load_table  # noqa: F401
+from pdf_brain_spark.gates.replay import replayed_stream
 from pdf_brain_spark.gates.core import FTS_QUERY_TERMS, _DUCK_CENTROIDS, _DUCK_SHINGLES  # noqa: F401
 from pdf_brain_spark.gates.quality_temporal import _sub_shingle_cap  # noqa: F401
 from pdf_brain_spark.gates.composites import _hamming_batch_oracle  # noqa: F401
@@ -545,13 +546,8 @@ def streaming_rollup_write_travel(spark: SparkSession, sf_dir: str) -> DataFrame
     temporal='coverage' serves the corrected history — repaired buckets
     from the corrected slice only, untouched buckets from all events.
     Both views verified against independent one-shot SQL in one frame.
-    A real AvailableNow run + backfill per invocation; batch order
-    pinned by backdating the first file's mtime (the time-travel gate's
-    established play)."""
-    import os
-    import shutil
-    import tempfile
-
+    A real AvailableNow run + backfill per invocation; replayed_stream
+    pins batch 0 to the even-parity half."""
     from pdf_brain_spark.streaming.events import (
         backfill_rollup,
         read_rollup,
@@ -561,23 +557,9 @@ def streaming_rollup_write_travel(spark: SparkSession, sf_dir: str) -> DataFrame
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "ts", "value"
     )
-    root = tempfile.mkdtemp(prefix="sgraft_btt_")
-    stage, roll, ckpt = (f"{root}/{d}" for d in ("stage", "rollup", "ckpt"))
-    try:
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-        first_files = [
-            f"{stage}/{f}" for f in os.listdir(stage) if f.endswith(".parquet")
-        ]
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-        for f in first_files:
-            st = os.stat(f)
-            os.utime(f, (st.st_atime, st.st_mtime - 10))
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        streaming_incremental_rollup(spark, stream, roll, ckpt).awaitTermination()
+    with replayed_stream(spark, ev, F.col("event_id") % 2 == 0) as (stream, root):
+        roll = f"{root}/rollup"
+        streaming_incremental_rollup(spark, stream, roll, f"{root}/ckpt").awaitTermination()
         backfill_rollup(
             spark, roll, ev.filter(F.col("event_id") % 4 == 0), floor_batch_id=1
         )
@@ -589,8 +571,6 @@ def streaming_rollup_write_travel(spark: SparkSession, sf_dir: str) -> DataFrame
             .orderBy("mode", "event_type", "window_start")
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(
@@ -1648,9 +1628,6 @@ def streaming_incremental_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     invocation. Incremental distinct counting is the canonical thing
     exact countDistinct cannot do without re-shuffling history; the
     sketch's persisted state is 64 longs per (group, live generation)."""
-    import shutil
-    import tempfile
-
     from pdf_brain_spark.streaming.events import (
         read_kmv,
         streaming_incremental_kmv as drive_kmv,
@@ -1659,20 +1636,10 @@ def streaming_incremental_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "user_id"
     )
-    root = tempfile.mkdtemp(prefix="sgraft_kmv_")
-    stage, store, ckpt = (f"{root}/{d}" for d in ("stage", "kmv", "ckpt"))
-    try:
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        drive_kmv(spark, stream, store, ckpt).awaitTermination()
+    with replayed_stream(spark, ev, F.col("event_id") % 2 == 0) as (stream, root):
+        store = f"{root}/kmv"
+        drive_kmv(spark, stream, store, f"{root}/ckpt").awaitTermination()
         return read_kmv(spark, store).orderBy("event_type").localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(

@@ -30,6 +30,7 @@ from pdf_brain_spark.registry import (  # noqa: F401
     query,
 )
 from pdf_brain_spark.sources.loaders import load_table  # noqa: F401
+from pdf_brain_spark.gates.replay import replayed_stream
 from pdf_brain_spark.gates.core import FTS_QUERY_TERMS  # noqa: F401
 
 @query(
@@ -1055,9 +1056,6 @@ def streaming_incremental_regression(spark: SparkSession, sf_dir: str) -> DataFr
     oracle computes over all events. Fitting without re-shuffling
     history: persisted state is 5 longs per (group, live generation).
     A real AvailableNow run per invocation."""
-    import shutil
-    import tempfile
-
     from pdf_brain_spark.streaming.events import (
         read_regression,
         streaming_incremental_regression as drive_reg,
@@ -1066,20 +1064,10 @@ def streaming_incremental_regression(spark: SparkSession, sf_dir: str) -> DataFr
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "ts", "value"
     )
-    root = tempfile.mkdtemp(prefix="sgraft_reg_")
-    stage, store, ckpt = (f"{root}/{d}" for d in ("stage", "reg", "ckpt"))
-    try:
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        drive_reg(spark, stream, store, ckpt).awaitTermination()
+    with replayed_stream(spark, ev, F.col("event_id") % 2 == 0) as (stream, root):
+        store = f"{root}/reg"
+        drive_reg(spark, stream, store, f"{root}/ckpt").awaitTermination()
         return read_regression(spark, store).orderBy("event_type").localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(
@@ -1103,9 +1091,6 @@ def streaming_incremental_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal. A real AvailableNow run per invocation; persisted state
     scales with occupied id-range/64 per group (roaring-style
     containers are the sparse-domain growth path)."""
-    import shutil
-    import tempfile
-
     from pdf_brain_spark.streaming.events import (
         read_bitmap_distinct,
         streaming_incremental_bitmap as drive_bm,
@@ -1114,20 +1099,10 @@ def streaming_incremental_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "user_id"
     )
-    root = tempfile.mkdtemp(prefix="sgraft_bm_")
-    stage, store, ckpt = (f"{root}/{d}" for d in ("stage", "bm", "ckpt"))
-    try:
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        drive_bm(spark, stream, store, ckpt).awaitTermination()
+    with replayed_stream(spark, ev, F.col("event_id") % 2 == 0) as (stream, root):
+        store = f"{root}/bm"
+        drive_bm(spark, stream, store, f"{root}/ckpt").awaitTermination()
         return read_bitmap_distinct(spark, store).orderBy("event_type").localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(
@@ -2469,9 +2444,6 @@ def streaming_incremental_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size — the regime where even the term dictionary outgrows
     memory and exact top-k stops being maintainable. A real
     AvailableNow run per invocation."""
-    import shutil
-    import tempfile
-
     from pdf_brain_spark.functions.text import tokenize
     from pdf_brain_spark.streaming.events import (
         read_cms_estimates,
@@ -2479,17 +2451,9 @@ def streaming_incremental_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="sgraft_cms_")
-    stage, store, ckpt = (f"{root}/{d}" for d in ("stage", "cms", "ckpt"))
-    try:
-        docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-        docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        drive_cms(spark, stream, store, ckpt).awaitTermination()
+    with replayed_stream(spark, docs, F.col("doc_id") % 2 == 0) as (stream, root):
+        store = f"{root}/cms"
+        drive_cms(spark, stream, store, f"{root}/ckpt").awaitTermination()
         exact = (
             docs.select(F.explode(tokenize("text")).alias("term"))
             .groupBy("term")
@@ -2512,8 +2476,6 @@ def streaming_incremental_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("term")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(
@@ -3816,34 +3778,21 @@ def streaming_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame
     sketch-grade answer to source_contamination_matrix's exact overlap:
     16 longs per source instead of a shingle inverted index. A real
     AvailableNow run per invocation."""
-    import shutil
-    import tempfile
-
     from pdf_brain_spark.streaming.events import (
         read_minhash_similarity,
         streaming_incremental_minhash as drive_mh,
     )
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "source", "text")
-    root = tempfile.mkdtemp(prefix="sgraft_mh_")
-    stage, store, ckpt = (f"{root}/{d}" for d in ("stage", "mh", "ckpt"))
-    try:
-        docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode("append").parquet(stage)
-        docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(stage)
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        drive_mh(spark, stream, store, ckpt).awaitTermination()
+    with replayed_stream(spark, docs, F.col("doc_id") % 2 == 0) as (stream, root):
+        store = f"{root}/mh"
+        drive_mh(spark, stream, store, f"{root}/ckpt").awaitTermination()
         return (
             read_minhash_similarity(spark, store)
             .orderBy(F.col("jaccard_est_ppm").desc(), "src_a", "src_b")
             .limit(50)
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(

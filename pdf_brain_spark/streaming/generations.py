@@ -706,22 +706,23 @@ def kept_index_rows(
     if not tdirs:
         return rows
     # per-dir reads with the floor attached as a literal (serial-suffixed
-    # dir names are not hive-parsable, by design — see _tombstone_dirs)
+    # dir names are not hive-parsable, by design — see _tombstone_dirs);
+    # keys renamed so the anti-join condition names each side unambiguously
+    tkeys = [f"_t{i}" for i in range(len(key_cols))]
     tombs = reduce(
         lambda a, b: a.unionByName(b),
         [
-            read_generation_dirs(spark, [f"{index_dir}/{name}"])
-            .select(*key_cols)
-            .withColumn("_tf", F.lit(k))
+            read_generation_dirs(spark, [f"{index_dir}/{name}"]).select(
+                *[F.col(c).alias(t) for c, t in zip(key_cols, tkeys)], F.lit(k).alias("_tf")
+            )
             for k, name in tdirs
         ],
     )
-    fl = tombs.groupBy(*key_cols).agg(F.max("_tf").alias("_fl"))
-    return (
-        rows.join(F.broadcast(fl), list(key_cols), "left")
-        .filter(F.col("_fl").isNull() | (_coverage_col() > F.col("_fl")))
-        .drop("_fl")
-    )
+    dead = reduce(
+        lambda a, b: a & b,
+        [F.col(c) == F.col(t) for c, t in zip(key_cols, tkeys)],
+    ) & (F.col("_tf") >= _coverage_col())
+    return rows.join(F.broadcast(tombs), dead, "left_anti")
 
 
 def compact_index_rows(

@@ -441,7 +441,7 @@ def _term_stats_shared_inputs(spark: SparkSession, sf_dir: str) -> dict:
     exact-integer identical to what each member's fallback path computes
     (the members assert the schemas they consume), so every member's
     result — and the suite hash — is unchanged; the standalone member
-    gates (oracle harness, MEMBER_ALIASES) still run their own
+    gates (oracle harness, lookup_query by name) still run their own
     fallback pipelines with unchanged plans.
 
     100 TB posture (same deliberate trade as pmi_pairs, VERDICT r16

@@ -60,17 +60,15 @@ def compare(name: str, spark, sf_dir: str, verbose: bool = True) -> bool:
 
     q = lookup_query(name)
     sql = lookup_oracle(name)
+    if sql is None:
+        print(f"{name}: NO ORACLE")
+        return False
     sdf = q(spark, sf_dir)
     # toPandas, not collect(): the driver's gate compares pandas-to-pandas,
     # so NULL float -> NaN and NULL timestamp -> NaT on BOTH sides
     spdf = sdf.toPandas()
     srows = [tuple(r) for r in spdf.itertuples(index=False, name=None)]
     scols = list(spdf.columns)
-    if sql is None:
-        ok = len(srows) >= 0
-        if verbose:
-            print(f"{name}: rows-only check, {len(srows)} rows -> OK")
-        return ok
     con = duck_connect(sf_dir)
     # go through pandas, not fetchall(): the driver's gate does, and the
     # dtype coercions differ (DuckDB HUGEINT -> float64 in pandas but

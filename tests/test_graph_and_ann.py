@@ -233,7 +233,7 @@ def test_clustering_report_query_fails_on_poisoned_wssse(spark, monkeypatch):
     import pytest
 
     import pdf_brain_spark.operators.clustering as cl
-    from pdf_brain_spark.queries import clustering_model_report_float
+    from pdf_brain_spark.gates.composites import clustering_model_report_float
 
     orig = cl.bic_select_k
 

@@ -113,6 +113,37 @@ def ann_stores(spark, tmp_path_factory):
     return stores, centroids
 
 
+@pytest.fixture(scope="module")
+def fts_retombstoned(spark, docs, tmp_path_factory):
+    """Batches 0-2 live (doc_id % 3), no compaction. Doc A (batch 0) is
+    tombstoned at floors 1 and 2, in two dirs; doc B (batch 0) at floor 1,
+    then re-inserted as batch 3; doc C (batch 2) only at floor 1, below
+    its coverage; doc D (batch 2) at floor 2, equal to its coverage.
+    Returns (index_dir, {name: doc_id})."""
+    from pdf_brain_spark.streaming.events import (
+        delete_fts_documents,
+        make_fts_postings_batch_fn,
+    )
+
+    idx = str(tmp_path_factory.mktemp("retombstoned") / "fts")
+    fn = make_fts_postings_batch_fn(idx)
+    for b in range(3):
+        fn(docs.filter(F.col("doc_id") % 3 == b), b)
+    ids = sorted(r["doc_id"] for r in docs.select("doc_id").collect())
+    batch0 = [i for i in ids if i % 3 == 0]
+    batch2 = [i for i in ids if i % 3 == 2]
+    key = {"A": batch0[0], "B": batch0[1], "C": batch2[0], "D": batch2[1]}
+
+    def delete(names, floor):
+        keys_df = spark.createDataFrame([(key[n],) for n in names], "doc_id long")
+        delete_fts_documents(spark, idx, keys_df, floor)
+
+    delete("ABC", 1)
+    delete("AD", 2)
+    fn(docs.filter(F.col("doc_id") == key["B"]), 3)
+    return idx, key
+
+
 # --- the helper reads what inference reads ----------------------------------
 
 
@@ -261,6 +292,51 @@ def test_persisted_bm25_build_after_compaction_fires_two_jobs(spark, fts_compact
     df, jobs = _build_jobs(spark, lambda: fts_search_persisted(spark, idx, TERMS, k=10))
     assert jobs <= 2, jobs
     assert _rows(df) == _rows(bm25_scores(live, TERMS, k=10))
+
+
+def test_kept_rows_drop_a_row_iff_a_tombstone_floor_covers_it(spark, fts_retombstoned, fts_store):
+    """A row is dead iff some tombstone for its key has a floor >= the
+    row's coverage: with a key tombstoned twice, a key re-inserted above
+    its floor, and tombstones below and at a row's coverage, the kept
+    rows equal that predicate evaluated on the raw store. Both key
+    stores build with no job, and the corpus-stats action pays one
+    broadcast for the tombstones (no aggregate ahead of it)."""
+    from pdf_brain_spark.streaming.events import fts_corpus_stats, fts_docs_dir
+    from pdf_brain_spark.streaming.generations import (
+        _tombstone_dirs,
+        kept_index_rows,
+        live_generation_dirs,
+        read_generation_dirs,
+    )
+
+    idx, key = fts_retombstoned
+    for store in (idx, fts_docs_dir(idx)):
+        raw = read_generation_dirs(spark, live_generation_dirs(spark, store), store)
+        floors = {}
+        for k, name in _tombstone_dirs(spark, store):
+            for r in read_generation_dirs(spark, [f"{store}/{name}"]).collect():
+                floors.setdefault(r["doc_id"], []).append(k)
+        assert floors[key["A"]] == [1, 2] and floors[key["B"]] == [1]
+
+        def alive(r):
+            return all(f < r["batch_id"] for f in floors.get(r["doc_id"], []))
+
+        want = sorted(tuple(r) for r in raw.collect() if alive(r))
+        kept, jobs = _build_jobs(spark, lambda: kept_index_rows(spark, store, ["doc_id"]))
+        assert jobs == 0, store
+        assert kept.columns == raw.columns
+        got = sorted(tuple(r) for r in kept.collect())
+        assert got == want, store
+        by_doc = {}
+        for r in kept.select("doc_id", "batch_id").distinct().collect():
+            by_doc.setdefault(r["doc_id"], []).append(r["batch_id"])
+        assert key["A"] not in by_doc and key["D"] not in by_doc
+        assert by_doc[key["B"]] == [3] and by_doc[key["C"]] == [2]
+
+    # an aggregate over the tombstones ahead of their broadcast adds a job to each
+    _, four = _build_jobs(spark, lambda: fts_corpus_stats(spark, idx).collect())
+    _, tombstoned = _build_jobs(spark, lambda: fts_corpus_stats(spark, fts_store[0]).collect())
+    assert (four, tombstoned) == (7, 7)
 
 
 # --- query-term edge cases ------------------------------------------------------

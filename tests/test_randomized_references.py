@@ -532,7 +532,7 @@ def test_lsh_planner_scurve_matches_math_pow():
     (b, r) would break)."""
     import math
 
-    from pdf_brain_spark.queries import _LSH_PLAN_CONFIGS, _lsh_p_chain_sql
+    from pdf_brain_spark.gates.r9_r10 import _LSH_PLAN_CONFIGS, _lsh_p_chain_sql
 
     def chain_eval(r, b, t):
         s = 1.0
@@ -567,7 +567,7 @@ def test_autocorrelation_matches_python_reference(spark):
     independent pure-python loop on a seeded random series, compared to
     the gate's integer-moment form run through the same Spark operator
     path on a synthetic events table."""
-    from pdf_brain_spark.queries import events_autocorrelation
+    from pdf_brain_spark.gates.r9_r10 import events_autocorrelation
     import tempfile, shutil, os
 
     rng = random.Random(13)
@@ -616,7 +616,7 @@ def test_ivf_recall_curve_matches_python_reference(spark):
     import shutil
     import tempfile
 
-    from pdf_brain_spark.queries import ivf_recall_curve
+    from pdf_brain_spark.gates.r9_r10 import ivf_recall_curve
 
     rng = random.Random(7)
     n, dim, n_labels = 60, 4, 3
@@ -1111,7 +1111,7 @@ def test_soft_margin_flags_flip_on_boundary_fixtures(spark):
     exactly on a 6dp rounding boundary (x.5 micro-units) flips
     boundary_margin_ok; a rounded value exactly at the 0.1 floor flips
     floor_margin_ok; comfortably-off-boundary values leave both TRUE."""
-    from pdf_brain_spark.queries import _soft_margin_flags
+    from pdf_brain_spark.gates.core import _soft_margin_flags
 
     def flags(praw_values):
         df = spark.createDataFrame(
@@ -2071,7 +2071,7 @@ def test_rbo_cleared_integer_form_matches_float_definition():
     o_d <= d."""
     import random
 
-    from pdf_brain_spark.queries import _RBO_DEN_NANO, _RBO_P_NANO
+    from pdf_brain_spark.gates.r11 import _RBO_DEN_NANO, _RBO_P_NANO
 
     p = 0.9
     for seed in (14, 37, 91):
@@ -2179,7 +2179,7 @@ def test_periodogram_recovers_planted_sinusoid():
     import math
     import random
 
-    from pdf_brain_spark.queries import _PG_PERIODS, _PG_TRIG
+    from pdf_brain_spark.gates.r11 import _PG_PERIODS, _PG_TRIG
 
     trig = {(P, p): (c, s) for P, p, c, s in _PG_TRIG}
     for seed in (19, 47):
@@ -2564,7 +2564,7 @@ def test_sprt_integer_llr_matches_float_walk_and_wald_semantics():
     import math
     import random
 
-    from pdf_brain_spark.queries import (
+    from pdf_brain_spark.gates.r11 import (
         _SPRT_A_MICRO,
         _SPRT_B_MICRO,
         _SPRT_P0,
@@ -2601,7 +2601,7 @@ def test_holm_cumulative_min_matches_literal_stepdown_loop():
     import random
     import statistics
 
-    from pdf_brain_spark.queries import _HOLM_ALPHA, _HOLM_M, _HOLM_Z
+    from pdf_brain_spark.gates.r11 import _HOLM_ALPHA, _HOLM_M, _HOLM_Z
 
     nd = statistics.NormalDist()
     for seed in (48, 92):

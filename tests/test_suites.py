@@ -13,7 +13,6 @@ def test_registry_invariants():
     from pdf_brain_spark.queries import (
         CONSOLIDATED,
         GATE_WINDOW,
-        MEMBER_ALIASES,
         ORACLES,
         QUERIES,
         lookup_oracle,
@@ -29,15 +28,8 @@ def test_registry_invariants():
     for s in SUITE_PLAN:
         assert s in QUERIES and s in ORACLES
     for m in members:
-        # members stay out of the driver-facing registry EXCEPT the
-        # round's re-attest picks and changed-plan claimants, exposed
-        # as standalone aliases (r14, VERDICT r13 item 3; r16 window
-        # rule)
-        if m in MEMBER_ALIASES:
-            assert QUERIES[m] is CONSOLIDATED[m][0]
-            assert ORACLES[m] == CONSOLIDATED[m][1]
-        else:
-            assert m not in QUERIES and m not in ORACLES
+        # members are verified inside their suite's row, never standalone
+        assert m not in QUERIES and m not in ORACLES
         assert callable(lookup_query(m))
         assert isinstance(lookup_oracle(m), str)
         fn, sql, suite = CONSOLIDATED[m]
@@ -46,41 +38,26 @@ def test_registry_invariants():
         assert sql.strip() in ORACLES[suite]
 
 
-def test_reattest_picks_match_seed_rule():
-    """The 7 re-attest window literals equal the deterministic
-    sha256('r{ROUND}:{name}') pick over current suite membership — the
-    rotation is reproducible and un-gameable (VERDICT r13 item 3)."""
-    from pdf_brain_spark.queries import (
-        N_REATTEST,
-        REATTEST,
-        REATTEST_ROUND,
-        _reattest_picks,
-    )
+def test_gate_window_is_fixed():
+    """The window is a constant: the 30 suites in SUITE_PLAN order, then
+    20 named standalone gates (11 flagship spares and 9 gates on the
+    shared kernels' and the benchmark's paths), none a suite member."""
+    from pdf_brain_spark.queries import CONSOLIDATED, GATE_WINDOW
+    from pdf_brain_spark.suites import SUITE_PLAN
 
-    assert REATTEST == (_reattest_picks(REATTEST_ROUND, N_REATTEST) if N_REATTEST else [])
-    # r17: the 9-slot tail is ENTIRELY changed-plan slots (VERDICT r16
-    # item 8 — the r16 optimization round's DAG-changed gates take
-    # precedence over the re-attest pool), so the re-attest pick is
-    # empty this round (COVERAGE.md "Round-17 rotation").
-    assert len(REATTEST) == N_REATTEST == 0
-    from pdf_brain_spark.queries import CHANGED_PLAN_ALIASES, MEMBER_ALIASES
-
-    assert MEMBER_ALIASES == CHANGED_PLAN_ALIASES + REATTEST
-    assert CHANGED_PLAN_ALIASES == [
-        "source_contamination_matrix",
-        "dedup_edit_distance_verify",
-        "kmeans_clusters",
-    ]
-    # the 6 standalone changed-plan claimants hold the remaining tail
-    from pdf_brain_spark.queries import GATE_WINDOW
-
-    assert GATE_WINDOW[-9:] == [
+    assert GATE_WINDOW[:30] == list(SUITE_PLAN)
+    assert GATE_WINDOW[30:] == [
+        "vector_topk", "fts_bm25", "hybrid_search",
+        "vector_similarity_join", "transitive_closure",
+        "context_expansion", "multiscale_retrieval", "chunk_pipeline",
+        "events_percentiles", "library_stats", "llm_enrichment",
         "doc_repetition_filter", "benchmark_contamination",
         "dedup_ngram_jaccard", "hamming_ann_batch16",
         "reciprocal_nearest_neighbors", "ann_recall_report",
-        "source_contamination_matrix", "dedup_edit_distance_verify",
-        "kmeans_clusters",
+        "events_sessionize", "tpch_q3_shipping_priority",
+        "streaming_incremental_fts",
     ]
+    assert not set(GATE_WINDOW) & set(CONSOLIDATED)
 
 
 def test_registry_pinned_counts():
@@ -90,21 +67,37 @@ def test_registry_pinned_counts():
     is caught by a count audit, the way the r10 near-miss was. Update
     these three numbers deliberately, in the same commit that changes
     the registry — a drive-by drift here is the bug this test exists
-    to catch. r17 state: 183 driver-facing gates (unchanged — zero
-    net-new registrations, fifth consecutive round) + 3 member aliases
-    (round-rotating; aliases of CONSOLIDATED entries, not new surfaces
-    — the 3 suite-member changed-plan claimants; the 6 standalone
-    changed-plan claimants are among the 183), 192 suite-consolidated
-    members across 30 suites = 375 named surfaces."""
-    from pdf_brain_spark.queries import CONSOLIDATED, MEMBER_ALIASES, ORACLES, QUERIES
+    to catch. Current state: 183 driver-facing gates, 192
+    suite-consolidated members across 30 suites = 375 named surfaces."""
+    from pdf_brain_spark.queries import CONSOLIDATED, ORACLES, QUERIES
     from pdf_brain_spark.suites import SUITE_PLAN
 
-    assert len(QUERIES) == 183 + len(MEMBER_ALIASES) == 186
-    assert len(ORACLES) == 186
+    assert len(QUERIES) == 183
+    assert len(ORACLES) == 183
     assert len(CONSOLIDATED) == 192
     assert len(SUITE_PLAN) == 30
-    # named surfaces: gates that are not aliases + members
-    assert (len(QUERIES) - len(MEMBER_ALIASES)) + len(CONSOLIDATED) == 375
+    assert len(QUERIES) + len(CONSOLIDATED) == 375
+
+
+def test_streaming_gates_share_the_replay_harness():
+    """One stream-replay skeleton: under pdf_brain_spark/gates/ the file
+    source's maxFilesPerTrigger appears only in the harness and the
+    late-data gate (three staged dirs, a memory sink), and queries.py
+    hoists no gate module's names into its own namespace."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "pdf_brain_spark"
+    holders = {}
+    for path in sorted((pkg / "gates").glob("*.py")):
+        n = path.read_text().count("maxFilesPerTrigger")
+        if n:
+            holders[path.name] = n
+    assert holders == {"replay.py": 1, "r8_corpus_b.py": 1}, holders
+    late = (pkg / "gates" / "r8_corpus_b.py").read_text()
+    start = late.index("def streaming_late_data_drop(")
+    end = late.index("\n@query(", start)
+    assert "maxFilesPerTrigger" in late[start:end]
+    assert "globals()[" not in (pkg / "queries.py").read_text()
 
 
 def test_membership_history_latest_snapshot_matches_current_plan():

@@ -108,7 +108,7 @@ def gate_flags(build, spark) -> dict[str, int]:
 
 
 def main() -> None:
-    from pdf_brain_spark.queries import MEMBER_ALIASES, get_queries
+    from pdf_brain_spark.queries import get_queries
     from pdf_brain_spark.session import get_spark
 
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
@@ -116,10 +116,7 @@ def main() -> None:
     sf_dir = args[0] if args else "/root/testdata/sf0.001"
     spark = get_spark("plan_audit")
 
-    # Member aliases (re-attest picks + changed-plan claimants)
-    # duplicate member plans that already appear inside their suite's
-    # plan; auditing them would double-pin rotating names.
-    names = [n for n in get_queries() if n not in MEMBER_ALIASES]
+    names = list(get_queries())
     flags: dict[str, dict[str, int]] = {}
     failures: list[str] = []
     errored: set[str] = set()
