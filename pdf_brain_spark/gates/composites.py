@@ -855,20 +855,17 @@ def documents_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_incremental_topk_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming EXACT heavy hitters (streaming/events.py::
-    streaming_incremental_term_counts): the documents table streams in
+    TERM_COUNTS): the documents table streams in
     as two micro-batches of vocabulary-grain count partials on the
     generation store; the served top-25 must equal the one-shot count
     over the whole corpus — integer partials merge exactly whatever
     order generations land in. A real AvailableNow run per invocation."""
-    from pdf_brain_spark.streaming.events import (
-        read_top_terms,
-        streaming_incremental_term_counts,
-    )
+    from pdf_brain_spark.streaming.events import TERM_COUNTS, read_top_terms
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
     with replayed_stream(spark, docs, F.col("doc_id") % 2 == 0) as (stream, root):
         store = f"{root}/store"
-        streaming_incremental_term_counts(spark, stream, store, f"{root}/ckpt").awaitTermination()
+        TERM_COUNTS.stream(stream, store, f"{root}/ckpt").awaitTermination()
         return read_top_terms(spark, store, k=25).localCheckpoint(eager=True)
 
 
@@ -1612,17 +1609,14 @@ def streaming_incremental_ohlc_gate(spark: SparkSession, sf_dir: str) -> DataFra
     events_ohlc_bars oracle). A real AvailableNow run per invocation;
     no watermark — a late event is one more partial row whose struct
     wins or loses the min/max."""
-    from pdf_brain_spark.streaming.events import (
-        read_ohlc,
-        streaming_incremental_ohlc,
-    )
+    from pdf_brain_spark.streaming.events import OHLC, read_ohlc
 
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "ts", "value"
     )
     with replayed_stream(spark, ev, F.col("event_id") % 2 == 0) as (stream, root):
         store = f"{root}/store"
-        streaming_incremental_ohlc(spark, stream, store, f"{root}/ckpt").awaitTermination()
+        OHLC.stream(stream, store, f"{root}/ckpt").awaitTermination()
         return read_ohlc(spark, store).localCheckpoint(eager=True)
 
 
@@ -1737,17 +1731,14 @@ def streaming_rollup_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Unlike the merged-result streaming gates, this one DEPENDS on which
     staged file becomes batch 0; replayed_stream pins batch 0 to the
     even-parity half."""
-    from pdf_brain_spark.streaming.events import (
-        read_rollup,
-        streaming_incremental_rollup,
-    )
+    from pdf_brain_spark.streaming.events import ROLLUP, read_rollup
 
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "ts", "value"
     )
     with replayed_stream(spark, ev, F.col("event_id") % 2 == 0) as (stream, root):
         roll = f"{root}/rollup"
-        streaming_incremental_rollup(spark, stream, roll, f"{root}/ckpt").awaitTermination()
+        ROLLUP.stream(stream, roll, f"{root}/ckpt").awaitTermination()
         return read_rollup(spark, roll, asof_batch_id=0).localCheckpoint(eager=True)
 
 

@@ -3685,7 +3685,7 @@ def streaming_ann_deletion_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_incremental_rollup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL streaming run of incremental rollup maintenance
-    (streaming/events.py::streaming_incremental_rollup): events staged
+    (streaming/events.py::ROLLUP): events staged
     as two arrival files SPLIT BY PARITY — so the second micro-batch is
     all late data for hours the first batch already covered — streamed
     through the foreachBatch partials writer, then served via
@@ -3694,17 +3694,14 @@ def streaming_incremental_rollup_q(spark: SparkSession, sf_dir: str) -> DataFram
     (type, hour) must combine losslessly, which is the whole design
     (count/sum are associative; no read-modify-write of existing
     buckets, no watermark needed for correctness)."""
-    from pdf_brain_spark.streaming.events import (
-        read_rollup,
-        streaming_incremental_rollup,
-    )
+    from pdf_brain_spark.streaming.events import ROLLUP, read_rollup
 
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "ts", "value"
     )
     with replayed_stream(spark, ev, F.col("event_id") % 2 == 0) as (stream, root):
         roll = f"{root}/rollup"
-        streaming_incremental_rollup(spark, stream, roll, f"{root}/ckpt").awaitTermination()
+        ROLLUP.stream(stream, roll, f"{root}/ckpt").awaitTermination()
         return read_rollup(spark, roll).localCheckpoint(eager=True)
 
 
@@ -4007,7 +4004,7 @@ def tfidf_top_terms_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     WITH b AS (
       SELECT event_type, CAST(round(value * 100) AS BIGINT) AS bucket, count(*) AS n
-      FROM events GROUP BY 1, 2
+      FROM events WHERE value IS NOT NULL GROUP BY 1, 2
     ),
     tot AS (SELECT event_type, sum(n) AS total FROM b GROUP BY 1),
     cum AS (
@@ -4026,7 +4023,7 @@ def tfidf_top_terms_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_incremental_percentiles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL streaming run of incremental percentile maintenance
-    (streaming/events.py::streaming_incremental_percentiles): exact
+    (streaming/events.py::VALUE_HISTOGRAM): exact
     percentiles are normally un-incremental, but a CENT-RESOLUTION
     histogram is a mergeable sketch whose quantiles of the cent-rounded
     distribution are exact — so the foreachBatch partials (event_type,
@@ -4037,8 +4034,8 @@ def streaming_incremental_percentiles_q(spark: SparkSession, sf_dir: str) -> Dat
     files so the second micro-batch reshapes every bucket the first
     already wrote."""
     from pdf_brain_spark.streaming.events import (
+        VALUE_HISTOGRAM,
         read_histogram_percentiles,
-        streaming_incremental_percentiles,
     )
 
     ev = load_table(spark, "events", sf_dir).select(
@@ -4046,7 +4043,7 @@ def streaming_incremental_percentiles_q(spark: SparkSession, sf_dir: str) -> Dat
     )
     with replayed_stream(spark, ev, F.col("event_id") % 2 == 0) as (stream, root):
         hist = f"{root}/hist"
-        streaming_incremental_percentiles(spark, stream, hist, f"{root}/ckpt").awaitTermination()
+        VALUE_HISTOGRAM.stream(stream, hist, f"{root}/ckpt").awaitTermination()
         return read_histogram_percentiles(spark, hist).localCheckpoint(eager=True)
 
 
@@ -4080,9 +4077,9 @@ def streaming_rollup_backfill_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-shot batch rollup over the corrected fact table, which is the
     DuckDB oracle."""
     from pdf_brain_spark.streaming.events import (
+        ROLLUP,
         backfill_rollup,
         read_rollup,
-        streaming_incremental_rollup,
     )
 
     ev = load_table(spark, "events", sf_dir).select(
@@ -4090,7 +4087,7 @@ def streaming_rollup_backfill_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     with replayed_stream(spark, ev, F.col("event_id") % 2 == 0) as (stream, root):
         roll = f"{root}/rollup"
-        streaming_incremental_rollup(spark, stream, roll, f"{root}/ckpt").awaitTermination()
+        ROLLUP.stream(stream, roll, f"{root}/ckpt").awaitTermination()
         h0 = ev.agg(F.date_trunc("hour", F.min("ts")).alias("h")).first()["h"]
         corrected = ev.filter(
             F.date_trunc("hour", F.col("ts")) == F.lit(h0)

@@ -646,7 +646,7 @@ def margin_knn_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_incremental_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental NOVELTY maintenance — first-seen tracking
     as the mergeable-partials store's min-struct monoid
-    (streaming/events.py::make_novelty_batch_fn): each batch writes its
+    (streaming/events.py::NOVELTY): each batch writes its
     4-gram types with (batch, min doc) and the serve merges
     min(struct(fb, fd)) per type, so 'how much of THIS crawl increment
     is new text' is answered per increment without re-scanning history
@@ -662,10 +662,7 @@ def streaming_incremental_novelty(spark: SparkSession, sf_dir: str) -> DataFrame
     import shutil
     import tempfile
 
-    from pdf_brain_spark.streaming.events import (
-        read_novelty,
-        streaming_incremental_novelty as drive_novelty,
-    )
+    from pdf_brain_spark.streaming.events import NOVELTY, read_novelty
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
     root = tempfile.mkdtemp(prefix="sgraft_novelty_")
@@ -675,12 +672,12 @@ def streaming_incremental_novelty(spark: SparkSession, sf_dir: str) -> DataFrame
             "append"
         ).parquet(stage)
         stream = spark.readStream.schema(docs.schema).parquet(stage)
-        drive_novelty(spark, stream, store, ckpt).awaitTermination()
+        NOVELTY.stream(stream, store, ckpt).awaitTermination()
         docs.filter(F.col("doc_id") >= 100).coalesce(1).write.mode(
             "append"
         ).parquet(stage)
         stream = spark.readStream.schema(docs.schema).parquet(stage)
-        drive_novelty(spark, stream, store, ckpt).awaitTermination()
+        NOVELTY.stream(stream, store, ckpt).awaitTermination()
         return read_novelty(spark, store).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(root, ignore_errors=True)

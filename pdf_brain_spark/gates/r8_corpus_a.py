@@ -549,9 +549,9 @@ def streaming_rollup_write_travel(spark: SparkSession, sf_dir: str) -> DataFrame
     A real AvailableNow run + backfill per invocation; replayed_stream
     pins batch 0 to the even-parity half."""
     from pdf_brain_spark.streaming.events import (
+        ROLLUP,
         backfill_rollup,
         read_rollup,
-        streaming_incremental_rollup,
     )
 
     ev = load_table(spark, "events", sf_dir).select(
@@ -559,7 +559,7 @@ def streaming_rollup_write_travel(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     with replayed_stream(spark, ev, F.col("event_id") % 2 == 0) as (stream, root):
         roll = f"{root}/rollup"
-        streaming_incremental_rollup(spark, stream, roll, f"{root}/ckpt").awaitTermination()
+        ROLLUP.stream(stream, roll, f"{root}/ckpt").awaitTermination()
         backfill_rollup(
             spark, roll, ev.filter(F.col("event_id") % 4 == 0), floor_batch_id=1
         )
@@ -1619,7 +1619,7 @@ def prefiltered_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_incremental_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental DISTINCT-COUNT maintenance — the KMV
     sketch as the mergeable-partials store's first SET-VALUED monoid
-    (streaming/events.py::make_kmv_batch_fn): per-batch bottom-64
+    (streaming/events.py::KMV): per-batch bottom-64
     distinct-hash partials merge by union-distinct-truncate, which is
     associative, commutative, AND idempotent, so however the stream
     batches (or a compaction) carved the data, the served estimate is
@@ -1628,17 +1628,14 @@ def streaming_incremental_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     invocation. Incremental distinct counting is the canonical thing
     exact countDistinct cannot do without re-shuffling history; the
     sketch's persisted state is 64 longs per (group, live generation)."""
-    from pdf_brain_spark.streaming.events import (
-        read_kmv,
-        streaming_incremental_kmv as drive_kmv,
-    )
+    from pdf_brain_spark.streaming.events import KMV, read_kmv
 
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "user_id"
     )
     with replayed_stream(spark, ev, F.col("event_id") % 2 == 0) as (stream, root):
         store = f"{root}/kmv"
-        drive_kmv(spark, stream, store, f"{root}/ckpt").awaitTermination()
+        KMV.stream(stream, store, f"{root}/ckpt").awaitTermination()
         return read_kmv(spark, store).orderBy("event_type").localCheckpoint(eager=True)
 
 

@@ -1047,7 +1047,7 @@ def time_decay_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_incremental_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental MODEL FITTING — per-group OLS trend lines
     maintained as the partials store's first MOMENT-VECTOR monoid
-    (streaming/events.py::make_regression_batch_fn): the five raw
+    (streaming/events.py::REGRESSION): the five raw
     moments (n, Σx, Σy, Σxy, Σx²) are exact integer sums (x = hour
     offset from a fixed 2024-01-01 anchor, y = cents), so per-batch
     partials merge by elementwise addition and the served
@@ -1056,17 +1056,14 @@ def streaming_incremental_regression(spark: SparkSession, sf_dir: str) -> DataFr
     oracle computes over all events. Fitting without re-shuffling
     history: persisted state is 5 longs per (group, live generation).
     A real AvailableNow run per invocation."""
-    from pdf_brain_spark.streaming.events import (
-        read_regression,
-        streaming_incremental_regression as drive_reg,
-    )
+    from pdf_brain_spark.streaming.events import REGRESSION, read_regression
 
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "ts", "value"
     )
     with replayed_stream(spark, ev, F.col("event_id") % 2 == 0) as (stream, root):
         store = f"{root}/reg"
-        drive_reg(spark, stream, store, f"{root}/ckpt").awaitTermination()
+        REGRESSION.stream(stream, store, f"{root}/ckpt").awaitTermination()
         return read_regression(spark, store).orderBy("event_type").localCheckpoint(eager=True)
 
 
@@ -1075,14 +1072,15 @@ def streaming_incremental_regression(spark: SparkSession, sf_dir: str) -> DataFr
     oracle="""
     SELECT event_type,
            CAST(count(DISTINCT user_id) AS BIGINT) AS n_distinct,
-           CAST(count(DISTINCT user_id // 64) AS BIGINT) AS n_words
-    FROM events GROUP BY 1 ORDER BY 1
+           CAST(count(DISTINCT (user_id - ((user_id % 64) + 64) % 64) // 64) AS BIGINT)
+             AS n_words
+    FROM events WHERE user_id IS NOT NULL GROUP BY 1 ORDER BY 1
     """,
 )
 def streaming_incremental_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming EXACT incremental distinct counting — the bitmap
     complement of the KMV sketch (streaming/events.py::
-    make_bitmap_batch_fn): dense integer keys pack into 64-bit words
+    BITMAP): dense integer keys pack into 64-bit words
     under bitwise OR (associative, commutative, idempotent), so however
     the stream or a compaction carved the data, Σ bit_count over the
     re-merged words IS the distinct count. The oracle is GROUND TRUTH
@@ -1091,17 +1089,14 @@ def streaming_incremental_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal. A real AvailableNow run per invocation; persisted state
     scales with occupied id-range/64 per group (roaring-style
     containers are the sparse-domain growth path)."""
-    from pdf_brain_spark.streaming.events import (
-        read_bitmap_distinct,
-        streaming_incremental_bitmap as drive_bm,
-    )
+    from pdf_brain_spark.streaming.events import BITMAP, read_bitmap_distinct
 
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "user_id"
     )
     with replayed_stream(spark, ev, F.col("event_id") % 2 == 0) as (stream, root):
         store = f"{root}/bm"
-        drive_bm(spark, stream, store, f"{root}/ckpt").awaitTermination()
+        BITMAP.stream(stream, store, f"{root}/ckpt").awaitTermination()
         return read_bitmap_distinct(spark, store).orderBy("event_type").localCheckpoint(eager=True)
 
 
@@ -2434,7 +2429,7 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_incremental_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Count-Min-Sketch heavy-hitter maintenance (Cormode &
     Muthukrishnan 2005) — the bounded-state frequency monoid
-    (streaming/events.py::make_cms_batch_fn): per-batch cell partials
+    (streaming/events.py::CMS): per-batch cell partials
     merge by integer addition, so however the stream carved the corpus
     the merged sketch is bit-identical to the one-shot build the oracle
     replays. The gate probes the true top-10 terms and reports each
@@ -2445,15 +2440,12 @@ def streaming_incremental_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory and exact top-k stops being maintainable. A real
     AvailableNow run per invocation."""
     from pdf_brain_spark.functions.text import tokenize
-    from pdf_brain_spark.streaming.events import (
-        read_cms_estimates,
-        streaming_incremental_cms as drive_cms,
-    )
+    from pdf_brain_spark.streaming.events import CMS, read_cms_estimates
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
     with replayed_stream(spark, docs, F.col("doc_id") % 2 == 0) as (stream, root):
         store = f"{root}/cms"
-        drive_cms(spark, stream, store, f"{root}/ckpt").awaitTermination()
+        CMS.stream(stream, store, f"{root}/ckpt").awaitTermination()
         exact = (
             docs.select(F.explode(tokenize("text")).alias("term"))
             .groupBy("term")
@@ -3769,7 +3761,7 @@ def data_quality_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming corpus MinHash signatures — the partials store's first
-    MIN-monoid (streaming/events.py::make_minhash_batch_fn): per-batch
+    MIN-monoid (streaming/events.py::MINHASH): per-batch
     per-(source, hash-index) minimum hashes merge by elementwise MIN
     (associative, commutative, AND idempotent — the lattice meet), so
     the streamed signature, and the pairwise source-Jaccard estimates
@@ -3778,15 +3770,12 @@ def streaming_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame
     sketch-grade answer to source_contamination_matrix's exact overlap:
     16 longs per source instead of a shingle inverted index. A real
     AvailableNow run per invocation."""
-    from pdf_brain_spark.streaming.events import (
-        read_minhash_similarity,
-        streaming_incremental_minhash as drive_mh,
-    )
+    from pdf_brain_spark.streaming.events import MINHASH, read_minhash_similarity
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "source", "text")
     with replayed_stream(spark, docs, F.col("doc_id") % 2 == 0) as (stream, root):
         store = f"{root}/mh"
-        drive_mh(spark, stream, store, f"{root}/ckpt").awaitTermination()
+        MINHASH.stream(stream, store, f"{root}/ckpt").awaitTermination()
         return (
             read_minhash_similarity(spark, store)
             .orderBy(F.col("jaccard_est_ppm").desc(), "src_a", "src_b")

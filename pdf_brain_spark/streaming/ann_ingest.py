@@ -67,13 +67,10 @@ def streaming_ann_ingest(
 ):
     """Drive the incremental ANN ingest as a Structured Streaming query
     (AvailableNow in tests/gate; continuous in production)."""
-    return (
-        vec_stream.writeStream.foreachBatch(
-            make_ann_ingest_batch_fn(index_dir, centroids, vec_col)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    from pdf_brain_spark.streaming.generations import run_foreach_batch
+
+    return run_foreach_batch(
+        vec_stream, make_ann_ingest_batch_fn(index_dir, centroids, vec_col), checkpoint_dir
     )
 
 

@@ -12,12 +12,22 @@ shape). Two pipelines:
     running the batch chunk/embed pipeline (operators/ingest.py). This is
     the reference's incremental `ingest` command (J7 dedup included) as a
     continuously-running job.
+
+Beyond those, the ten mergeable-partials sketch stores (ROLLUP,
+VALUE_HISTOGRAM, TERM_COUNTS, OHLC, KMV, REGRESSION, BITMAP, CMS, MINHASH,
+NOVELTY) are each one `PartialsStore` declaration beside its read_X
+finisher; streaming/generations.py owns their writer, stream driver,
+backfill and compactor.
 """
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from pdf_brain_spark.streaming.generations import PartialsStore, run_foreach_batch
 
 
 def read_events_stream(
@@ -151,12 +161,7 @@ def streaming_ingest(
         if not batch_df.isEmpty():
             ingest(spark, batch_df, out_dir, markdown=markdown)
 
-    return (
-        files.writeStream.foreachBatch(_each_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_foreach_batch(files, _each_batch, checkpoint_dir)
 
 
 def stream_static_enrich(
@@ -355,81 +360,53 @@ def streaming_incremental_dedup(
     one partitioned table; a document re-delivered across batches can
     re-emit a pair under two batch_ids — distinct (doc_a, doc_b) on read
     if the upstream is at-least-once."""
-    return (
-        new_docs_stream.writeStream.foreachBatch(
-            make_incremental_dedup_batch_fn(spark, index_dir, candidates_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_foreach_batch(
+        new_docs_stream,
+        make_incremental_dedup_batch_fn(spark, index_dir, candidates_dir),
+        checkpoint_dir,
     )
 
 
-def make_rollup_batch_fn(rollup_dir: str):
-    """Per-micro-batch body for incremental rollup maintenance: each
-    batch writes its OWN hourly partial aggregates (event_type, hour,
-    n, sum) under `batch_id=N` — never touching other generations, so a
-    foreachBatch replay overwrites its own subdir and the at-least-once
-    contract composes to effectively-once, exactly like the LSH band
-    index and the ANN ingest. The persisted table is PARTIALS; reading
-    the rollup re-aggregates them (read_rollup), which is sound because
-    count and sum are associative — the same "coarser tiers read finer
-    partials, never facts" principle as tiered_time_rollup, extended in
-    the time dimension: per-batch work is one aggregate over the BATCH,
-    however large the rollup history grows. Late-arriving events simply
-    contribute another partial for an old hour; no read-modify-write of
-    existing buckets ever happens."""
-
-    def _each_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # Partials carry a CENT-SCALED INTEGER sum, not a float sum:
-        # read_rollup re-sums partials in arbitrary order, and float
-        # addition order across engines is exactly the 6-decimal
-        # rounding-boundary flake class gapfill_locf already hit and
-        # fixed (operators/temporal.py:392-399). Integer addition is
-        # exact and associative, so the served total is bit-identical
-        # however the generations merge; value is summed at 2-decimal
-        # (cent) input precision.
-        partial = batch_df.groupBy(
-            "event_type", F.date_trunc("hour", F.col("ts")).alias("window_start")
-        ).agg(
-            F.count(F.lit(1)).alias("n_partial"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_cents_partial"),
-        )
-        from pdf_brain_spark.streaming.generations import (
-            record_wseq,
-            stamp_protocol,
-        )
-
-        stamp_protocol(batch_df.sparkSession, rollup_dir)
-        partial.write.mode("overwrite").parquet(f"{rollup_dir}/batch_id={batch_id}")
-        record_wseq(batch_df.sparkSession, rollup_dir, f"batch_id={batch_id}")
-
-    return _each_batch
+# ---------------------------------------------------------------------------
+# Incremental hourly ROLLUP: each batch's partial is its own hourly
+# (event_type, hour, n, cents) aggregate, persisted as PARTIALS; reading
+# the rollup re-merges them (read_rollup), which is sound because count
+# and sum are associative — the same "coarser tiers read finer partials,
+# never facts" principle as tiered_time_rollup, extended in the time
+# dimension: per-batch work is one aggregate over the BATCH, however large
+# the rollup history grows. Late-arriving events simply contribute another
+# partial for an old hour; no read-modify-write of existing buckets ever
+# happens. Unlike the watermarked streaming_tumbling_window (which must
+# decide when a window CLOSES to emit append-mode rows), the partials
+# design needs no watermark at all for correctness — the right shape when
+# the rollup must stay exactly consistent with whatever has arrived, and
+# the window variant the right shape when bounded state and final-on-emit
+# rows matter more.
+# ---------------------------------------------------------------------------
 
 
-def streaming_incremental_rollup(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    rollup_dir: str,
-    checkpoint_dir: str,
-):
-    """Drive incremental hourly-rollup maintenance as a Structured
-    Streaming query (AvailableNow in tests/gate; continuous in
-    production). Unlike the watermarked streaming_tumbling_window (which
-    must decide when a window CLOSES to emit append-mode rows), the
-    partials design needs no watermark at all for correctness — an
-    arbitrarily late event lands as one more partial row — making it the
-    right shape when the rollup must stay exactly consistent with
-    whatever has arrived, and the window variant the right shape when
-    bounded state and final-on-emit rows matter more."""
-    return (
-        events_stream.writeStream.foreachBatch(make_rollup_batch_fn(rollup_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+def _rollup_partial(events: DataFrame, _batch_id: int) -> DataFrame:
+    # Partials carry a CENT-SCALED INTEGER sum, not a float sum:
+    # read_rollup re-sums partials in arbitrary order, and float
+    # addition order across engines is exactly the 6-decimal
+    # rounding-boundary flake class gapfill_locf already hit and
+    # fixed (operators/temporal.py:392-399). Integer addition is
+    # exact and associative, so the served total is bit-identical
+    # however the generations merge; value is summed at 2-decimal
+    # (cent) input precision.
+    return events.groupBy(
+        "event_type", F.date_trunc("hour", F.col("ts")).alias("window_start")
+    ).agg(
+        F.count(F.lit(1)).alias("n_partial"),
+        F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_cents_partial"),
     )
+
+
+ROLLUP = PartialsStore(
+    keys=("event_type", "window_start"),
+    values=("n_partial", "sum_cents_partial"),
+    partial=_rollup_partial,
+)
 
 
 def read_rollup(
@@ -445,7 +422,7 @@ def read_rollup(
     from the newest applicable backfill plus only the additive
     generations newer than that backfill's floor. |rows| = Σ per-batch
     distinct buckets — bucket grain × generation count, compacted by
-    compact_rollup when generations accumulate.
+    ROLLUP.compact when generations accumulate.
 
     `asof_batch_id` is TIME TRAVEL, in one of two temporalities served
     from the SAME store (the bitemporal pair, r8 — VERDICT r7 item 6):
@@ -480,35 +457,16 @@ def read_rollup(
                 "unavailable: its generation directory has no write-"
                 "sequence marker (retired by compaction, or never written)."
             )
-        kept = _rollup_kept_rows(spark, rollup_dir, asof_wseq=seqs[name])
+        kept = {"asof_wseq": seqs[name]}
     else:
-        kept = _rollup_kept_rows(spark, rollup_dir, upto=asof_batch_id)
-    return kept.groupBy("event_type", "window_start").agg(
-        F.sum("n_partial").alias("n_events"),
+        kept = {"upto": asof_batch_id}
+    return ROLLUP.merged(spark, rollup_dir, **kept).select(
+        "event_type",
+        "window_start",
+        F.col("n_partial").alias("n_events"),
         F.round(
-            F.sum("sum_cents_partial").cast("double") / F.lit(100.0), 4
+            F.col("sum_cents_partial").cast("double") / F.lit(100.0), 4
         ).alias("total_value"),
-    )
-
-
-def _rollup_kept_rows(
-    spark: SparkSession,
-    rollup_dir: str,
-    upto: int | None = None,
-    asof_wseq: int | None = None,
-):
-    """Rollup instantiation of the generic mergeable-partials selection
-    (streaming/generations.py::kept_partial_rows) — one selection shared
-    by the reader and the compactor so they can never disagree."""
-    from pdf_brain_spark.streaming.generations import kept_partial_rows
-
-    return kept_partial_rows(
-        spark,
-        rollup_dir,
-        ["event_type", "window_start"],
-        ["n_partial", "sum_cents_partial"],
-        upto=upto,
-        asof_wseq=asof_wseq,
     )
 
 
@@ -537,7 +495,7 @@ def backfill_rollup(
     the resolution and retires the dir. Floor contract: must exceed the
     newest compacted coverage (otherwise the backfill would be dead on
     arrival), must only cover stream batches that are committed, and a
-    floor can be used once (generations.backfill_partials — pass
+    floor can be used once (PartialsStore.backfill — pass
     overwrite=True only to retry the SAME logical repair after a crash).
 
     Replacement is row-presence-based, so a bucket the correction leaves
@@ -546,102 +504,65 @@ def backfill_rollup(
     this repair covers, and absent buckets get a (0, 0) partial that
     supersedes their stale additive history; without it, only buckets
     with surviving corrected events are replaced."""
-    from pdf_brain_spark.streaming.generations import backfill_partials
-
-    partial = corrected_events.groupBy(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("window_start")
-    ).agg(
-        F.count(F.lit(1)).alias("n_partial"),
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_cents_partial"),
-    )
+    store = ROLLUP
     if buckets is not None:
-        partial = (
-            buckets.select("event_type", "window_start")
-            .distinct()
-            .join(partial, ["event_type", "window_start"], "left")
-            .select(
-                "event_type",
-                "window_start",
-                F.coalesce(F.col("n_partial"), F.lit(0)).cast("long").alias("n_partial"),
-                F.coalesce(F.col("sum_cents_partial"), F.lit(0))
-                .cast("long")
-                .alias("sum_cents_partial"),
+
+        def padded(events: DataFrame, batch_id: int) -> DataFrame:
+            return (
+                buckets.select(*ROLLUP.keys)
+                .distinct()
+                .join(_rollup_partial(events, batch_id), list(ROLLUP.keys), "left")
+                .select(
+                    *ROLLUP.keys,
+                    *[
+                        F.coalesce(F.col(c), F.lit(0)).cast("long").alias(c)
+                        for c in ROLLUP.values
+                    ],
+                )
             )
-        )
-    backfill_partials(spark, rollup_dir, partial, floor_batch_id, overwrite=overwrite)
+
+        store = replace(ROLLUP, partial=padded)
+    store.backfill(spark, rollup_dir, corrected_events, floor_batch_id, overwrite)
 
 
-def compact_rollup(spark: SparkSession, rollup_dir: str, upto_batch_id: int) -> int:
-    """Floor-aware rollup compaction: merge every live additive
-    generation covering ≤ upto_batch_id AND every applicable backfill
-    generation (floor in (m*, upto]) into one compacted generation
-    holding the bucket-grain RESOLVED partials — the serve semantics
-    materialized (corrected buckets keep backfill + post-floor additive
-    rows only), computed by the same `_rollup_kept_rows` the reader
-    uses, so compaction can never disagree with serving. The compacted
-    id is compacted_id(max(coverage, floors)), so the new generation supersedes both
-    the consumed additive dirs AND the consumed backfill dirs
-    (precedence: -m kills floors ≤ m); deletes happen after the atomic
-    rename, and dead dirs from either namespace are swept. Returns the
-    number of generations (additive + backfill) merged."""
-    from pdf_brain_spark.streaming.generations import compact_partials
-
-    return compact_partials(
-        spark,
-        rollup_dir,
-        upto_batch_id,
-        ["event_type", "window_start"],
-        ["n_partial", "sum_cents_partial"],
-    )
+# ---------------------------------------------------------------------------
+# Incremental PERCENTILES. Exact percentiles normally resist incrementality
+# (they need the full sorted stream), but a fixed-resolution histogram is a
+# mergeable sketch with a deterministic error contract: bucket `value` at
+# CENT resolution (the same integer grain as the rollup/gap-fill sums) and
+# per-batch partials (event_type, bucket, n) merge by integer addition — so
+# any quantile of the CENT-ROUNDED distribution is served EXACTLY,
+# incrementally, with no watermark and no read-modify-write, and the whole
+# state is |types| × |distinct cents| rows. The t-digest idea with the
+# approximation made exact by fixing the grid up front. A NULL value has
+# no rank, so it enters no bucket (percentile_disc skips it too).
+#
+# Backfills replace at EVENT_TYPE grain (floor_keys), not cell grain: a
+# correction moves events between value cells, and a cell-grain
+# replacement would leave the vacated stale cells standing. So a
+# histogram backfill's corrected facts must be each affected type's
+# COMPLETE corrected history up to the floor — a value distribution
+# cannot be patched from a sub-slice.
+# ---------------------------------------------------------------------------
 
 
-def make_value_histogram_batch_fn(hist_dir: str):
-    """Per-micro-batch body for incremental PERCENTILE maintenance.
-    Exact percentiles normally resist incrementality (they need the full
-    sorted stream), but a fixed-resolution histogram is a mergeable
-    sketch with a deterministic error contract: bucket `value` at CENT
-    resolution (the same integer grain as the rollup/gap-fill sums) and
-    per-batch partials (event_type, bucket, n) merge by integer
-    addition — so any quantile of the CENT-ROUNDED distribution is
-    served EXACTLY, incrementally, with no watermark and no
-    read-modify-write, and the whole state is |types| × |distinct
-    cents| rows. The t-digest idea with the approximation made exact by
-    fixing the grid up front. Same replay-idempotent batch_id=N
-    overwrite protocol as the rollup partials."""
-
-    def _each_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = batch_df.groupBy(
+def _histogram_partial(events: DataFrame, _batch_id: int) -> DataFrame:
+    return (
+        events.filter(F.col("value").isNotNull())
+        .groupBy(
             "event_type",
             F.round(F.col("value") * 100).cast("long").alias("bucket"),
-        ).agg(F.count(F.lit(1)).alias("n"))
-        from pdf_brain_spark.streaming.generations import (
-            record_wseq,
-            stamp_protocol,
         )
-
-        stamp_protocol(batch_df.sparkSession, hist_dir)
-        partial.write.mode("overwrite").parquet(f"{hist_dir}/batch_id={batch_id}")
-        record_wseq(batch_df.sparkSession, hist_dir, f"batch_id={batch_id}")
-
-    return _each_batch
-
-
-def streaming_incremental_percentiles(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    hist_dir: str,
-    checkpoint_dir: str,
-):
-    """Drive incremental histogram maintenance as a Structured Streaming
-    query (AvailableNow in tests/gate; continuous in production)."""
-    return (
-        events_stream.writeStream.foreachBatch(make_value_histogram_batch_fn(hist_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .agg(F.count(F.lit(1)).alias("n"))
     )
+
+
+VALUE_HISTOGRAM = PartialsStore(
+    keys=("event_type", "bucket"),
+    values=("n",),
+    partial=_histogram_partial,
+    floor_keys=("event_type",),
+)
 
 
 def read_histogram_percentiles(
@@ -653,22 +574,13 @@ def read_histogram_percentiles(
     and pick, for each quantile q%, the smallest bucket whose cumulative
     count reaches rank ceil(q·n/100) — the classic type-1 quantile, with
     the rank computed in INTEGER arithmetic ((q·n + 99) div 100) so no
-    float ceil boundary can differ across engines. Reads through the
-    generic partials selection (generations.py::kept_partial_rows), so
-    backfill generations (backfill_value_histogram) are honored and
-    mid-compaction reads are safe. Returns (event_type, quantile,
-    value) with value = bucket/100."""
+    float ceil boundary can differ across engines. Backfill generations
+    (VALUE_HISTOGRAM.backfill) are honored and mid-compaction reads are
+    safe. Returns (event_type, quantile, value) with value =
+    bucket/100."""
     from pyspark.sql.window import Window
 
-    from pdf_brain_spark.streaming.generations import kept_partial_rows
-
-    # floor grain = event_type: a histogram correction moves events
-    # between value cells, so a backfill replaces the TYPE's whole
-    # distribution up to its floor (see backfill_value_histogram)
-    parts = kept_partial_rows(
-        spark, hist_dir, ["event_type", "bucket"], ["n"], floor_cols=["event_type"]
-    )
-    hist = parts.groupBy("event_type", "bucket").agg(F.sum("n").alias("n"))
+    hist = VALUE_HISTOGRAM.merged(spark, hist_dir)
     w = Window.partitionBy("event_type").orderBy("bucket").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -691,105 +603,34 @@ def read_histogram_percentiles(
     )
 
 
-def backfill_value_histogram(
-    spark: SparkSession,
-    hist_dir: str,
-    corrected_events: DataFrame,
-    floor_batch_id: int,
-    overwrite: bool = False,
-) -> None:
-    """Replacement semantics for the histogram store (the rollup's
-    backfill_rollup, at cent-bucket grain): corrected FULL histogram
-    partials supersede additive generations covering <= floor at
-    EVENT_TYPE grain — not cell grain, because a correction moves events
-    between value cells and a cell-grain replacement would leave the
-    vacated stale cells standing. Consequence of the type-grain floor:
-    `corrected_events` must be each affected type's COMPLETE corrected
-    history up to the floor (a value distribution cannot be patched from
-    a sub-slice), and this helper recomputes that full per-type
-    histogram from the corrected facts."""
-    from pdf_brain_spark.streaming.generations import backfill_partials
-
-    partial = corrected_events.groupBy(
-        "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("bucket"),
-    ).agg(F.count(F.lit(1)).alias("n"))
-    backfill_partials(spark, hist_dir, partial, floor_batch_id, overwrite=overwrite)
-
-
-def compact_value_histogram(spark: SparkSession, hist_dir: str, upto_batch_id: int) -> int:
-    """Compact histogram partials: merge live generations covering
-    ≤ upto_batch_id (and applicable backfill generations) into one
-    compacted generation holding the bucket-grain RESOLVED histogram
-    (integer addition — exact), via the generic floor-aware compactor
-    that shares the reader's selection."""
-    from pdf_brain_spark.streaming.generations import compact_partials
-
-    return compact_partials(
-        spark, hist_dir, upto_batch_id, ["event_type", "bucket"], ["n"],
-        floor_cols=["event_type"],
-    )
-
-
 # ---------------------------------------------------------------------------
 # Streaming incremental TERM COUNTS (top-k heavy hitters): the corpus-
 # vocabulary twin of the hourly rollup — per-batch (term, count) partials
-# on the generic mergeable-partials store. Counts are integers, so partials
+# of the `text` column under the engine-wide whitespace tokenization
+# (functions/text.py::tokenize). Counts are integers, so partials
 # merge exactly and associatively whatever order generations land or
 # compact in, and the served top-k is always exactly consistent with every
 # document that has arrived (no sketch error: this is the EXACT heavy-
 # hitter design — per-batch map-side combine keeps each generation at
 # vocabulary grain, not token grain, which is the memory story a CMS
-# would otherwise buy approximately).
+# would otherwise buy approximately). No watermark needed: late documents
+# just land as one more partial generation.
 # ---------------------------------------------------------------------------
 
 
-def make_term_counts_batch_fn(store_dir: str, text_col: str = "text", min_len: int = 1):
-    """Per-micro-batch term-count partials, replay-idempotent (the
-    batch_id=N overwrite protocol). Tokenization is the engine-wide
-    whitespace rule (functions/text.py::tokenize)."""
+def _term_counts_partial(docs: DataFrame, _batch_id: int) -> DataFrame:
     from pdf_brain_spark.functions.text import tokenize
 
-    def _each_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = (
-            batch_df.select(F.explode(tokenize(text_col)).alias("term"))
-            .filter(F.length("term") >= min_len)
-            .groupBy("term")
-            .agg(F.count(F.lit(1)).alias("n_partial"))
-        )
-        from pdf_brain_spark.streaming.generations import (
-            record_wseq,
-            stamp_protocol,
-        )
-
-        stamp_protocol(batch_df.sparkSession, store_dir)
-        partial.write.mode("overwrite").parquet(f"{store_dir}/batch_id={batch_id}")
-        record_wseq(batch_df.sparkSession, store_dir, f"batch_id={batch_id}")
-
-    return _each_batch
-
-
-def streaming_incremental_term_counts(
-    spark: SparkSession,
-    docs_stream: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-):
-    """Drive incremental vocabulary maintenance as a Structured Streaming
-    query (AvailableNow in tests/gate; continuous in production). No
-    watermark needed — counts are additive, late documents just land as
-    one more partial generation."""
     return (
-        docs_stream.writeStream.foreachBatch(
-            make_term_counts_batch_fn(store_dir, text_col)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        docs.select(F.explode(tokenize("text")).alias("term"))
+        .groupBy("term")
+        .agg(F.count(F.lit(1)).alias("n_partial"))
     )
+
+
+TERM_COUNTS = PartialsStore(
+    keys=("term",), values=("n_partial",), partial=_term_counts_partial
+)
 
 
 def read_top_terms(spark: SparkSession, store_dir: str, k: int = 25) -> DataFrame:
@@ -798,24 +639,10 @@ def read_top_terms(spark: SparkSession, store_dir: str, k: int = 25) -> DataFram
     TakeOrdered k by (n desc, term asc). The re-aggregate is one shuffle
     at vocabulary grain — independent of how many documents ever
     streamed in."""
-    from pdf_brain_spark.streaming.generations import kept_partial_rows
-
-    merged = (
-        kept_partial_rows(spark, store_dir, ["term"], ["n_partial"])
-        .groupBy("term")
-        .agg(F.sum("n_partial").alias("n"))
+    merged = TERM_COUNTS.merged(spark, store_dir).select(
+        "term", F.col("n_partial").alias("n")
     )
     return merged.orderBy(F.col("n").desc(), F.col("term").asc()).limit(k)
-
-
-def compact_term_counts(spark: SparkSession, store_dir: str, upto_batch_id: int) -> int:
-    """Merge committed term-count generations into one vocabulary-grain
-    compacted generation (reader-safe generation protocol)."""
-    from pdf_brain_spark.streaming.generations import compact_partials
-
-    return compact_partials(
-        spark, store_dir, upto_batch_id, ["term"], ["n_partial"]
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1051,13 +878,8 @@ def streaming_fts_ingest(
 ):
     """Drive incremental FTS index maintenance as a Structured Streaming
     query (AvailableNow in tests/gate; continuous in production)."""
-    return (
-        docs_stream.writeStream.foreachBatch(
-            make_fts_postings_batch_fn(index_dir, id_col, text_col)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_foreach_batch(
+        docs_stream, make_fts_postings_batch_fn(index_dir, id_col, text_col), checkpoint_dir
     )
 
 
@@ -1337,29 +1159,16 @@ def fts_search_persisted(
 # associative and exact, so partials from any number of batch generations
 # (or a compaction of them) resolve to the identical bar the one-shot
 # operator computes. Late data needs no watermark: a late event is one
-# more partial row whose struct simply wins or loses the min/max.
+# more partial row whose struct simply wins or loses the min/max. A
+# backfill's corrected slice recomputes FULL partials for its bars, and
+# later additive batches still merge on top via the same min/max monoid.
 # ---------------------------------------------------------------------------
 
-_OHLC_BUCKETS = ["event_type", "window_start"]
-_OHLC_VALUES = ["open_ord", "high_c", "low_c", "close_ord", "n_partial"]
 
-
-def _ohlc_merge_exprs():
-    return [
-        F.min("open_ord").alias("open_ord"),
-        F.max("high_c").alias("high_c"),
-        F.min("low_c").alias("low_c"),
-        F.max("close_ord").alias("close_ord"),
-        F.sum("n_partial").alias("n_partial"),
-    ]
-
-
-def _ohlc_partial(events_df: DataFrame) -> DataFrame:
-    """Bar-grain OHLC partials from a raw event slice — shared by the
-    per-batch writer and the backfill path so a correction's partials
-    can never disagree in shape with the stream's. Cents +
-    exact-microsecond ordering structs (the cross-engine integer
-    discipline)."""
+def _ohlc_partial(events: DataFrame, _batch_id: int) -> DataFrame:
+    """Bar-grain OHLC partials from a raw event slice (stream and
+    backfill alike). Cents + exact-microsecond ordering structs (the
+    cross-engine integer discipline)."""
     cents = F.round(F.col("value") * 100).cast("long")
     ordc = F.struct(
         F.unix_micros(F.col("ts")).alias("us"),
@@ -1367,13 +1176,13 @@ def _ohlc_partial(events_df: DataFrame) -> DataFrame:
         cents.alias("c"),
     )
     return (
-        events_df.select(
+        events.select(
             "event_type",
             F.date_trunc("hour", F.col("ts")).alias("window_start"),
             ordc.alias("_ord"),
             cents.alias("_c"),
         )
-        .groupBy(*_OHLC_BUCKETS)
+        .groupBy("event_type", "window_start")
         .agg(
             F.min("_ord").alias("open_ord"),
             F.max("_c").alias("high_c"),
@@ -1384,61 +1193,12 @@ def _ohlc_partial(events_df: DataFrame) -> DataFrame:
     )
 
 
-def make_ohlc_batch_fn(store_dir: str):
-    """Per-micro-batch OHLC partials at bar grain, replay-idempotent
-    (batch_id=N overwrite)."""
-
-    def _each_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        from pdf_brain_spark.streaming.generations import (
-            record_wseq,
-            stamp_protocol,
-        )
-
-        stamp_protocol(batch_df.sparkSession, store_dir)
-        _ohlc_partial(batch_df).write.mode("overwrite").parquet(
-            f"{store_dir}/batch_id={batch_id}"
-        )
-        record_wseq(batch_df.sparkSession, store_dir, f"batch_id={batch_id}")
-
-    return _each_batch
-
-
-def backfill_ohlc(
-    spark: SparkSession,
-    store_dir: str,
-    corrected_events: DataFrame,
-    floor_batch_id: int,
-    overwrite: bool = False,
-) -> None:
-    """Replacement semantics on the OHLC store (the rollup backfill,
-    carried to the non-sum monoid): the corrected event slice recomputes
-    FULL partials for its bars, superseding every additive generation at
-    or below the floor for those bars; later additive batches still
-    merge on top via the same min/max monoid. Floor contract and
-    once-per-floor rule: generations.backfill_partials."""
-    from pdf_brain_spark.streaming.generations import backfill_partials
-
-    backfill_partials(
-        spark, store_dir, _ohlc_partial(corrected_events), floor_batch_id, overwrite
-    )
-
-
-def streaming_incremental_ohlc(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-):
-    """Drive incremental OHLC-bar maintenance as a Structured Streaming
-    query (AvailableNow in tests/gate; continuous in production)."""
-    return (
-        events_stream.writeStream.foreachBatch(make_ohlc_batch_fn(store_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+OHLC = PartialsStore(
+    keys=("event_type", "window_start"),
+    values=("open_ord", "high_c", "low_c", "close_ord", "n_partial"),
+    partial=_ohlc_partial,
+    merge=("min(open_ord)", "max(high_c)", "min(low_c)", "max(close_ord)", "sum(n_partial)"),
+)
 
 
 def read_ohlc(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -1446,15 +1206,8 @@ def read_ohlc(spark: SparkSession, store_dir: str) -> DataFrame:
     mid-compaction-safe): one re-merge at bar grain, then the money
     projection — identical output contract to operators/temporal.py::
     ohlc_bars over the same events."""
-    from pdf_brain_spark.streaming.generations import kept_partial_rows
-
     money = lambda c: F.round(c.cast("double") / 100.0, 2)  # noqa: E731
-    merged = (
-        kept_partial_rows(spark, store_dir, _OHLC_BUCKETS, _OHLC_VALUES)
-        .groupBy(*_OHLC_BUCKETS)
-        .agg(*_ohlc_merge_exprs())
-    )
-    return merged.select(
+    return OHLC.merged(spark, store_dir).select(
         "event_type",
         F.col("window_start").alias("bar_start"),
         money(F.col("open_ord.c")).alias("open"),
@@ -1465,26 +1218,11 @@ def read_ohlc(spark: SparkSession, store_dir: str) -> DataFrame:
     )
 
 
-def compact_ohlc(spark: SparkSession, store_dir: str, upto_batch_id: int) -> int:
-    """Merge committed OHLC partial generations with the store's own
-    min/max monoid (reader-safe generation protocol)."""
-    from pdf_brain_spark.streaming.generations import compact_partials
-
-    return compact_partials(
-        spark,
-        store_dir,
-        upto_batch_id,
-        _OHLC_BUCKETS,
-        _OHLC_VALUES,
-        merge_exprs=_ohlc_merge_exprs(),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Streaming incremental KMV distinct sketch: the third NON-SUM monoid on the
 # mergeable-partials store (after OHLC's min/max structs) — and the first
 # SET-VALUED one. Each batch's partial is, per event_type, the bottom-K
-# sorted distinct portable hashes of the key; partials merge by
+# sorted distinct portable hashes of user_id; partials merge by
 # union-distinct-sort-truncate, which is associative, commutative, and
 # idempotent (bottomK(bottomK(A)∪bottomK(B)) = bottomK(A∪B) because any
 # hash evicted from a partial bottom-K is ≥ K survivors and can never
@@ -1492,70 +1230,33 @@ def compact_ohlc(spark: SparkSession, store_dir: str, upto_batch_id: int) -> int
 # incrementally — the thing exact countDistinct fundamentally cannot do —
 # with a deterministic, engine-portable estimate (see
 # queries.kmv_distinct_estimate for the estimator's oracle-ability
-# argument vs engine-private HLL).
+# argument vs engine-private HLL). Per-batch work is one aggregate over
+# the BATCH; the persisted state is K longs per (group, live generation).
 # ---------------------------------------------------------------------------
 
 KMV_K = 64
 _KMV_M = 1152921504606846976.0  # 2^60: md5_long's hash-space size
 
 
-def _kmv_merge_exprs():
-    return [
-        F.slice(
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list("hashes")))),
-            1,
-            KMV_K,
-        ).alias("hashes")
-    ]
-
-
-def make_kmv_batch_fn(store_dir: str, key_col: str = "user_id", type_col: str = "event_type"):
-    """Per-micro-batch KMV partial: bottom-K sorted distinct hashes of
-    the key per group, replay-idempotent (batch_id=N overwrite)."""
-    from pdf_brain_spark.functions.sql import Fragment, sql_ref
+def _kmv_partial(events: DataFrame, _batch_id: int) -> DataFrame:
+    from pdf_brain_spark.functions.sql import Fragment
     from pdf_brain_spark.functions.text import md5_long
 
-    def _each_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = (
-            batch_df.select(
-                F.col(type_col).alias("event_type"),
-                md5_long(Fragment(f"CAST({sql_ref(key_col)} AS STRING)")).alias("h"),
-            )
-            .groupBy("event_type")
-            .agg(
-                F.slice(F.array_sort(F.collect_set("h")), 1, KMV_K).alias("hashes")
-            )
-        )
-        from pdf_brain_spark.streaming.generations import (
-            record_wseq,
-            stamp_protocol,
-        )
-
-        stamp_protocol(batch_df.sparkSession, store_dir)
-        partial.write.mode("overwrite").parquet(f"{store_dir}/batch_id={batch_id}")
-        record_wseq(batch_df.sparkSession, store_dir, f"batch_id={batch_id}")
-
-    return _each_batch
-
-
-def streaming_incremental_kmv(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-):
-    """Drive incremental distinct-sketch maintenance as a Structured
-    Streaming query (AvailableNow in tests/gate; continuous in
-    production). Per-batch work is one aggregate over the BATCH; the
-    persisted state is K longs per (group, live generation)."""
     return (
-        events_stream.writeStream.foreachBatch(make_kmv_batch_fn(store_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        events.select(
+            "event_type", md5_long(Fragment("CAST(user_id AS STRING)")).alias("h")
+        )
+        .groupBy("event_type")
+        .agg(F.slice(F.array_sort(F.collect_set("h")), 1, KMV_K).alias("hashes"))
     )
+
+
+KMV = PartialsStore(
+    keys=("event_type",),
+    values=("hashes",),
+    partial=_kmv_partial,
+    merge=(f"slice(array_sort(array_distinct(flatten(collect_list(hashes)))), 1, {KMV_K})",),
+)
 
 
 def read_kmv(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -1564,13 +1265,7 @@ def read_kmv(spark: SparkSession, store_dir: str) -> DataFrame:
     then the KMV estimator (k-1)/(h_k / 2^60) — identical formula and
     IEEE operations to the one-shot kmv_distinct_estimate, so a real
     streamed store reproduces the batch gate's numbers exactly."""
-    from pdf_brain_spark.streaming.generations import kept_partial_rows
-
-    merged = (
-        kept_partial_rows(spark, store_dir, ["event_type"], ["hashes"])
-        .groupBy("event_type")
-        .agg(*_kmv_merge_exprs())
-    )
+    merged = KMV.merged(spark, store_dir)
     n_in = F.size("hashes")
     h_k = F.element_at("hashes", n_in)
     est = F.when(n_in < KMV_K, n_in.cast("long")).otherwise(
@@ -1580,21 +1275,6 @@ def read_kmv(spark: SparkSession, store_dir: str) -> DataFrame:
         "event_type",
         n_in.cast("long").alias("n_in_sketch"),
         est.alias("kmv_estimate"),
-    )
-
-
-def compact_kmv(spark: SparkSession, store_dir: str, upto_batch_id: int) -> int:
-    """Merge committed KMV partial generations with the store's own
-    set-union monoid (reader-safe generation protocol)."""
-    from pdf_brain_spark.streaming.generations import compact_partials
-
-    return compact_partials(
-        spark,
-        store_dir,
-        upto_batch_id,
-        ["event_type"],
-        ["hashes"],
-        merge_exprs=_kmv_merge_exprs(),
     )
 
 
@@ -1686,20 +1366,15 @@ def compact_fts_index(spark: SparkSession, index_dir: str, upto_batch_id: int, n
 # ---------------------------------------------------------------------------
 
 REG_ANCHOR_US = 1_704_067_200_000_000  # epoch micros of 2024-01-01 UTC
-_REG_SUMS = ["n", "sx", "sy", "sxy", "sxx"]
 
 
-def _reg_merge_exprs():
-    return [F.sum(c).cast("long").alias(c) for c in _REG_SUMS]
-
-
-def _reg_partial(df: DataFrame, type_col: str, ts_col: str, val_col: str) -> DataFrame:
+def _regression_partial(events: DataFrame, _batch_id: int) -> DataFrame:
     x = F.expr(
-        f"(unix_micros(cast({ts_col} as timestamp)) - {REG_ANCHOR_US}) div 3600000000"
+        f"(unix_micros(cast(ts as timestamp)) - {REG_ANCHOR_US}) div 3600000000"
     ).cast("long")
-    y = F.round(F.col(val_col) * 100).cast("long")
+    y = F.round(F.col("value") * 100).cast("long")
     return (
-        df.select(F.col(type_col).alias("event_type"), x.alias("x"), y.alias("y"))
+        events.select("event_type", x.alias("x"), y.alias("y"))
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
@@ -1711,46 +1386,11 @@ def _reg_partial(df: DataFrame, type_col: str, ts_col: str, val_col: str) -> Dat
     )
 
 
-def make_regression_batch_fn(
-    store_dir: str,
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    val_col: str = "value",
-):
-    """Per-micro-batch OLS moment partial, replay-idempotent
-    (batch_id=N overwrite, same protocol as every store here)."""
-
-    def _each_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        from pdf_brain_spark.streaming.generations import (
-            record_wseq,
-            stamp_protocol,
-        )
-
-        partial = _reg_partial(batch_df, type_col, ts_col, val_col)
-        stamp_protocol(batch_df.sparkSession, store_dir)
-        partial.write.mode("overwrite").parquet(f"{store_dir}/batch_id={batch_id}")
-        record_wseq(batch_df.sparkSession, store_dir, f"batch_id={batch_id}")
-
-    return _each_batch
-
-
-def streaming_incremental_regression(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-):
-    """Drive incremental regression-moment maintenance as a Structured
-    Streaming query (AvailableNow in tests/gate; continuous in
-    production). Per-batch work is one aggregate over the BATCH."""
-    return (
-        events_stream.writeStream.foreachBatch(make_regression_batch_fn(store_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+REGRESSION = PartialsStore(
+    keys=("event_type",),
+    values=("n", "sx", "sy", "sxy", "sxx"),
+    partial=_regression_partial,
+)
 
 
 def ols_num_den_exprs():
@@ -1789,29 +1429,9 @@ def read_regression(spark: SparkSession, store_dir: str) -> DataFrame:
     """Serve per-group OLS fits from the persisted moments (live
     generations, mid-compaction-safe): one integer re-merge per group,
     then the shared closed form."""
-    from pdf_brain_spark.streaming.generations import kept_partial_rows
-
-    merged = (
-        kept_partial_rows(spark, store_dir, ["event_type"], _REG_SUMS)
-        .groupBy("event_type")
-        .agg(*_reg_merge_exprs())
-    )
     slope, intercept = regression_fit_exprs()
-    return merged.select("event_type", *_REG_SUMS, slope, intercept)
-
-
-def compact_regression(spark: SparkSession, store_dir: str, upto_batch_id: int) -> int:
-    """Merge committed regression-moment generations by elementwise
-    integer addition (reader-safe generation protocol)."""
-    from pdf_brain_spark.streaming.generations import compact_partials
-
-    return compact_partials(
-        spark,
-        store_dir,
-        upto_batch_id,
-        ["event_type"],
-        _REG_SUMS,
-        merge_exprs=_reg_merge_exprs(),
+    return REGRESSION.merged(spark, store_dir).select(
+        "event_type", *REGRESSION.values, slope, intercept
     )
 
 
@@ -1823,72 +1443,41 @@ def compact_regression(spark: SparkSession, store_dir: str, upto_batch_id: int) 
 # EXACT distinct count as Σ bit_count(word). Persisted state scales with
 # occupied id-range/64 per group (roaring-style containerization is the
 # 100 TB growth path; the word grain here is its dense container).
+# Key k lives in word floor(k/64) at bit pmod(k, 64): floor, not
+# truncating, division, so a negative id gets its own word instead of
+# sharing bit 63 of word 0 with id 63. A NULL key is not a value and sets
+# no bit.
 # ---------------------------------------------------------------------------
 
-_BITMAP_KEYS = ["event_type", "word_idx"]
 
-
-def _bitmap_merge_exprs():
-    return [F.expr("bit_or(bits)").cast("long").alias("bits")]
-
-
-def make_bitmap_batch_fn(store_dir: str, key_col: str = "user_id", type_col: str = "event_type"):
-    """Per-micro-batch bitmap partial: OR of 1<<(id%64) per
-    (group, id//64) word, replay-idempotent (batch_id=N overwrite)."""
-
-    def _each_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        from pdf_brain_spark.streaming.generations import (
-            record_wseq,
-            stamp_protocol,
-        )
-
-        partial = (
-            batch_df.select(
-                F.col(type_col).alias("event_type"),
-                F.expr(f"{key_col} div 64").cast("long").alias("word_idx"),
-                F.expr(f"shiftleft(1L, cast({key_col} % 64 as int))").alias("b"),
-            )
-            .groupBy(*_BITMAP_KEYS)
-            .agg(F.expr("bit_or(b)").cast("long").alias("bits"))
-        )
-        stamp_protocol(batch_df.sparkSession, store_dir)
-        partial.write.mode("overwrite").parquet(f"{store_dir}/batch_id={batch_id}")
-        record_wseq(batch_df.sparkSession, store_dir, f"batch_id={batch_id}")
-
-    return _each_batch
-
-
-def streaming_incremental_bitmap(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-):
-    """Drive exact incremental distinct-count maintenance as a
-    Structured Streaming query."""
+def _bitmap_partial(events: DataFrame, _batch_id: int) -> DataFrame:
     return (
-        events_stream.writeStream.foreachBatch(make_bitmap_batch_fn(store_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        events.filter(F.col("user_id").isNotNull())
+        .select(
+            "event_type",
+            F.expr("(user_id - pmod(user_id, 64)) div 64").cast("long").alias("word_idx"),
+            F.expr("shiftleft(1L, cast(pmod(user_id, 64) as int))").alias("b"),
+        )
+        .groupBy("event_type", "word_idx")
+        .agg(F.expr("bit_or(b)").cast("long").alias("bits"))
     )
+
+
+BITMAP = PartialsStore(
+    keys=("event_type", "word_idx"),
+    values=("bits",),
+    partial=_bitmap_partial,
+    merge=("bit_or(bits)",),
+)
 
 
 def read_bitmap_distinct(spark: SparkSession, store_dir: str) -> DataFrame:
     """Serve EXACT per-group distinct counts from the persisted bitmap
     (live generations, mid-compaction-safe): one word-grain OR re-merge,
     then Σ bit_count."""
-    from pdf_brain_spark.streaming.generations import kept_partial_rows
-
-    merged = (
-        kept_partial_rows(spark, store_dir, _BITMAP_KEYS, ["bits"])
-        .groupBy(*_BITMAP_KEYS)
-        .agg(*_bitmap_merge_exprs())
-    )
     return (
-        merged.groupBy("event_type")
+        BITMAP.merged(spark, store_dir)
+        .groupBy("event_type")
         .agg(
             F.sum(F.bit_count("bits")).cast("long").alias("n_distinct"),
             F.count(F.lit(1)).cast("long").alias("n_words"),
@@ -1896,34 +1485,19 @@ def read_bitmap_distinct(spark: SparkSession, store_dir: str) -> DataFrame:
     )
 
 
-def compact_bitmap(spark: SparkSession, store_dir: str, upto_batch_id: int) -> int:
-    """Merge committed bitmap generations with bitwise OR (reader-safe
-    generation protocol)."""
-    from pdf_brain_spark.streaming.generations import compact_partials
-
-    return compact_partials(
-        spark,
-        store_dir,
-        upto_batch_id,
-        _BITMAP_KEYS,
-        ["bits"],
-        merge_exprs=_bitmap_merge_exprs(),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Incremental Count-Min Sketch — the bounded-state HEAVY-HITTER monoid
 # (Cormode & Muthukrishnan 2005): per-batch (row, col, cnt) cell partials
-# merge by plain integer addition (associative, commutative), the classic
-# streaming frequency sketch whose estimate min_r cms[r][h_r(x)] is an
-# upper bound on the true count with bounded overestimate. Because the
-# cells are EXACT integer sums of a DETERMINISTIC hash placement, the
-# merged sketch — unlike engine-private approx_count structs — is
-# bit-identical to a one-shot build, so a SQL twin can replay it.
-# Persisted state: ≤ CMS_ROWS × CMS_COLS longs per live generation,
-# independent of corpus size — the property that matters at 100 TB.
-# exact top-k (make_term_counts_batch_fn) keeps the true counts; CMS is
-# the answer when even the term dictionary doesn't fit.
+# over the batch's token stream merge by plain integer addition
+# (associative, commutative), the classic streaming frequency sketch whose
+# estimate min_r cms[r][h_r(x)] is an upper bound on the true count with
+# bounded overestimate. Because the cells are EXACT integer sums of a
+# DETERMINISTIC hash placement, the merged sketch — unlike engine-private
+# approx_count structs — is bit-identical to a one-shot build, so a SQL
+# twin can replay it. Persisted state: ≤ CMS_ROWS × CMS_COLS longs per
+# live generation, independent of corpus size — the property that matters
+# at 100 TB. Exact top-k (TERM_COUNTS) keeps the true counts; CMS is the
+# answer when even the term dictionary doesn't fit.
 # ---------------------------------------------------------------------------
 
 CMS_ROWS = 4
@@ -1940,63 +1514,33 @@ def cms_col_expr(term_col: str, row_idx: int):
     return md5_long(Fragment(f"concat({sql_ref(term_col)}, '#{row_idx}')")) % CMS_COLS
 
 
-def make_cms_batch_fn(store_dir: str, text_col: str = "text"):
-    """Per-micro-batch CMS partial over the batch's token stream,
-    replay-idempotent (batch_id=N overwrite)."""
+def _cms_partial(docs: DataFrame, _batch_id: int) -> DataFrame:
     from pdf_brain_spark.functions.text import tokenize
 
-    def _each_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        from pdf_brain_spark.streaming.generations import (
-            record_wseq,
-            stamp_protocol,
-        )
-
-        toks = batch_df.select(F.explode(tokenize(text_col)).alias("term"))
-        # ONE tokenize/explode pass: each term fans out to its CMS_ROWS
-        # cells through a single array-of-structs explode, then one
-        # combinable aggregate — not CMS_ROWS unioned re-scans of the
-        # batch (self-review finding: the loop shape re-tokenized the
-        # hot path 4x)
-        cells = F.array(
-            *[
-                F.struct(
-                    F.lit(r).alias("row_idx"),
-                    cms_col_expr("term", r).alias("col_idx"),
-                )
-                for r in range(CMS_ROWS)
-            ]
-        )
-        partial = (
-            toks.select(F.explode(cells).alias("cell"))
-            .groupBy(
-                F.col("cell.row_idx").alias("row_idx"),
-                F.col("cell.col_idx").alias("col_idx"),
+    # ONE tokenize/explode pass: each term fans out to its CMS_ROWS cells
+    # through a single array-of-structs explode, then one combinable
+    # aggregate — not CMS_ROWS unioned re-scans of the batch
+    cells = F.array(
+        *[
+            F.struct(
+                F.lit(r).alias("row_idx"),
+                cms_col_expr("term", r).alias("col_idx"),
             )
-            .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        )
-        stamp_protocol(batch_df.sparkSession, store_dir)
-        partial.write.mode("overwrite").parquet(f"{store_dir}/batch_id={batch_id}")
-        record_wseq(batch_df.sparkSession, store_dir, f"batch_id={batch_id}")
-
-    return _each_batch
-
-
-def streaming_incremental_cms(
-    spark: SparkSession,
-    docs_stream: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-):
-    """Drive incremental CMS maintenance as a Structured Streaming
-    query. Per-batch work: CMS_ROWS aggregates over the batch's tokens."""
-    return (
-        docs_stream.writeStream.foreachBatch(make_cms_batch_fn(store_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+            for r in range(CMS_ROWS)
+        ]
     )
+    return (
+        docs.select(F.explode(tokenize("text")).alias("term"))
+        .select(F.explode(cells).alias("cell"))
+        .groupBy(
+            F.col("cell.row_idx").alias("row_idx"),
+            F.col("cell.col_idx").alias("col_idx"),
+        )
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    )
+
+
+CMS = PartialsStore(keys=("row_idx", "col_idx"), values=("cnt",), partial=_cms_partial)
 
 
 def read_cms_estimates(spark: SparkSession, store_dir: str, terms_df: DataFrame) -> DataFrame:
@@ -2004,13 +1548,7 @@ def read_cms_estimates(spark: SparkSession, store_dir: str, terms_df: DataFrame)
     live cell generations by integer sum, look up each term's CMS_ROWS
     cells, take the min. Work ∝ sketch size × live generations + the
     probe list — never the token stream."""
-    from pdf_brain_spark.streaming.generations import kept_partial_rows
-
-    cells = (
-        kept_partial_rows(spark, store_dir, ["row_idx", "col_idx"], ["cnt"])
-        .groupBy("row_idx", "col_idx")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
+    cells = CMS.merged(spark, store_dir)
     probes = None
     for r in range(CMS_ROWS):
         p = terms_df.select(
@@ -2026,43 +1564,28 @@ def read_cms_estimates(spark: SparkSession, store_dir: str, terms_df: DataFrame)
     )
 
 
-def compact_cms(spark: SparkSession, store_dir: str, upto_batch_id: int) -> int:
-    """Merge committed CMS generations by cell-wise integer addition
-    (reader-safe generation protocol)."""
-    from pdf_brain_spark.streaming.generations import compact_partials
-
-    return compact_partials(
-        spark,
-        store_dir,
-        upto_batch_id,
-        ["row_idx", "col_idx"],
-        ["cnt"],
-        merge_exprs=[F.sum("cnt").cast("long").alias("cnt")],
-    )
-
-
 # ---------------------------------------------------------------------------
 # Incremental corpus MinHash signatures — the MIN-monoid (associative,
 # commutative, idempotent: the lattice meet) on the partials store: each
-# (group, hash-index) cell keeps the minimum portable hash over all
-# shingles seen, so per-batch partials merge by elementwise MIN and the
-# streamed signature is bit-identical to a one-shot build regardless of
-# batching — the corpus-level complement of the per-doc MinHash the dedup
-# family uses, served as pairwise group-similarity estimates
-# (matching-coordinate fraction estimates Jaccard; Broder 1997).
+# (source, hash-index) cell keeps the minimum portable hash over all
+# 3-shingles of `text` seen, so per-batch partials merge by elementwise
+# MIN and the streamed signature is bit-identical to a one-shot build
+# regardless of batching — the corpus-level complement of the per-doc
+# MinHash the dedup family uses, served as pairwise group-similarity
+# estimates (matching-coordinate fraction estimates Jaccard; Broder 1997).
 # Persisted state: MINHASH_SIG_K longs per (group, live generation).
 # ---------------------------------------------------------------------------
 
 MINHASH_SIG_K = 16
 
 
-def _minhash_partial(df: DataFrame, group_col: str, text_col: str) -> DataFrame:
+def _minhash_partial(docs: DataFrame, _batch_id: int) -> DataFrame:
     from pdf_brain_spark.functions.sql import Fragment
     from pdf_brain_spark.functions.text import md5_long, shingles, tokenize_sql
 
-    sh = df.select(
-        F.col(group_col).alias("grp"),
-        F.explode(shingles(tokenize_sql(text_col), 3)).alias("shingle"),
+    sh = docs.select(
+        F.col("source").alias("grp"),
+        F.explode(shingles(tokenize_sql("text"), 3)).alias("shingle"),
     )
     ks = F.array(*[F.lit(k) for k in range(MINHASH_SIG_K)])
     return (
@@ -2077,54 +1600,18 @@ def _minhash_partial(df: DataFrame, group_col: str, text_col: str) -> DataFrame:
     )
 
 
-def make_minhash_batch_fn(store_dir: str, group_col: str = "source", text_col: str = "text"):
-    """Per-micro-batch MinHash signature partial, replay-idempotent
-    (batch_id=N overwrite)."""
-
-    def _each_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        from pdf_brain_spark.streaming.generations import (
-            record_wseq,
-            stamp_protocol,
-        )
-
-        partial = _minhash_partial(batch_df, group_col, text_col)
-        stamp_protocol(batch_df.sparkSession, store_dir)
-        partial.write.mode("overwrite").parquet(f"{store_dir}/batch_id={batch_id}")
-        record_wseq(batch_df.sparkSession, store_dir, f"batch_id={batch_id}")
-
-    return _each_batch
-
-
-def streaming_incremental_minhash(
-    spark: SparkSession,
-    docs_stream: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-):
-    """Drive incremental corpus-signature maintenance as a Structured
-    Streaming query."""
-    return (
-        docs_stream.writeStream.foreachBatch(make_minhash_batch_fn(store_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+MINHASH = PartialsStore(
+    keys=("grp", "k"), values=("sig",), partial=_minhash_partial, merge=("min(sig)",)
+)
 
 
 def read_minhash_similarity(spark: SparkSession, store_dir: str) -> DataFrame:
     """Serve pairwise group-Jaccard estimates from the persisted
     signatures: re-merge live generations by MIN, then count matching
     coordinates per pair. Work ∝ groups² × K — never the corpus."""
-    from pdf_brain_spark.streaming.generations import kept_partial_rows
-
-    merged = (
-        kept_partial_rows(spark, store_dir, ["grp", "k"], ["sig"])
-        .groupBy("grp", "k")
-        .agg(F.min("sig").cast("long").alias("sig"))
-        .localCheckpoint(eager=True)  # both pair arms reuse it
-    )
+    merged = MINHASH.merged(spark, store_dir).localCheckpoint(
+        eager=True
+    )  # both pair arms reuse it
     a = merged.select(F.col("grp").alias("src_a"), "k", F.col("sig").alias("sig_a"))
     b = merged.select(
         F.col("grp").alias("src_b"), F.col("k").alias("kb"), F.col("sig").alias("sig_b")
@@ -2144,21 +1631,6 @@ def read_minhash_similarity(spark: SparkSession, store_dir: str) -> DataFrame:
     )
 
 
-def compact_minhash(spark: SparkSession, store_dir: str, upto_batch_id: int) -> int:
-    """Merge committed signature generations with the MIN monoid
-    (reader-safe generation protocol)."""
-    from pdf_brain_spark.streaming.generations import compact_partials
-
-    return compact_partials(
-        spark,
-        store_dir,
-        upto_batch_id,
-        ["grp", "k"],
-        ["sig"],
-        merge_exprs=[F.min("sig").cast("long").alias("sig")],
-    )
-
-
 # ---------------------------------------------------------------------------
 # Streaming incremental NOVELTY store (round 11): first-seen tracking for
 # n-gram types across crawl increments. The partial is (ng, fb, fd) — the
@@ -2169,66 +1641,32 @@ def compact_minhash(spark: SparkSession, store_dir: str, upto_batch_id: int) -> 
 # the streaming way: "how much of THIS increment is new text", answered
 # per batch without ever re-scanning history (the one-shot gate re-reads
 # the corpus; the store reads one increment + the type-grain partials).
+# The only store whose partial reads its batch id.
 # ---------------------------------------------------------------------------
 
 NOVELTY_NGRAM_K = 4
 
 
-def _novelty_merge_exprs():
-    first = F.min(F.struct(F.col("fb"), F.col("fd")))
-    return [
-        first.getField("fb").alias("fb"),
-        first.getField("fd").alias("fd"),
-    ]
-
-
-def make_novelty_batch_fn(
-    store_dir: str, id_col: str = "doc_id", text_col: str = "text"
-):
-    """Per-micro-batch first-seen partial: each 4-gram type in the batch
-    with the batch id and the min doc id that carried it, replay-
-    idempotent (batch_id=N overwrite)."""
+def _novelty_partial(docs: DataFrame, batch_id: int) -> DataFrame:
     from pdf_brain_spark.functions.text import shingles, tokenize_sql
 
-    def _each_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        partial = (
-            batch_df.select(
-                F.col(id_col).alias("_id"),
-                F.explode(shingles(tokenize_sql(text_col), NOVELTY_NGRAM_K)).alias("ng"),
-            )
-            .groupBy("ng")
-            .agg(F.min("_id").cast("long").alias("fd"))
-            .select("ng", F.lit(int(batch_id)).cast("long").alias("fb"), "fd")
-        )
-        from pdf_brain_spark.streaming.generations import (
-            record_wseq,
-            stamp_protocol,
-        )
-
-        stamp_protocol(batch_df.sparkSession, store_dir)
-        partial.write.mode("overwrite").parquet(f"{store_dir}/batch_id={batch_id}")
-        record_wseq(batch_df.sparkSession, store_dir, f"batch_id={batch_id}")
-
-    return _each_batch
-
-
-def streaming_incremental_novelty(
-    spark: SparkSession,
-    docs_stream: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-):
-    """Drive incremental first-seen maintenance as a Structured Streaming
-    query (AvailableNow in tests/gate; continuous in production).
-    Per-batch work is one type-grain aggregate over the BATCH only."""
     return (
-        docs_stream.writeStream.foreachBatch(make_novelty_batch_fn(store_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        docs.select(
+            F.col("doc_id").alias("_id"),
+            F.explode(shingles(tokenize_sql("text"), NOVELTY_NGRAM_K)).alias("ng"),
+        )
+        .groupBy("ng")
+        .agg(F.min("_id").cast("long").alias("fd"))
+        .select("ng", F.lit(int(batch_id)).cast("long").alias("fb"), "fd")
     )
+
+
+NOVELTY = PartialsStore(
+    keys=("ng",),
+    values=("fb", "fd"),
+    partial=_novelty_partial,
+    merge=("min(struct(fb, fd)).fb", "min(struct(fb, fd)).fd"),
+)
 
 
 def read_novelty(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -2236,15 +1674,10 @@ def read_novelty(spark: SparkSession, store_dir: str) -> DataFrame:
     generations, mid-compaction-safe): merge first-seen per type with
     the store's own min-struct monoid, then one bounded per-batch
     rollup — (first_batch, n_new_types, share ppm of all types)."""
-    from pdf_brain_spark.streaming.generations import kept_partial_rows
-
-    merged = (
-        kept_partial_rows(spark, store_dir, ["ng"], ["fb", "fd"])
-        .groupBy("ng")
-        .agg(*_novelty_merge_exprs())
-    )
-    per_batch = merged.groupBy(F.col("fb").alias("first_batch")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_new_types")
+    per_batch = (
+        NOVELTY.merged(spark, store_dir)
+        .groupBy(F.col("fb").alias("first_batch"))
+        .agg(F.count(F.lit(1)).cast("long").alias("n_new_types"))
     )
     tot = per_batch.agg(F.sum("n_new_types").cast("long").alias("_t"))
     return (
@@ -2255,19 +1688,4 @@ def read_novelty(spark: SparkSession, store_dir: str) -> DataFrame:
             F.expr("(n_new_types * 1000000) div _t").alias("share_ppm"),
         )
         .orderBy("first_batch")
-    )
-
-
-def compact_novelty(spark: SparkSession, store_dir: str, upto_batch_id: int) -> int:
-    """Merge committed first-seen partial generations with the store's
-    own min-struct monoid (reader-safe generation protocol)."""
-    from pdf_brain_spark.streaming.generations import compact_partials
-
-    return compact_partials(
-        spark,
-        store_dir,
-        upto_batch_id,
-        ["ng"],
-        ["fb", "fd"],
-        merge_exprs=_novelty_merge_exprs(),
     )

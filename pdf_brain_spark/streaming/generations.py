@@ -1,5 +1,8 @@
-"""Generation protocol for the streaming-maintained persisted indexes
-(LSH band index, ANN IVF index, rollup partials).
+"""Generation protocol for the streaming-maintained persisted stores: the
+row stores (LSH band index, ANN IVF index, FTS postings and their doc-grain
+stats) and the ten mergeable-partials sketch stores, each declared once as
+a `PartialsStore` (rollup, value histogram, term counts, OHLC, KMV,
+regression, bitmap, CMS, MinHash, novelty — see streaming/events.py).
 
 Every foreachBatch writer lands its micro-batch under `batch_id=N` (N >= 0,
 monotone from the stream checkpoint) — the replay-idempotence protocol
@@ -46,7 +49,10 @@ inference's Spark job. Building a read therefore fires no job.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from collections.abc import Callable
+from dataclasses import dataclass
+
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _fs(spark: SparkSession, path: str):
@@ -329,8 +335,8 @@ def _coverage_col():
 
 def backfill_floors(spark: SparkSession, index_dir: str) -> list[int]:
     """All `backfill_floor=<int>` generation dirs under index_dir — the
-    REPLACEMENT-semantics namespace (see streaming/events.py::
-    backfill_rollup): a backfill generation carries corrected FULL
+    REPLACEMENT-semantics namespace (see PartialsStore.backfill): a
+    backfill generation carries corrected FULL
     partials for its buckets and declares that, for those buckets, it
     supersedes every additive generation covering <= its floor. A
     compacted generation -m in turn supersedes backfill dirs with
@@ -350,253 +356,310 @@ def backfill_floors(spark: SparkSession, index_dir: str) -> list[int]:
 
 
 # ---------------------------------------------------------------------------
-# Generic mergeable-partials store: the shared machinery behind the rollup
-# and histogram maintenance — per-batch additive partials (integer-mergeable
-# value columns at bucket grain), backfill generations with replacement
-# semantics, and a floor-aware compactor that materializes the reader's own
-# selection. Parameterized by (bucket_cols, value_cols); the domain modules
-# own the partial computation and the serve-time presentation.
+# Generic mergeable-partials store: the machinery behind every streaming
+# sketch store (streaming/events.py declares ten: rollup, value histogram,
+# term counts, OHLC, KMV, regression, bitmap, CMS, MinHash, novelty). Each
+# is a mergeable summary (Agarwal et al., "Mergeable Summaries", PODS
+# 2012): a `partial` over a slice of facts, a commutative and associative
+# `merge` that keeps the partial schema, and a serve-time finisher that
+# the domain module owns. A `PartialsStore` declares the first two once;
+# its methods are the one writer, stream driver, reader selection,
+# backfill (replacement semantics) and floor-aware compactor all ten use.
 # ---------------------------------------------------------------------------
 
 
-def kept_partial_rows(
-    spark: SparkSession,
-    store_dir: str,
-    bucket_cols: list[str],
-    value_cols: list[str],
-    upto: int | None = None,
-    floor_cols: list[str] | None = None,
-    asof_wseq: int | None = None,
-):
-    """The partial rows the serve semantics keeps — ONE selection shared
-    by readers and the compactor so they can never disagree:
+def run_foreach_batch(stream_df, batch_fn, checkpoint_dir: str):
+    """Start `stream_df` through `batch_fn(batch_df, batch_id)` per
+    micro-batch with Trigger.AvailableNow: drain what the source holds,
+    then stop; the checkpoint makes the next start resume after it. The
+    one foreachBatch start of the streaming package: every store's
+    writer is replay-idempotent per batch_id, so foreachBatch's
+    at-least-once delivery composes to effectively-once store state."""
+    return (
+        stream_df.writeStream.foreachBatch(batch_fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
-      * additive: live generations (compaction precedence), optionally
-        restricted to coverage <= upto;
-      * backfill: dirs with floor > m* (the newest compacted coverage —
-        floors at or below it were materialized by a compaction and the
-        dirs are dead, swept later), optionally floor <= upto;
-      * per backfilled FLOOR GROUP: rows of the NEWEST applicable
-        backfill, plus additive rows with coverage strictly above that
-        floor (late additive data on top of the correction);
-        non-backfilled groups keep all additive rows.
 
-    `floor_cols` is the REPLACEMENT GRAIN — the key at which a backfill
-    supersedes additive history. It defaults to `bucket_cols`, which is
-    right when corrections stay within their bucket (the rollup: a
-    re-measured hour is still that hour). When corrections MOVE rows
-    between buckets — a value-keyed histogram, where fixing a value
-    changes its cell — the floor grain must be the stable part of the
-    key (e.g. just event_type) and the backfill must carry that group's
-    COMPLETE corrected partials, else stale cells the correction
-    vacated would survive.
+@dataclass(frozen=True)
+class PartialsStore:
+    """One mergeable-partials store declaration.
 
-    `asof_wseq` is WRITE-TIME travel (mutually exclusive with `upto`):
-    restrict the raw dir listing to dirs recorded at write-sequence
-    <= asof_wseq, then run the normal precedence/backfill selection on
-    that SUBSET — exactly the resolution a reader performed at that
-    instant. A compacted generation recorded AFTER asof_wseq means dirs
-    the historical reader saw have since been deleted, so the snapshot
-    is unreconstructable and this raises (the write-time analogue of
-    the coverage-retention error above; conservative — a crashed-
-    compactor's surviving sources count as retired too)."""
-    from pyspark.sql import functions as F
+      * `keys` — the partial grain; `values` — the partial's value
+        columns;
+      * `partial(df, batch_id)` — the partial rows of a slice of facts,
+        at (keys, values). Only a store whose partial records its batch
+        (novelty's first-seen batch) reads `batch_id`; a backfill passes
+        its floor;
+      * `merge` — one Spark SQL aggregate per value column (F.expr text),
+        applied per key. Default: an integer sum per value column. It
+        must be commutative and associative and keep the partial schema,
+        because compaction must be a no-op under the reader's own
+        re-merge: merge(merge(a,b),c) = merge(a,b,c);
+      * `floor_keys` — the REPLACEMENT GRAIN of a backfill (see `_kept`);
+        default `keys`."""
 
-    floor_cols = list(floor_cols) if floor_cols is not None else list(bucket_cols)
-    if asof_wseq is not None:
+    keys: tuple[str, ...]
+    values: tuple[str, ...]
+    partial: Callable[[DataFrame, int], DataFrame]
+    merge: tuple[str, ...] | None = None
+    floor_keys: tuple[str, ...] | None = None
+
+    def _merge_exprs(self):
+        from pyspark.sql import functions as F
+
+        if self.merge is None:
+            return [F.sum(c).alias(c) for c in self.values]
+        return [F.expr(e).alias(c) for c, e in zip(self.values, self.merge)]
+
+    def batch_fn(self, store_dir: str):
+        """The per-micro-batch writer: the batch's partial lands under
+        `batch_id=N` and is stamped with the next write-sequence. It
+        touches no other generation, so a foreachBatch replay overwrites
+        its own dir and the store stays byte-identical."""
+
+        def _each_batch(batch_df: DataFrame, batch_id: int) -> None:
+            if batch_df.isEmpty():
+                return
+            spark = batch_df.sparkSession
+            stamp_protocol(spark, store_dir)
+            self.partial(batch_df, batch_id).write.mode("overwrite").parquet(
+                f"{store_dir}/batch_id={batch_id}"
+            )
+            record_wseq(spark, store_dir, f"batch_id={batch_id}")
+
+        return _each_batch
+
+    def stream(self, stream_df, store_dir: str, checkpoint_dir: str):
+        """Maintain the store from `stream_df` as a Structured Streaming
+        query. No watermark: a late fact is one more partial row."""
+        return run_foreach_batch(stream_df, self.batch_fn(store_dir), checkpoint_dir)
+
+    def _kept(
+        self,
+        spark: SparkSession,
+        store_dir: str,
+        upto: int | None = None,
+        asof_wseq: int | None = None,
+    ):
+        """The partial rows the serve semantics keeps — ONE selection shared
+        by readers and the compactor so they can never disagree:
+
+          * additive: live generations (compaction precedence), optionally
+            restricted to coverage <= upto;
+          * backfill: dirs with floor > m* (the newest compacted coverage —
+            floors at or below it were materialized by a compaction and the
+            dirs are dead, swept later), optionally floor <= upto;
+          * per backfilled FLOOR GROUP: rows of the NEWEST applicable
+            backfill, plus additive rows with coverage strictly above that
+            floor (late additive data on top of the correction);
+            non-backfilled groups keep all additive rows.
+
+        `floor_keys` is the REPLACEMENT GRAIN — the key at which a backfill
+        supersedes additive history. It defaults to `keys`, which is
+        right when corrections stay within their bucket (the rollup: a
+        re-measured hour is still that hour). When corrections MOVE rows
+        between buckets — a value-keyed histogram, where fixing a value
+        changes its cell — the floor grain must be the stable part of the
+        key (e.g. just event_type) and the backfill must carry that group's
+        COMPLETE corrected partials, else stale cells the correction
+        vacated would survive.
+
+        `asof_wseq` is WRITE-TIME travel (mutually exclusive with `upto`):
+        restrict the raw dir listing to dirs recorded at write-sequence
+        <= asof_wseq, then run the normal precedence/backfill selection on
+        that SUBSET — exactly the resolution a reader performed at that
+        instant. A compacted generation recorded AFTER asof_wseq means dirs
+        the historical reader saw have since been deleted, so the snapshot
+        is unreconstructable and this raises (the write-time analogue of
+        the coverage-retention error above; conservative — a crashed-
+        compactor's surviving sources count as retired too)."""
+        from pyspark.sql import functions as F
+
+        floor_cols = list(self.floor_keys or self.keys)
+        if asof_wseq is not None:
+            if upto is not None:
+                raise ValueError("pass either upto (coverage) or asof_wseq (write-time), not both")
+            seqs = write_seqs(spark, store_dir)
+            raw_ids = generation_ids(spark, store_dir)
+            late_compactions = [
+                g
+                for g in raw_ids
+                if g < 0 and seqs.get(f"batch_id={g}", float("inf")) > asof_wseq
+            ]
+            if late_compactions:
+                raise ValueError(
+                    f"write-time snapshot at wseq {asof_wseq} was retired: a "
+                    f"compaction (generation {late_compactions}) recorded after "
+                    "it deleted directories that snapshot's reader saw. "
+                    "Write-time travel reaches back only to the newest "
+                    "compaction's write."
+                )
+            vis_ids = [
+                g for g in raw_ids if seqs.get(f"batch_id={g}", float("inf")) <= asof_wseq
+            ]
+            ids = live_generation_ids(vis_ids)
+            m_star = max([coverage(g) for g in ids if g < 0], default=-1)
+            floors = [
+                k
+                for k in backfill_floors(spark, store_dir)
+                if k > m_star
+                and seqs.get(f"backfill_floor={k}", float("inf")) <= asof_wseq
+            ]
+        else:
+            ids = live_generation_ids(generation_ids(spark, store_dir))
+            m_star = max([coverage(g) for g in ids if g < 0], default=-1)
+            floors = [k for k in backfill_floors(spark, store_dir) if k > m_star]
         if upto is not None:
-            raise ValueError("pass either upto (coverage) or asof_wseq (write-time), not both")
-        seqs = write_seqs(spark, store_dir)
-        raw_ids = generation_ids(spark, store_dir)
-        late_compactions = [
-            g
-            for g in raw_ids
-            if g < 0 and seqs.get(f"batch_id={g}", float("inf")) > asof_wseq
-        ]
-        if late_compactions:
-            raise ValueError(
-                f"write-time snapshot at wseq {asof_wseq} was retired: a "
-                f"compaction (generation {late_compactions}) recorded after "
-                "it deleted directories that snapshot's reader saw. "
-                "Write-time travel reaches back only to the newest "
-                "compaction's write."
-            )
-        vis_ids = [
-            g for g in raw_ids if seqs.get(f"batch_id={g}", float("inf")) <= asof_wseq
-        ]
-        ids = live_generation_ids(vis_ids)
-        m_star = max([coverage(g) for g in ids if g < 0], default=-1)
-        floors = [
-            k
-            for k in backfill_floors(spark, store_dir)
-            if k > m_star
-            and seqs.get(f"backfill_floor={k}", float("inf")) <= asof_wseq
-        ]
-    else:
-        ids = live_generation_ids(generation_ids(spark, store_dir))
-        m_star = max([coverage(g) for g in ids if g < 0], default=-1)
-        floors = [k for k in backfill_floors(spark, store_dir) if k > m_star]
-    if upto is not None:
-        if upto < m_star:
-            # the documented compaction-retention limit on time travel, as
-            # its own error (not the generic no-live-generations fallthrough)
-            raise ValueError(
-                f"snapshot at batch {upto} was retired by a compaction "
-                f"covering {m_star}: time travel reaches back only to the "
-                "newest compacted coverage (the retention trade of "
-                "compacting). Recompute from facts for older snapshots."
-            )
-        ids = [g for g in ids if coverage(g) <= upto]
-        floors = [k for k in floors if k <= upto]
-    cols = list(bucket_cols) + list(value_cols)
-    adds = None
-    if ids:
-        adds = read_generation_dirs(
-            spark, [f"{store_dir}/batch_id={g}" for g in ids], store_dir
-        ).select(*cols, _coverage_col().alias("_cov"))
-    if not floors:
+            if upto < m_star:
+                # the documented compaction-retention limit on time travel, as
+                # its own error (not the generic no-live-generations fallthrough)
+                raise ValueError(
+                    f"snapshot at batch {upto} was retired by a compaction "
+                    f"covering {m_star}: time travel reaches back only to the "
+                    "newest compacted coverage (the retention trade of "
+                    "compacting). Recompute from facts for older snapshots."
+                )
+            ids = [g for g in ids if coverage(g) <= upto]
+            floors = [k for k in floors if k <= upto]
+        cols = [*self.keys, *self.values]
+        adds = None
+        if ids:
+            adds = read_generation_dirs(
+                spark, [f"{store_dir}/batch_id={g}" for g in ids], store_dir
+            ).select(*cols, _coverage_col().alias("_cov"))
+        if not floors:
+            if adds is None:
+                raise ValueError(f"partials store {store_dir} has no live generations")
+            return adds.drop("_cov")
+        backs = read_generation_dirs(
+            spark, [f"{store_dir}/backfill_floor={k}" for k in floors], store_dir
+        )
+        fl = backs.groupBy(*floor_cols).agg(F.max("backfill_floor").alias("_fl"))
+        backs_kept = (
+            backs.join(fl, floor_cols)
+            .filter(F.col("backfill_floor") == F.col("_fl"))
+            .select(*cols)
+        )
         if adds is None:
-            raise ValueError(f"partials store {store_dir} has no live generations")
-        return adds.drop("_cov")
-    backs = read_generation_dirs(
-        spark, [f"{store_dir}/backfill_floor={k}" for k in floors], store_dir
-    )
-    fl = backs.groupBy(*floor_cols).agg(F.max("backfill_floor").alias("_fl"))
-    backs_kept = (
-        backs.join(fl, floor_cols)
-        .filter(F.col("backfill_floor") == F.col("_fl"))
-        .select(*cols)
-    )
-    if adds is None:
-        return backs_kept
-    adds_kept = (
-        adds.join(F.broadcast(fl), floor_cols, "left")
-        .filter(F.col("_fl").isNull() | (F.col("_cov") > F.col("_fl")))
-        .select(*cols)
-    )
-    return adds_kept.unionByName(backs_kept)
-
-
-def backfill_partials(
-    spark: SparkSession,
-    store_dir: str,
-    partial_df,
-    floor: int,
-    overwrite: bool = False,
-) -> None:
-    """Write a backfill generation (replacement semantics — see
-    backfill_floors): `partial_df` must hold the CORRECTED full partials
-    for the floor groups it covers, at the store's partial schema.
-
-    A floor can be used ONCE: unlike tombstones (pure key sets that
-    union), two backfills at one floor cannot compose — the second's
-    buckets would silently revert the first's to uncorrected additive
-    history if it overwrote, and same-floor rows would double-count if
-    dirs unioned. So an occupied floor RAISES; pass overwrite=True only
-    to retry the SAME logical backfill after a crash (the write is a
-    single dir overwrite — atomic-on-appearance to readers). A new
-    repair between the same stream batches should either merge its
-    corrections into one backfill frame or wait for the frontier to
-    advance to a fresh floor. Floor contract: above the newest compacted
-    coverage, and covering only committed batches."""
-    m_star = max(
-        [coverage(g) for g in generation_ids(spark, store_dir) if g < 0],
-        default=-1,
-    )
-    if floor <= m_star:
-        raise ValueError(
-            f"backfill floor {floor} is at or below the newest compacted "
-            f"coverage {m_star}: it would be superseded on arrival. "
-            "Backfill above the compaction frontier (or recompute from facts)."
+            return backs_kept
+        adds_kept = (
+            adds.join(F.broadcast(fl), floor_cols, "left")
+            .filter(F.col("_fl").isNull() | (F.col("_cov") > F.col("_fl")))
+            .select(*cols)
         )
-    if not overwrite and floor in backfill_floors(spark, store_dir):
-        raise ValueError(
-            f"backfill floor {floor} is already occupied: overwriting would "
-            "revert the earlier correction's buckets. Merge the corrections "
-            "into one backfill, use a fresher committed floor, or pass "
-            "overwrite=True to retry the same logical backfill."
+        return adds_kept.unionByName(backs_kept)
+
+    def merged(self, spark: SparkSession, store_dir: str, **kept):
+        """The kept partial rows merged to one row per key — the start of
+        every serve. `kept` passes `upto` (coverage time travel) or
+        `asof_wseq` (write-time travel) to the selection."""
+        return (
+            self._kept(spark, store_dir, **kept)
+            .groupBy(*self.keys)
+            .agg(*self._merge_exprs())
         )
-    stamp_protocol(spark, store_dir)
-    partial_df.write.mode("overwrite").parquet(
-        f"{store_dir}/backfill_floor={floor}"
-    )
-    record_wseq(spark, store_dir, f"backfill_floor={floor}")
 
+    def backfill(
+        self,
+        spark: SparkSession,
+        store_dir: str,
+        corrected: DataFrame,
+        floor_batch_id: int,
+        overwrite: bool = False,
+    ) -> None:
+        """Write a backfill generation (replacement semantics — see
+        backfill_floors): the partial of the `corrected` facts, which
+        must be the COMPLETE corrected facts of every floor group they
+        touch. For those groups it supersedes every additive generation
+        covering <= floor_batch_id; later additive batches still merge on
+        top, so the stream never pauses.
 
-def compact_partials(
-    spark: SparkSession,
-    store_dir: str,
-    upto_batch_id: int,
-    bucket_cols: list[str],
-    value_cols: list[str],
-    floor_cols: list[str] | None = None,
-    merge_exprs: list | None = None,
-) -> int:
-    """Floor-aware partials compaction: merge every live additive
-    generation covering ≤ upto_batch_id AND every applicable backfill
-    generation (floor in (m*, upto]) into one compacted generation
-    holding the bucket-grain RESOLVED partials, computed by the same
-    `kept_partial_rows` the readers use. The compacted id is
-    compacted_id(max(coverages, floors)), so it supersedes both the
-    consumed additive dirs AND the consumed backfill dirs; deletes
-    happen after the atomic rename, and dead dirs from either namespace
-    are swept. Returns the number of generations merged.
-
-    `merge_exprs` is the store's MERGE MONOID — a list of aliased
-    aggregate expressions (one per value column) applied per bucket.
-    Default: integer SUM per value column (the rollup/histogram/term
-    stores). Any commutative, associative aggregate whose result stays
-    at the partial schema works — the OHLC store merges with min/max
-    over ordering structs — because compaction must be a no-op under
-    the reader's own re-aggregation: merge(merge(a,b),c) =
-    merge(a,b,c)."""
-    from pyspark.sql import functions as F
-
-    HPath, fs = _fs(spark, store_dir)
-    all_ids = generation_ids(spark, store_dir)
-    live = live_generation_ids(all_ids)
-    m_star = max([coverage(g) for g in live if g < 0], default=-1)
-    all_floors = backfill_floors(spark, store_dir)
-    # sweep: additive dirs superseded by precedence, backfill dirs at or
-    # below the compaction frontier — both invisible to readers
-    for g in set(all_ids) - set(live):
-        fs.delete(HPath(f"{store_dir}/batch_id={g}"), True)
-    for k in all_floors:
-        if k <= m_star:
-            fs.delete(HPath(f"{store_dir}/backfill_floor={k}"), True)
-    src_add = [g for g in live if coverage(g) <= upto_batch_id]
-    src_fl = [k for k in all_floors if m_star < k <= upto_batch_id]
-    if len(src_add) + len(src_fl) < 2:
-        return 0
-    if all(g < 0 for g in src_add) and not src_fl:
-        return 0  # lone compacted gen: nothing new arrived at this coverage
-    m = max([coverage(g) for g in src_add] + src_fl)
-    dest = compacted_id(m)
-    if merge_exprs is None:
-        merge_exprs = [F.sum(c).alias(c) for c in value_cols]
-    merged = (
-        kept_partial_rows(
-            spark, store_dir, bucket_cols, value_cols,
-            upto=upto_batch_id, floor_cols=floor_cols,
+        A floor can be used ONCE: unlike tombstones (pure key sets that
+        union), two backfills at one floor cannot compose — the second's
+        buckets would silently revert the first's to uncorrected additive
+        history if it overwrote, and same-floor rows would double-count if
+        dirs unioned. So an occupied floor RAISES; pass overwrite=True only
+        to retry the SAME logical backfill after a crash (the write is a
+        single dir overwrite — atomic-on-appearance to readers). A new
+        repair between the same stream batches should either merge its
+        corrections into one backfill frame or wait for the frontier to
+        advance to a fresh floor. Floor contract: above the newest compacted
+        coverage, and covering only committed batches."""
+        m_star = max(
+            [coverage(g) for g in generation_ids(spark, store_dir) if g < 0],
+            default=-1,
         )
-        .groupBy(*bucket_cols)
-        .agg(*merge_exprs)
-    )
-    tmp = f"{store_dir}/.compact_tmp_{m}"
-    fs.delete(HPath(tmp), True)
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-    if not fs.rename(HPath(tmp), HPath(f"{store_dir}/batch_id={dest}")):
-        raise IOError(
-            f"compact_partials: rename {tmp} -> batch_id={dest} failed; "
-            "aborting with sources intact (nothing was deleted)"
+        if floor_batch_id <= m_star:
+            raise ValueError(
+                f"backfill floor {floor_batch_id} is at or below the newest "
+                f"compacted coverage {m_star}: it would be superseded on "
+                "arrival. Backfill above the compaction frontier (or "
+                "recompute from facts)."
+            )
+        if not overwrite and floor_batch_id in backfill_floors(spark, store_dir):
+            raise ValueError(
+                f"backfill floor {floor_batch_id} is already occupied: overwriting would "
+                "revert the earlier correction's buckets. Merge the corrections "
+                "into one backfill, use a fresher committed floor, or pass "
+                "overwrite=True to retry the same logical backfill."
+            )
+        stamp_protocol(spark, store_dir)
+        name = f"backfill_floor={floor_batch_id}"
+        self.partial(corrected, floor_batch_id).write.mode("overwrite").parquet(
+            f"{store_dir}/{name}"
         )
-    record_wseq(spark, store_dir, f"batch_id={dest}")
-    for g in src_add:
-        if g != dest:
+        record_wseq(spark, store_dir, name)
+
+    def compact(self, spark: SparkSession, store_dir: str, upto_batch_id: int) -> int:
+        """Floor-aware compaction: merge every live additive generation
+        covering ≤ upto_batch_id AND every applicable backfill generation
+        (floor in (m*, upto]) into one compacted generation holding the
+        key-grain RESOLVED partials, computed by the same `merged` the
+        readers start from. The compacted id is compacted_id(max(coverages,
+        floors)), so it supersedes both the consumed additive dirs AND the
+        consumed backfill dirs; deletes happen after the atomic rename,
+        and dead dirs from either namespace are swept. Returns the number
+        of generations merged."""
+        HPath, fs = _fs(spark, store_dir)
+        all_ids = generation_ids(spark, store_dir)
+        live = live_generation_ids(all_ids)
+        m_star = max([coverage(g) for g in live if g < 0], default=-1)
+        all_floors = backfill_floors(spark, store_dir)
+        # sweep: additive dirs superseded by precedence, backfill dirs at or
+        # below the compaction frontier — both invisible to readers
+        for g in set(all_ids) - set(live):
             fs.delete(HPath(f"{store_dir}/batch_id={g}"), True)
-    for k in src_fl:
-        fs.delete(HPath(f"{store_dir}/backfill_floor={k}"), True)
-    return len(src_add) + len(src_fl)
+        for k in all_floors:
+            if k <= m_star:
+                fs.delete(HPath(f"{store_dir}/backfill_floor={k}"), True)
+        src_add = [g for g in live if coverage(g) <= upto_batch_id]
+        src_fl = [k for k in all_floors if m_star < k <= upto_batch_id]
+        if len(src_add) + len(src_fl) < 2:
+            return 0
+        if all(g < 0 for g in src_add) and not src_fl:
+            return 0  # lone compacted gen: nothing new arrived at this coverage
+        m = max([coverage(g) for g in src_add] + src_fl)
+        dest = compacted_id(m)
+        tmp = f"{store_dir}/.compact_tmp_{m}"
+        fs.delete(HPath(tmp), True)
+        self.merged(spark, store_dir, upto=upto_batch_id).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(tmp)
+        if not fs.rename(HPath(tmp), HPath(f"{store_dir}/batch_id={dest}")):
+            raise IOError(
+                f"PartialsStore.compact: rename {tmp} -> batch_id={dest} failed; "
+                "aborting with sources intact (nothing was deleted)"
+            )
+        record_wseq(spark, store_dir, f"batch_id={dest}")
+        for g in src_add:
+            if g != dest:
+                fs.delete(HPath(f"{store_dir}/batch_id={g}"), True)
+        for k in src_fl:
+            fs.delete(HPath(f"{store_dir}/backfill_floor={k}"), True)
+        return len(src_add) + len(src_fl)
 
 
 # ---------------------------------------------------------------------------
@@ -674,7 +737,7 @@ def kept_index_rows(
     key_cols: list[str],
     upto: int | None = None,
 ):
-    """Row-store counterpart of kept_partial_rows: the live generations'
+    """Row-store counterpart of PartialsStore._kept: the live generations'
     rows minus tombstoned ones — a row from a generation with coverage c
     is dead iff some applicable tombstone for its key has floor >= c.
     Returns all data columns plus the hive partition columns (batch_id,

@@ -34,11 +34,7 @@ def _model_rollup(model_rows):
 
 def test_partials_store_fuzz_against_model(spark, tmp_path):
     from pdf_brain_spark.sources.loaders import load_table
-    from pdf_brain_spark.streaming.events import (
-        backfill_rollup,
-        compact_rollup,
-        make_rollup_batch_fn,
-    )
+    from pdf_brain_spark.streaming.events import ROLLUP, backfill_rollup
     from pdf_brain_spark.streaming.generations import backfill_floors
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
@@ -68,7 +64,7 @@ def test_partials_store_fuzz_against_model(spark, tmp_path):
     for seed in (101, 202):
         rng = random.Random(seed)
         roll = str(tmp_path / f"roll_{seed}")
-        fn = make_rollup_batch_fn(roll)
+        fn = ROLLUP.batch_fn(roll)
         # model state: bucket -> list of cent values currently counted
         model = {}
         committed = -1
@@ -119,7 +115,7 @@ def test_partials_store_fuzz_against_model(spark, tmp_path):
                     model[k] = list(vals)
             elif op == "compact" and committed >= 0:
                 upto = rng.randint(0, committed)
-                compact_rollup(spark, roll, upto_batch_id=upto)
+                ROLLUP.compact(spark, roll, upto_batch_id=upto)
                 # model unchanged: compaction must never change serving
             if committed >= 0:
                 assert _served_rollup(spark, roll) == _model_rollup(model), (

@@ -514,13 +514,13 @@ def test_incremental_rollup_replay_idempotent_and_late_data(spark, tmp_path):
     is bucket-grain (each generation holds at most |buckets| rows, not
     |events|)."""
     from pdf_brain_spark.sources.loaders import load_table
-    from pdf_brain_spark.streaming.events import make_rollup_batch_fn, read_rollup
+    from pdf_brain_spark.streaming.events import ROLLUP, read_rollup
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
         "event_id", "event_type", "ts", "value"
     )
     roll = str(tmp_path / "rollup")
-    fn = make_rollup_batch_fn(roll)
+    fn = ROLLUP.batch_fn(roll)
     b0 = ev.filter(F.col("event_id") % 2 == 0)
     b1 = ev.filter(F.col("event_id") % 2 == 1)  # same hours: all late data
     fn(b0, 0)
@@ -574,11 +574,7 @@ def test_generation_protocol_mid_compaction_reader_safety(spark, tmp_path):
     import shutil
 
     from pdf_brain_spark.sources.loaders import load_table
-    from pdf_brain_spark.streaming.events import (
-        compact_rollup,
-        make_rollup_batch_fn,
-        read_rollup,
-    )
+    from pdf_brain_spark.streaming.events import ROLLUP, read_rollup
     from pdf_brain_spark.streaming.generations import (
         generation_ids,
         live_generation_ids,
@@ -595,7 +591,7 @@ def test_generation_protocol_mid_compaction_reader_safety(spark, tmp_path):
         "event_id", "event_type", "ts", "value"
     )
     roll = str(tmp_path / "rollup")
-    fn = make_rollup_batch_fn(roll)
+    fn = ROLLUP.batch_fn(roll)
     for b in range(3):
         fn(ev.filter(F.col("event_id") % 3 == b), b)
 
@@ -612,7 +608,7 @@ def test_generation_protocol_mid_compaction_reader_safety(spark, tmp_path):
     # rename and the deletes (or after a compactor crash there)
     for b in (0, 1):
         shutil.copytree(f"{roll}/batch_id={b}", str(tmp_path / f"bak{b}"))
-    assert compact_rollup(spark, roll, upto_batch_id=1) == 2
+    assert ROLLUP.compact(spark, roll, upto_batch_id=1) == 2
     assert generation_ids(spark, roll) == [-2, 2]
     for b in (0, 1):
         shutil.copytree(str(tmp_path / f"bak{b}"), f"{roll}/batch_id={b}")
@@ -620,12 +616,12 @@ def test_generation_protocol_mid_compaction_reader_safety(spark, tmp_path):
     assert served() == before  # precedence hides them: no double counting
 
     # the next sweep garbage-collects the stale dirs without re-merging
-    assert compact_rollup(spark, roll, upto_batch_id=1) == 0
+    assert ROLLUP.compact(spark, roll, upto_batch_id=1) == 0
     assert generation_ids(spark, roll) == [-2, 2]
     assert served() == before
 
     # chained compaction over a compacted generation: -2 + 2 -> -3
-    assert compact_rollup(spark, roll, upto_batch_id=2) == 2
+    assert ROLLUP.compact(spark, roll, upto_batch_id=2) == 2
     assert generation_ids(spark, roll) == [-3]
     assert served() == before
     # compacted partials are bucket-grain: one row per (type, hour)
@@ -704,8 +700,7 @@ def test_incremental_percentiles_replay_merge_compact(spark, tmp_path):
     preserves the served quantiles and shrinks state to bucket grain."""
     from pdf_brain_spark.sources.loaders import load_table
     from pdf_brain_spark.streaming.events import (
-        compact_value_histogram,
-        make_value_histogram_batch_fn,
+        VALUE_HISTOGRAM,
         read_histogram_percentiles,
     )
 
@@ -713,7 +708,7 @@ def test_incremental_percentiles_replay_merge_compact(spark, tmp_path):
         "event_id", "event_type", "value"
     )
     hist = str(tmp_path / "hist")
-    fn = make_value_histogram_batch_fn(hist)
+    fn = VALUE_HISTOGRAM.batch_fn(hist)
     for b in range(3):
         fn(ev.filter(F.col("event_id") % 3 == b), b)
 
@@ -749,7 +744,7 @@ def test_incremental_percentiles_replay_merge_compact(spark, tmp_path):
             want.append((t, q / 100.0, round(bs[rank - 1] / 100.0, 2)))
     assert got == sorted(want)
 
-    assert compact_value_histogram(spark, hist, upto_batch_id=2) == 3
+    assert VALUE_HISTOGRAM.compact(spark, hist, upto_batch_id=2) == 3
     assert served() == got
     n_buckets = len({(t, b) for t, bs in by_type.items() for b in bs})
     assert spark.read.parquet(f"{hist}/batch_id=-3").count() == n_buckets
@@ -768,19 +763,14 @@ def test_rollup_backfill_replacement_semantics(spark, tmp_path):
     import pytest as _pytest
 
     from pdf_brain_spark.sources.loaders import load_table
-    from pdf_brain_spark.streaming.events import (
-        backfill_rollup,
-        compact_rollup,
-        make_rollup_batch_fn,
-        read_rollup,
-    )
+    from pdf_brain_spark.streaming.events import ROLLUP, backfill_rollup, read_rollup
     from pdf_brain_spark.streaming.generations import backfill_floors, generation_ids
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
         "event_id", "event_type", "ts", "value"
     )
     roll = str(tmp_path / "rollup")
-    fn = make_rollup_batch_fn(roll)
+    fn = ROLLUP.batch_fn(roll)
     for b in range(3):
         fn(ev.filter(F.col("event_id") % 3 == b), b)
 
@@ -837,7 +827,7 @@ def test_rollup_backfill_replacement_semantics(spark, tmp_path):
 
     # compaction resolves floors with the reader's own selection
     shutil.copytree(f"{roll}/backfill_floor=2", str(tmp_path / "bak_fl"))
-    assert compact_rollup(spark, roll, upto_batch_id=3) == 5  # gens 0-3 + 1 backfill
+    assert ROLLUP.compact(spark, roll, upto_batch_id=3) == 5  # gens 0-3 + 1 backfill
     assert generation_ids(spark, roll) == [-4]
     assert backfill_floors(spark, roll) == []
     assert served() == got2
@@ -846,7 +836,7 @@ def test_rollup_backfill_replacement_semantics(spark, tmp_path):
     # is invisible to readers and swept by the next compaction pass
     shutil.copytree(str(tmp_path / "bak_fl"), f"{roll}/backfill_floor=2")
     assert served() == got2
-    assert compact_rollup(spark, roll, upto_batch_id=3) == 0
+    assert ROLLUP.compact(spark, roll, upto_batch_id=3) == 0
     assert backfill_floors(spark, roll) == []
 
     # floor at or below the compaction frontier is refused
@@ -863,9 +853,7 @@ def test_histogram_backfill_type_grain_replacement(spark, tmp_path):
     retires."""
     from pdf_brain_spark.sources.loaders import load_table
     from pdf_brain_spark.streaming.events import (
-        backfill_value_histogram,
-        compact_value_histogram,
-        make_value_histogram_batch_fn,
+        VALUE_HISTOGRAM,
         read_histogram_percentiles,
     )
     from pdf_brain_spark.streaming.generations import backfill_floors, generation_ids
@@ -874,7 +862,7 @@ def test_histogram_backfill_type_grain_replacement(spark, tmp_path):
         "event_id", "event_type", "value"
     )
     hist = str(tmp_path / "hist")
-    fn = make_value_histogram_batch_fn(hist)
+    fn = VALUE_HISTOGRAM.batch_fn(hist)
     for b in range(2):
         fn(ev.filter(F.col("event_id") % 2 == b), b)
 
@@ -889,7 +877,7 @@ def test_histogram_backfill_type_grain_replacement(spark, tmp_path):
     corrected = ev.filter(F.col("event_type") == "click").withColumn(
         "value", F.round(F.col("value") * 2, 2)
     )
-    backfill_value_histogram(spark, hist, corrected, floor_batch_id=1)
+    VALUE_HISTOGRAM.backfill(spark, hist, corrected, floor_batch_id=1)
     got = served()
     # the corrected type serves the doubled distribution: p-values double
     base_click = {q: v for t, q, v in base if t == "click"}
@@ -900,7 +888,7 @@ def test_histogram_backfill_type_grain_replacement(spark, tmp_path):
     assert [x for x in got if x[0] != "click"] == [x for x in base if x[0] != "click"]
 
     # compaction materializes the per-type resolution, retires the dir
-    n = compact_value_histogram(spark, hist, upto_batch_id=1)
+    n = VALUE_HISTOGRAM.compact(spark, hist, upto_batch_id=1)
     assert n == 3  # 2 additive gens + 1 backfill
     assert generation_ids(spark, hist) == [-2]
     assert backfill_floors(spark, hist) == []
@@ -1006,17 +994,13 @@ def test_rollup_backfill_empty_bucket_marker(spark, tmp_path):
     the vacated hour serves (0, 0.0); without it, replacement is
     row-presence-based and the stale totals would survive."""
     from pdf_brain_spark.sources.loaders import load_table
-    from pdf_brain_spark.streaming.events import (
-        backfill_rollup,
-        make_rollup_batch_fn,
-        read_rollup,
-    )
+    from pdf_brain_spark.streaming.events import ROLLUP, backfill_rollup, read_rollup
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
         "event_id", "event_type", "ts", "value"
     )
     roll = str(tmp_path / "rollup")
-    make_rollup_batch_fn(roll)(ev, 0)
+    ROLLUP.batch_fn(roll)(ev, 0)
 
     h0 = ev.agg(F.date_trunc("hour", F.min("ts")).alias("h")).first()["h"]
     in_h = F.date_trunc("hour", F.col("ts")) == F.lit(h0)
@@ -1121,19 +1105,14 @@ def test_coverage_zero_compaction_and_refit(spark, tmp_path):
     assert kept_index_rows(spark, idx2, ["vec_id"]).count() == emb.count()
 
     # (3) partials store: batch 0 + a floor-0 backfill compact to -1
-    from pdf_brain_spark.streaming.events import (
-        backfill_rollup,
-        compact_rollup,
-        make_rollup_batch_fn,
-        read_rollup,
-    )
+    from pdf_brain_spark.streaming.events import ROLLUP, backfill_rollup, read_rollup
     from pdf_brain_spark.streaming.generations import backfill_floors
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
         "event_id", "event_type", "ts", "value"
     )
     roll = str(tmp_path / "rollup")
-    make_rollup_batch_fn(roll)(ev, 0)
+    ROLLUP.batch_fn(roll)(ev, 0)
     h0 = ev.agg(F.date_trunc("hour", F.min("ts")).alias("h")).first()["h"]
     corrected = ev.filter(F.date_trunc("hour", F.col("ts")) == F.lit(h0)).withColumn(
         "value", F.round(F.col("value") * 2, 2)
@@ -1143,7 +1122,7 @@ def test_coverage_zero_compaction_and_refit(spark, tmp_path):
         (r["event_type"], str(r["window_start"]), r["n_events"], r["total_value"])
         for r in read_rollup(spark, roll).collect()
     )
-    assert compact_rollup(spark, roll, upto_batch_id=0) == 2
+    assert ROLLUP.compact(spark, roll, upto_batch_id=0) == 2
     assert generation_ids(spark, roll) == [-1]
     assert backfill_floors(spark, roll) == []
     got = sorted(
@@ -1269,11 +1248,7 @@ def test_streaming_ohlc_replay_merge_compact(spark, tmp_path):
     (merge associativity exercised through a real consolidation)."""
     from pdf_brain_spark.operators.temporal import ohlc_bars
     from pdf_brain_spark.sources.loaders import load_table
-    from pdf_brain_spark.streaming.events import (
-        compact_ohlc,
-        make_ohlc_batch_fn,
-        read_ohlc,
-    )
+    from pdf_brain_spark.streaming.events import OHLC, read_ohlc
     from pdf_brain_spark.streaming.generations import generation_ids
     from pdf_brain_spark.sources.loaders import load_table
 
@@ -1281,7 +1256,7 @@ def test_streaming_ohlc_replay_merge_compact(spark, tmp_path):
         "event_id", "event_type", "ts", "value"
     )
     store = str(tmp_path / "ohlc")
-    fn = make_ohlc_batch_fn(store)
+    fn = OHLC.batch_fn(store)
     for b in range(3):
         fn(ev.filter(F.col("event_id") % 3 == b), b)
 
@@ -1308,7 +1283,7 @@ def test_streaming_ohlc_replay_merge_compact(spark, tmp_path):
     assert served() == want
 
     # compaction with the min/max monoid: bar-grain state, serving fixed
-    assert compact_ohlc(spark, store, upto_batch_id=2) == 3
+    assert OHLC.compact(spark, store, upto_batch_id=2) == 3
     assert generation_ids(spark, store) == [-3]
     assert served() == want
     n_bars = len(want)
@@ -1320,17 +1295,13 @@ def test_rollup_time_travel_snapshots(spark, tmp_path):
     compaction retires the snapshots it merges (documented retention
     trade) while the latest state keeps serving."""
     from pdf_brain_spark.sources.loaders import load_table
-    from pdf_brain_spark.streaming.events import (
-        compact_rollup,
-        make_rollup_batch_fn,
-        read_rollup,
-    )
+    from pdf_brain_spark.streaming.events import ROLLUP, read_rollup
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
         "event_id", "event_type", "ts", "value"
     )
     roll = str(tmp_path / "rollup")
-    fn = make_rollup_batch_fn(roll)
+    fn = ROLLUP.batch_fn(roll)
     for b in range(3):
         fn(ev.filter(F.col("event_id") % 3 == b), b)
 
@@ -1362,7 +1333,7 @@ def test_rollup_time_travel_snapshots(spark, tmp_path):
 
     # compaction up to batch 1 retires snapshots 0 and 1; snapshot 1
     # remains reachable AT the compacted coverage, snapshot 0 is gone
-    assert compact_rollup(spark, roll, upto_batch_id=1) == 2
+    assert ROLLUP.compact(spark, roll, upto_batch_id=1) == 2
     assert served(asof=1) == oneshot(F.col("event_id") % 3 <= 1)
     assert served() == oneshot(F.lit(True))
 
@@ -1373,26 +1344,21 @@ def test_ohlc_backfill_replacement_monoid(spark, tmp_path):
     materializes the resolution."""
     from pdf_brain_spark.operators.temporal import ohlc_bars
     from pdf_brain_spark.sources.loaders import load_table
-    from pdf_brain_spark.streaming.events import (
-        backfill_ohlc,
-        compact_ohlc,
-        make_ohlc_batch_fn,
-        read_ohlc,
-    )
+    from pdf_brain_spark.streaming.events import OHLC, read_ohlc
     from pdf_brain_spark.streaming.generations import backfill_floors, generation_ids
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
         "event_id", "event_type", "ts", "value"
     )
     store = str(tmp_path / "ohlc")
-    fn = make_ohlc_batch_fn(store)
+    fn = OHLC.batch_fn(store)
     fn(ev.filter(F.col("event_id") % 2 == 0), 0)
     fn(ev.filter(F.col("event_id") % 2 == 1), 1)
 
     h0 = ev.agg(F.date_trunc("hour", F.min("ts")).alias("h")).first()["h"]
     in_h = F.date_trunc("hour", F.col("ts")) == F.lit(h0)
     corrected = ev.filter(in_h).withColumn("value", F.round(F.col("value") * 3, 2))
-    backfill_ohlc(spark, store, corrected, floor_batch_id=1)
+    OHLC.backfill(spark, store, corrected, floor_batch_id=1)
 
     def served():
         return {
@@ -1421,7 +1387,7 @@ def test_ohlc_backfill_replacement_monoid(spark, tmp_path):
     assert changed and any(got[k][1] != base[k] for k in changed)
 
     # monoid compaction materializes and retires the backfill dir
-    assert compact_ohlc(spark, store, upto_batch_id=1) == 3
+    assert OHLC.compact(spark, store, upto_batch_id=1) == 3
     assert generation_ids(spark, store) == [-2]
     assert backfill_floors(spark, store) == []
     assert served() == want
@@ -1538,7 +1504,7 @@ def test_generation_protocol_marker(spark, tmp_path):
 
     import pytest as _pytest
 
-    from pdf_brain_spark.streaming.events import make_rollup_batch_fn
+    from pdf_brain_spark.streaming.events import ROLLUP
     from pdf_brain_spark.streaming.generations import (
         PROTOCOL_MARKER,
         generation_ids,
@@ -1549,7 +1515,7 @@ def test_generation_protocol_marker(spark, tmp_path):
         [(1, "a", 1.0)], "event_id long, event_type string, value double"
     ).withColumn("ts", F.current_timestamp())
     roll = str(tmp_path / "roll")
-    make_rollup_batch_fn(roll)(ev, 0)
+    ROLLUP.batch_fn(roll)(ev, 0)
     assert os.path.exists(os.path.join(roll, PROTOCOL_MARKER))
     assert generation_ids(spark, roll) == [0]
 
@@ -1575,21 +1541,17 @@ def test_time_travel_below_compacted_coverage_specific_error(spark, tmp_path):
     'no live generations' fallthrough."""
     import pytest as _pytest
 
-    from pdf_brain_spark.streaming.events import (
-        compact_rollup,
-        make_rollup_batch_fn,
-        read_rollup,
-    )
+    from pdf_brain_spark.streaming.events import ROLLUP, read_rollup
 
     ev = spark.createDataFrame(
         [(1, "a", 1.0), (2, "b", 2.0)],
         "event_id long, event_type string, value double",
     ).withColumn("ts", F.current_timestamp())
     roll = str(tmp_path / "roll")
-    fn = make_rollup_batch_fn(roll)
+    fn = ROLLUP.batch_fn(roll)
     fn(ev.filter(F.col("event_id") == 1), 0)
     fn(ev.filter(F.col("event_id") == 2), 1)
-    assert compact_rollup(spark, roll, upto_batch_id=1) == 2
+    assert ROLLUP.compact(spark, roll, upto_batch_id=1) == 2
     # travel to coverage 1 still works (the compacted generation)
     assert read_rollup(spark, roll, asof_batch_id=1).count() > 0
     with _pytest.raises(ValueError, match="retired by a compaction"):
@@ -1604,12 +1566,7 @@ def test_rollup_bitemporal_write_vs_coverage(spark, tmp_path):
     Compaction retires both kinds of snapshot with specific errors."""
     import pytest as _pytest
 
-    from pdf_brain_spark.streaming.events import (
-        backfill_rollup,
-        compact_rollup,
-        make_rollup_batch_fn,
-        read_rollup,
-    )
+    from pdf_brain_spark.streaming.events import ROLLUP, backfill_rollup, read_rollup
 
     def mk(rows):
         return spark.createDataFrame(
@@ -1621,7 +1578,7 @@ def test_rollup_bitemporal_write_vs_coverage(spark, tmp_path):
     h0 = dt.datetime(2024, 1, 1, 10, 0, 0)
     h1 = dt.datetime(2024, 1, 1, 11, 0, 0)
     roll = str(tmp_path / "roll")
-    fn = make_rollup_batch_fn(roll)
+    fn = ROLLUP.batch_fn(roll)
     fn(mk([(1, "a", h0, 10.0), (2, "a", h0, 20.0)]), 0)
     fn(mk([(3, "a", h1, 5.0)]), 1)
 
@@ -1651,7 +1608,7 @@ def test_rollup_bitemporal_write_vs_coverage(spark, tmp_path):
     assert at_2_write == snap(asof_batch_id=2)  # nothing newer than batch 2
 
     # compaction retires old snapshots in BOTH temporalities
-    assert compact_rollup(spark, roll, upto_batch_id=2) == 4
+    assert ROLLUP.compact(spark, roll, upto_batch_id=2) == 4
     assert snap() == at_2_write  # current serve unchanged
     with _pytest.raises(ValueError, match="retired by a compaction"):
         read_rollup(spark, roll, asof_batch_id=1).collect()
@@ -1667,12 +1624,7 @@ def test_streaming_kmv_replay_merge_compact(spark, tmp_path):
     the set-union monoid preserves serving exactly."""
     from pdf_brain_spark.functions.sql import Fragment
     from pdf_brain_spark.functions.text import md5_long
-    from pdf_brain_spark.streaming.events import (
-        KMV_K,
-        compact_kmv,
-        make_kmv_batch_fn,
-        read_kmv,
-    )
+    from pdf_brain_spark.streaming.events import KMV, KMV_K, read_kmv
     from pdf_brain_spark.streaming.generations import generation_ids
     from pdf_brain_spark.sources.loaders import load_table
 
@@ -1680,7 +1632,7 @@ def test_streaming_kmv_replay_merge_compact(spark, tmp_path):
         "event_id", "event_type", "user_id"
     )
     store = str(tmp_path / "kmv")
-    fn = make_kmv_batch_fn(store)
+    fn = KMV.batch_fn(store)
     fn(ev.filter(F.col("event_id") % 3 == 0), 0)
     fn(ev.filter(F.col("event_id") % 3 == 1), 1)
     fn(ev.filter(F.col("event_id") % 3 == 2), 2)
@@ -1720,7 +1672,7 @@ def test_streaming_kmv_replay_merge_compact(spark, tmp_path):
     assert got == want and got
 
     # compaction with the set-union monoid preserves serving
-    assert compact_kmv(spark, store, upto_batch_id=2) == 3
+    assert KMV.compact(spark, store, upto_batch_id=2) == 3
     assert generation_ids(spark, store) == [-3]
     assert served() == want
 
@@ -1733,10 +1685,7 @@ def test_streaming_regression_replay_merge_compact(spark, tmp_path):
     exercises it through real three-way splits), and compaction with
     the additive monoid preserves serving exactly."""
     from pdf_brain_spark.streaming.events import (
-        _REG_SUMS,
-        _reg_partial,
-        compact_regression,
-        make_regression_batch_fn,
+        REGRESSION,
         read_regression,
         regression_fit_exprs,
     )
@@ -1747,7 +1696,7 @@ def test_streaming_regression_replay_merge_compact(spark, tmp_path):
         "event_id", "event_type", "ts", "value"
     )
     store = str(tmp_path / "reg")
-    fn = make_regression_batch_fn(store)
+    fn = REGRESSION.batch_fn(store)
     fn(ev.filter(F.col("event_id") % 3 == 0), 0)
     fn(ev.filter(F.col("event_id") % 3 == 1), 1)
     fn(ev.filter(F.col("event_id") % 3 == 2), 2)
@@ -1768,14 +1717,14 @@ def test_streaming_regression_replay_merge_compact(spark, tmp_path):
         )
 
     slope, intercept = regression_fit_exprs()
-    one_shot = _reg_partial(ev, "event_type", "ts", "value").select(
-        "event_type", *_REG_SUMS, slope, intercept
+    one_shot = REGRESSION.partial(ev, 0).select(
+        "event_type", *REGRESSION.values, slope, intercept
     )
     want = sorted(tuple(r) for r in one_shot.collect())
     got = served()
     assert got == want and got
 
-    assert compact_regression(spark, store, upto_batch_id=2) == 3
+    assert REGRESSION.compact(spark, store, upto_batch_id=2) == 3
     assert generation_ids(spark, store) == [-3]
     assert served() == want
 
@@ -1786,11 +1735,7 @@ def test_streaming_bitmap_exact_distinct_and_compact(spark, tmp_path):
     under overlapping batches (OR is idempotent — re-sending the same
     rows in a different batch cannot inflate the count), and compaction
     with the OR monoid preserves serving."""
-    from pdf_brain_spark.streaming.events import (
-        compact_bitmap,
-        make_bitmap_batch_fn,
-        read_bitmap_distinct,
-    )
+    from pdf_brain_spark.streaming.events import BITMAP, read_bitmap_distinct
     from pdf_brain_spark.streaming.generations import generation_ids
     from pdf_brain_spark.sources.loaders import load_table
 
@@ -1798,7 +1743,7 @@ def test_streaming_bitmap_exact_distinct_and_compact(spark, tmp_path):
         "event_id", "event_type", "user_id"
     )
     store = str(tmp_path / "bm")
-    fn = make_bitmap_batch_fn(store)
+    fn = BITMAP.batch_fn(store)
     fn(ev.filter(F.col("event_id") % 2 == 0), 0)
     # OVERLAPPING batch: odd rows plus a resend of every 4th even row
     fn(ev.filter((F.col("event_id") % 2 == 1) | (F.col("event_id") % 4 == 0)), 1)
@@ -1821,7 +1766,7 @@ def test_streaming_bitmap_exact_distinct_and_compact(spark, tmp_path):
     fn(ev.filter((F.col("event_id") % 2 == 1) | (F.col("event_id") % 4 == 0)), 1)
     assert served() == want  # crash replay
 
-    assert compact_bitmap(spark, store, upto_batch_id=1) == 2
+    assert BITMAP.compact(spark, store, upto_batch_id=1) == 2
     assert generation_ids(spark, store) == [-2]
     assert served() == want
 
@@ -1832,11 +1777,7 @@ def test_streaming_cms_replay_merge_compact(spark, tmp_path):
     estimate upper-bounds the true count for EVERY term, and compaction
     with the additive monoid preserves serving."""
     from pdf_brain_spark.functions.text import tokenize
-    from pdf_brain_spark.streaming.events import (
-        compact_cms,
-        make_cms_batch_fn,
-        read_cms_estimates,
-    )
+    from pdf_brain_spark.streaming.events import CMS, read_cms_estimates
     from pdf_brain_spark.streaming.generations import generation_ids
     from pdf_brain_spark.sources.loaders import load_table
 
@@ -1844,7 +1785,7 @@ def test_streaming_cms_replay_merge_compact(spark, tmp_path):
         "doc_id", "text"
     )
     store = str(tmp_path / "cms")
-    fn = make_cms_batch_fn(store)
+    fn = CMS.batch_fn(store)
     fn(docs.filter(F.col("doc_id") % 3 == 0), 0)
     fn(docs.filter(F.col("doc_id") % 3 == 1), 1)
     fn(docs.filter(F.col("doc_id") % 3 == 2), 2)
@@ -1879,14 +1820,14 @@ def test_streaming_cms_replay_merge_compact(spark, tmp_path):
 
     # one-shot sketch over ALL docs must equal the streamed-and-merged one
     one_shot_store = str(tmp_path / "cms_one")
-    make_cms_batch_fn(one_shot_store)(docs, 0)
+    CMS.batch_fn(one_shot_store)(docs, 0)
     want = sorted(
         (r["term"], r["cms_estimate"])
         for r in read_cms_estimates(spark, one_shot_store, exact.select("term")).collect()
     )
     assert served() == want
 
-    assert compact_cms(spark, store, upto_batch_id=2) == 3
+    assert CMS.compact(spark, store, upto_batch_id=2) == 3
     assert generation_ids(spark, store) == [-3]
     assert served() == want
 
@@ -1899,10 +1840,7 @@ def test_streaming_checkpoint_resume_processes_only_new_files(spark, tmp_path):
     over all data (monoid invariance through a real restart)."""
     import os
 
-    from pdf_brain_spark.streaming.events import (
-        read_kmv,
-        streaming_incremental_kmv as drive_kmv,
-    )
+    from pdf_brain_spark.streaming.events import KMV, read_kmv
     from pdf_brain_spark.streaming.generations import write_seqs
     from pdf_brain_spark.sources.loaders import load_table
 
@@ -1921,7 +1859,7 @@ def test_streaming_checkpoint_resume_processes_only_new_files(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(stage)
         )
-        drive_kmv(spark, stream, store, ckpt).awaitTermination()
+        KMV.stream(stream, store, ckpt).awaitTermination()
 
     run()
     seqs_before = write_seqs(spark, store)
@@ -1976,12 +1914,7 @@ def test_streaming_minhash_replay_merge_compact(spark, tmp_path):
     signatures equal the one-shot build bit for bit — MIN is idempotent
     so even OVERLAPPING batches cannot skew it), and compaction with
     the MIN monoid preserves serving."""
-    from pdf_brain_spark.streaming.events import (
-        _minhash_partial,
-        compact_minhash,
-        make_minhash_batch_fn,
-        read_minhash_similarity,
-    )
+    from pdf_brain_spark.streaming.events import MINHASH, read_minhash_similarity
     from pdf_brain_spark.streaming.generations import generation_ids
     from pdf_brain_spark.sources.loaders import load_table
 
@@ -1989,7 +1922,7 @@ def test_streaming_minhash_replay_merge_compact(spark, tmp_path):
         "doc_id", "source", "text"
     )
     store = str(tmp_path / "mh")
-    fn = make_minhash_batch_fn(store)
+    fn = MINHASH.batch_fn(store)
     fn(docs.filter(F.col("doc_id") % 3 == 0), 0)
     # overlapping batch: thirds 1 and 2 plus a resend of every 6th doc
     fn(docs.filter((F.col("doc_id") % 3 != 0) | (F.col("doc_id") % 6 == 0)), 1)
@@ -2009,7 +1942,7 @@ def test_streaming_minhash_replay_merge_compact(spark, tmp_path):
             tuple(r) for r in read_minhash_similarity(spark, store).collect()
         )
 
-    one_shot_sig = _minhash_partial(docs, "source", "text")
+    one_shot_sig = MINHASH.partial(docs, 0)
     a = one_shot_sig.selectExpr("grp as src_a", "k", "sig as sig_a")
     b = one_shot_sig.selectExpr("grp as src_b", "k as kb", "sig as sig_b")
     want = sorted(
@@ -2029,7 +1962,7 @@ def test_streaming_minhash_replay_merge_compact(spark, tmp_path):
     got = served()
     assert got == want and got
 
-    assert compact_minhash(spark, store, upto_batch_id=1) == 2
+    assert MINHASH.compact(spark, store, upto_batch_id=1) == 2
     assert generation_ids(spark, store) == [-2]
     assert served() == want
 
@@ -2282,11 +2215,7 @@ def test_novelty_store_monoid_replay_and_compaction(spark, tmp_path):
     compaction serve-identical to the uncompacted store, and (3) the
     served first-seen table equal a python incremental seen-set walk
     over the same batches."""
-    from pdf_brain_spark.streaming.events import (
-        compact_novelty,
-        make_novelty_batch_fn,
-        read_novelty,
-    )
+    from pdf_brain_spark.streaming.events import NOVELTY, read_novelty
 
     b0 = spark.createDataFrame(
         [(0, "alpha beta gamma delta epsilon"), (1, "beta gamma delta epsilon zeta")],
@@ -2297,7 +2226,7 @@ def test_novelty_store_monoid_replay_and_compaction(spark, tmp_path):
         "doc_id long, text string",
     )
     store = str(tmp_path / "novelty")
-    fn = make_novelty_batch_fn(store)
+    fn = NOVELTY.batch_fn(store)
     fn(b0, 0)
     fn(b1, 1)
     served = {
@@ -2328,7 +2257,7 @@ def test_novelty_store_monoid_replay_and_compaction(spark, tmp_path):
     } == {tuple(sorted(want)[0]), tuple(sorted(want)[1])}
 
     # compaction is serve-identical
-    assert compact_novelty(spark, store, upto_batch_id=1) == 2
+    assert NOVELTY.compact(spark, store, upto_batch_id=1) == 2
     assert {tuple(r) for r in read_novelty(spark, store).collect()} == want
 
 
@@ -2341,10 +2270,7 @@ def test_novelty_store_random_batch_split_invariance(spark, tmp_path):
     stream carved."""
     import random
 
-    from pdf_brain_spark.streaming.events import (
-        make_novelty_batch_fn,
-        read_novelty,
-    )
+    from pdf_brain_spark.streaming.events import NOVELTY, read_novelty
 
     vocab = [f"w{i}" for i in range(12)]
     for seed in (9, 51):
@@ -2360,7 +2286,7 @@ def test_novelty_store_random_batch_split_invariance(spark, tmp_path):
             batches.append(docs[prev:c])
             prev = c
         store = str(tmp_path / f"nov_{seed}")
-        fn = make_novelty_batch_fn(store)
+        fn = NOVELTY.batch_fn(store)
         for bid, rows in enumerate(batches):
             fn(
                 spark.createDataFrame(rows, "doc_id long, text string"),

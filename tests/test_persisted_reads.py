@@ -149,11 +149,7 @@ def fts_retombstoned(spark, docs, tmp_path_factory):
 
 def test_footer_schema_equals_inferred_schema(spark, fts_store, ann_stores, tmp_path):
     from pdf_brain_spark.sources.loaders import load_table
-    from pdf_brain_spark.streaming.events import (
-        backfill_rollup,
-        fts_docs_dir,
-        make_rollup_batch_fn,
-    )
+    from pdf_brain_spark.streaming.events import ROLLUP, backfill_rollup, fts_docs_dir
     from pdf_brain_spark.streaming.generations import (
         _tombstone_dirs,
         backfill_floors,
@@ -175,7 +171,7 @@ def test_footer_schema_equals_inferred_schema(spark, fts_store, ann_stores, tmp_
 
     ev = load_table(spark, "events", SF).select("event_id", "event_type", "ts", "value")
     roll = str(tmp_path / "rollup")
-    fn = make_rollup_batch_fn(roll)
+    fn = ROLLUP.batch_fn(roll)
     for b in range(2):
         fn(ev.filter(F.col("event_id") % 2 == b), b)
     backfill_rollup(spark, roll, ev.filter(F.col("event_id") % 4 == 0), floor_batch_id=1)

@@ -102,11 +102,7 @@ def test_contrastive_pairs_halves_roundtrip(spark):
 def test_streaming_term_counts_replay_merge_compact(spark, tmp_path):
     """Generation-store term counts: replay leaves partials identical,
     served top-k equals the one-shot count, compaction preserves it."""
-    from pdf_brain_spark.streaming.events import (
-        compact_term_counts,
-        make_term_counts_batch_fn,
-        read_top_terms,
-    )
+    from pdf_brain_spark.streaming.events import TERM_COUNTS, read_top_terms
     from pdf_brain_spark.streaming.generations import generation_ids
 
     docs = spark.createDataFrame(
@@ -118,7 +114,7 @@ def test_streaming_term_counts_replay_merge_compact(spark, tmp_path):
         "doc_id long, text string",
     )
     store = str(tmp_path / "terms")
-    fn = make_term_counts_batch_fn(store)
+    fn = TERM_COUNTS.batch_fn(store)
     fn(docs.filter(F.col("doc_id") <= 2), 0)
     fn(docs.filter(F.col("doc_id") == 3), 1)
 
@@ -137,7 +133,7 @@ def test_streaming_term_counts_replay_merge_compact(spark, tmp_path):
 
     want = [("alpha", 3), ("beta", 3), ("gamma", 3), ("delta", 1)]
     assert served() == want
-    assert compact_term_counts(spark, store, upto_batch_id=1) == 2
+    assert TERM_COUNTS.compact(spark, store, upto_batch_id=1) == 2
     assert generation_ids(spark, store) == [-2]
     assert served() == want
 
