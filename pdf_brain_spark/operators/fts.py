@@ -30,14 +30,22 @@ BM25_B = 0.75
 
 
 def build_postings(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(term, doc_id, tf, doc_len) postings list. Tokenizes once; the doc
-    side is spread first because tokenization is the CPU-bound map stage."""
+    """(doc_id, term, doc_len, tf) postings list, plus one doc-grain row
+    per document (term NULL, tf 0): a NULL token appended to every token
+    array, counted by `count(term)`, so a document with no token still
+    lands one row carrying its doc_len 0. Tokenizes once; the doc side is
+    spread first because tokenization is the CPU-bound map stage."""
     docs = spread_scan(docs, id_col)
-    toked = docs.select(id_col, tokenize(text_col).alias("_tokens"))
-    toks = toked.select(
-        id_col, F.explode(F.col("_tokens")).alias("term"), F.size(F.col("_tokens")).alias("doc_len")
+    toked = docs.select(
+        id_col,
+        F.coalesce(tokenize(text_col), F.array().cast("array<string>")).alias("_tokens"),
     )
-    return toks.groupBy(id_col, "term", "doc_len").agg(F.count(F.lit(1)).alias("tf"))
+    toks = toked.select(
+        id_col,
+        F.explode(F.concat("_tokens", F.array(F.lit(None).cast("string")))).alias("term"),
+        F.size(F.col("_tokens")).alias("doc_len"),
+    )
+    return toks.groupBy(id_col, "term", "doc_len").agg(F.count("term").alias("tf"))
 
 
 def tokenized_corpus(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:

@@ -33,16 +33,23 @@ def transitive_ancestors(
 ) -> DataFrame:
     """All (node, ancestor, depth) pairs reachable from `seeds` following
     `edges` upward. `seeds` must have (node, parent); `edges` is the full
-    edge list. Stops at fixpoint (empty frontier) or max_iterations.
+    edge list. Stops at fixpoint (empty frontier). A closure deeper than
+    max_iterations + 1 levels raises a ValueError instead of returning a
+    truncated result: after the cap, one more frontier is built, and a
+    non-empty one means the walk had not reached its fixpoint.
 
     `acyclic=True` skips the per-iteration distinct + seen anti-join (one
     eager job and one broadcast per level): legal whenever each node has at
     most one parent (trees) or the graph is a DAG with unique paths —
     frontier pairs then can't repeat, and termination comes from the
     frontier emptying at the roots."""
+    # every level joins the edges: materialize them once, or each level
+    # re-runs the caller's edge lineage (a fact scan + distinct). An eager
+    # localCheckpoint, not cache(): its blocks are released with the
+    # result instead of staying in the session's cache
     edges = edges.select(
         F.col(node_col).alias("_e_node"), F.col(parent_col).alias("_e_parent")
-    ).cache()
+    ).localCheckpoint()
 
     # frontier/seen are path-bounded (dimension-sized for taxonomy DAGs —
     # the reference ships 29 concepts), so materialize them single-partition:
@@ -57,7 +64,7 @@ def transitive_ancestors(
     ).coalesce(1).localCheckpoint()
     pieces = [frontier]
     seen = frontier.select("node", "ancestor")
-    for _ in range(max_iterations):
+    for level in range(max_iterations + 1):
         # broadcast the frontier (bounded by live paths, typically tiny)
         # into the edge scan, and localCheckpoint EVERY iteration: without
         # it each loop re-executes the whole prior lineage and the job
@@ -75,6 +82,13 @@ def transitive_ancestors(
         nxt = nxt.coalesce(1).localCheckpoint()
         if nxt.isEmpty():
             break
+        if level == max_iterations:
+            raise ValueError(
+                f"transitive closure did not reach its fixpoint in "
+                f"max_iterations={max_iterations} rounds (a chain deeper than "
+                f"{max_iterations + 1} levels, or a cycle with acyclic=True); "
+                "raise max_iterations or pass acyclic=False for a cyclic graph"
+            )
         pieces.append(nxt)
         if not acyclic:
             seen = (

@@ -42,8 +42,6 @@ def make_ann_ingest_batch_fn(index_dir: str, centroids: list[list[float]], vec_c
     assign = _assign_udf(centroids)
 
     def _each_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         assigned = batch_df.withColumn("_a", assign(F.col(vec_col))).select(
             *batch_df.columns, F.col("_a.cluster_id").alias("list_id")
         )

@@ -158,8 +158,7 @@ def streaming_ingest(
     )
 
     def _each_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.isEmpty():
-            ingest(spark, batch_df, out_dir, markdown=markdown)
+        ingest(spark, batch_df, out_dir, markdown=markdown)
 
     return run_foreach_batch(files, _each_batch, checkpoint_dir)
 
@@ -221,8 +220,6 @@ def make_incremental_dedup_batch_fn(
     state (tests/test_ingest_and_streaming.py)."""
 
     def _each_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         from pdf_brain_spark.operators.dedup import (
             incremental_lsh_candidates,
             minhash_banded_index,
@@ -322,13 +319,15 @@ def delete_documents(
     doc_ids: DataFrame,
     floor_batch_id: int,
 ) -> None:
-    """Delete documents from the persisted LSH band index — the takedown
-    operation (revoked licence, opted-out content) on the append-only
-    dedup store: a tombstone generation records the doc ids, every probe
-    immediately excludes their band rows (a deleted document stops
-    generating candidate pairs), and the next compaction materializes
-    the removal. A document re-ingested after the floor is a fresh
-    insert and participates again."""
+    """Delete documents from a persisted doc_id-keyed index (the LSH band
+    index, or the FTS index as delete_fts_documents) — the takedown
+    operation (revoked licence, opted-out content) on an append-only
+    store: a tombstone generation records the doc ids, every read
+    immediately excludes their rows (a deleted document stops generating
+    candidate pairs, matching terms, and counting in the BM25 corpus
+    statistics), and the next compaction materializes the removal. A
+    document re-ingested after the floor is a fresh insert and
+    participates again."""
     from pdf_brain_spark.streaming.generations import write_tombstones
 
     write_tombstones(
@@ -646,24 +645,29 @@ def read_top_terms(spark: SparkSession, store_dir: str, k: int = 25) -> DataFram
 
 
 # ---------------------------------------------------------------------------
-# Streaming incremental FTS index: per-batch POSTINGS generations
-# (doc_id, term, tf, doc_len) on the row-store generation protocol — the
-# continuous-crawl answer for the TEXT-search side, completing the trio
-# (band index for dedup, IVF index for vectors, postings for FTS). New
-# documents become searchable at the next micro-batch commit; corpus
-# statistics (N, avgdl, df) derive from the SAME persisted postings at
-# serve time, so served BM25 always reflects exactly the corpus indexed
-# so far. Being a row store keyed by doc_id, the index inherits the whole
-# lifecycle for free: replay-idempotent batch overwrite, reader-safe
-# compaction, and tombstone DELETION (a taken-down document vanishes from
-# results immediately and physically at the next compaction).
+# Streaming incremental FTS index: ONE row store on the generation protocol,
+# the continuous-crawl answer for the TEXT-search side, completing the trio
+# (band index for dedup, IVF index for vectors, postings for FTS). Each
+# generation `batch_id=N` holds term_bucket hive partitions: the postings
+# (doc_id, term, doc_len, tf) under buckets >= 0, and one doc-grain row per
+# document (term NULL, tf 0) under FTS_DOC_BUCKET. New documents become
+# searchable at the next micro-batch commit; corpus statistics (N, avgdl)
+# read the doc-grain partition and df the probed postings, both from the
+# same persisted generations at serve time, so served BM25 always reflects
+# exactly the corpus indexed so far and postings and statistics can never
+# disagree (the reference's single FTS5 table, kept in step by triggers).
+# Being a row store keyed by doc_id, the index inherits the whole lifecycle:
+# replay-idempotent batch overwrite, reader-safe compaction, and tombstone
+# DELETION (a taken-down document vanishes from results and statistics
+# immediately, and physically at the next compaction).
 # ---------------------------------------------------------------------------
 
 
 def make_fts_postings_batch_fn(index_dir: str, id_col: str = "doc_id", text_col: str = "text"):
-    """Per-micro-batch postings build (operators/fts.py::build_postings —
-    tokenize once, (doc, term) aggregate with map-side combine),
-    replay-idempotent via the batch_id=N overwrite.
+    """Per-micro-batch index build (operators/fts.py::build_postings —
+    tokenize once, (doc, term) aggregate with map-side combine, one
+    doc-grain row per document), written by ONE partitioned overwrite
+    of `batch_id=N`, so a replay is idempotent.
 
     TERM-PARTITIONED LAYOUT (the ANN index's list_id play carried to the
     text side): every generation lands as `batch_id=N/term_bucket=B`
@@ -672,60 +676,19 @@ def make_fts_postings_batch_fn(index_dir: str, id_col: str = "doc_id", text_col:
     planning time across the whole store, positive generations and
     compacted alike. The bucket hash is the repo's content-free portable
     md5 (replicable driver-side and in DuckDB), NOT xxhash64, so the
-    serve can compute the probe set without a Spark job.
-
-    Zero-token documents (empty/whitespace/NULL text) get a doc-grain
-    MARKER row (term NULL, tf 0, doc_len 0) in bucket 0: build_postings
-    naturally emits nothing for them, but the served corpus statistics
-    (N, avgdl) must count every ingested document or BM25 from the index
-    would drift from the one-shot path exactly when such docs exist."""
-    from pdf_brain_spark.functions.text import tokenize
+    serve can compute the probe set without a Spark job. The doc-grain
+    rows land in `term_bucket=FTS_DOC_BUCKET`, which no term probes, and
+    carry doc_len 0 for a zero-token document (empty/whitespace/NULL
+    text): it has no postings, but the served N and avgdl must count it
+    as the one-shot path does."""
     from pdf_brain_spark.operators.fts import build_postings
+    from pdf_brain_spark.streaming.generations import stamp_protocol
 
     def _each_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        postings = build_postings(batch_df, id_col=id_col, text_col=text_col)
-        empties = (
-            batch_df.select(id_col, tokenize(text_col).alias("_t"))
-            .filter(F.coalesce(F.size("_t"), F.lit(0)) <= 0)
-            .select(
-                F.col(id_col),
-                F.lit(None).cast("string").alias("term"),
-                F.lit(0).alias("doc_len"),
-                F.lit(0).cast("long").alias("tf"),
-            )
-        )
-        from pdf_brain_spark.streaming.generations import stamp_protocol
-
-        stamp_protocol(batch_df.sparkSession, index_dir)
-        n_buckets = _stamp_fts_buckets(
-            batch_df.sparkSession, index_dir, FTS_TERM_BUCKETS
-        )
-        rows = postings.unionByName(empties).localCheckpoint(eager=True)
-        # DOC-GRAIN stats generation (VERDICT r8 item 5): one
-        # (doc_id, doc_len) row per ingested document, on the same
-        # row-store protocol in a sibling store. The serve's corpus
-        # statistics (N, avgdl) and the one-live-generation-per-doc
-        # assert read THIS store — one row per doc — instead of scanning
-        # the term-grain postings of every live generation. Written
-        # BEFORE the postings dir (ADVICE r9): a crash between the two
-        # writes then leaves docs-without-postings — the batch's docs
-        # are invisible to term probes and merely counted in N — instead
-        # of live postings scored with stats that exclude them (silently
-        # wrong BM25) and a uniqueness assert blind to a double-ingest.
-        # Either partial state is also caught LOUDLY at serve time by
-        # fts_assert_stores_consistent; the foreachBatch replay of the
-        # same batch_id rewrites both (idempotent overwrite), so the
-        # window self-heals.
-        docs_store = fts_docs_dir(index_dir)
-        stamp_protocol(batch_df.sparkSession, docs_store)
-        rows.groupBy(id_col).agg(
-            F.first("doc_len").alias("doc_len")
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{docs_store}/batch_id={batch_id}"
-        )
-        rows.withColumn(
+        spark = batch_df.sparkSession
+        stamp_protocol(spark, index_dir)
+        n_buckets = _stamp_fts_buckets(spark, index_dir, FTS_TERM_BUCKETS)
+        build_postings(batch_df, id_col=id_col, text_col=text_col).withColumn(
             "term_bucket", _term_bucket_col("term", n_buckets)
         ).write.partitionBy("term_bucket").mode("overwrite").parquet(
             f"{index_dir}/batch_id={batch_id}"
@@ -734,65 +697,9 @@ def make_fts_postings_batch_fn(index_dir: str, id_col: str = "doc_id", text_col:
     return _each_batch
 
 
-def fts_docs_dir(index_dir: str) -> str:
-    """The FTS index's doc-grain stats store (sibling of the postings
-    store, same generation protocol): one (doc_id, doc_len) row per doc
-    per generation. Serves N/avgdl and the uniqueness assert at doc
-    grain — ~avgdl-times fewer bytes than the postings' term grain, and
-    independent of how many terms a serve probes."""
-    return index_dir.rstrip("/") + "_docs"
-
-
-def delete_fts_documents(
-    spark: SparkSession,
-    index_dir: str,
-    doc_ids: DataFrame,
-    floor_batch_id: int,
-) -> None:
-    """Takedown on the FTS index: tombstone the doc ids in BOTH the
-    doc-grain stats store (so N/avgdl immediately reflect the removal —
-    BM25 idf/length normalization must not keep counting deleted
-    documents) and the postings store (so probes stop matching their
-    rows). DOCS STORE FIRST (ADVICE r9): a crash between the two writes
-    then leaves the deleted docs still visible in results but already
-    excluded from the corpus stats — a visible, re-runnable partial
-    delete — instead of invisible docs silently inflating N/avgdl; the
-    serve's fts_assert_stores_consistent also flags the mismatched
-    tombstone state loudly. Compaction of each store materializes its
-    removal.
-
-    The floor is validated against BOTH stores' compaction frontiers
-    BEFORE either tombstone is written (r10 review): the stores compact
-    independently, so a floor valid for the docs store but at/below the
-    postings store's frontier would otherwise tombstone the docs side
-    and then raise on the postings side — a torn delete sitting exactly
-    AT the shared frontier, where the consistency assert's
-    above-frontier comparison cannot see it. Failing the whole call
-    up front keeps 'one-sided tombstone' synonymous with 'crash',
-    which is the case the assert + re-run protocol does heal."""
-    from pdf_brain_spark.streaming.generations import (
-        coverage,
-        generation_ids,
-        write_tombstones,
-    )
-
-    for store in (fts_docs_dir(index_dir), index_dir):
-        m_star = max(
-            [coverage(g) for g in generation_ids(spark, store) if g < 0],
-            default=-1,
-        )
-        if floor_batch_id <= m_star:
-            raise ValueError(
-                f"tombstone floor {floor_batch_id} is at or below store "
-                f"{store}'s compacted coverage {m_star}; the two FTS "
-                "stores compact independently, so the delete must clear "
-                "BOTH frontiers — re-run with a floor above "
-                "max(frontiers), or compact the lagging store first. "
-                "Nothing was written."
-            )
-    ids = doc_ids.select("doc_id").localCheckpoint(eager=True)
-    write_tombstones(spark, fts_docs_dir(index_dir), ids, floor_batch_id)
-    write_tombstones(spark, index_dir, ids, floor_batch_id)
+# Takedown on the FTS index is the band index's: one tombstone generation
+# of doc ids drops both a document's postings and its doc-grain stats row.
+delete_fts_documents = delete_documents
 
 
 # Number of term-hash partitions per FTS generation for NEW stores. At
@@ -805,6 +712,12 @@ def delete_fts_documents(
 # store's marker, never the constant — changing the constant can therefore
 # never silently mis-probe an existing store's hive dirs.
 FTS_TERM_BUCKETS = 8
+
+# The hive partition of every FTS generation that holds its doc-grain rows
+# (one per document: term NULL, tf 0, doc_len). portable_term_bucket is
+# never negative, so no term probe reaches it; the corpus-stats arm filters
+# on it and prunes to it.
+FTS_DOC_BUCKET = -1
 
 _TERM_BUCKETS_PREFIX = "_TERM_BUCKETS."
 
@@ -853,17 +766,19 @@ def portable_term_bucket(term: str, n_buckets: int = FTS_TERM_BUCKETS) -> int:
     """Driver-side twin of _term_bucket_col: bucket = first 4 md5 hex
     digits mod n_buckets — the repo's engine-independent content hash
     (same construction as the split/AQP portable hashes), identical in
-    python, Spark SQL, and DuckDB. NULL-marker rows live in bucket 0."""
+    python, Spark SQL, and DuckDB. Never negative: the doc-grain rows'
+    FTS_DOC_BUCKET is out of every probe's reach."""
     import hashlib
 
     return int(hashlib.md5(term.encode("utf-8")).hexdigest()[:4], 16) % n_buckets
 
 
 def _term_bucket_col(term_col: str, n_buckets: int = FTS_TERM_BUCKETS):
-    """Spark expression computing portable_term_bucket(term)."""
+    """Spark expression computing portable_term_bucket(term), and
+    FTS_DOC_BUCKET for a doc-grain row (term NULL)."""
     from pdf_brain_spark.functions.text import md5_long
 
-    return F.when(F.col(term_col).isNull(), F.lit(0)).otherwise(
+    return F.when(F.col(term_col).isNull(), F.lit(FTS_DOC_BUCKET)).otherwise(
         md5_long(term_col, 4).cast("int") % F.lit(n_buckets)
     )
 
@@ -884,164 +799,46 @@ def streaming_fts_ingest(
 
 
 def fts_assert_stores_consistent(spark: SparkSession, index_dir: str) -> None:
-    """Fail LOUDLY when the postings store and its doc-grain stats store
-    disagree about which batches / takedowns they account for (ADVICE
-    r9: a crash between the two per-batch writes, or between a delete's
-    two tombstone writes, would otherwise serve BM25 with N/avgdl that
-    silently exclude or include the torn batch's documents).
+    """The FTS store's one invariant: no document is live in two
+    generations. Updates are tombstone-then-reinsert (delete_fts_documents,
+    then ingest the new text in a later batch); a doc_id re-ingested
+    WITHOUT a tombstone leaves two generations' postings live, and BM25
+    would double-count its tf. Raises by name on that state.
 
-    Checks, cheapest first:
+    A generation holds one doc-grain row per document, so with one live
+    generation the invariant holds by construction and the check fires
+    no job; otherwise it is the corpus-stats aggregate's max_gen.
+    compact_fts_index runs it before merging, because a compaction would
+    fold the two generations into one and hide the violation. The serve
+    does not call it: the corpus-stats row's max_gen carries the same
+    invariant."""
+    from pdf_brain_spark.streaming.generations import live_generation_dirs
 
-      * covered-batch sets equal (driver-side listing) — the set of
-        stream batches each store's live generations account for
-        ({0..m*} ∪ positives > m*; compaction never changes coverage, so
-        independently-timed compactions cannot false-positive);
-      * applicable-tombstone floor SETS equal above the SHARED compaction
-        frontier (driver-side listing) — delete_fts_documents writes one
-        tombstone dir per store at the same floor, and floors at or below
-        either store's compacted coverage were materialized there
-        (excluded on both sides), so a floor present on one side only is
-        exactly a torn delete. SETS, not dir counts (r10 review):
-        re-running a torn delete lands a serial-suffixed SECOND dir on
-        the side that already had one, and same-floor tombstones union
-        idempotently — a count comparison would brand the healed state
-        inconsistent forever.
-      * unioned tombstone KEY sets equal per floor (ADVICE r10): floor
-        presence alone cannot detect CONTENT divergence when a torn
-        delete's floor is reused by a later delete with DIFFERENT
-        doc_ids — both stores then expose the same floor set while the
-        postings store never received the first delete's keys, and
-        compaction would grandfather the divergence permanently. Both
-        stores' above-frontier tombstone dirs are one bounded union
-        read and one action; the key sets compare via a per-floor
-        (distinct-count, bit_xor(xxhash64)) digest — distributed, no
-        keys collected to the driver, and idempotent-union-stable so
-        the healed serial-suffixed state still passes.
-
-    Self-heal: a torn batch heals when the streaming checkpoint replays
-    it (idempotent batch_id overwrite); a torn delete heals by re-running
-    delete_fts_documents with the same ids (pytest walks the full
-    tear→refuse→re-run→serve cycle, including the reused-floor
-    divergence)."""
-    from pdf_brain_spark.streaming.generations import (
-        _tombstone_dirs,
-        coverage,
-        generation_ids,
-        live_generation_ids,
-        read_generation_dirs,
-    )
-
-    docs_store = fts_docs_dir(index_dir)
-
-    def _state(store: str) -> tuple[set[int], int]:
-        ids = live_generation_ids(generation_ids(spark, store))
-        m_star = max([coverage(g) for g in ids if g < 0], default=-1)
-        covered = set(range(m_star + 1)) | {g for g in ids if g >= 0}
-        return covered, m_star
-
-    cov_p, m_p = _state(index_dir)
-    cov_d, m_d = _state(docs_store)
-    if cov_p != cov_d:
-        raise ValueError(
-            f"FTS index {index_dir} and its doc-grain stats store disagree "
-            f"about which batches they cover (postings: {sorted(cov_p)}, "
-            f"stats: {sorted(cov_d)}) — a crash tore a batch's two writes "
-            "apart. Replay the torn batch (the streaming checkpoint "
-            "re-runs it idempotently) before serving."
-        )
-    frontier = max(m_p, m_d)
-
-    def _floors(store: str) -> set[int]:
-        return {k for k, _ in _tombstone_dirs(spark, store) if k > frontier}
-
-    t_p, t_d = _floors(index_dir), _floors(docs_store)
-    if t_p != t_d:
-        raise ValueError(
-            f"FTS index {index_dir} and its doc-grain stats store disagree "
-            f"about takedowns (postings tombstone floors: {t_p}, stats: "
-            f"{t_d}) — a crash tore a delete's two tombstone writes apart. "
-            "Re-run delete_fts_documents with the same ids before serving."
-        )
-
-    if t_p:
-        # {(store, floor): (n_distinct_keys, bit_xor(xxhash64(key)))} for
-        # the unioned tombstone keys per above-frontier floor: one union
-        # read + one aggregate over BOTH stores, so one action; the
-        # collect is one row per (store, floor)
-        from functools import reduce
-
-        parts = [
-            read_generation_dirs(spark, [f"{store}/{name}"]).select(
-                F.lit(store).alias("_store"), F.lit(k).alias("_floor"), F.col("doc_id")
-            )
-            for store in (index_dir, docs_store)
-            for k, name in _tombstone_dirs(spark, store)
-            if k > frontier
-        ]
-        digests = {
-            (r["_store"], r["_floor"]): (r["_n"], r["_x"])
-            for r in reduce(lambda a, b: a.unionByName(b), parts)
-            .distinct()
-            .groupBy("_store", "_floor")
-            .agg(
-                F.count(F.lit(1)).alias("_n"),
-                F.expr("bit_xor(xxhash64(doc_id))").alias("_x"),
-            )
-            .collect()
-        }
-        bad = sorted(
-            k for k in t_p if digests.get((index_dir, k)) != digests.get((docs_store, k))
-        )
-        if bad:
-            raise ValueError(
-                f"FTS index {index_dir} and its doc-grain stats store "
-                f"disagree about WHICH documents are taken down at floors "
-                f"{bad} (same floors, different unioned tombstone key "
-                "sets) — a torn delete's floor was reused by a later "
-                "delete with different ids. Re-run the torn "
-                "delete_fts_documents with its original ids before "
-                "serving."
-            )
+    if len(live_generation_dirs(spark, index_dir)) <= 1:
+        return
+    if (fts_corpus_stats(spark, index_dir).first()["max_gen"] or 0) > 1:
+        raise ValueError(_FTS_DOUBLE_INGEST)
 
 
-def fts_corpus_stats(
-    spark: SparkSession,
-    index_dir: str,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Corpus statistics (N, avgdl) for BM25 serving, computed from the
-    doc-grain stats store ONLY — one row per live doc per generation,
-    never the postings' term grain (pytest pins that this frame's scans
-    touch no postings path). Also carries the
-    one-live-generation-per-doc invariant (max_gen) so the serve's
-    double-ingest assert costs a doc-grain aggregate, not a postings
-    scan. Raises with a re-ingest instruction on a pre-stats-store
-    layout (the protocol-marker fail-fast play), and raises by name when
-    the two stores' covered batches or tombstones disagree — a torn
-    batch/delete must not serve silently-wrong N/avgdl
-    (fts_assert_stores_consistent; ADVICE r9)."""
-    from pdf_brain_spark.streaming.generations import (
-        kept_index_rows,
-        live_generation_dirs,
-    )
+_FTS_DOUBLE_INGEST = (
+    "FTS index has documents with live postings in more than one "
+    "generation — a doc_id was re-ingested without a tombstone. Updates "
+    "must be tombstone-then-reinsert (delete_fts_documents, then ingest "
+    "the new text); serving or compacting this state would double-count tf."
+)
 
-    docs_store = fts_docs_dir(index_dir)
-    try:
-        dg = kept_index_rows(spark, docs_store, [id_col])
-    except ValueError as e:
-        raise ValueError(
-            f"FTS index {index_dir} has no doc-grain stats store "
-            f"({docs_store}): it was built by a pre-r9 writer. Rebuild "
-            "the index (re-ingest) so corpus statistics serve from doc "
-            f"grain. Underlying: {e}"
-        ) from e
-    fts_assert_stores_consistent(spark, index_dir)
-    # a generation holds one row per doc (the batch writer groups by doc,
-    # the compactor refuses a doc live in two generations), so a doc's
-    # row count is its number of live generations, and with one live
-    # generation no doc can be double-counted: the per-doc grouping and
-    # its shuffle are needed only across generations
-    if len(live_generation_dirs(spark, docs_store)) == 1:
+
+def _fts_stats(spark: SparkSession, index_dir: str, rows: DataFrame, id_col: str) -> DataFrame:
+    """(n, avgdl, max_gen) over the doc-grain rows of `rows`."""
+    from pdf_brain_spark.streaming.generations import live_generation_dirs
+
+    dg = rows.filter(F.col("term_bucket") == FTS_DOC_BUCKET)
+    # a generation holds one doc-grain row per doc (the batch writer groups
+    # by doc, the compactor refuses a doc live in two generations), so a
+    # doc's row count is its number of live generations, and with one live
+    # generation no doc can be double-counted: the per-doc grouping and its
+    # shuffle are needed only across generations
+    if len(live_generation_dirs(spark, index_dir)) == 1:
         return dg.agg(
             F.count(F.lit(1)).alias("n"),
             F.avg("doc_len").alias("avgdl"),
@@ -1061,6 +858,22 @@ def fts_corpus_stats(
     )
 
 
+def fts_corpus_stats(
+    spark: SparkSession,
+    index_dir: str,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Corpus statistics (N, avgdl) for BM25 serving, from the doc-grain
+    partition (FTS_DOC_BUCKET) of the live generations ONLY — one row per
+    live doc per generation, never the postings' term grain (pytest pins
+    that every scan of this frame prunes to that partition). Also carries
+    the one-live-generation-per-doc invariant (max_gen), so the serve's
+    double-ingest assert costs a doc-grain aggregate."""
+    from pdf_brain_spark.streaming.generations import kept_index_rows
+
+    return _fts_stats(spark, index_dir, kept_index_rows(spark, index_dir, [id_col]), id_col)
+
+
 def fts_search_persisted(
     spark: SparkSession,
     index_dir: str,
@@ -1068,34 +881,33 @@ def fts_search_persisted(
     k: int = 10,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """BM25 top-k served from the PERSISTED postings index (live
-    generations minus tombstoned documents — safe mid-compaction and
-    after takedowns). Identical Okapi scoring to operators/fts.py::
-    bm25_scores, so serving from the index reproduces the one-shot path
-    over the same corpus exactly (pytest-pinned).
+    """BM25 top-k served from the PERSISTED FTS index (live generations
+    minus tombstoned documents — safe mid-compaction and after
+    takedowns). Identical Okapi scoring to operators/fts.py::bm25_scores,
+    so serving from the index reproduces the one-shot path over the same
+    corpus exactly (pytest-pinned).
 
     UPDATE CONTRACT: a document UPDATE must be tombstone-then-reinsert
-    (delete_documents on the postings index, then ingest the new text
-    in a later batch) —
-    the kept-rows selection then drops the stale generation's postings.
-    Re-ingesting a doc_id WITHOUT a tombstone leaves both generations'
-    postings live, double-counting tf; the serve path ASSERTS each doc
-    appears in exactly one live generation and raises rather than serve
+    (delete_fts_documents, then ingest the new text in a later batch) —
+    the kept-rows selection then drops the stale generation's rows.
+    Re-ingesting a doc_id WITHOUT a tombstone leaves both generations
+    live, double-counting tf; the serve raises rather than serve
     silently-wrong scores.
 
-    Plan shape: the build fires ONE action, the corpus-stats collect (N,
-    avgdl and the uniqueness assert, a small aggregate over the DOC-GRAIN
-    stats store fts_docs_dir — one row per doc per generation; no
-    postings term grain is scanned for stats). The assert stays a
-    driver-side ValueError because it runs on that collected row. Per-term
-    df is computed INSIDE the scoring plan, as a count over `term` on the
-    probed postings: under the assert each doc has one live generation,
-    and a generation holds one postings row per (doc, term), so the count
-    is the number of live docs holding the term. The query-term filter
-    prunes the postings scan to the queried terms — under the term_bucket
-    layout it is a PartitionFilter, so unqueried buckets prune at
-    planning time. One bounded TakeOrdered ends the plan. A query none of
-    whose terms occurs in the store returns no rows, as bm25_scores does."""
+    Plan shape: ONE kept_index_rows read feeds both arms. The build fires
+    one action, the corpus-stats collect (N, avgdl and the uniqueness
+    assert over the doc-grain partition; no postings term grain is
+    scanned for stats). The assert stays a driver-side ValueError
+    because it runs on that collected row. Per-term df is computed INSIDE
+    the scoring plan, as a count over `term` on the probed postings:
+    under the assert each doc has one live generation, and a generation
+    holds one postings row per (doc, term), so the count is the number of
+    live docs holding the term. The query-term filter prunes the postings
+    scan to the queried terms — under the term_bucket layout it is a
+    PartitionFilter, so unqueried buckets (and the doc-grain partition)
+    prune at planning time. One bounded TakeOrdered ends the plan. A
+    query none of whose terms occurs in the store returns no rows, as
+    bm25_scores does."""
     from pyspark.sql import Window
 
     from pdf_brain_spark.operators.fts import BM25_B, BM25_K1
@@ -1103,15 +915,9 @@ def fts_search_persisted(
 
     rows = kept_index_rows(spark, index_dir, [id_col]).drop("batch_id")
     terms = [t.lower() for t in query_terms]
-    stats = fts_corpus_stats(spark, index_dir, id_col=id_col).collect()[0]
+    stats = _fts_stats(spark, index_dir, rows, id_col).collect()[0]
     if stats["n"] and stats["max_gen"] > 1:
-        raise ValueError(
-            "FTS index has documents with live postings in more than one "
-            "generation — a doc_id was re-ingested without a tombstone. "
-            "Updates must be tombstone-then-reinsert "
-            "(delete_documents, then ingest the new text); serving "
-            "this state would double-count tf."
-        )
+        raise ValueError(_FTS_DOUBLE_INGEST)
     if not stats["n"]:
         # every document tombstoned (a takedown-heavy index reaches this
         # state in normal operation): an empty result, not a crash
@@ -1279,9 +1085,9 @@ def read_kmv(spark: SparkSession, store_dir: str) -> DataFrame:
 
 
 def compact_fts_index(spark: SparkSession, index_dir: str, upto_batch_id: int, n_files: int = 8) -> int:
-    """Merge committed postings generations into one compacted
-    generation, materializing document deletions (reader-safe
-    generation protocol, same story as the band/ANN compactors).
+    """Merge committed FTS generations into one compacted generation,
+    materializing document deletions (reader-safe generation protocol,
+    same story as the band/ANN compactors).
 
     The compacted generation KEEPS the term_bucket hive partitioning
     (make_fts_postings_batch_fn): the store's dominant mass lives in its
@@ -1289,63 +1095,24 @@ def compact_fts_index(spark: SparkSession, index_dir: str, upto_batch_id: int, n
     a serve's probe prune at 100 TB — the exact play compact_ann_index
     runs for list_id. The pre-write repartition on term_bucket puts each
     bucket's rows in few tasks, so the dir gets ~one file per bucket
-    instead of n_files x buckets fragments.
+    (the doc-grain partition included) instead of n_files x buckets
+    fragments.
 
-    The serve-path invariant (one live generation per doc — updates are
-    tombstone-then-reinsert) is ALSO asserted here, before merging:
-    compaction would otherwise fold a double-ingested doc's two
-    generations into one, after which the serve's own check can no
-    longer see the violation and BM25 silently double-counts tf.
-
-    The two-store consistency assert ALSO runs first (r10 review):
-    fts_assert_stores_consistent only compares tombstones ABOVE the
-    shared compaction frontier, so compacting past a torn delete's
-    floor without checking would grandfather the torn state into
-    permanent invisibility — the postings store serving deleted docs
-    that the stats store excludes, forever. Asserting before the
-    frontier moves turns that into a named pre-compaction error while
-    the re-run protocol can still heal it."""
-    from pdf_brain_spark.streaming.generations import (
-        compact_index_rows,
-        kept_index_rows,
-    )
+    The store's invariant (one live generation per doc — updates are
+    tombstone-then-reinsert) is asserted first
+    (fts_assert_stores_consistent): compaction would otherwise fold a
+    double-ingested doc's two generations into one, after which the
+    serve's own check can no longer see the violation and BM25 silently
+    double-counts tf."""
+    from pdf_brain_spark.streaming.generations import compact_index_rows
 
     fts_assert_stores_consistent(spark, index_dir)
-
-    # the uniqueness assert runs on the DOC-GRAIN stats store (one row
-    # per doc per generation) — same invariant as before r9, a fraction
-    # of the bytes
-    dup = (
-        kept_index_rows(spark, fts_docs_dir(index_dir), ["doc_id"], upto=upto_batch_id)
-        .groupBy("doc_id")
-        .agg(F.countDistinct("batch_id").alias("_ngen"))
-        .filter(F.col("_ngen") > 1)
-        .limit(1)
-    )
-    if dup.count() > 0:
-        raise ValueError(
-            "FTS index has documents with live postings in more than one "
-            "generation — a doc_id was re-ingested without a tombstone. "
-            "Compacting would merge the duplicates and make the double-"
-            "counted tf undetectable; tombstone the stale copy first."
-        )
 
     def _write_kept(kept, tmp: str) -> None:
         kept.repartition(max(1, n_files), "term_bucket").write.partitionBy(
             "term_bucket"
         ).mode("overwrite").parquet(tmp)
 
-    def _write_docs_kept(kept, tmp: str) -> None:
-        kept.coalesce(1).write.mode("overwrite").parquet(tmp)
-
-    # compact the doc-grain stats store FIRST (mirrors the writer's
-    # postings-then-stats order inverted: a crash between the two
-    # compactions leaves the stats store compacted and the postings
-    # store not — both remain correct to serve, since each store's
-    # protocol is independently reader-safe)
-    compact_index_rows(
-        spark, fts_docs_dir(index_dir), upto_batch_id, ["doc_id"], _write_docs_kept
-    )
     return compact_index_rows(
         spark, index_dir, upto_batch_id, ["doc_id"], _write_kept
     )

@@ -374,9 +374,16 @@ def run_foreach_batch(stream_df, batch_fn, checkpoint_dir: str):
     then stop; the checkpoint makes the next start resume after it. The
     one foreachBatch start of the streaming package: every store's
     writer is replay-idempotent per batch_id, so foreachBatch's
-    at-least-once delivery composes to effectively-once store state."""
+    at-least-once delivery composes to effectively-once store state. An
+    empty micro-batch is skipped here, once for every writer: it writes
+    no generation."""
+
+    def _nonempty(batch_df, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            batch_fn(batch_df, batch_id)
+
     return (
-        stream_df.writeStream.foreachBatch(batch_fn)
+        stream_df.writeStream.foreachBatch(_nonempty)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
@@ -421,8 +428,6 @@ class PartialsStore:
         its own dir and the store stays byte-identical."""
 
         def _each_batch(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
             spark = batch_df.sparkSession
             stamp_protocol(spark, store_dir)
             self.partial(batch_df, batch_id).write.mode("overwrite").parquet(

@@ -36,6 +36,75 @@ def test_closure_cycle_terminates(spark):
     assert res.count() == res.select("node", "ancestor").distinct().count()
 
 
+def test_closure_past_the_cap_raises_instead_of_truncating(spark):
+    """A 70-node chain is 69 levels deep: past the default cap it raises
+    rather than return 51 rows; with max_iterations=100 its closure equals
+    DuckDB's WITH RECURSIVE. A 3-cycle walked with acyclic=True never
+    reaches a fixpoint, so it raises too."""
+    import duckdb
+
+    from pdf_brain_spark.operators.taxonomy import transitive_ancestors
+
+    edges = spark.createDataFrame(
+        [(f"n{i}", f"n{i + 1}") for i in range(69)], "node string, parent string"
+    )
+    seeds = edges.filter(F.col("node") == "n0")
+    with pytest.raises(ValueError, match="did not reach its fixpoint"):
+        transitive_ancestors(seeds, edges, acyclic=True)
+
+    got = sorted(
+        tuple(r) for r in transitive_ancestors(seeds, edges, max_iterations=100).collect()
+    )
+    con = duckdb.connect()
+    con.register("edges", edges.toPandas())
+    want = sorted(
+        con.sql(
+            """
+            WITH RECURSIVE anc(node, ancestor, depth) AS (
+              SELECT node, parent, 1 FROM edges WHERE node = 'n0'
+              UNION
+              SELECT a.node, e.parent, a.depth + 1
+              FROM anc a JOIN edges e ON a.ancestor = e.node
+            )
+            SELECT node, ancestor, depth FROM anc
+            """
+        ).fetchall()
+    )
+    assert got == want and len(got) == 69
+
+    cycle = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a")], "node string, parent string"
+    )
+    with pytest.raises(ValueError, match="did not reach its fixpoint"):
+        transitive_ancestors(
+            cycle.filter(F.col("node") == "a"), cycle, max_iterations=10, acyclic=True
+        )
+
+
+def test_transitive_closure_leaves_no_persistent_rdd(spark):
+    """Every RDD the transitive_closure gate persists (its per-level
+    local checkpoints) is released once its result is: the closure holds
+    no cache() that would outlive the run."""
+    import gc
+    import time
+
+    from pdf_brain_spark.gates.core import transitive_closure
+
+    sc = spark.sparkContext
+
+    def persistent():
+        return set(sc._jsc.getPersistentRDDs().keySet())
+
+    before = persistent()
+    assert transitive_closure(spark, SF_DIR).collect()
+    deadline = time.time() + 60
+    while persistent() - before and time.time() < deadline:
+        gc.collect()
+        spark._jvm.System.gc()
+        time.sleep(0.5)
+    assert persistent() - before == set()
+
+
 @pytest.fixture(scope="module")
 def emb(spark):
     return spark.read.parquet(f"{SF_DIR}/embeddings.parquet").cache()

@@ -1160,7 +1160,7 @@ def test_streaming_fts_index_matches_oneshot_and_deletes(spark, tmp_path):
 
     def snapshot():
         return sorted(
-            (r["batch_id"], r["doc_id"], r["term"], r["tf"])
+            (r["batch_id"], r["doc_id"], r["term_bucket"], r["term"], r["tf"])
             for r in spark.read.option("basePath", idx).parquet(idx).collect()
         )
 
@@ -1968,18 +1968,20 @@ def test_streaming_minhash_replay_merge_compact(spark, tmp_path):
 
 
 def test_fts_corpus_stats_reads_only_doc_grain_store(spark, tmp_path):
-    """VERDICT r8 item 5: the serve's N/avgdl arm must read the doc-grain
-    stats store, never any postings generation's term grain. Pin it in
-    the plan: every FileScan in the stats frame's executed plan points
-    under <idx>_docs, none under the postings store itself. Also checks
+    """The serve's N/avgdl arm must read only the doc-grain partition
+    (term_bucket = FTS_DOC_BUCKET) of each generation, never a postings
+    bucket's term grain. Pin it in the plan: every FileScan of a
+    generation in the stats frame's executed plan carries the partition
+    filter `term_bucket = -1` and no other bucket, with and without a
+    tombstone anti-join between the filter and the scan. Also checks
     deletion flows through to the stats (N excludes tombstoned docs)."""
     import re
 
     from pdf_brain_spark.sources.loaders import load_table
     from pdf_brain_spark.streaming.events import (
+        FTS_DOC_BUCKET,
         delete_fts_documents,
         fts_corpus_stats,
-        fts_docs_dir,
         make_fts_postings_batch_fn,
     )
 
@@ -1991,222 +1993,29 @@ def test_fts_corpus_stats_reads_only_doc_grain_store(spark, tmp_path):
     fn(docs.filter(F.col("doc_id") % 2 == 0), 0)
     fn(docs.filter(F.col("doc_id") % 2 == 1), 1)
 
-    stats_df = fts_corpus_stats(spark, idx)
-    plan = stats_df._jdf.queryExecution().executedPlan().toString()
-    scanned = set(re.findall(r"Location:\s+\S+\[([^\]]+)\]", plan))
-    docs_store = fts_docs_dir(idx)
-    for loc in scanned:
-        assert docs_store in loc, f"stats arm scans a non-doc-grain path: {loc}"
-        # the postings store path also matches '<idx>' as a prefix of
-        # '<idx>_docs'; assert no scanned dir is the postings store itself
-        assert f"{idx}/batch_id=" not in loc, f"stats arm scans postings: {loc}"
+    def assert_scans_doc_partition_only(stats_df):
+        plan = stats_df._jdf.queryExecution().executedPlan().toString()
+        scans = re.findall(
+            r"FileScan parquet \[([^\]]*)\].*?PartitionFilters: \[([^\]]*)\]", plan
+        )
+        generations = [pf for cols, pf in scans if "term_bucket" in cols]
+        assert generations, plan
+        for pf in generations:
+            assert re.search(rf"\(term_bucket#\d+ = {FTS_DOC_BUCKET}\)", pf), pf
+            assert len(re.findall(r"term_bucket#\d+ (?:=|IN)", pf)) == 1, pf
 
+    stats_df = fts_corpus_stats(spark, idx)
+    assert_scans_doc_partition_only(stats_df)
     n_docs = docs.count()
     row = stats_df.collect()[0]
     assert row["n"] == n_docs and row["max_gen"] == 1
 
-    delete_fts_documents(
-        spark, idx, docs.limit(3).select("doc_id"), 1
-    )
-    row2 = fts_corpus_stats(spark, idx).collect()[0]
-    assert row2["n"] == n_docs - 3
-
-def test_fts_torn_batch_and_torn_delete_fail_loudly(spark, tmp_path):
-    """A crash that tears a batch's two store writes (or a delete's two
-    tombstone writes) apart must raise BY NAME at serve time, never
-    serve BM25 with N/avgdl that silently exclude/include the torn
-    documents (ADVICE r9). Also pins that healthy two-store states —
-    including independently-timed compactions — pass the assert."""
-    import shutil
-
-    import pytest
-
-    from pdf_brain_spark.streaming.events import (
-        compact_fts_index,
-        fts_assert_stores_consistent,
-        fts_docs_dir,
-        fts_search_persisted,
-        make_fts_postings_batch_fn,
-    )
-    from pdf_brain_spark.streaming.generations import write_tombstones
-
-    docs0 = spark.createDataFrame(
-        [(1, "spark joins"), (2, "duckdb oracles")], "doc_id long, text string"
-    )
-    docs1 = spark.createDataFrame(
-        [(3, "spark shuffles again")], "doc_id long, text string"
-    )
-    idx = str(tmp_path / "fts")
-    fn = make_fts_postings_batch_fn(idx)
-    fn(docs0, 0)
-    fn(docs1, 1)
-    fts_assert_stores_consistent(spark, idx)  # healthy
-
-    # one store compacted, the other not: covered sets still equal
-    assert compact_fts_index(spark, idx, upto_batch_id=1) > 0
-    fts_assert_stores_consistent(spark, idx)
-
-    # TORN BATCH: postings generation lands, docs-store write never did
-    fn(docs1.withColumn("doc_id", F.col("doc_id") + 10), 2)
-    shutil.rmtree(f"{fts_docs_dir(idx)}/batch_id=2")
-    with pytest.raises(ValueError, match="disagree about which batches"):
-        fts_search_persisted(spark, idx, ["spark"], k=10).collect()
-    # replaying the torn batch heals it (idempotent batch_id overwrite)
-    fn(docs1.withColumn("doc_id", F.col("doc_id") + 10), 2)
-    assert fts_search_persisted(spark, idx, ["spark"], k=10).count() > 0
-
-    # TORN DELETE: tombstone lands in the docs store only
-    write_tombstones(
-        spark, fts_docs_dir(idx), docs0.select("doc_id").limit(1), 2
-    )
-    with pytest.raises(ValueError, match="disagree about takedowns"):
-        fts_search_persisted(spark, idx, ["spark"], k=10).collect()
-    # completing the delete on the postings store heals it
-    write_tombstones(spark, idx, docs0.select("doc_id").limit(1), 2)
-    assert fts_search_persisted(spark, idx, ["spark"], k=10).count() > 0
-
-
-def test_fts_torn_delete_cannot_hide_at_or_below_the_frontier(spark, tmp_path):
-    """r10 review findings on the two-store delete protocol, all three
-    legs: (1) a delete whose floor clears the docs store but not the
-    independently-compacted postings store must fail BEFORE writing
-    either tombstone (a torn delete AT the frontier is invisible to the
-    above-frontier assert); (2) a genuinely torn delete (crash between
-    the two writes) must make the COMPACTOR refuse — compacting past the
-    torn floor would grandfather it into permanent invisibility; (3) the
-    documented heal (re-run the same delete) must actually pass the
-    assert afterwards — floor SETS, not dir counts, because the re-run
-    lands a serial-suffixed second dir on the side that already had one."""
-    import pytest as _pytest
-
-    from pdf_brain_spark.streaming.events import (
-        compact_fts_index,
-        delete_fts_documents,
-        fts_assert_stores_consistent,
-        fts_docs_dir,
-        fts_search_persisted,
-        make_fts_postings_batch_fn,
-    )
-    from pdf_brain_spark.streaming.generations import (
-        _tombstone_dirs,
-        compact_index_rows,
-        write_tombstones,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "spark joins data"), (2, "other words here"), (3, "spark shuffles")],
-        "doc_id long, text string",
-    )
-    idx = str(tmp_path / "fts")
-    fn = make_fts_postings_batch_fn(idx)
-    fn(docs.filter(F.col("doc_id") <= 2), 0)
-    fn(docs.filter(F.col("doc_id") == 3), 1)
-    fts_assert_stores_consistent(spark, idx)
-
-    # (1) compact ONLY the postings store to frontier 1 (the stores
-    # compact independently — a healthy state); a delete at floor 1 is
-    # valid for the uncompacted docs store but not for postings: it must
-    # raise up front and write NOTHING
-    def _w(kept, tmp):
-        kept.coalesce(1).write.mode("overwrite").parquet(tmp)
-
-    compact_index_rows(spark, idx, 1, ["doc_id"], _w)
-    ids = spark.createDataFrame([(1,)], "doc_id long")
-    with _pytest.raises(ValueError, match="BOTH frontiers"):
-        delete_fts_documents(spark, idx, ids, floor_batch_id=1)
-    assert _tombstone_dirs(spark, fts_docs_dir(idx)) == []
-    assert _tombstone_dirs(spark, idx) == []
-    fts_assert_stores_consistent(spark, idx)  # still consistent
-
-    # (2) manufacture the torn state delete_fts_documents is documented
-    # to leave on a crash between its two writes: docs-store tombstone
-    # only, at a floor above both frontiers
-    write_tombstones(spark, fts_docs_dir(idx), ids, 2)
-    with _pytest.raises(ValueError, match="takedowns"):
-        fts_assert_stores_consistent(spark, idx)
-    # the compactor must refuse BEFORE moving the frontier past the tear
-    with _pytest.raises(ValueError, match="takedowns"):
-        compact_fts_index(spark, idx, upto_batch_id=1)
-
-    # (3) heal by re-running the SAME delete; the docs side now holds two
-    # same-floor dirs (serial suffix) — the floor-set comparison must
-    # accept that, the compactor must run, and the deleted doc must be
-    # gone from serving while stats reflect the removal
-    delete_fts_documents(spark, idx, ids, floor_batch_id=2)
-    fts_assert_stores_consistent(spark, idx)
-    # the compactor now runs (no raise); 0 merged is fine — the postings
-    # store was already compacted to this frontier in step (1)
-    assert compact_fts_index(spark, idx, upto_batch_id=1) >= 0
-    got = {r["doc_id"] for r in fts_search_persisted(spark, idx, ["spark"], k=10).collect()}
-    assert got == {3}
-
-
-def test_fts_torn_delete_reused_floor_content_divergence(spark, tmp_path):
-    """ADVICE r10: floor presence alone cannot catch a torn delete whose
-    floor is REUSED by a later, complete delete with DIFFERENT doc_ids —
-    both stores then expose the same floor set while the postings store
-    never received the first delete's keys. The per-floor unioned-key
-    digest must (1) flag that state by name, (2) make the compactor
-    refuse before grandfathering it, (3) accept the heal (re-running the
-    torn delete with its ORIGINAL ids), and (4) keep accepting healthy
-    same-floor accumulation (two complete deletes at one floor)."""
-    import pytest as _pytest
-
-    from pdf_brain_spark.streaming.events import (
-        compact_fts_index,
-        delete_fts_documents,
-        fts_assert_stores_consistent,
-        fts_docs_dir,
-        fts_search_persisted,
-        make_fts_postings_batch_fn,
-    )
-    from pdf_brain_spark.streaming.generations import write_tombstones
-
-    docs = spark.createDataFrame(
-        [
-            (1, "spark joins data"),
-            (2, "spark other words"),
-            (3, "spark shuffles"),
-            (4, "unrelated terms"),
-        ],
-        "doc_id long, text string",
-    )
-    idx = str(tmp_path / "fts")
-    fn = make_fts_postings_batch_fn(idx)
-    fn(docs, 0)
-    fts_assert_stores_consistent(spark, idx)
-
-    # torn delete A: ids {1} reach the docs store only (crash between
-    # the two writes); then delete B at the SAME floor with DIFFERENT
-    # ids {2} completes on both stores — floor sets now match on both
-    # sides ({1} == {1}) and only the key digest can see the divergence
-    ids_a = spark.createDataFrame([(1,)], "doc_id long")
-    ids_b = spark.createDataFrame([(2,)], "doc_id long")
-    write_tombstones(spark, fts_docs_dir(idx), ids_a, 1)
-    delete_fts_documents(spark, idx, ids_b, floor_batch_id=1)
-    with _pytest.raises(ValueError, match="WHICH documents"):
-        fts_assert_stores_consistent(spark, idx)
-    # the compactor must refuse rather than grandfather the divergence
-    with _pytest.raises(ValueError, match="WHICH documents"):
-        compact_fts_index(spark, idx, upto_batch_id=0)
-
-    # heal: re-run the torn delete with its original ids; unions are
-    # idempotent so both stores converge on keys {1, 2} at floor 1
-    delete_fts_documents(spark, idx, ids_a, floor_batch_id=1)
-    fts_assert_stores_consistent(spark, idx)
-    got = {
-        r["doc_id"]
-        for r in fts_search_persisted(spark, idx, ["spark"], k=10).collect()
-    }
-    assert got == {3}
-
-    # healthy same-floor accumulation (two COMPLETE deletes, one floor)
-    # must keep passing — the digest is union-idempotent, not dir-count
-    delete_fts_documents(
-        spark, idx, spark.createDataFrame([(4,)], "doc_id long"), floor_batch_id=1
-    )
-    fts_assert_stores_consistent(spark, idx)
-    assert compact_fts_index(spark, idx, upto_batch_id=0) >= 0
+    # a tombstone above the frontier puts a broadcast anti-join between
+    # the filter and the scan; the filter still prunes the scan
+    delete_fts_documents(spark, idx, docs.limit(3).select("doc_id"), 1)
+    stats_df = fts_corpus_stats(spark, idx)
+    assert_scans_doc_partition_only(stats_df)
+    assert stats_df.collect()[0]["n"] == n_docs - 3
 
 
 def test_novelty_store_monoid_replay_and_compaction(spark, tmp_path):

@@ -190,15 +190,18 @@ def test_value_histogram_drops_null_values(spark, tmp_path):
 
 
 def test_streaming_package_has_one_writer_per_concern():
-    """One foreachBatch start under streaming/, write sequences recorded
-    only by the generation protocol, ten PartialsStore declarations, and
-    none of the per-store writers, drivers or compactors they replaced
-    (no aliases either)."""
+    """One foreachBatch start and one empty-batch skip under streaming/,
+    write sequences recorded only by the generation protocol, ten
+    PartialsStore declarations, none of the per-store writers, drivers or
+    compactors they replaced (no aliases either), and one FTS store (no
+    sibling doc-stats store)."""
     from pdf_brain_spark.streaming import events
     from pdf_brain_spark.streaming.generations import PartialsStore
 
     sources = {p.name: p.read_text() for p in sorted(STREAMING.glob("*.py"))}
     assert sum(s.count("foreachBatch(") for s in sources.values()) == 1
+    assert sum(s.count("isEmpty(") for s in sources.values()) == 1
+    assert [n for n, s in sources.items() if "fts_docs_dir" in s or '_docs"' in s] == []
 
     def calls(src, fn):
         return [

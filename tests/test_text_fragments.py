@@ -272,8 +272,13 @@ def test_batch_text_filter_plan_matches_column_form(docs):
 
 def test_term_bucket_matches_driver_twin(spark):
     """The streaming FTS term bucket (4 hex digits as int, mod buckets)
-    agrees with its driver-side twin; NULL terms land in bucket 0."""
-    from pdf_brain_spark.streaming.events import _term_bucket_col, portable_term_bucket
+    agrees with its driver-side twin; NULL terms (the doc-grain rows)
+    land in FTS_DOC_BUCKET."""
+    from pdf_brain_spark.streaming.events import (
+        FTS_DOC_BUCKET,
+        _term_bucket_col,
+        portable_term_bucket,
+    )
 
     terms = ["alpha", "zeta", "", "中文", "x y"]
     df = spark.createDataFrame([(t,) for t in terms] + [(None,)], "term string")
@@ -281,7 +286,7 @@ def test_term_bucket_matches_driver_twin(spark):
     assert df.select(_term_bucket_col("term", 64)).schema[0].dataType.simpleString() == "int"
     assert {r["term"]: r["b"] for r in rows} == {
         **{t: portable_term_bucket(t, 64) for t in terms},
-        None: 0,
+        None: FTS_DOC_BUCKET,
     }
 
 
