@@ -587,6 +587,10 @@ def simhash_near_dup_pairs(
     )
 
 
+# Edge count below which connected_components runs union-find on the driver.
+UNION_FIND_MAX_EDGES = 5_000_000
+
+
 def connected_components(
     pairs: DataFrame,
     a_col: str = "doc_a",
@@ -597,17 +601,19 @@ def connected_components(
     component = min node id reachable — the canonical-document grouping
     step that follows pair generation in every dedup pipeline.
 
-    Iterative min-label propagation to fixpoint over the symmetrized edge
-    list (large-star/small-star simplified): each round joins current
-    labels across edges, keeps the min seen, stops when no label changes.
-    Rounds needed = graph diameter in label-hops (≈log n for dup clusters,
-    which are near-cliques — typically 2-3 rounds); per-round cost is one
-    shuffle of the edge list. localCheckpoint keeps lineage flat.
-
     Fast path: the pair graph is the REDUCED output of candidate
     generation (LSH buckets), orders of magnitude smaller than the corpus
-    — when it fits the driver (< ~5M edges) a union-find there beats
-    3-4 distributed rounds; the iterative path covers the rest."""
+    — below UNION_FIND_MAX_EDGES edges a union-find on the driver beats
+    the distributed rounds.
+
+    Distributed path: plain min-label propagation over the symmetrized
+    edge list — each round joins the current labels across edges, keeps
+    the min seen, and stops when no label changes. A label moves one hop
+    per round, so it needs as many rounds as the graph's diameter (2-3 for
+    near-clique dup clusters; n - 1 for a path of n nodes); per-round
+    cost is one shuffle of the edge list, and localCheckpoint keeps the
+    lineage flat. When labels still change after `max_iterations` rounds
+    it raises a ValueError rather than return unconverged components."""
     # materialize the pair list ONCE before symmetrizing — the union
     # references it twice and would re-run the whole candidate pipeline
     pairs = pairs.select(a_col, b_col).localCheckpoint()
@@ -620,7 +626,7 @@ def connected_components(
         .localCheckpoint()
     )
     n_edges = edges.count()
-    if n_edges < 5_000_000:
+    if n_edges < UNION_FIND_MAX_EDGES:
         parent: dict = {}
 
         def find(x):
@@ -676,7 +682,7 @@ def connected_components(
             )
             .localCheckpoint()
         )
-        changed = (
+        settled = (
             updated.join(
                 labels.withColumnRenamed("component", "_old"), "node"
             )
@@ -684,9 +690,13 @@ def connected_components(
             .isEmpty()
         )
         labels = updated
-        if changed:
-            break
-    return labels
+        if settled:
+            return labels
+    raise ValueError(
+        f"connected components did not converge in max_iterations="
+        f"{max_iterations} rounds (min-label propagation needs as many rounds "
+        "as the graph's diameter); raise max_iterations"
+    )
 
 
 def simhash_fingerprints(

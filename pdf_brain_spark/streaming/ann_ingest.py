@@ -31,8 +31,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pdf_brain_spark.streaming.generations import IndexStore
 
-def make_ann_ingest_batch_fn(index_dir: str, centroids: list[list[float]], vec_col: str = "embedding"):
+# The IVF index: vec_id-keyed rows (vec_id, embedding) under list_id hive
+# partitions, so unprobed lists prune at planning time across every
+# generation; a compacted generation keeps the list_id partitioning. A
+# micro-batch per directory means file listing and footer reads
+# eventually dominate the probe; after compaction each list has a few
+# files per surviving generation instead of one per historical
+# micro-batch. Search semantics are untouched: a search filters on list_id
+# only, so "which batch a vector arrived in" never affects results.
+IVF_INDEX = IndexStore(key="vec_id", partition_by="list_id")
+
+# Compaction and takedown on the IVF index are its declaration's (reader-
+# safe, tombstone-aware — streaming/generations.py): a deleted vector (a
+# revoked document's embeddings, a user's right-to-be-forgotten request)
+# leaves every search at once and the index bytes at the next compaction;
+# a vector re-ingested after the floor is a fresh insert.
+compact_ann_index = IVF_INDEX.compact
+delete_vectors = IVF_INDEX.delete
+
+
+def make_ann_ingest_batch_fn(index_dir: str, centroids: list[list[float]]):
     """Per-micro-batch body, exposed so replay behavior is directly
     testable: calling it twice with the same (batch_df, batch_id) must
     leave byte-identical index state (its own batch_id=N subdir is
@@ -42,15 +62,11 @@ def make_ann_ingest_batch_fn(index_dir: str, centroids: list[list[float]], vec_c
     assign = _assign_udf(centroids)
 
     def _each_batch(batch_df: DataFrame, batch_id: int) -> None:
-        assigned = batch_df.withColumn("_a", assign(F.col(vec_col))).select(
+        spark = batch_df.sparkSession
+        assigned = batch_df.withColumn("_a", assign(F.col("embedding"))).select(
             *batch_df.columns, F.col("_a.cluster_id").alias("list_id")
         )
-        from pdf_brain_spark.streaming.generations import stamp_protocol
-
-        stamp_protocol(batch_df.sparkSession, index_dir)
-        assigned.write.partitionBy("list_id").mode("overwrite").parquet(
-            f"{index_dir}/batch_id={batch_id}"
-        )
+        IVF_INDEX.write(spark, IVF_INDEX.listing(spark, index_dir), assigned, batch_id)
 
     return _each_batch
 
@@ -61,14 +77,13 @@ def streaming_ann_ingest(
     index_dir: str,
     centroids: list[list[float]],
     checkpoint_dir: str,
-    vec_col: str = "embedding",
 ):
     """Drive the incremental ANN ingest as a Structured Streaming query
     (AvailableNow in tests/gate; continuous in production)."""
     from pdf_brain_spark.streaming.generations import run_foreach_batch
 
     return run_foreach_batch(
-        vec_stream, make_ann_ingest_batch_fn(index_dir, centroids, vec_col), checkpoint_dir
+        vec_stream, make_ann_ingest_batch_fn(index_dir, centroids), checkpoint_dir
     )
 
 
@@ -79,81 +94,18 @@ def ivf_search_persisted(
     query_vec: list[float],
     k: int = 10,
     n_probes: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """IVF top-k against the PERSISTED streaming-maintained index: read
-    the accumulated batch generations as one partitioned table, prune to
-    the probed lists (PartitionFilter on list_id across every batch_id
-    subdir), exact cosine re-rank inside: operators/ann.py::ivf_search
-    over storage instead of an in-memory DataFrame; the tie-break orders
-    on `id_col`, whatever the persisted id column is named."""
+    the kept rows of the live generations — minus tombstoned vectors, so
+    safe mid-compaction, after a compactor crash, and after deletions
+    not yet materialized — as one partitioned table, prune to the probed
+    lists (PartitionFilter on list_id across every batch_id subdir), and
+    exact cosine re-rank inside: operators/ann.py::ivf_search over
+    storage instead of an in-memory DataFrame."""
     from pdf_brain_spark.operators.ann import ivf_search
-    from pdf_brain_spark.streaming.generations import kept_index_rows
 
-    # live generations minus tombstoned vectors (generation protocol):
-    # safe to search mid-compaction, after a compactor crash, and after
-    # deletions (delete_vectors) that have not yet been materialized
-    indexed = kept_index_rows(spark, index_dir, [id_col])
-    return ivf_search(indexed, centroids, query_vec, k, n_probes, vec_col, id_col)
-
-
-def compact_ann_index(
-    spark: SparkSession, index_dir: str, upto_batch_id: int, id_col: str = "vec_id"
-) -> int:
-    """Compact the streaming ANN index: merge every batch_id ≤
-    upto_batch_id generation into one compacted generation (negative
-    batch_id), PRESERVING the list_id partitioning (the
-    rewrite is partitionBy("list_id"), so the consolidated generation
-    still prunes probes at planning time). The continuous-crawl
-    small-files answer for the vector side, mirroring
-    streaming/events.py::compact_band_index: a micro-batch per directory
-    means file listing and footer reads eventually dominate the probe;
-    after compaction each list has O(n_files) files per surviving
-    generation instead of one per historical micro-batch.
-
-    Search semantics are untouched — ivf_search_persisted reads the live
-    generations and filters on list_id only, so "which batch a vector
-    arrived in" never affects results (asserted by the before/after
-    equality test). READER-SAFE via the generation protocol
-    (streaming/generations.py): the consolidated generation is written
-    aside, renamed into a negative batch_id in one atomic directory
-    move, and the superseded dirs deleted after — a concurrent searcher
-    sees the pre- or post-compaction index, never a partial mixture.
-    TOMBSTONE-AWARE: deletions (delete_vectors) with floor ≤
-    upto_batch_id are materialized (the dead vectors physically leave
-    the index) and their dirs retired. Only compact batches the
-    stream's checkpoint has committed. Returns the number of
-    generations (additive + tombstone) merged."""
-    from pdf_brain_spark.streaming.generations import compact_index_rows
-
-    def _write_kept(kept, tmp: str) -> None:
-        kept.write.partitionBy("list_id").mode("overwrite").parquet(tmp)
-
-    return compact_index_rows(
-        spark, index_dir, upto_batch_id, [id_col], _write_kept
-    )
-
-
-def delete_vectors(
-    spark: SparkSession,
-    index_dir: str,
-    vec_ids: DataFrame,
-    floor_batch_id: int,
-    id_col: str = "vec_id",
-) -> None:
-    """Delete vectors from the streaming ANN index — the governance
-    operation (a revoked document's embeddings, a user's
-    right-to-be-forgotten request) on an append-only store: a tombstone
-    generation records the ids, every search immediately excludes them
-    (kept_index_rows), and the next compaction materializes the removal
-    so the bytes physically leave the index. A vector re-ingested in a
-    batch AFTER the floor is a fresh insert and is served again."""
-    from pdf_brain_spark.streaming.generations import write_tombstones
-
-    write_tombstones(
-        spark, index_dir, vec_ids.select(F.col(id_col).alias(id_col)), floor_batch_id
-    )
+    indexed = IVF_INDEX.kept(spark, index_dir)
+    return ivf_search(indexed, centroids, query_vec, k, n_probes, "embedding", "vec_id")
 
 
 def write_index_centroids(spark: SparkSession, index_dir: str, centroids: list[list[float]]) -> None:
@@ -179,8 +131,6 @@ def refit_ann_index(
     upto_batch_id: int,
     n_lists: int = 16,
     seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     max_iter: int = 20,
     tol: float = 1e-6,
 ) -> tuple[list[list[float]], int]:
@@ -195,8 +145,8 @@ def refit_ann_index(
     regardless of index size); (2) one distributed pass re-assigns every
     vector map-only (Arrow/BLAS assigner, no shuffle) and rewrites the
     merged generations partitioned by the NEW list_id; (3) the rewrite
-    lands as a compacted generation via write → atomic rename → delete,
-    so concurrent searches see the old or the new index, never a
+    lands through the one compaction commit (write → atomic rename →
+    delete), so concurrent searches see the old or the new index, never a
     mixture. The new centroids are persisted under `_centroids` AFTER
     the swap; a searcher pairing old centroids with the new index (or
     vice versa) during that instant only mis-ranks which lists to probe
@@ -213,26 +163,23 @@ def refit_ann_index(
     refit sweeps them in — so restart the ingest stream with the new
     centroids after a refit rather than letting the mix accumulate.
 
-    Returns (new_centroids, n_generations_rewritten). If nothing has
-    arrived since the last rewrite at this coverage, returns the FITTED
-    centroids with 0 rewritten (see generations.compact_index_rows)."""
+    Returns (new_centroids, n_generations_rewritten). Unlike a
+    compaction it rewrites a lone generation too; if nothing has arrived
+    since the last rewrite at this coverage, returns the FITTED centroids
+    with 0 rewritten (see generations.commit_compaction)."""
     from pdf_brain_spark.operators.clustering import (
         _assign_udf,
         _lloyd_fit,
         _sample_feature_matrix,
     )
-    from pdf_brain_spark.streaming.generations import (
-        compact_index_rows,
-        generation_ids,
-        kept_index_rows,
-    )
+    from pdf_brain_spark.streaming.generations import commit_compaction
 
-    if not generation_ids(spark, index_dir):
+    ls = IVF_INDEX.listing(spark, index_dir)
+    if not ls.raw:
         return [], 0
     # fit on the KEPT rows — a refit must not learn centroid mass from
     # tombstoned (deleted) vectors
-    src_all = kept_index_rows(spark, index_dir, [id_col])
-    X = _sample_feature_matrix(src_all.select(vec_col), vec_col, seed)
+    X = _sample_feature_matrix(IVF_INDEX.rows(spark, ls).select("embedding"), "embedding", seed)
     if X.size == 0:
         raise ValueError(
             "refit_ann_index: no live (non-tombstoned) vectors to fit on — "
@@ -242,16 +189,14 @@ def refit_ann_index(
     centroids = [[float(x) for x in row] for row in C]
     assign = _assign_udf(centroids)
 
-    def _write_kept(kept, tmp: str) -> None:
-        s = kept.drop("list_id")
-        reassigned = s.withColumn("_a", assign(F.col(vec_col))).select(
+    def _write(tmp: str) -> None:
+        s = IVF_INDEX.rows(spark, ls, upto_batch_id).drop("batch_id", "list_id")
+        reassigned = s.withColumn("_a", assign(F.col("embedding"))).select(
             *s.columns, F.col("_a.cluster_id").alias("list_id")
         )
         reassigned.write.partitionBy("list_id").mode("overwrite").parquet(tmp)
 
-    merged = compact_index_rows(
-        spark, index_dir, upto_batch_id, [id_col], _write_kept, min_sources=1
-    )
+    merged = commit_compaction(spark, ls, upto_batch_id, _write, min_sources=1)
     if merged:
         write_index_centroids(spark, index_dir, centroids)
     return centroids, merged

@@ -27,7 +27,11 @@ from dataclasses import replace
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_brain_spark.streaming.generations import PartialsStore, run_foreach_batch
+from pdf_brain_spark.streaming.generations import (
+    IndexStore,
+    PartialsStore,
+    run_foreach_batch,
+)
 
 
 def read_events_stream(
@@ -211,6 +215,16 @@ def stream_stream_join(
     )
 
 
+# The LSH band index of streaming_incremental_dedup: doc_id-keyed band rows,
+# unpartitioned; a compacted generation is coalesced to at most 8 files. A
+# continuous crawl accrues one small directory per micro-batch — at 100 TB
+# the classic small-files problem (file listing and footer reads come to
+# dominate the probe) — and compaction preserves every future batch's probe
+# set exactly, because the compacted generation covers precisely the
+# batches it replaced.
+BAND_INDEX = IndexStore(key="doc_id", compact_files=8)
+
+
 def make_incremental_dedup_batch_fn(
     spark: SparkSession, index_dir: str, candidates_dir: str
 ):
@@ -224,11 +238,7 @@ def make_incremental_dedup_batch_fn(
             incremental_lsh_candidates,
             minhash_banded_index,
         )
-        from pdf_brain_spark.streaming.generations import (
-            coverage,
-            generation_ids,
-            live_generation_ids,
-        )
+        from pdf_brain_spark.streaming.generations import coverage, stamp_protocol
 
         new_banded = minhash_banded_index(batch_df).localCheckpoint(eager=True)
         # Probe only band rows from STRICTLY EARLIER batches, resolved
@@ -243,17 +253,9 @@ def make_incremental_dedup_batch_fn(
         # identical to the first attempt. Selecting explicit generation
         # dirs prunes at the driver, the same effect as the former
         # batch_id < N PartitionFilter.
-        probe_gens = [
-            g
-            for g in live_generation_ids(generation_ids(spark, index_dir))
-            if coverage(g) < batch_id
-        ]
-        if probe_gens:
-            from pdf_brain_spark.streaming.generations import kept_index_rows
-
-            index_banded = kept_index_rows(
-                spark, index_dir, ["doc_id"], upto=batch_id - 1
-            ).drop("batch_id")
+        ls = BAND_INDEX.listing(spark, index_dir)
+        if any(coverage(g) < batch_id for g in ls.live):
+            index_banded = BAND_INDEX.rows(spark, ls, upto=batch_id - 1).drop("batch_id")
             cands = incremental_lsh_candidates(index_banded, new_banded)
         else:
             # first batch: no index yet — dedup within the batch only
@@ -263,76 +265,21 @@ def make_incremental_dedup_batch_fn(
         # duplicate candidate pairs or band rows — the at-least-once
         # foreachBatch contract composes to effectively-once output
         # without a transactional table format.
-        from pdf_brain_spark.streaming.generations import stamp_protocol
-
         stamp_protocol(spark, candidates_dir)
-        stamp_protocol(spark, index_dir)
         cands.write.mode("overwrite").parquet(
             f"{candidates_dir}/batch_id={batch_id}"
         )
-        new_banded.write.mode("overwrite").parquet(
-            f"{index_dir}/batch_id={batch_id}"
-        )
+        BAND_INDEX.write(spark, ls, new_banded, batch_id)
 
     return _each_batch
 
 
-def compact_band_index(
-    spark: SparkSession, index_dir: str, upto_batch_id: int, n_files: int = 8
-) -> int:
-    """Compact the incremental-dedup band index: merge every live
-    generation covering ≤ upto_batch_id into ONE compacted generation. A
-    continuous crawl accrues one small directory per micro-batch — at
-    100 TB that is the classic small-files problem (file listing and
-    footer reads come to dominate the probe); consolidation preserves
-    every future batch's probe set exactly because the compacted
-    generation covers precisely the batches it replaced.
-
-    READER-SAFE: the consolidated data is written aside, renamed into a
-    NEGATIVE `batch_id=-(m+1)` generation in one atomic directory move, and
-    only then are the superseded dirs deleted — a concurrent reader
-    resolving generations through streaming/generations.py sees the
-    pre- or post-compaction set, never a partial mixture (asserted by
-    the mid-compaction read test). Only compact batches the stream's
-    checkpoint has committed: a replay can only re-run the LAST
-    uncommitted batch, so `upto_batch_id` should be below it. Returns
-    the number of generations merged.
-
-    TOMBSTONE-AWARE: deletions (delete_documents) with floor ≤
-    upto_batch_id are materialized and their dirs retired.
-
-    All filesystem access goes through the Hadoop FileSystem API, so the
-    same code compacts local-disk, HDFS, and object-store indexes."""
-    from pdf_brain_spark.streaming.generations import compact_index_rows
-
-    def _write_kept(kept, tmp: str) -> None:
-        kept.coalesce(max(1, n_files)).write.mode("overwrite").parquet(tmp)
-
-    return compact_index_rows(
-        spark, index_dir, upto_batch_id, ["doc_id"], _write_kept
-    )
-
-
-def delete_documents(
-    spark: SparkSession,
-    index_dir: str,
-    doc_ids: DataFrame,
-    floor_batch_id: int,
-) -> None:
-    """Delete documents from a persisted doc_id-keyed index (the LSH band
-    index, or the FTS index as delete_fts_documents) — the takedown
-    operation (revoked licence, opted-out content) on an append-only
-    store: a tombstone generation records the doc ids, every read
-    immediately excludes their rows (a deleted document stops generating
-    candidate pairs, matching terms, and counting in the BM25 corpus
-    statistics), and the next compaction materializes the removal. A
-    document re-ingested after the floor is a fresh insert and
-    participates again."""
-    from pdf_brain_spark.streaming.generations import write_tombstones
-
-    write_tombstones(
-        spark, index_dir, doc_ids.select("doc_id"), floor_batch_id
-    )
+# Compaction and takedown on the band index are its declaration's (reader-
+# safe, tombstone-aware — streaming/generations.py). A deleted document
+# stops generating candidate pairs at once, and a document re-ingested after
+# the floor is a fresh insert.
+compact_band_index = BAND_INDEX.compact
+delete_documents = BAND_INDEX.delete
 
 
 def streaming_incremental_dedup(
@@ -446,9 +393,9 @@ def read_rollup(
     if temporal not in ("coverage", "write"):
         raise ValueError(f"temporal must be 'coverage' or 'write', got {temporal!r}")
     if temporal == "write" and asof_batch_id is not None:
-        from pdf_brain_spark.streaming.generations import write_seqs
+        from pdf_brain_spark.streaming.generations import list_store, write_seqs
 
-        seqs = write_seqs(spark, rollup_dir)
+        seqs = write_seqs(spark, list_store(spark, rollup_dir))
         name = f"batch_id={asof_batch_id}"
         if name not in seqs:
             raise ValueError(
@@ -663,7 +610,51 @@ def read_top_terms(spark: SparkSession, store_dir: str, k: int = 25) -> DataFram
 # ---------------------------------------------------------------------------
 
 
-def make_fts_postings_batch_fn(index_dir: str, id_col: str = "doc_id", text_col: str = "text"):
+# Number of term-hash partitions per FTS generation. At this test scale 8
+# keeps directory counts sane; at 100 TB the same layout runs at 256-1024
+# buckets so one bucket's live postings stay executor-sized. The count is
+# part of the STORE layout, not the query: it is in the name of the
+# store's versioned layout marker, so a store laid out at another count
+# (or under the earlier two-store layout, whose `_TERM_BUCKETS.<B>` marker
+# carries no version) raises instead of being mis-probed.
+FTS_TERM_BUCKETS = 8
+
+# The hive partition of every FTS generation that holds its doc-grain rows
+# (one per document: term NULL, tf 0, doc_len). portable_term_bucket is
+# never negative, so no term probe reaches it; the corpus-stats arm filters
+# on it and prunes to it.
+FTS_DOC_BUCKET = -1
+
+
+def _fts_one_generation_per_doc(spark: SparkSession, ls) -> None:
+    """The FTS store's one invariant: no document is live in two
+    generations. A generation holds one doc-grain row per document, so
+    with one live generation it holds by construction and the check
+    fires no job; otherwise it is the corpus-stats aggregate's max_gen."""
+    if len(ls.live) > 1:
+        if (_fts_stats(ls, FTS_INDEX.rows(spark, ls)).first()["max_gen"] or 0) > 1:
+            raise ValueError(_FTS_DOUBLE_INGEST)
+
+
+# The FTS index: doc_id-keyed rows under term_bucket hive partitions. The
+# compacted generation KEEPS that partitioning: the store's dominant mass
+# lives there, so preserving the layout is what makes a serve's probe prune
+# at 100 TB (the IVF index's list_id play), and the repartition on
+# term_bucket gives ~one file per bucket (the doc-grain partition
+# included). Compaction first asserts the one-generation-per-doc invariant:
+# it would otherwise fold a double-ingested doc's two generations into one,
+# after which the serve's own check can no longer see the violation and
+# BM25 silently double-counts tf.
+FTS_INDEX = IndexStore(
+    key="doc_id",
+    partition_by="term_bucket",
+    compact_files=8,
+    layout=f"_FTS_LAYOUT_V2.TERM_BUCKETS_{FTS_TERM_BUCKETS}",
+    check=_fts_one_generation_per_doc,
+)
+
+
+def make_fts_postings_batch_fn(index_dir: str):
     """Per-micro-batch index build (operators/fts.py::build_postings —
     tokenize once, (doc, term) aggregate with map-side combine, one
     doc-grain row per document), written by ONE partitioned overwrite
@@ -682,84 +673,20 @@ def make_fts_postings_batch_fn(index_dir: str, id_col: str = "doc_id", text_col:
     text): it has no postings, but the served N and avgdl must count it
     as the one-shot path does."""
     from pdf_brain_spark.operators.fts import build_postings
-    from pdf_brain_spark.streaming.generations import stamp_protocol
 
     def _each_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        stamp_protocol(spark, index_dir)
-        n_buckets = _stamp_fts_buckets(spark, index_dir, FTS_TERM_BUCKETS)
-        build_postings(batch_df, id_col=id_col, text_col=text_col).withColumn(
-            "term_bucket", _term_bucket_col("term", n_buckets)
-        ).write.partitionBy("term_bucket").mode("overwrite").parquet(
-            f"{index_dir}/batch_id={batch_id}"
-        )
+        postings = build_postings(batch_df).withColumn("term_bucket", _term_bucket_col("term"))
+        FTS_INDEX.write(spark, FTS_INDEX.listing(spark, index_dir), postings, batch_id)
 
     return _each_batch
 
 
-# Takedown on the FTS index is the band index's: one tombstone generation
-# of doc ids drops both a document's postings and its doc-grain stats row.
-delete_fts_documents = delete_documents
-
-
-# Number of term-hash partitions per FTS generation for NEW stores. At
-# this test scale 8 keeps directory counts sane; at 100 TB the same layout
-# runs at 256-1024 buckets so one bucket's live postings stay
-# executor-sized. The count is part of the STORE layout, not the query, so
-# it is PERSISTED per store as a `_TERM_BUCKETS.<B>` marker (the protocol-
-# marker play): the writer stamps it on first write and honors an existing
-# store's value thereafter; the serve computes its probe set from the
-# store's marker, never the constant — changing the constant can therefore
-# never silently mis-probe an existing store's hive dirs.
-FTS_TERM_BUCKETS = 8
-
-# The hive partition of every FTS generation that holds its doc-grain rows
-# (one per document: term NULL, tf 0, doc_len). portable_term_bucket is
-# never negative, so no term probe reaches it; the corpus-stats arm filters
-# on it and prunes to it.
-FTS_DOC_BUCKET = -1
-
-_TERM_BUCKETS_PREFIX = "_TERM_BUCKETS."
-
-
-def fts_store_buckets(spark: SparkSession, index_dir: str) -> int | None:
-    """The persisted term-bucket count of an FTS store (None if the
-    store doesn't exist yet / has no layout marker)."""
-    from pdf_brain_spark.streaming.generations import _fs
-
-    HPath, fs = _fs(spark, index_dir)
-    if not fs.exists(HPath(index_dir)):
-        return None
-    for st in fs.listStatus(HPath(index_dir)):
-        name = st.getPath().getName()
-        if name.startswith(_TERM_BUCKETS_PREFIX):
-            try:
-                return int(name[len(_TERM_BUCKETS_PREFIX):])
-            except ValueError:
-                continue
-    return None
-
-
-def _stamp_fts_buckets(spark: SparkSession, index_dir: str, n_buckets: int) -> int:
-    """Record (or read back) the store's bucket count. First writer
-    stamps; later writers use the stamped value — a caller demanding a
-    DIFFERENT count than the store's is an error, not a re-layout."""
-    from pdf_brain_spark.streaming.generations import _fs
-
-    existing = fts_store_buckets(spark, index_dir)
-    if existing is not None:
-        if existing != n_buckets:
-            raise ValueError(
-                f"FTS store {index_dir} is laid out at {existing} term "
-                f"buckets; cannot write batches at {n_buckets}. Rebuild "
-                "the store to change its bucket count."
-            )
-        return existing
-    HPath, fs = _fs(spark, index_dir)
-    fs.create(
-        HPath(f"{index_dir}/{_TERM_BUCKETS_PREFIX}{n_buckets}"), True
-    ).close()
-    return n_buckets
+# Takedown on the FTS index: one tombstone generation of doc ids drops both
+# a document's postings and its doc-grain stats row — it vanishes from
+# results and statistics at once, and physically at the next compaction.
+delete_fts_documents = FTS_INDEX.delete
+compact_fts_index = FTS_INDEX.compact
 
 
 def portable_term_bucket(term: str, n_buckets: int = FTS_TERM_BUCKETS) -> int:
@@ -788,36 +715,23 @@ def streaming_fts_ingest(
     docs_stream: DataFrame,
     index_dir: str,
     checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ):
     """Drive incremental FTS index maintenance as a Structured Streaming
     query (AvailableNow in tests/gate; continuous in production)."""
     return run_foreach_batch(
-        docs_stream, make_fts_postings_batch_fn(index_dir, id_col, text_col), checkpoint_dir
+        docs_stream, make_fts_postings_batch_fn(index_dir), checkpoint_dir
     )
 
 
 def fts_assert_stores_consistent(spark: SparkSession, index_dir: str) -> None:
-    """The FTS store's one invariant: no document is live in two
-    generations. Updates are tombstone-then-reinsert (delete_fts_documents,
+    """Raise by name when a document is live in two generations of the FTS
+    store. Updates are tombstone-then-reinsert (delete_fts_documents,
     then ingest the new text in a later batch); a doc_id re-ingested
     WITHOUT a tombstone leaves two generations' postings live, and BM25
-    would double-count its tf. Raises by name on that state.
-
-    A generation holds one doc-grain row per document, so with one live
-    generation the invariant holds by construction and the check fires
-    no job; otherwise it is the corpus-stats aggregate's max_gen.
-    compact_fts_index runs it before merging, because a compaction would
-    fold the two generations into one and hide the violation. The serve
-    does not call it: the corpus-stats row's max_gen carries the same
-    invariant."""
-    from pdf_brain_spark.streaming.generations import live_generation_dirs
-
-    if len(live_generation_dirs(spark, index_dir)) <= 1:
-        return
-    if (fts_corpus_stats(spark, index_dir).first()["max_gen"] or 0) > 1:
-        raise ValueError(_FTS_DOUBLE_INGEST)
+    would double-count its tf. compact_fts_index runs the same check
+    before merging. The serve does not call it: the corpus-stats row's
+    max_gen carries the same invariant."""
+    _fts_one_generation_per_doc(spark, FTS_INDEX.listing(spark, index_dir))
 
 
 _FTS_DOUBLE_INGEST = (
@@ -828,24 +742,23 @@ _FTS_DOUBLE_INGEST = (
 )
 
 
-def _fts_stats(spark: SparkSession, index_dir: str, rows: DataFrame, id_col: str) -> DataFrame:
-    """(n, avgdl, max_gen) over the doc-grain rows of `rows`."""
-    from pdf_brain_spark.streaming.generations import live_generation_dirs
-
+def _fts_stats(ls, rows: DataFrame) -> DataFrame:
+    """(n, avgdl, max_gen) over the doc-grain rows of `rows`, the kept rows
+    of listing `ls`."""
     dg = rows.filter(F.col("term_bucket") == FTS_DOC_BUCKET)
     # a generation holds one doc-grain row per doc (the batch writer groups
     # by doc, the compactor refuses a doc live in two generations), so a
     # doc's row count is its number of live generations, and with one live
     # generation no doc can be double-counted: the per-doc grouping and its
     # shuffle are needed only across generations
-    if len(live_generation_dirs(spark, index_dir)) == 1:
+    if len(ls.live) == 1:
         return dg.agg(
             F.count(F.lit(1)).alias("n"),
             F.avg("doc_len").alias("avgdl"),
             F.lit(1).alias("max_gen"),
         )
     return (
-        dg.groupBy(id_col)
+        dg.groupBy("doc_id")
         .agg(
             F.first("doc_len").alias("doc_len"),
             F.count(F.lit(1)).alias("_ngen"),
@@ -858,20 +771,15 @@ def _fts_stats(spark: SparkSession, index_dir: str, rows: DataFrame, id_col: str
     )
 
 
-def fts_corpus_stats(
-    spark: SparkSession,
-    index_dir: str,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def fts_corpus_stats(spark: SparkSession, index_dir: str) -> DataFrame:
     """Corpus statistics (N, avgdl) for BM25 serving, from the doc-grain
     partition (FTS_DOC_BUCKET) of the live generations ONLY — one row per
     live doc per generation, never the postings' term grain (pytest pins
     that every scan of this frame prunes to that partition). Also carries
     the one-live-generation-per-doc invariant (max_gen), so the serve's
     double-ingest assert costs a doc-grain aggregate."""
-    from pdf_brain_spark.streaming.generations import kept_index_rows
-
-    return _fts_stats(spark, index_dir, kept_index_rows(spark, index_dir, [id_col]), id_col)
+    ls = FTS_INDEX.listing(spark, index_dir)
+    return _fts_stats(ls, FTS_INDEX.rows(spark, ls))
 
 
 def fts_search_persisted(
@@ -879,7 +787,6 @@ def fts_search_persisted(
     index_dir: str,
     query_terms: list[str],
     k: int = 10,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """BM25 top-k served from the PERSISTED FTS index (live generations
     minus tombstoned documents — safe mid-compaction and after
@@ -894,35 +801,35 @@ def fts_search_persisted(
     live, double-counting tf; the serve raises rather than serve
     silently-wrong scores.
 
-    Plan shape: ONE kept_index_rows read feeds both arms. The build fires
-    one action, the corpus-stats collect (N, avgdl and the uniqueness
-    assert over the doc-grain partition; no postings term grain is
-    scanned for stats). The assert stays a driver-side ValueError
-    because it runs on that collected row. Per-term df is computed INSIDE
-    the scoring plan, as a count over `term` on the probed postings:
-    under the assert each doc has one live generation, and a generation
-    holds one postings row per (doc, term), so the count is the number of
-    live docs holding the term. The query-term filter prunes the postings
-    scan to the queried terms — under the term_bucket layout it is a
-    PartitionFilter, so unqueried buckets (and the doc-grain partition)
-    prune at planning time. One bounded TakeOrdered ends the plan. A
-    query none of whose terms occurs in the store returns no rows, as
-    bm25_scores does."""
+    Plan shape: ONE listing of the store and ONE kept-rows read feed both
+    arms. The build fires one action, the corpus-stats collect (N, avgdl
+    and the uniqueness assert over the doc-grain partition; no postings
+    term grain is scanned for stats). The assert stays a driver-side
+    ValueError because it runs on that collected row. Per-term df is
+    computed INSIDE the scoring plan, as a count over `term` on the
+    probed postings: under the assert each doc has one live generation,
+    and a generation holds one postings row per (doc, term), so the count
+    is the number of live docs holding the term. The query-term filter
+    prunes the postings scan to the queried terms — under the term_bucket
+    layout it is a PartitionFilter, so unqueried buckets (and the
+    doc-grain partition) prune at planning time. One bounded TakeOrdered
+    ends the plan. A query none of whose terms occurs in the store
+    returns no rows, as bm25_scores does."""
     from pyspark.sql import Window
 
     from pdf_brain_spark.operators.fts import BM25_B, BM25_K1
-    from pdf_brain_spark.streaming.generations import kept_index_rows
 
-    rows = kept_index_rows(spark, index_dir, [id_col]).drop("batch_id")
+    ls = FTS_INDEX.listing(spark, index_dir)
+    rows = FTS_INDEX.rows(spark, ls).drop("batch_id")
     terms = [t.lower() for t in query_terms]
-    stats = _fts_stats(spark, index_dir, rows, id_col).collect()[0]
+    stats = _fts_stats(ls, rows).collect()[0]
     if stats["n"] and stats["max_gen"] > 1:
         raise ValueError(_FTS_DOUBLE_INGEST)
     if not stats["n"]:
         # every document tombstoned (a takedown-heavy index reaches this
         # state in normal operation): an empty result, not a crash
         return (
-            rows.select(id_col)
+            rows.select("doc_id")
             .withColumn("bm25", F.lit(0.0))
             .withColumn("terms_matched", F.lit(0).cast("long"))
             .limit(0)
@@ -932,9 +839,9 @@ def fts_search_persisted(
     # generation (batch and compacted), so this isin is a PartitionFilter
     # — unqueried buckets are pruned at planning time (pytest-pinned in
     # tests/test_ingest_and_streaming.py); the residual term filter
-    # selects within the probed buckets
-    store_b = fts_store_buckets(spark, index_dir) or FTS_TERM_BUCKETS
-    probe_buckets = sorted({portable_term_bucket(t, store_b) for t in terms})
+    # selects within the probed buckets. The layout marker pins the
+    # store's bucket count to FTS_TERM_BUCKETS.
+    probe_buckets = sorted({portable_term_bucket(t) for t in terms})
     matched = rows.filter(
         F.col("term_bucket").isin(probe_buckets) & F.col("term").isin(terms)
     )
@@ -946,12 +853,12 @@ def fts_search_persisted(
     )
     return (
         matched.withColumn("_ts", term_score)
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("_ts").alias("bm25"),
             F.count(F.lit(1)).alias("terms_matched"),
         )
-        .orderBy(F.col("bm25").desc(), F.col(id_col).asc())
+        .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
         .limit(k)
     )
 
@@ -1081,40 +988,6 @@ def read_kmv(spark: SparkSession, store_dir: str) -> DataFrame:
         "event_type",
         n_in.cast("long").alias("n_in_sketch"),
         est.alias("kmv_estimate"),
-    )
-
-
-def compact_fts_index(spark: SparkSession, index_dir: str, upto_batch_id: int, n_files: int = 8) -> int:
-    """Merge committed FTS generations into one compacted generation,
-    materializing document deletions (reader-safe generation protocol,
-    same story as the band/ANN compactors).
-
-    The compacted generation KEEPS the term_bucket hive partitioning
-    (make_fts_postings_batch_fn): the store's dominant mass lives in its
-    compacted generation, so preserving the layout there is what makes
-    a serve's probe prune at 100 TB — the exact play compact_ann_index
-    runs for list_id. The pre-write repartition on term_bucket puts each
-    bucket's rows in few tasks, so the dir gets ~one file per bucket
-    (the doc-grain partition included) instead of n_files x buckets
-    fragments.
-
-    The store's invariant (one live generation per doc — updates are
-    tombstone-then-reinsert) is asserted first
-    (fts_assert_stores_consistent): compaction would otherwise fold a
-    double-ingested doc's two generations into one, after which the
-    serve's own check can no longer see the violation and BM25 silently
-    double-counts tf."""
-    from pdf_brain_spark.streaming.generations import compact_index_rows
-
-    fts_assert_stores_consistent(spark, index_dir)
-
-    def _write_kept(kept, tmp: str) -> None:
-        kept.repartition(max(1, n_files), "term_bucket").write.partitionBy(
-            "term_bucket"
-        ).mode("overwrite").parquet(tmp)
-
-    return compact_index_rows(
-        spark, index_dir, upto_batch_id, ["doc_id"], _write_kept
     )
 
 

@@ -1,47 +1,59 @@
-"""Generation protocol for the streaming-maintained persisted stores: the
-row stores (LSH band index, ANN IVF index, FTS postings and their doc-grain
-stats) and the ten mergeable-partials sketch stores, each declared once as
-a `PartialsStore` (rollup, value histogram, term counts, OHLC, KMV,
-regression, bitmap, CMS, MinHash, novelty — see streaming/events.py).
+"""The generation lifecycle of the streaming-maintained persisted stores,
+one for both store families: the ten mergeable-partials sketch stores,
+each declared once as a `PartialsStore` (rollup, value histogram, term
+counts, OHLC, KMV, regression, bitmap, CMS, MinHash, novelty — see
+streaming/events.py), and the three row-index stores, each declared once
+as an `IndexStore` (the LSH band index and the FTS index in
+streaming/events.py, the IVF index in streaming/ann_ingest.py).
 
-Every foreachBatch writer lands its micro-batch under `batch_id=N` (N >= 0,
-monotone from the stream checkpoint) — the replay-idempotence protocol
-attested in streaming/events.py. Compaction adds one rule on top so that
-CONCURRENT READERS are safe at every instant, without a transactional
-table format:
+A store is a directory of generations, an LSM-style design (O'Neil et
+al., "The Log-Structured Merge-Tree", Acta Informatica 1996):
 
+  * every foreachBatch writer lands its micro-batch under `batch_id=N`
+    (N >= 0, monotone from the stream checkpoint), touching nothing
+    else — the replay-idempotence protocol;
+  * OVERLAY generations correct what the additive ones hold, each under
+    a floor K: a backfill `backfill_floor=K` replaces the partials of the
+    groups it carries (sketch stores), a tombstone `tombstone_floor=K`
+    deletes the rows of the keys it lists (row stores), in generations
+    covering <= K;
   * a compacted generation is written under a NEGATIVE id,
     `batch_id=-(m+1)`, and declares that it REPLACES every generation
-    covering <= m — i.e. every positive generation b <= m and every
-    older compacted generation covering m' < m. The +1 offset is load-
-    bearing: a compaction whose coverage is exactly batch 0 lands at
-    `batch_id=-1`, not the unrepresentable `-0` that would collide with
-    the live `batch_id=0` directory itself;
+    and overlay covering <= m. The +1 offset is load-bearing: a
+    compaction whose coverage is exactly batch 0 lands at `batch_id=-1`,
+    not the unrepresentable `-0` that would collide with the live
+    `batch_id=0` directory itself. The newest compacted coverage is the
+    store's FRONTIER m*.
+
+Every operation (read, batch write, delete, backfill, compaction) starts
+from ONE listing of the store root (`list_store`), parsed once into the
+raw and live generations, m*, the overlay dirs and the marker names; the
+overlay-floor check, the retention check and the compaction commit all
+work from that snapshot. The commit (`commit_compaction`) is the one
+write path for a compacted generation, so CONCURRENT READERS are safe at
+every instant without a transactional table format:
+
   * the consolidated data is first written to a dot-prefixed temp dir
-    (invisible to the generation listing) and then RENAMED to
-    `batch_id=-(m+1)` — a single-directory rename, atomic on local disk
-    and HDFS — so the new generation appears all-at-once. The rename's
-    boolean result is CHECKED: on failure nothing is deleted, so the
-    pre-compaction state stays fully intact;
+    (invisible to the listing) and then RENAMED to `batch_id=-(m+1)` — a
+    single-directory rename, atomic on local disk and HDFS — so the new
+    generation appears all-at-once. The rename's boolean result is
+    CHECKED: on failure nothing is deleted, so the pre-compaction state
+    stays fully intact;
   * superseded directories are deleted only AFTER the rename. A reader
-    that resolves the live set through `live_generation_ids` therefore
-    sees either the pre-compaction set or the post-compaction set, never
-    a mixture: before the rename the negative generation does not exist
-    and the positive ones do; after it, precedence excludes the doomed
-    positive dirs whether or not their deletes have completed.
+    resolving the live set through the listing therefore sees either the
+    pre-compaction set or the post-compaction set, never a mixture:
+    before the rename the negative generation does not exist and the
+    positive ones do; after it, precedence excludes the doomed dirs
+    whether or not their deletes have completed.
 
 Negative ids can never collide with future stream batches (those are
-always >= 0), which closes the hole the previous rename-into-
-`batch_id=max` design had: nothing the stream will ever write shares a
-name with a compacted generation.
-
-Crash recovery is a cleanup, not a repair: if the compactor dies between
-rename and deletes, the stale positive dirs are invisible to readers
-(precedence) and the next compaction sweep removes them.
+always >= 0). Crash recovery is a cleanup, not a repair: if the compactor
+dies between rename and deletes, the stale dirs are invisible to readers
+(precedence) and the next compaction's sweep removes them.
 
 Reads: every store read (generations, tombstones, backfills) goes through
-`read_generation_dirs`. Store schemas are not constants — the id and
-vector columns come from the caller's stream — so it takes the schema
+`read_generation_dirs`. Store schemas are not constants — the partials
+and index rows come from the caller's frames — so it takes the schema
 from the Spark row metadata in one data file's footer, read on the
 driver: the footer that schema inference would read, without
 inference's Spark job. Building a read therefore fires no job.
@@ -67,17 +79,167 @@ def _fs(spark: SparkSession, path: str):
 # under the old encoding — a pre-existing batch_id=-m dir reads as covering
 # m-1, shifting backfill floors and as-of comparisons. The marker's NAME
 # carries the version (no file-content round-trip through py4j needed):
-# every writer stamps it on first write, and every read path fails fast on
+# every writer stamps it on first write, and every listing fails fast on
 # a store that has generation dirs but no current marker — an old store
 # must be rebuilt (or its compacted dirs re-encoded), never misread.
 PROTOCOL_MARKER = "_GENERATION_PROTOCOL_V2"
+_PROTOCOL_REBUILD = (
+    "it predates the -(m+1) compacted-generation encoding (or was written "
+    "by foreign code) and its negative batch_id dirs would be misread as "
+    "covering one batch less than intended. Rebuild the store from facts, "
+    "or verify no compacted (negative) generations exist and restamp with "
+    "stamp_protocol(force=True)."
+)
 _GEN_PREFIXES = ("batch_id=", "backfill_floor=", "tombstone_floor=")
 
 
+def coverage(gen_id: int) -> int:
+    """The highest stream batch a generation accounts for: a positive
+    generation covers itself; a compacted generation -(m+1) covers
+    0..m. The offset keeps coverage-0 representable (batch_id=-1)
+    instead of colliding with batch_id=0 (the former -m encoding wrote
+    a coverage-0 compaction onto the live batch-0 directory)."""
+    return -gen_id - 1 if gen_id < 0 else gen_id
+
+
+def compacted_id(cov: int) -> int:
+    """The generation id of a compacted generation covering 0..cov."""
+    return -(cov + 1)
+
+
+def frontier(ids) -> int:
+    """m*: the newest compacted coverage among generation ids (-1 when no
+    compacted generation exists)."""
+    return max((coverage(g) for g in ids if g < 0), default=-1)
+
+
+def live_generation_ids(ids) -> list[int]:
+    """Apply compaction precedence to a raw generation listing: the
+    newest compacted generation -(m*+1) replaces every generation
+    covering <= m*. Returns the live set — that generation plus every
+    positive batch > m*, or all positives when no compacted generation
+    exists. Reading exactly this set yields each row exactly once at ANY
+    point of a compaction or a post-crash state."""
+    m = frontier(ids)
+    return sorted(([compacted_id(m)] if m >= 0 else []) + [g for g in ids if g > m])
+
+
+@dataclass(frozen=True)
+class StoreListing:
+    """One listing of a store root, parsed once.
+
+      * `raw` — every `batch_id=<g>` generation (positive stream batches
+        and compacted generations), `live` — the precedence-resolved
+        subset, `m_star` — the frontier;
+      * `overlays` — (floor, dir name) of every backfill and tombstone
+        dir. Tombstone dirs are APPEND-ONLY as a set: each delete lands
+        in a NEW dir `tombstone_floor=<K>` or `tombstone_floor=<K>_<serial>`,
+        so deletions at one floor union on read and no dir is ever
+        rewritten; the floor parses from the part before the serial;
+      * `names` — every child name, markers included."""
+
+    root: str
+    names: frozenset[str]
+    raw: list[int]
+    live: list[int]
+    m_star: int
+    overlays: list[tuple[int, str]]
+
+    @classmethod
+    def parse(cls, root: str, names) -> StoreListing:
+        raw, overlays = [], []
+        for name in names:
+            kind, _, value = name.partition("=")
+            try:
+                if kind == "batch_id":
+                    raw.append(int(value))
+                elif kind in ("backfill_floor", "tombstone_floor"):
+                    overlays.append((int(value.split("_")[0]), name))
+            except ValueError:
+                continue
+        return cls(
+            root,
+            frozenset(names),
+            sorted(raw),
+            live_generation_ids(raw),
+            frontier(raw),
+            sorted(overlays),
+        )
+
+    @property
+    def floors(self) -> list[int]:
+        """Distinct overlay floors."""
+        return sorted({k for k, _ in self.overlays})
+
+    def dirs(self, ids) -> list[str]:
+        return [f"{self.root}/batch_id={g}" for g in ids]
+
+    def require(self, marker: str, rebuild: str) -> None:
+        """Fail fast when the store holds generation dirs but not `marker`:
+        it was written under an older encoding or layout (or by foreign
+        code) and would be MISREAD, not merely rejected."""
+        if marker not in self.names and any(n.startswith(_GEN_PREFIXES) for n in self.names):
+            raise ValueError(
+                f"store {self.root} has generation directories but no {marker} "
+                f"marker: {rebuild}"
+            )
+
+    def check_floor(self, what: str, floor: int) -> None:
+        """The overlay-floor check: an overlay at or below m* would overlay
+        generations a compaction already materialized."""
+        if floor <= self.m_star:
+            raise ValueError(
+                f"{what} floor {floor} is at or below the newest compacted "
+                f"coverage {self.m_star}: that compaction already materialized "
+                "the generations it would overlay. Write it above the "
+                "compaction frontier (or recompute from facts)."
+            )
+
+    def kept(self, upto: int | None = None):
+        """(live generation ids, overlay dirs) a read keeps: overlays above
+        m*, both restricted to coverage <= `upto` when given. A snapshot
+        below m* was retired by a compaction — the retention limit on time
+        travel — and raises as such."""
+        ids = self.live
+        overlays = [(k, n) for k, n in self.overlays if k > self.m_star]
+        if upto is not None:
+            if upto < self.m_star:
+                raise ValueError(
+                    f"snapshot at batch {upto} was retired by a compaction "
+                    f"covering {self.m_star}: time travel reaches back only to "
+                    "the newest compacted coverage (the retention trade of "
+                    "compacting). Recompute from facts for older snapshots."
+                )
+            ids = [g for g in ids if coverage(g) <= upto]
+            overlays = [(k, n) for k, n in overlays if k <= upto]
+        return ids, overlays
+
+
+def list_store(spark: SparkSession, store_dir: str) -> StoreListing:
+    """The one root listing of a store (an empty listing when the directory
+    does not exist), via the Hadoop FileSystem API so the same code serves
+    local disk, HDFS and object stores. Raises on a store with generation
+    dirs but no protocol marker."""
+    HPath, fs = _fs(spark, store_dir)
+    names = []
+    if fs.exists(HPath(store_dir)):
+        names = [st.getPath().getName() for st in fs.listStatus(HPath(store_dir))]
+    ls = StoreListing.parse(store_dir, names)
+    ls.require(PROTOCOL_MARKER, _PROTOCOL_REBUILD)
+    return ls
+
+
+def _stamp(spark: SparkSession, ls: StoreListing, *markers: str) -> None:
+    """Create the protocol marker and `markers` (None skipped) where the
+    listing lacks them — the first write of a new store."""
+    HPath, fs = _fs(spark, ls.root)
+    for m in (PROTOCOL_MARKER, *markers):
+        if m and m not in ls.names:
+            fs.create(HPath(f"{ls.root}/{m}"), True).close()
+
+
 def stamp_protocol(spark: SparkSession, index_dir: str, force: bool = False) -> None:
-    """Idempotently write the protocol-version marker file. Called by
-    every generation writer (foreachBatch bodies, backfill, tombstones)
-    the first time a store directory comes into existence.
+    """Idempotently write the protocol-version marker file.
 
     A store that already holds generation dirs WITHOUT the marker is a
     pre-v2 (or foreign) store: stamping it would launder its
@@ -87,43 +249,7 @@ def stamp_protocol(spark: SparkSession, index_dir: str, force: bool = False) -> 
     misinterpret batch_id=-m. So that case RAISES unless force=True,
     the operator's explicit I-verified-no-negative-generations
     override."""
-    HPath, fs = _fs(spark, index_dir)
-    p = HPath(f"{index_dir}/{PROTOCOL_MARKER}")
-    if fs.exists(p):
-        return
-    if not force and fs.exists(HPath(index_dir)):
-        names = [st.getPath().getName() for st in fs.listStatus(HPath(index_dir))]
-        _check_protocol(index_dir, names)
-    fs.create(p, True).close()
-
-
-def _check_protocol(index_dir: str, names: list[str]) -> None:
-    """Fail fast when a store holds generation dirs but not the current
-    protocol marker — it was written under an older encoding (or by
-    foreign code) and would be MISREAD, not merely rejected."""
-    if PROTOCOL_MARKER in names:
-        return
-    if any(n.startswith(_GEN_PREFIXES) for n in names):
-        raise ValueError(
-            f"store {index_dir} has generation directories but no "
-            f"{PROTOCOL_MARKER} marker: it predates the -(m+1) compacted-"
-            "generation encoding (or was written by foreign code) and its "
-            "negative batch_id dirs would be misread as covering one batch "
-            "less than intended. Rebuild the store from facts, or verify "
-            "no compacted (negative) generations exist and restamp with "
-            "stamp_protocol(force=True)."
-        )
-
-
-def _list_names(spark: SparkSession, index_dir: str) -> list[str]:
-    """Child names of index_dir with the protocol check applied —
-    the single chokepoint every generation-listing helper goes through."""
-    HPath, fs = _fs(spark, index_dir)
-    if not fs.exists(HPath(index_dir)):
-        return []
-    names = [st.getPath().getName() for st in fs.listStatus(HPath(index_dir))]
-    _check_protocol(index_dir, names)
-    return names
+    _stamp(spark, StoreListing.parse(index_dir, ()) if force else list_store(spark, index_dir))
 
 
 # The key under which Spark's parquet writer records the written frame's
@@ -244,83 +370,32 @@ def _dir_wseq(fs, HPath, dir_path: str) -> int | None:
     return None
 
 
-def write_seqs(spark: SparkSession, store_dir: str) -> dict[str, int]:
-    """dir-name -> write-sequence for every generation dir that has one."""
-    HPath, fs = _fs(spark, store_dir)
+def write_seqs(spark: SparkSession, ls: StoreListing) -> dict[str, int]:
+    """dir-name -> write-sequence for every generation dir of the listing
+    that has one."""
+    HPath, fs = _fs(spark, ls.root)
     out = {}
-    for name in _list_names(spark, store_dir):
+    for name in ls.names:
         if not name.startswith(_GEN_PREFIXES):
             continue
-        w = _dir_wseq(fs, HPath, f"{store_dir}/{name}")
+        w = _dir_wseq(fs, HPath, f"{ls.root}/{name}")
         if w is not None:
             out[name] = w
     return out
 
 
-def record_wseq(spark: SparkSession, store_dir: str, dir_name: str) -> int:
-    """Stamp `store_dir/dir_name` with the next write-sequence (called by
-    writers immediately after the dir lands / renames in). Idempotent per
-    dir: re-recording an already-stamped dir is a no-op."""
-    HPath, fs = _fs(spark, store_dir)
-    existing = _dir_wseq(fs, HPath, f"{store_dir}/{dir_name}")
+def record_wseq(spark: SparkSession, ls: StoreListing, dir_name: str) -> int:
+    """Stamp `dir_name` with the next write-sequence after the dirs of the
+    operation's listing `ls` (called by writers immediately after the dir
+    lands / renames in). Idempotent per dir: re-recording an
+    already-stamped dir is a no-op."""
+    HPath, fs = _fs(spark, ls.root)
+    existing = _dir_wseq(fs, HPath, f"{ls.root}/{dir_name}")
     if existing is not None:
         return existing
-    nxt = max(write_seqs(spark, store_dir).values(), default=0) + 1
-    fs.create(HPath(f"{store_dir}/{dir_name}/{_WSEQ_PREFIX}{nxt}"), True).close()
+    nxt = max(write_seqs(spark, ls).values(), default=0) + 1
+    fs.create(HPath(f"{ls.root}/{dir_name}/{_WSEQ_PREFIX}{nxt}"), True).close()
     return nxt
-
-
-def generation_ids(spark: SparkSession, index_dir: str) -> list[int]:
-    """All `batch_id=<int>` generation ids present under index_dir
-    (positive stream batches and negative compacted generations),
-    via the Hadoop FileSystem API so the same code serves local disk,
-    HDFS, and object stores. [] if the directory doesn't exist."""
-    out = []
-    for name in _list_names(spark, index_dir):
-        if not name.startswith("batch_id="):
-            continue
-        try:
-            out.append(int(name.split("=", 1)[1]))
-        except ValueError:
-            continue
-    return sorted(out)
-
-
-def coverage(gen_id: int) -> int:
-    """The highest stream batch a generation accounts for: a positive
-    generation covers itself; a compacted generation -(m+1) covers
-    0..m. The offset keeps coverage-0 representable (batch_id=-1)
-    instead of colliding with batch_id=0 (the former -m encoding wrote
-    a coverage-0 compaction onto the live batch-0 directory)."""
-    return -gen_id - 1 if gen_id < 0 else gen_id
-
-
-def compacted_id(cov: int) -> int:
-    """The generation id of a compacted generation covering 0..cov."""
-    return -(cov + 1)
-
-
-def live_generation_ids(ids: list[int]) -> list[int]:
-    """Apply compaction precedence to a raw generation listing: the
-    newest compacted generation (largest coverage m* among negatives)
-    replaces every generation covering <= m*. Returns the live set —
-    [compacted_id(m*)] plus every positive batch > m* — or all positives when no
-    compacted generation exists. Reading exactly this set yields each
-    row exactly once at ANY point of a compaction or a post-crash
-    state."""
-    negs = [g for g in ids if g < 0]
-    if not negs:
-        return sorted(ids)
-    m_star = max(coverage(g) for g in negs)
-    return sorted([compacted_id(m_star)] + [g for g in ids if g >= 0 and g > m_star])
-
-
-def live_generation_dirs(spark: SparkSession, index_dir: str) -> list[str]:
-    """Paths of the live generations (precedence applied)."""
-    return [
-        f"{index_dir}/batch_id={g}"
-        for g in live_generation_ids(generation_ids(spark, index_dir))
-    ]
 
 
 def _coverage_col():
@@ -333,26 +408,52 @@ def _coverage_col():
     return F.when(b < 0, -b - 1).otherwise(b)
 
 
-def backfill_floors(spark: SparkSession, index_dir: str) -> list[int]:
-    """All `backfill_floor=<int>` generation dirs under index_dir — the
-    REPLACEMENT-semantics namespace (see PartialsStore.backfill): a
-    backfill generation carries corrected FULL
-    partials for its buckets and declares that, for those buckets, it
-    supersedes every additive generation covering <= its floor. A
-    compacted generation -m in turn supersedes backfill dirs with
-    floor <= m (they were materialized into it, or were already dead) —
-    the same precedence shape as the additive namespace, so the two
-    compose: readers consult only floors above the newest compacted
-    coverage."""
-    out = []
-    for name in _list_names(spark, index_dir):
-        if not name.startswith("backfill_floor="):
-            continue
-        try:
-            out.append(int(name.split("=", 1)[1]))
-        except ValueError:
-            continue
-    return sorted(out)
+def commit_compaction(
+    spark: SparkSession,
+    ls: StoreListing,
+    upto_batch_id: int,
+    write: Callable[[str], None],
+    min_sources: int = 2,
+) -> int:
+    """The one compaction commit of both store families. From the
+    operation's listing: sweep the dead dirs (generations superseded by
+    precedence, overlays at or below m*), then merge every live
+    generation covering <= upto_batch_id and every overlay with floor in
+    (m*, upto] into `batch_id=compacted_id(m)`, m the largest coverage or
+    floor consumed: `write(tmp)` writes the store's kept rows at that
+    coverage to a dot-prefixed temp dir, the checked rename moves it in,
+    and the consumed dirs are deleted after. Returns the number of
+    generations (additive + overlay) merged; 0 when fewer than
+    `min_sources` would merge, or when only the compacted generation
+    covers upto (nothing new arrived at this coverage)."""
+    HPath, fs = _fs(spark, ls.root)
+    dead = [f"batch_id={g}" for g in set(ls.raw) - set(ls.live)]
+    dead += [n for k, n in ls.overlays if k <= ls.m_star]
+    for name in dead:
+        fs.delete(HPath(f"{ls.root}/{name}"), True)
+    src, overlays = ls.kept()
+    src = [g for g in src if coverage(g) <= upto_batch_id]
+    overlays = [(k, n) for k, n in overlays if k <= upto_batch_id]
+    if len(src) + len(overlays) < min_sources:
+        return 0
+    if all(g < 0 for g in src) and not overlays:
+        return 0
+    m = max([coverage(g) for g in src] + [k for k, _ in overlays])
+    dest = f"batch_id={compacted_id(m)}"
+    tmp = f"{ls.root}/.compact_tmp_{m}"
+    fs.delete(HPath(tmp), True)
+    write(tmp)
+    if not fs.rename(HPath(tmp), HPath(f"{ls.root}/{dest}")):
+        raise IOError(
+            f"compaction of {ls.root}: rename {tmp} -> {dest} failed; "
+            "aborting with sources intact (nothing was deleted)"
+        )
+    record_wseq(spark, ls, dest)
+    consumed = [f"batch_id={g}" for g in src] + [n for _, n in overlays]
+    for name in consumed:
+        if name != dest:
+            fs.delete(HPath(f"{ls.root}/{name}"), True)
+    return len(src) + len(overlays)
 
 
 # ---------------------------------------------------------------------------
@@ -429,11 +530,12 @@ class PartialsStore:
 
         def _each_batch(batch_df: DataFrame, batch_id: int) -> None:
             spark = batch_df.sparkSession
-            stamp_protocol(spark, store_dir)
+            ls = list_store(spark, store_dir)
+            _stamp(spark, ls)
             self.partial(batch_df, batch_id).write.mode("overwrite").parquet(
                 f"{store_dir}/batch_id={batch_id}"
             )
-            record_wseq(spark, store_dir, f"batch_id={batch_id}")
+            record_wseq(spark, ls, f"batch_id={batch_id}")
 
         return _each_batch
 
@@ -445,7 +547,7 @@ class PartialsStore:
     def _kept(
         self,
         spark: SparkSession,
-        store_dir: str,
+        ls: StoreListing,
         upto: int | None = None,
         asof_wseq: int | None = None,
     ):
@@ -454,9 +556,9 @@ class PartialsStore:
 
           * additive: live generations (compaction precedence), optionally
             restricted to coverage <= upto;
-          * backfill: dirs with floor > m* (the newest compacted coverage —
-            floors at or below it were materialized by a compaction and the
-            dirs are dead, swept later), optionally floor <= upto;
+          * backfill: dirs with floor > m* (floors at or below it were
+            materialized by a compaction and the dirs are dead, swept
+            later), optionally floor <= upto;
           * per backfilled FLOOR GROUP: rows of the NEWEST applicable
             backfill, plus additive rows with coverage strictly above that
             floor (late additive data on top of the correction);
@@ -473,13 +575,13 @@ class PartialsStore:
         vacated would survive.
 
         `asof_wseq` is WRITE-TIME travel (mutually exclusive with `upto`):
-        restrict the raw dir listing to dirs recorded at write-sequence
+        restrict the listing to dirs recorded at write-sequence
         <= asof_wseq, then run the normal precedence/backfill selection on
         that SUBSET — exactly the resolution a reader performed at that
         instant. A compacted generation recorded AFTER asof_wseq means dirs
         the historical reader saw have since been deleted, so the snapshot
         is unreconstructable and this raises (the write-time analogue of
-        the coverage-retention error above; conservative — a crashed-
+        the coverage-retention error; conservative — a crashed-
         compactor's surviving sources count as retired too)."""
         from pyspark.sql import functions as F
 
@@ -487,13 +589,9 @@ class PartialsStore:
         if asof_wseq is not None:
             if upto is not None:
                 raise ValueError("pass either upto (coverage) or asof_wseq (write-time), not both")
-            seqs = write_seqs(spark, store_dir)
-            raw_ids = generation_ids(spark, store_dir)
-            late_compactions = [
-                g
-                for g in raw_ids
-                if g < 0 and seqs.get(f"batch_id={g}", float("inf")) > asof_wseq
-            ]
+            seqs = write_seqs(spark, ls)
+            recorded = [n for n in ls.names if seqs.get(n, float("inf")) <= asof_wseq]
+            late_compactions = [g for g in ls.raw if g < 0 and f"batch_id={g}" not in recorded]
             if late_compactions:
                 raise ValueError(
                     f"write-time snapshot at wseq {asof_wseq} was retired: a "
@@ -502,46 +600,19 @@ class PartialsStore:
                     "Write-time travel reaches back only to the newest "
                     "compaction's write."
                 )
-            vis_ids = [
-                g for g in raw_ids if seqs.get(f"batch_id={g}", float("inf")) <= asof_wseq
-            ]
-            ids = live_generation_ids(vis_ids)
-            m_star = max([coverage(g) for g in ids if g < 0], default=-1)
-            floors = [
-                k
-                for k in backfill_floors(spark, store_dir)
-                if k > m_star
-                and seqs.get(f"backfill_floor={k}", float("inf")) <= asof_wseq
-            ]
-        else:
-            ids = live_generation_ids(generation_ids(spark, store_dir))
-            m_star = max([coverage(g) for g in ids if g < 0], default=-1)
-            floors = [k for k in backfill_floors(spark, store_dir) if k > m_star]
-        if upto is not None:
-            if upto < m_star:
-                # the documented compaction-retention limit on time travel, as
-                # its own error (not the generic no-live-generations fallthrough)
-                raise ValueError(
-                    f"snapshot at batch {upto} was retired by a compaction "
-                    f"covering {m_star}: time travel reaches back only to the "
-                    "newest compacted coverage (the retention trade of "
-                    "compacting). Recompute from facts for older snapshots."
-                )
-            ids = [g for g in ids if coverage(g) <= upto]
-            floors = [k for k in floors if k <= upto]
+            ls = StoreListing.parse(ls.root, recorded)
+        ids, overlays = ls.kept(upto)
         cols = [*self.keys, *self.values]
         adds = None
         if ids:
-            adds = read_generation_dirs(
-                spark, [f"{store_dir}/batch_id={g}" for g in ids], store_dir
-            ).select(*cols, _coverage_col().alias("_cov"))
-        if not floors:
+            adds = read_generation_dirs(spark, ls.dirs(ids), ls.root).select(
+                *cols, _coverage_col().alias("_cov")
+            )
+        if not overlays:
             if adds is None:
-                raise ValueError(f"partials store {store_dir} has no live generations")
+                raise ValueError(f"partials store {ls.root} has no live generations")
             return adds.drop("_cov")
-        backs = read_generation_dirs(
-            spark, [f"{store_dir}/backfill_floor={k}" for k in floors], store_dir
-        )
+        backs = read_generation_dirs(spark, [f"{ls.root}/{n}" for _, n in overlays], ls.root)
         fl = backs.groupBy(*floor_cols).agg(F.max("backfill_floor").alias("_fl"))
         backs_kept = (
             backs.join(fl, floor_cols)
@@ -557,15 +628,14 @@ class PartialsStore:
         )
         return adds_kept.unionByName(backs_kept)
 
+    def _merged(self, spark: SparkSession, ls: StoreListing, **kept):
+        return self._kept(spark, ls, **kept).groupBy(*self.keys).agg(*self._merge_exprs())
+
     def merged(self, spark: SparkSession, store_dir: str, **kept):
         """The kept partial rows merged to one row per key — the start of
         every serve. `kept` passes `upto` (coverage time travel) or
         `asof_wseq` (write-time travel) to the selection."""
-        return (
-            self._kept(spark, store_dir, **kept)
-            .groupBy(*self.keys)
-            .agg(*self._merge_exprs())
-        )
+        return self._merged(spark, list_store(spark, store_dir), **kept)
 
     def backfill(
         self,
@@ -575,12 +645,14 @@ class PartialsStore:
         floor_batch_id: int,
         overwrite: bool = False,
     ) -> None:
-        """Write a backfill generation (replacement semantics — see
-        backfill_floors): the partial of the `corrected` facts, which
-        must be the COMPLETE corrected facts of every floor group they
-        touch. For those groups it supersedes every additive generation
-        covering <= floor_batch_id; later additive batches still merge on
-        top, so the stream never pauses.
+        """Write a backfill generation `backfill_floor=K` (replacement
+        semantics): the partial of the `corrected` facts, which must be
+        the COMPLETE corrected facts of every floor group they touch. For
+        those groups it supersedes every additive generation covering
+        <= floor_batch_id; later additive batches still merge on top, so
+        the stream never pauses. A compacted generation -(m+1) in turn
+        supersedes backfill dirs with floor <= m (they were materialized
+        into it, or were already dead).
 
         A floor can be used ONCE: unlike tombstones (pure key sets that
         union), two backfills at one floor cannot compose — the second's
@@ -593,257 +665,170 @@ class PartialsStore:
         corrections into one backfill frame or wait for the frontier to
         advance to a fresh floor. Floor contract: above the newest compacted
         coverage, and covering only committed batches."""
-        m_star = max(
-            [coverage(g) for g in generation_ids(spark, store_dir) if g < 0],
-            default=-1,
-        )
-        if floor_batch_id <= m_star:
-            raise ValueError(
-                f"backfill floor {floor_batch_id} is at or below the newest "
-                f"compacted coverage {m_star}: it would be superseded on "
-                "arrival. Backfill above the compaction frontier (or "
-                "recompute from facts)."
-            )
-        if not overwrite and floor_batch_id in backfill_floors(spark, store_dir):
+        ls = list_store(spark, store_dir)
+        ls.check_floor("backfill", floor_batch_id)
+        name = f"backfill_floor={floor_batch_id}"
+        if not overwrite and name in ls.names:
             raise ValueError(
                 f"backfill floor {floor_batch_id} is already occupied: overwriting would "
                 "revert the earlier correction's buckets. Merge the corrections "
                 "into one backfill, use a fresher committed floor, or pass "
                 "overwrite=True to retry the same logical backfill."
             )
-        stamp_protocol(spark, store_dir)
-        name = f"backfill_floor={floor_batch_id}"
+        _stamp(spark, ls)
         self.partial(corrected, floor_batch_id).write.mode("overwrite").parquet(
             f"{store_dir}/{name}"
         )
-        record_wseq(spark, store_dir, name)
+        record_wseq(spark, ls, name)
 
     def compact(self, spark: SparkSession, store_dir: str, upto_batch_id: int) -> int:
-        """Floor-aware compaction: merge every live additive generation
-        covering ≤ upto_batch_id AND every applicable backfill generation
-        (floor in (m*, upto]) into one compacted generation holding the
-        key-grain RESOLVED partials, computed by the same `merged` the
-        readers start from. The compacted id is compacted_id(max(coverages,
-        floors)), so it supersedes both the consumed additive dirs AND the
-        consumed backfill dirs; deletes happen after the atomic rename,
-        and dead dirs from either namespace are swept. Returns the number
-        of generations merged."""
-        HPath, fs = _fs(spark, store_dir)
-        all_ids = generation_ids(spark, store_dir)
-        live = live_generation_ids(all_ids)
-        m_star = max([coverage(g) for g in live if g < 0], default=-1)
-        all_floors = backfill_floors(spark, store_dir)
-        # sweep: additive dirs superseded by precedence, backfill dirs at or
-        # below the compaction frontier — both invisible to readers
-        for g in set(all_ids) - set(live):
-            fs.delete(HPath(f"{store_dir}/batch_id={g}"), True)
-        for k in all_floors:
-            if k <= m_star:
-                fs.delete(HPath(f"{store_dir}/backfill_floor={k}"), True)
-        src_add = [g for g in live if coverage(g) <= upto_batch_id]
-        src_fl = [k for k in all_floors if m_star < k <= upto_batch_id]
-        if len(src_add) + len(src_fl) < 2:
-            return 0
-        if all(g < 0 for g in src_add) and not src_fl:
-            return 0  # lone compacted gen: nothing new arrived at this coverage
-        m = max([coverage(g) for g in src_add] + src_fl)
-        dest = compacted_id(m)
-        tmp = f"{store_dir}/.compact_tmp_{m}"
-        fs.delete(HPath(tmp), True)
-        self.merged(spark, store_dir, upto=upto_batch_id).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        if not fs.rename(HPath(tmp), HPath(f"{store_dir}/batch_id={dest}")):
-            raise IOError(
-                f"PartialsStore.compact: rename {tmp} -> batch_id={dest} failed; "
-                "aborting with sources intact (nothing was deleted)"
-            )
-        record_wseq(spark, store_dir, f"batch_id={dest}")
-        for g in src_add:
-            if g != dest:
-                fs.delete(HPath(f"{store_dir}/batch_id={g}"), True)
-        for k in src_fl:
-            fs.delete(HPath(f"{store_dir}/backfill_floor={k}"), True)
-        return len(src_add) + len(src_fl)
+        """Floor-aware compaction (commit_compaction): the compacted
+        generation holds the key-grain RESOLVED partials at coverage
+        upto_batch_id, computed by the same selection and merge the
+        readers start from, in one file. Returns the number of
+        generations merged."""
+        ls = list_store(spark, store_dir)
+
+        def _write(tmp: str) -> None:
+            self._merged(spark, ls, upto=upto_batch_id).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(tmp)
+
+        return commit_compaction(spark, ls, upto_batch_id, _write)
 
 
 # ---------------------------------------------------------------------------
-# Row-store deletion (tombstones): the governance operation — remove
-# specific keys (a revoked document, a right-to-be-forgotten user's
-# vectors) from an append-only index without rewriting it in place. A
-# tombstone generation `tombstone_floor=K` holds the KEYS to delete and
-# declares that matching rows in additive generations covering <= K are
-# dead; a key re-ingested in a LATER batch is a fresh insert and survives.
-# Same reader-safety story as backfill: the dir appears atomically,
-# readers resolve precedence (a compacted generation -m retires tombstones
-# with floor <= m — their deletions were materialized), and compaction
-# sweeps the dead dirs.
+# Row-index stores: the LSH band index, the FTS index and the IVF index.
+# Each generation holds rows keyed by one column (doc_id, vec_id), laid
+# out under one hive partition column or none. Deletion is the governance
+# operation — remove specific keys (a revoked document, a
+# right-to-be-forgotten user's vectors) from an append-only index without
+# rewriting it in place: a tombstone generation `tombstone_floor=K` holds
+# the KEYS to delete and declares that matching rows in generations
+# covering <= K are dead; a key re-ingested in a LATER batch is a fresh
+# insert and survives. Readers resolve precedence (a compacted generation
+# retires tombstones at or below its coverage — their deletions were
+# materialized) and compaction sweeps the dead dirs.
 # ---------------------------------------------------------------------------
 
 
-def _tombstone_dirs(spark: SparkSession, index_dir: str) -> list[tuple[int, str]]:
-    """(floor, dir-name) for every tombstone dir. Tombstone dirs are
-    APPEND-ONLY as a set: each delete call creates a NEW dir
-    `tombstone_floor=<K>` or `tombstone_floor=<K>_<serial>` rather than
-    overwriting — a second deletion at the same floor must not wipe the
-    first one's keys (they union on read), and never rewriting an
-    existing dir keeps every instant reader-safe with no swap window.
-    The floor parses from the part before the serial suffix."""
-    out = []
-    for name in _list_names(spark, index_dir):
-        if not name.startswith("tombstone_floor="):
-            continue
-        try:
-            out.append((int(name.split("=", 1)[1].split("_")[0]), name))
-        except ValueError:
-            continue
-    return sorted(out)
+@dataclass(frozen=True)
+class IndexStore:
+    """One row-index store declaration.
 
+      * `key` — the column a tombstone names;
+      * `partition_by` — the hive partition column every generation is
+        written under (None: unpartitioned);
+      * `compact_files` — how a compacted generation is laid out: hash-
+        repartitioned on `partition_by` into that many tasks (one file
+        per partition value), or coalesced to that many files when
+        unpartitioned; None writes the kept rows as they come;
+      * `layout` — a versioned layout-marker name stamped on a new store
+        and required of any store holding generations, so a store
+        written under an earlier layout raises instead of being misread;
+      * `check(spark, listing)` — an invariant asserted before every
+        compaction, which would otherwise fold a violation out of sight."""
 
-def tombstone_floors(spark: SparkSession, index_dir: str) -> list[int]:
-    """Distinct tombstone floors present under index_dir."""
-    return sorted({k for k, _ in _tombstone_dirs(spark, index_dir)})
+    key: str
+    partition_by: str | None = None
+    compact_files: int | None = None
+    layout: str | None = None
+    check: Callable[[SparkSession, StoreListing], None] | None = None
 
-
-def write_tombstones(spark: SparkSession, index_dir: str, keys_df, floor: int) -> None:
-    """Write a tombstone generation: `keys_df` holds the key columns of
-    the rows to delete from generations covering <= floor. Each call
-    lands in a FRESH dir (serial-suffixed when the floor is reused) —
-    deletions at the same floor accumulate by union instead of the
-    overwrite that would silently resurrect earlier deletions, and
-    readers never observe a dir being rewritten. Floor contract: above
-    the newest compacted coverage (deletions at or below it were
-    already materialized or are unreachable), covering only committed
-    batches."""
-    m_star = max(
-        [coverage(g) for g in generation_ids(spark, index_dir) if g < 0],
-        default=-1,
-    )
-    if floor <= m_star:
-        raise ValueError(
-            f"tombstone floor {floor} is at or below the newest compacted "
-            f"coverage {m_star}: those generations were already materialized. "
-            "Tombstone above the compaction frontier."
-        )
-    existing = {name for _, name in _tombstone_dirs(spark, index_dir)}
-    name = f"tombstone_floor={floor}"
-    serial = 2
-    while name in existing:
-        name = f"tombstone_floor={floor}_{serial}"
-        serial += 1
-    stamp_protocol(spark, index_dir)
-    keys_df.distinct().write.mode("overwrite").parquet(f"{index_dir}/{name}")
-    record_wseq(spark, index_dir, name)
-
-
-def kept_index_rows(
-    spark: SparkSession,
-    index_dir: str,
-    key_cols: list[str],
-    upto: int | None = None,
-):
-    """Row-store counterpart of PartialsStore._kept: the live generations'
-    rows minus tombstoned ones — a row from a generation with coverage c
-    is dead iff some applicable tombstone for its key has floor >= c.
-    Returns all data columns plus the hive partition columns (batch_id,
-    and e.g. list_id for the ANN layout); readers that don't want
-    batch_id drop it. ONE selection shared by search paths, probe paths,
-    and the compactor."""
-    from functools import reduce
-
-    from pyspark.sql import functions as F
-
-    ids = live_generation_ids(generation_ids(spark, index_dir))
-    m_star = max([coverage(g) for g in ids if g < 0], default=-1)
-    tdirs = [(k, name) for k, name in _tombstone_dirs(spark, index_dir) if k > m_star]
-    if upto is not None:
-        if upto < m_star:
-            raise ValueError(
-                f"snapshot at batch {upto} was retired by a compaction "
-                f"covering {m_star}: time travel reaches back only to the "
-                "newest compacted coverage. Recompute from facts for "
-                "older snapshots."
+    def listing(self, spark: SparkSession, index_dir: str) -> StoreListing:
+        ls = list_store(spark, index_dir)
+        if self.layout is not None:
+            ls.require(
+                self.layout,
+                "it was written under an earlier layout of this store (or with "
+                "other layout parameters) and would be misread. Rebuild it from "
+                "its source rows.",
             )
-        ids = [g for g in ids if coverage(g) <= upto]
-        tdirs = [(k, name) for k, name in tdirs if k <= upto]
-    if not ids:
-        raise ValueError(f"index store {index_dir} has no live generations")
-    rows = read_generation_dirs(
-        spark, [f"{index_dir}/batch_id={g}" for g in ids], index_dir
-    )
-    if not tdirs:
-        return rows
-    # per-dir reads with the floor attached as a literal (serial-suffixed
-    # dir names are not hive-parsable, by design — see _tombstone_dirs);
-    # keys renamed so the anti-join condition names each side unambiguously
-    tkeys = [f"_t{i}" for i in range(len(key_cols))]
-    tombs = reduce(
-        lambda a, b: a.unionByName(b),
-        [
-            read_generation_dirs(spark, [f"{index_dir}/{name}"]).select(
-                *[F.col(c).alias(t) for c, t in zip(key_cols, tkeys)], F.lit(k).alias("_tf")
-            )
-            for k, name in tdirs
-        ],
-    )
-    dead = reduce(
-        lambda a, b: a & b,
-        [F.col(c) == F.col(t) for c, t in zip(key_cols, tkeys)],
-    ) & (F.col("_tf") >= _coverage_col())
-    return rows.join(F.broadcast(tombs), dead, "left_anti")
+        return ls
 
+    def _writer(self, rows: DataFrame):
+        w = rows.write.mode("overwrite")
+        return w.partitionBy(self.partition_by) if self.partition_by else w
 
-def compact_index_rows(
-    spark: SparkSession,
-    index_dir: str,
-    upto_batch_id: int,
-    key_cols: list[str],
-    write_kept,
-    min_sources: int = 2,
-) -> int:
-    """Tombstone-aware row-store compaction: materialize the reader's own
-    selection (kept_index_rows restricted to coverage <= upto) into one
-    compacted generation via `write_kept(kept_df, tmp_dir)` (each index
-    keeps its own layout — coalesce for band rows, partitionBy(list_id)
-    for ANN lists), renamed in atomically as batch_id=compacted_id(m)
-    where m covers both the consumed additive generations and the
-    consumed tombstones;
-    then delete sources and consumed tombstone dirs, sweeping dead dirs
-    from both namespaces. Returns the number of generations (additive +
-    tombstone) merged."""
-    HPath, fs = _fs(spark, index_dir)
-    all_ids = generation_ids(spark, index_dir)
-    live = live_generation_ids(all_ids)
-    m_star = max([coverage(g) for g in live if g < 0], default=-1)
-    tdirs = _tombstone_dirs(spark, index_dir)
-    for g in set(all_ids) - set(live):
-        fs.delete(HPath(f"{index_dir}/batch_id={g}"), True)
-    for k, name in tdirs:
-        if k <= m_star:
-            fs.delete(HPath(f"{index_dir}/{name}"), True)
-    src_add = [g for g in live if coverage(g) <= upto_batch_id]
-    src_t = [(k, name) for k, name in tdirs if m_star < k <= upto_batch_id]
-    if len(src_add) + len(src_t) < max(min_sources, 1):
-        return 0
-    if all(g < 0 for g in src_add) and not src_t:
-        return 0  # lone compacted gen: nothing new arrived at this coverage
-    m = max([coverage(g) for g in src_add] + [k for k, _ in src_t])
-    dest = compacted_id(m)
-    kept = kept_index_rows(spark, index_dir, key_cols, upto=upto_batch_id).drop(
-        "batch_id"
-    )
-    tmp = f"{index_dir}/.compact_tmp_{m}"
-    fs.delete(HPath(tmp), True)
-    write_kept(kept, tmp)
-    if not fs.rename(HPath(tmp), HPath(f"{index_dir}/batch_id={dest}")):
-        raise IOError(
-            f"compact_index_rows: rename {tmp} -> batch_id={dest} failed; "
-            "aborting with sources intact (nothing was deleted)"
+    def write(self, spark: SparkSession, ls: StoreListing, rows: DataFrame, batch_id: int) -> None:
+        """Land one micro-batch's rows under `batch_id=N` (one overwrite,
+        so a replay is idempotent), stamping a new store's markers."""
+        _stamp(spark, ls, self.layout)
+        self._writer(rows).parquet(f"{ls.root}/batch_id={batch_id}")
+
+    def rows(self, spark: SparkSession, ls: StoreListing, upto: int | None = None) -> DataFrame:
+        """The kept rows of the listing — the live generations' rows minus
+        tombstoned ones: a row from a generation with coverage c is dead
+        iff some applicable tombstone for its key has floor >= c. All data
+        columns plus the hive partition columns (batch_id, and the
+        store's `partition_by`). ONE selection shared by search paths,
+        probe paths and the compactor."""
+        from functools import reduce
+
+        from pyspark.sql import functions as F
+
+        ids, tombs = ls.kept(upto)
+        if not ids:
+            raise ValueError(f"index store {ls.root} has no live generations")
+        rows = read_generation_dirs(spark, ls.dirs(ids), ls.root)
+        if not tombs:
+            return rows
+        # per-dir reads with the floor attached as a literal (serial-suffixed
+        # dir names are not hive-parsable, by design — see StoreListing);
+        # the key renamed so the anti-join condition names each side
+        # unambiguously
+        dead = reduce(
+            lambda a, b: a.unionByName(b),
+            [
+                read_generation_dirs(spark, [f"{ls.root}/{name}"]).select(
+                    F.col(self.key).alias("_t"), F.lit(k).alias("_tf")
+                )
+                for k, name in tombs
+            ],
         )
-    record_wseq(spark, index_dir, f"batch_id={dest}")
-    for g in src_add:
-        if g != dest:
-            fs.delete(HPath(f"{index_dir}/batch_id={g}"), True)
-    for _, name in src_t:
-        fs.delete(HPath(f"{index_dir}/{name}"), True)
-    return len(src_add) + len(src_t)
+        hit = (F.col(self.key) == F.col("_t")) & (F.col("_tf") >= _coverage_col())
+        return rows.join(F.broadcast(dead), hit, "left_anti")
+
+    def kept(self, spark: SparkSession, index_dir: str, upto: int | None = None) -> DataFrame:
+        return self.rows(spark, self.listing(spark, index_dir), upto)
+
+    def delete(
+        self, spark: SparkSession, index_dir: str, keys: DataFrame, floor_batch_id: int
+    ) -> None:
+        """Write a tombstone generation holding the distinct `key` values
+        of `keys`: every read immediately excludes their rows from
+        generations covering <= floor_batch_id, and the next compaction
+        materializes the removal. Each call lands in a FRESH dir
+        (serial-suffixed when the floor is reused), so deletions at one
+        floor accumulate by union. Floor contract: above the newest
+        compacted coverage, covering only committed batches."""
+        ls = self.listing(spark, index_dir)
+        ls.check_floor("tombstone", floor_batch_id)
+        name, serial = f"tombstone_floor={floor_batch_id}", 2
+        while name in ls.names:
+            name, serial = f"tombstone_floor={floor_batch_id}_{serial}", serial + 1
+        _stamp(spark, ls, self.layout)
+        keys.select(self.key).distinct().write.mode("overwrite").parquet(f"{index_dir}/{name}")
+        record_wseq(spark, ls, name)
+
+    def compact(self, spark: SparkSession, index_dir: str, upto_batch_id: int) -> int:
+        """Tombstone-aware compaction (commit_compaction): the compacted
+        generation holds the reader's own kept rows at coverage
+        upto_batch_id — deletions with floor <= upto_batch_id physically
+        leave the index — in the store's layout (`compact_files`). Only
+        compact batches the stream's checkpoint has committed: a replay
+        can only re-run the LAST uncommitted batch. Returns the number of
+        generations (additive + tombstone) merged."""
+        ls = self.listing(spark, index_dir)
+        if self.check is not None:
+            self.check(spark, ls)
+
+        def _write(tmp: str) -> None:
+            rows = self.rows(spark, ls, upto_batch_id).drop("batch_id")
+            if self.compact_files and self.partition_by:
+                rows = rows.repartition(self.compact_files, self.partition_by)
+            elif self.compact_files:
+                rows = rows.coalesce(self.compact_files)
+            self._writer(rows).parquet(tmp)
+
+        return commit_compaction(spark, ls, upto_batch_id, _write)

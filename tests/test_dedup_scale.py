@@ -578,3 +578,22 @@ def test_winnowing_local_guarantee_and_short_docs(spark):
     # its RIGHTMOST position: 4 and 5. A leftmost tie-break would give
     # [1, 2] instead, so this pins the direction.
     assert tie_rows == [4, 5]
+
+
+def test_connected_components_distributed_branch_raises_unconverged(spark, monkeypatch):
+    """Min-label propagation needs as many rounds as the graph's diameter:
+    on a 10-node path the distributed branch raises at max_iterations=3
+    rather than return truncated labels, and with the default cap its
+    rows equal the union-find branch's."""
+    from pdf_brain_spark.operators import dedup
+
+    path = [(i, i + 1) for i in range(9)] + [(20, 21)]
+    pairs = spark.createDataFrame(path, "doc_a long, doc_b long")
+    union_find = sorted(tuple(r) for r in dedup.connected_components(pairs).collect())
+    assert union_find == [(n, 0) for n in range(10)] + [(20, 20), (21, 20)]
+
+    monkeypatch.setattr(dedup, "UNION_FIND_MAX_EDGES", 0)
+    with pytest.raises(ValueError, match="did not converge"):
+        dedup.connected_components(pairs, max_iterations=3)
+    distributed = sorted(tuple(r) for r in dedup.connected_components(pairs).collect())
+    assert distributed == union_find

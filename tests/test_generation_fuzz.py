@@ -35,7 +35,7 @@ def _model_rollup(model_rows):
 def test_partials_store_fuzz_against_model(spark, tmp_path):
     from pdf_brain_spark.sources.loaders import load_table
     from pdf_brain_spark.streaming.events import ROLLUP, backfill_rollup
-    from pdf_brain_spark.streaming.generations import backfill_floors
+    from pdf_brain_spark.streaming.generations import list_store
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
         "event_id", "event_type", "ts", "value"
@@ -90,15 +90,15 @@ def test_partials_store_fuzz_against_model(spark, tmp_path):
                 # re-measure one already-ingested slice's buckets at 2x,
                 # at the current committed floor (must exceed compacted
                 # coverage and be unused — skip otherwise)
-                if committed in corrected_floors or committed in backfill_floors(spark, roll):
+                if committed in corrected_floors or committed in list_store(spark, roll).floors:
                     continue
                 from pdf_brain_spark.streaming.generations import (
                     coverage,
-                    generation_ids,
+                    list_store,
                 )
 
                 m_star = max(
-                    [coverage(g) for g in generation_ids(spark, roll) if g < 0],
+                    [coverage(g) for g in list_store(spark, roll).raw if g < 0],
                     default=-1,
                 )
                 if committed <= m_star:
@@ -132,14 +132,12 @@ def test_row_store_fuzz_against_model(spark, tmp_path):
     from pdf_brain_spark.operators.clustering import kmeans_assign
     from pdf_brain_spark.sources.loaders import load_table
     from pdf_brain_spark.streaming.ann_ingest import (
+        IVF_INDEX,
         compact_ann_index,
         delete_vectors,
         make_ann_ingest_batch_fn,
     )
-    from pdf_brain_spark.streaming.generations import (
-        generation_ids,
-        kept_index_rows,
-    )
+    from pdf_brain_spark.streaming.generations import list_store
 
     emb = load_table(spark, "embeddings", "/root/testdata/sf0.001").select(
         "vec_id", "embedding"
@@ -185,12 +183,12 @@ def test_row_store_fuzz_against_model(spark, tmp_path):
             if committed >= 0:
                 got = {
                     r["vec_id"]
-                    for r in kept_index_rows(spark, idx, ["vec_id"]).collect()
+                    for r in IVF_INDEX.kept(spark, idx).collect()
                 }
                 assert got == alive, f"seed={seed} step={step} op={op} diverged"
                 # ids sane: negative generations must never collide with
                 # positive ones (the coverage-0 class)
-                gens = generation_ids(spark, idx)
+                gens = list_store(spark, idx).raw
                 assert len(gens) == len(set(gens))
 
         shutil.rmtree(idx, ignore_errors=True)

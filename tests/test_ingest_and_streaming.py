@@ -4,6 +4,14 @@ import pytest
 from pyspark.sql import functions as F
 
 
+def _live_dirs(spark, store):
+    """Paths of a store's live generations."""
+    from pdf_brain_spark.streaming.generations import list_store
+
+    ls = list_store(spark, store)
+    return ls.dirs(ls.live)
+
+
 @pytest.fixture()
 def file_df(spark):
     body_a = ("Sentence one about spark joins. " * 30).strip()
@@ -371,7 +379,7 @@ def test_compact_band_index_preserves_probe_semantics(spark, tmp_path):
     import os
 
     n_dirs_before = sum(d.startswith("batch_id=") for d in os.listdir(idx))
-    merged = compact_band_index(spark, idx, upto_batch_id=2, n_files=1)
+    merged = compact_band_index(spark, idx, upto_batch_id=2)
     assert merged == 3 and n_dirs_before == 4  # 0,1,2 merged; dir 3 untouched
     dirs_after = sorted(d for d in os.listdir(idx) if d.startswith("batch_id="))
     # compacted generation lands under the NEGATIVE id (generation
@@ -496,11 +504,9 @@ def test_compact_ann_index_preserves_search(spark, tmp_path):
     assert results(8) == before_exh
     # the stream keeps appending after compaction; totals stay lossless
     fn(emb.filter(F.col("vec_id") % 3 == 0).withColumn("vec_id", F.col("vec_id") + 10000), 3)
-    from pdf_brain_spark.streaming.generations import live_generation_dirs
-
     n = (
         spark.read.option("basePath", idx)
-        .parquet(*live_generation_dirs(spark, idx))
+        .parquet(*_live_dirs(spark, idx))
         .count()
     )
     assert n == emb.count() + emb.filter(F.col("vec_id") % 3 == 0).count()
@@ -576,7 +582,7 @@ def test_generation_protocol_mid_compaction_reader_safety(spark, tmp_path):
     from pdf_brain_spark.sources.loaders import load_table
     from pdf_brain_spark.streaming.events import ROLLUP, read_rollup
     from pdf_brain_spark.streaming.generations import (
-        generation_ids,
+        list_store,
         live_generation_ids,
     )
 
@@ -609,20 +615,20 @@ def test_generation_protocol_mid_compaction_reader_safety(spark, tmp_path):
     for b in (0, 1):
         shutil.copytree(f"{roll}/batch_id={b}", str(tmp_path / f"bak{b}"))
     assert ROLLUP.compact(spark, roll, upto_batch_id=1) == 2
-    assert generation_ids(spark, roll) == [-2, 2]
+    assert list_store(spark, roll).raw == [-2, 2]
     for b in (0, 1):
         shutil.copytree(str(tmp_path / f"bak{b}"), f"{roll}/batch_id={b}")
-    assert generation_ids(spark, roll) == [-2, 0, 1, 2]  # raw listing: stale dirs present
+    assert list_store(spark, roll).raw == [-2, 0, 1, 2]  # raw listing: stale dirs present
     assert served() == before  # precedence hides them: no double counting
 
     # the next sweep garbage-collects the stale dirs without re-merging
     assert ROLLUP.compact(spark, roll, upto_batch_id=1) == 0
-    assert generation_ids(spark, roll) == [-2, 2]
+    assert list_store(spark, roll).raw == [-2, 2]
     assert served() == before
 
     # chained compaction over a compacted generation: -2 + 2 -> -3
     assert ROLLUP.compact(spark, roll, upto_batch_id=2) == 2
-    assert generation_ids(spark, roll) == [-3]
+    assert list_store(spark, roll).raw == [-3]
     assert served() == before
     # compacted partials are bucket-grain: one row per (type, hour)
     n_rows = spark.read.parquet(f"{roll}/batch_id=-3").count()
@@ -645,10 +651,7 @@ def test_refit_ann_index_recovers_recall_after_drift(spark, tmp_path):
         read_index_centroids,
         refit_ann_index,
     )
-    from pdf_brain_spark.streaming.generations import (
-        generation_ids,
-        live_generation_dirs,
-    )
+    from pdf_brain_spark.streaming.generations import list_store
 
     A = synthetic_clustered_embeddings(spark, n=2000, dim=32, n_centers=8, spread=0.12, seed=11)
     B = synthetic_clustered_embeddings(spark, n=2000, dim=32, n_centers=8, spread=0.12, seed=99)
@@ -682,8 +685,8 @@ def test_refit_ann_index_recovers_recall_after_drift(spark, tmp_path):
     # measured on this seeded fixture: 0.70 -> 0.98
     assert after > before and after >= 0.85
     # rewrite is lossless and lands as one compacted generation
-    assert generation_ids(spark, idx) == [-2]
-    n = spark.read.option("basePath", idx).parquet(*live_generation_dirs(spark, idx)).count()
+    assert list_store(spark, idx).raw == [-2]
+    n = spark.read.option("basePath", idx).parquet(*_live_dirs(spark, idx)).count()
     assert n == 4000
     # centroids persisted with the index, byte-equal round-trip
     assert read_index_centroids(spark, idx) == new_cents
@@ -764,7 +767,7 @@ def test_rollup_backfill_replacement_semantics(spark, tmp_path):
 
     from pdf_brain_spark.sources.loaders import load_table
     from pdf_brain_spark.streaming.events import ROLLUP, backfill_rollup, read_rollup
-    from pdf_brain_spark.streaming.generations import backfill_floors, generation_ids
+    from pdf_brain_spark.streaming.generations import list_store
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
         "event_id", "event_type", "ts", "value"
@@ -828,8 +831,8 @@ def test_rollup_backfill_replacement_semantics(spark, tmp_path):
     # compaction resolves floors with the reader's own selection
     shutil.copytree(f"{roll}/backfill_floor=2", str(tmp_path / "bak_fl"))
     assert ROLLUP.compact(spark, roll, upto_batch_id=3) == 5  # gens 0-3 + 1 backfill
-    assert generation_ids(spark, roll) == [-4]
-    assert backfill_floors(spark, roll) == []
+    assert list_store(spark, roll).raw == [-4]
+    assert list_store(spark, roll).floors == []
     assert served() == got2
 
     # a resurrected dead backfill dir (floor 2 <= compacted coverage 3)
@@ -837,7 +840,7 @@ def test_rollup_backfill_replacement_semantics(spark, tmp_path):
     shutil.copytree(str(tmp_path / "bak_fl"), f"{roll}/backfill_floor=2")
     assert served() == got2
     assert ROLLUP.compact(spark, roll, upto_batch_id=3) == 0
-    assert backfill_floors(spark, roll) == []
+    assert list_store(spark, roll).floors == []
 
     # floor at or below the compaction frontier is refused
     with _pytest.raises(ValueError):
@@ -856,7 +859,7 @@ def test_histogram_backfill_type_grain_replacement(spark, tmp_path):
         VALUE_HISTOGRAM,
         read_histogram_percentiles,
     )
-    from pdf_brain_spark.streaming.generations import backfill_floors, generation_ids
+    from pdf_brain_spark.streaming.generations import list_store
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
         "event_id", "event_type", "value"
@@ -890,8 +893,8 @@ def test_histogram_backfill_type_grain_replacement(spark, tmp_path):
     # compaction materializes the per-type resolution, retires the dir
     n = VALUE_HISTOGRAM.compact(spark, hist, upto_batch_id=1)
     assert n == 3  # 2 additive gens + 1 backfill
-    assert generation_ids(spark, hist) == [-2]
-    assert backfill_floors(spark, hist) == []
+    assert list_store(spark, hist).raw == [-2]
+    assert list_store(spark, hist).floors == []
     assert served() == got
 
 
@@ -904,6 +907,7 @@ def test_index_deletion_tombstones(spark, tmp_path):
     from pdf_brain_spark.operators.clustering import kmeans_assign
     from pdf_brain_spark.sources.loaders import load_table
     from pdf_brain_spark.streaming.ann_ingest import (
+        IVF_INDEX,
         compact_ann_index,
         delete_vectors,
         ivf_search_persisted,
@@ -913,11 +917,7 @@ def test_index_deletion_tombstones(spark, tmp_path):
         delete_documents,
         make_incremental_dedup_batch_fn,
     )
-    from pdf_brain_spark.streaming.generations import (
-        generation_ids,
-        kept_index_rows,
-        tombstone_floors,
-    )
+    from pdf_brain_spark.streaming.generations import list_store
 
     emb = load_table(spark, "embeddings", "/root/testdata/sf0.001").select(
         "vec_id", "label", "embedding"
@@ -955,8 +955,8 @@ def test_index_deletion_tombstones(spark, tmp_path):
     # compaction materializes: bytes gone, tombstone retired, search same
     n_alive = emb.count() - len(dead_ids)
     assert compact_ann_index(spark, idx, upto_batch_id=1) == 3  # 2 gens + 1 tombstone
-    assert generation_ids(spark, idx) == [-2] and tombstone_floors(spark, idx) == []
-    assert kept_index_rows(spark, idx, ["vec_id"]).count() == n_alive
+    assert list_store(spark, idx).raw == [-2] and list_store(spark, idx).floors == []
+    assert IVF_INDEX.kept(spark, idx).count() == n_alive
     assert topk() == want
 
     # re-ingest one deleted vector AFTER the floor: fresh insert, served
@@ -964,7 +964,7 @@ def test_index_deletion_tombstones(spark, tmp_path):
     fn(revived, 2)
     assert sorted(dead_ids)[0] in {
         r["vec_id"]
-        for r in kept_index_rows(spark, idx, ["vec_id"]).collect()
+        for r in IVF_INDEX.kept(spark, idx).collect()
     }
 
     # band-index side: a deleted doc stops generating candidate pairs
@@ -1026,13 +1026,11 @@ def test_tombstone_same_floor_accumulates(spark, tmp_path):
     from pdf_brain_spark.operators.clustering import kmeans_assign
     from pdf_brain_spark.sources.loaders import load_table
     from pdf_brain_spark.streaming.ann_ingest import (
+        IVF_INDEX,
         delete_vectors,
         make_ann_ingest_batch_fn,
     )
-    from pdf_brain_spark.streaming.generations import (
-        kept_index_rows,
-        tombstone_floors,
-    )
+    from pdf_brain_spark.streaming.generations import list_store
 
     emb = load_table(spark, "embeddings", "/root/testdata/sf0.001").select(
         "vec_id", "embedding"
@@ -1045,8 +1043,8 @@ def test_tombstone_same_floor_accumulates(spark, tmp_path):
     b = emb.filter((F.col("vec_id") >= 5) & (F.col("vec_id") < 10)).select("vec_id")
     delete_vectors(spark, idx, a, floor_batch_id=0)
     delete_vectors(spark, idx, b, floor_batch_id=0)  # same floor, new dir
-    assert tombstone_floors(spark, idx) == [0]
-    alive = {r["vec_id"] for r in kept_index_rows(spark, idx, ["vec_id"]).collect()}
+    assert list_store(spark, idx).floors == [0]
+    alive = {r["vec_id"] for r in IVF_INDEX.kept(spark, idx).collect()}
     assert alive.isdisjoint(set(range(10)))
     assert len(alive) == emb.count() - 10
 
@@ -1067,16 +1065,13 @@ def test_coverage_zero_compaction_and_refit(spark, tmp_path):
     from pdf_brain_spark.operators.clustering import kmeans_assign
     from pdf_brain_spark.sources.loaders import load_table
     from pdf_brain_spark.streaming.ann_ingest import (
+        IVF_INDEX,
         compact_ann_index,
         delete_vectors,
         make_ann_ingest_batch_fn,
         refit_ann_index,
     )
-    from pdf_brain_spark.streaming.generations import (
-        generation_ids,
-        kept_index_rows,
-        tombstone_floors,
-    )
+    from pdf_brain_spark.streaming.generations import list_store
 
     emb = load_table(spark, "embeddings", "/root/testdata/sf0.001").select(
         "vec_id", "embedding"
@@ -1090,9 +1085,9 @@ def test_coverage_zero_compaction_and_refit(spark, tmp_path):
 
     # (1) lone batch 0 + floor-0 tombstone: compacts to -1, materialized
     assert compact_ann_index(spark, idx, upto_batch_id=0) == 2
-    assert generation_ids(spark, idx) == [-1]
-    assert tombstone_floors(spark, idx) == []
-    alive = {r["vec_id"] for r in kept_index_rows(spark, idx, ["vec_id"]).collect()}
+    assert list_store(spark, idx).raw == [-1]
+    assert list_store(spark, idx).floors == []
+    alive = {r["vec_id"] for r in IVF_INDEX.kept(spark, idx).collect()}
     assert len(alive) == emb.count() - n_dead
     assert not any(v % 11 == 0 for v in alive)
 
@@ -1101,12 +1096,12 @@ def test_coverage_zero_compaction_and_refit(spark, tmp_path):
     make_ann_ingest_batch_fn(idx2, cents)(emb, 0)
     _, merged = refit_ann_index(spark, idx2, upto_batch_id=0, n_lists=8, seed=42)
     assert merged == 1
-    assert generation_ids(spark, idx2) == [-1]
-    assert kept_index_rows(spark, idx2, ["vec_id"]).count() == emb.count()
+    assert list_store(spark, idx2).raw == [-1]
+    assert IVF_INDEX.kept(spark, idx2).count() == emb.count()
 
     # (3) partials store: batch 0 + a floor-0 backfill compact to -1
     from pdf_brain_spark.streaming.events import ROLLUP, backfill_rollup, read_rollup
-    from pdf_brain_spark.streaming.generations import backfill_floors
+    from pdf_brain_spark.streaming.generations import list_store
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
         "event_id", "event_type", "ts", "value"
@@ -1123,8 +1118,8 @@ def test_coverage_zero_compaction_and_refit(spark, tmp_path):
         for r in read_rollup(spark, roll).collect()
     )
     assert ROLLUP.compact(spark, roll, upto_batch_id=0) == 2
-    assert generation_ids(spark, roll) == [-1]
-    assert backfill_floors(spark, roll) == []
+    assert list_store(spark, roll).raw == [-1]
+    assert list_store(spark, roll).floors == []
     got = sorted(
         (r["event_type"], str(r["window_start"]), r["n_events"], r["total_value"])
         for r in read_rollup(spark, roll).collect()
@@ -1145,10 +1140,7 @@ def test_streaming_fts_index_matches_oneshot_and_deletes(spark, tmp_path):
         fts_search_persisted,
         make_fts_postings_batch_fn,
     )
-    from pdf_brain_spark.streaming.generations import (
-        generation_ids,
-        tombstone_floors,
-    )
+    from pdf_brain_spark.streaming.generations import list_store
 
     docs = load_table(spark, "documents", "/root/testdata/sf0.001").select(
         "doc_id", "text"
@@ -1200,7 +1192,7 @@ def test_streaming_fts_index_matches_oneshot_and_deletes(spark, tmp_path):
 
     # compaction materializes the deletion, serving unchanged
     assert compact_fts_index(spark, idx, upto_batch_id=1) == 3
-    assert generation_ids(spark, idx) == [-2] and tombstone_floors(spark, idx) == []
+    assert list_store(spark, idx).raw == [-2] and list_store(spark, idx).floors == []
     assert served() == want_after
 
 
@@ -1249,7 +1241,7 @@ def test_streaming_ohlc_replay_merge_compact(spark, tmp_path):
     from pdf_brain_spark.operators.temporal import ohlc_bars
     from pdf_brain_spark.sources.loaders import load_table
     from pdf_brain_spark.streaming.events import OHLC, read_ohlc
-    from pdf_brain_spark.streaming.generations import generation_ids
+    from pdf_brain_spark.streaming.generations import list_store
     from pdf_brain_spark.sources.loaders import load_table
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
@@ -1284,7 +1276,7 @@ def test_streaming_ohlc_replay_merge_compact(spark, tmp_path):
 
     # compaction with the min/max monoid: bar-grain state, serving fixed
     assert OHLC.compact(spark, store, upto_batch_id=2) == 3
-    assert generation_ids(spark, store) == [-3]
+    assert list_store(spark, store).raw == [-3]
     assert served() == want
     n_bars = len(want)
     assert spark.read.parquet(f"{store}/batch_id=-3").count() == n_bars
@@ -1345,7 +1337,7 @@ def test_ohlc_backfill_replacement_monoid(spark, tmp_path):
     from pdf_brain_spark.operators.temporal import ohlc_bars
     from pdf_brain_spark.sources.loaders import load_table
     from pdf_brain_spark.streaming.events import OHLC, read_ohlc
-    from pdf_brain_spark.streaming.generations import backfill_floors, generation_ids
+    from pdf_brain_spark.streaming.generations import list_store
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
         "event_id", "event_type", "ts", "value"
@@ -1388,8 +1380,8 @@ def test_ohlc_backfill_replacement_monoid(spark, tmp_path):
 
     # monoid compaction materializes and retires the backfill dir
     assert OHLC.compact(spark, store, upto_batch_id=1) == 3
-    assert generation_ids(spark, store) == [-2]
-    assert backfill_floors(spark, store) == []
+    assert list_store(spark, store).raw == [-2]
+    assert list_store(spark, store).floors == []
     assert served() == want
 
 
@@ -1507,7 +1499,7 @@ def test_generation_protocol_marker(spark, tmp_path):
     from pdf_brain_spark.streaming.events import ROLLUP
     from pdf_brain_spark.streaming.generations import (
         PROTOCOL_MARKER,
-        generation_ids,
+        list_store,
         stamp_protocol,
     )
 
@@ -1517,12 +1509,12 @@ def test_generation_protocol_marker(spark, tmp_path):
     roll = str(tmp_path / "roll")
     ROLLUP.batch_fn(roll)(ev, 0)
     assert os.path.exists(os.path.join(roll, PROTOCOL_MARKER))
-    assert generation_ids(spark, roll) == [0]
+    assert list_store(spark, roll).raw == [0]
 
     # simulate a pre-v2 store: generation dirs, no marker
     os.remove(os.path.join(roll, PROTOCOL_MARKER))
     with _pytest.raises(ValueError, match="predates|marker"):
-        generation_ids(spark, roll)
+        list_store(spark, roll).raw
     # a WRITER hitting the same store must not launder it either: the
     # resumed-stream upgrade path raises instead of stamping
     # (self-review r8 finding)
@@ -1530,9 +1522,9 @@ def test_generation_protocol_marker(spark, tmp_path):
         stamp_protocol(spark, roll)
     # explicit operator override after verifying no negative generations
     stamp_protocol(spark, roll, force=True)
-    assert generation_ids(spark, roll) == [0]
+    assert list_store(spark, roll).raw == [0]
     # an empty/nonexistent store is fine without a marker
-    assert generation_ids(spark, str(tmp_path / "nothing")) == []
+    assert list_store(spark, str(tmp_path / "nothing")).raw == []
 
 
 def test_time_travel_below_compacted_coverage_specific_error(spark, tmp_path):
@@ -1625,7 +1617,7 @@ def test_streaming_kmv_replay_merge_compact(spark, tmp_path):
     from pdf_brain_spark.functions.sql import Fragment
     from pdf_brain_spark.functions.text import md5_long
     from pdf_brain_spark.streaming.events import KMV, KMV_K, read_kmv
-    from pdf_brain_spark.streaming.generations import generation_ids
+    from pdf_brain_spark.streaming.generations import list_store
     from pdf_brain_spark.sources.loaders import load_table
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
@@ -1673,7 +1665,7 @@ def test_streaming_kmv_replay_merge_compact(spark, tmp_path):
 
     # compaction with the set-union monoid preserves serving
     assert KMV.compact(spark, store, upto_batch_id=2) == 3
-    assert generation_ids(spark, store) == [-3]
+    assert list_store(spark, store).raw == [-3]
     assert served() == want
 
 
@@ -1689,7 +1681,7 @@ def test_streaming_regression_replay_merge_compact(spark, tmp_path):
         read_regression,
         regression_fit_exprs,
     )
-    from pdf_brain_spark.streaming.generations import generation_ids
+    from pdf_brain_spark.streaming.generations import list_store
     from pdf_brain_spark.sources.loaders import load_table
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
@@ -1725,7 +1717,7 @@ def test_streaming_regression_replay_merge_compact(spark, tmp_path):
     assert got == want and got
 
     assert REGRESSION.compact(spark, store, upto_batch_id=2) == 3
-    assert generation_ids(spark, store) == [-3]
+    assert list_store(spark, store).raw == [-3]
     assert served() == want
 
 
@@ -1736,7 +1728,7 @@ def test_streaming_bitmap_exact_distinct_and_compact(spark, tmp_path):
     rows in a different batch cannot inflate the count), and compaction
     with the OR monoid preserves serving."""
     from pdf_brain_spark.streaming.events import BITMAP, read_bitmap_distinct
-    from pdf_brain_spark.streaming.generations import generation_ids
+    from pdf_brain_spark.streaming.generations import list_store
     from pdf_brain_spark.sources.loaders import load_table
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
@@ -1767,7 +1759,7 @@ def test_streaming_bitmap_exact_distinct_and_compact(spark, tmp_path):
     assert served() == want  # crash replay
 
     assert BITMAP.compact(spark, store, upto_batch_id=1) == 2
-    assert generation_ids(spark, store) == [-2]
+    assert list_store(spark, store).raw == [-2]
     assert served() == want
 
 
@@ -1778,7 +1770,7 @@ def test_streaming_cms_replay_merge_compact(spark, tmp_path):
     with the additive monoid preserves serving."""
     from pdf_brain_spark.functions.text import tokenize
     from pdf_brain_spark.streaming.events import CMS, read_cms_estimates
-    from pdf_brain_spark.streaming.generations import generation_ids
+    from pdf_brain_spark.streaming.generations import list_store
     from pdf_brain_spark.sources.loaders import load_table
 
     docs = load_table(spark, "documents", "/root/testdata/sf0.001").select(
@@ -1828,7 +1820,7 @@ def test_streaming_cms_replay_merge_compact(spark, tmp_path):
     assert served() == want
 
     assert CMS.compact(spark, store, upto_batch_id=2) == 3
-    assert generation_ids(spark, store) == [-3]
+    assert list_store(spark, store).raw == [-3]
     assert served() == want
 
 
@@ -1841,7 +1833,7 @@ def test_streaming_checkpoint_resume_processes_only_new_files(spark, tmp_path):
     import os
 
     from pdf_brain_spark.streaming.events import KMV, read_kmv
-    from pdf_brain_spark.streaming.generations import write_seqs
+    from pdf_brain_spark.streaming.generations import list_store, write_seqs
     from pdf_brain_spark.sources.loaders import load_table
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
@@ -1862,7 +1854,7 @@ def test_streaming_checkpoint_resume_processes_only_new_files(spark, tmp_path):
         KMV.stream(stream, store, ckpt).awaitTermination()
 
     run()
-    seqs_before = write_seqs(spark, store)
+    seqs_before = write_seqs(spark, list_store(spark, store))
     assert set(seqs_before) == {"batch_id=0", "batch_id=1"}
     gen_mtimes = {
         d: max(
@@ -1875,7 +1867,7 @@ def test_streaming_checkpoint_resume_processes_only_new_files(spark, tmp_path):
     # new data arrives; SAME checkpoint — the resume must pick up only it
     ev.filter(F.col("event_id") % 3 == 2).coalesce(1).write.mode("append").parquet(stage)
     run()
-    seqs_after = write_seqs(spark, store)
+    seqs_after = write_seqs(spark, list_store(spark, store))
     assert set(seqs_after) == {"batch_id=0", "batch_id=1", "batch_id=2"}
     # prior generations untouched: same wseq, same file mtimes
     for d in seqs_before:
@@ -1915,7 +1907,7 @@ def test_streaming_minhash_replay_merge_compact(spark, tmp_path):
     so even OVERLAPPING batches cannot skew it), and compaction with
     the MIN monoid preserves serving."""
     from pdf_brain_spark.streaming.events import MINHASH, read_minhash_similarity
-    from pdf_brain_spark.streaming.generations import generation_ids
+    from pdf_brain_spark.streaming.generations import list_store
     from pdf_brain_spark.sources.loaders import load_table
 
     docs = load_table(spark, "documents", "/root/testdata/sf0.001").select(
@@ -1963,7 +1955,7 @@ def test_streaming_minhash_replay_merge_compact(spark, tmp_path):
     assert got == want and got
 
     assert MINHASH.compact(spark, store, upto_batch_id=1) == 2
-    assert generation_ids(spark, store) == [-2]
+    assert list_store(spark, store).raw == [-2]
     assert served() == want
 
 

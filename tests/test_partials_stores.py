@@ -86,7 +86,7 @@ def test_partials_store_lifecycle(spark, facts, tmp_path, name):
     partial records its batch: the first-seen rows of the two partials),
     before and after compaction."""
     from pdf_brain_spark.streaming import events
-    from pdf_brain_spark.streaming.generations import generation_ids
+    from pdf_brain_spark.streaming.generations import list_store
 
     store = getattr(events, name)
     b0 = facts.filter(F.col("event_id") % 2 == 0)
@@ -109,7 +109,7 @@ def test_partials_store_lifecycle(spark, facts, tmp_path, name):
     assert _rows(store.merged(spark, d)) == want
 
     assert store.compact(spark, d, upto_batch_id=1) == 2
-    assert generation_ids(spark, d) == [-2]
+    assert list_store(spark, d).raw == [-2]
     assert _rows(store.merged(spark, d)) == want
 
 
@@ -120,7 +120,7 @@ def test_partials_store_backfill_then_compact(spark, facts, tmp_path, name):
     unchanged, and compaction (2 additive generations + 1 backfill)
     keeps that served state."""
     from pdf_brain_spark.streaming import events
-    from pdf_brain_spark.streaming.generations import backfill_floors, generation_ids
+    from pdf_brain_spark.streaming.generations import list_store
 
     store = getattr(events, name)
     d = str(tmp_path / "store")
@@ -141,8 +141,8 @@ def test_partials_store_backfill_then_compact(spark, facts, tmp_path, name):
     assert _rows(store.merged(spark, d)) == want
 
     assert store.compact(spark, d, upto_batch_id=1) == 3
-    assert generation_ids(spark, d) == [-2]
-    assert backfill_floors(spark, d) == []
+    assert list_store(spark, d).raw == [-2]
+    assert list_store(spark, d).floors == []
     assert _rows(store.merged(spark, d)) == want
 
 
@@ -191,17 +191,34 @@ def test_value_histogram_drops_null_values(spark, tmp_path):
 
 def test_streaming_package_has_one_writer_per_concern():
     """One foreachBatch start and one empty-batch skip under streaming/,
-    write sequences recorded only by the generation protocol, ten
-    PartialsStore declarations, none of the per-store writers, drivers or
-    compactors they replaced (no aliases either), and one FTS store (no
-    sibling doc-stats store)."""
-    from pdf_brain_spark.streaming import events
-    from pdf_brain_spark.streaming.generations import PartialsStore
+    one compaction rename and one frontier (m*) computation, write
+    sequences recorded only by the generation protocol, ten PartialsStore
+    and three IndexStore declarations, none of the per-store writers,
+    drivers, compactors or store-listing helpers they replaced (no
+    aliases either), and one FTS store (no sibling doc-stats store)."""
+    from pdf_brain_spark.streaming import ann_ingest, events, generations
+    from pdf_brain_spark.streaming.generations import IndexStore, PartialsStore
 
     sources = {p.name: p.read_text() for p in sorted(STREAMING.glob("*.py"))}
     assert sum(s.count("foreachBatch(") for s in sources.values()) == 1
     assert sum(s.count("isEmpty(") for s in sources.values()) == 1
+    assert sum(s.count(".rename(") for s in sources.values()) == 1
+    frontier = re.compile(r"coverage\(\w+\) for \w+ in [\w.]+ if \w+ < 0")
+    assert sum(len(frontier.findall(s)) for s in sources.values()) == 1
     assert [n for n, s in sources.items() if "fts_docs_dir" in s or '_docs"' in s] == []
+    helpers = ["generation_ids", "backfill_floors", "tombstone_floors", "_tombstone_dirs",
+               "live_generation_dirs", "_list_names", "_check_protocol", "write_tombstones",
+               "kept_index_rows", "compact_index_rows", "fts_store_buckets",
+               "_stamp_fts_buckets", "_TERM_BUCKETS_PREFIX"]
+    word = re.compile(r"\b(" + "|".join(helpers) + r")\b")
+    assert {n: word.findall(s) for n, s in sources.items() if word.search(s)} == {}
+    indexes = {
+        n: v.key
+        for m in (events, ann_ingest, generations)
+        for n, v in vars(m).items()
+        if isinstance(v, IndexStore)
+    }
+    assert indexes == {"BAND_INDEX": "doc_id", "FTS_INDEX": "doc_id", "IVF_INDEX": "vec_id"}
 
     def calls(src, fn):
         return [

@@ -22,6 +22,14 @@ def _build_jobs(spark, build):
     return out, len(set(sc.statusTracker().getJobIdsForGroup()) - before)
 
 
+def _live_dirs(spark, store):
+    """Paths of a store's live generations."""
+    from pdf_brain_spark.streaming.generations import list_store
+
+    ls = list_store(spark, store)
+    return ls.dirs(ls.live)
+
+
 def _rows(df):
     return [(r["doc_id"], round(r["bm25"], 6), r["terms_matched"]) for r in df.collect()]
 
@@ -163,9 +171,7 @@ def test_footer_schema_equals_inferred_schema(spark, fts_store, ann_stores, tmp_
     from pdf_brain_spark.sources.loaders import load_table
     from pdf_brain_spark.streaming.events import ROLLUP, backfill_rollup
     from pdf_brain_spark.streaming.generations import (
-        _tombstone_dirs,
-        backfill_floors,
-        live_generation_dirs,
+        list_store,
         read_generation_dirs,
     )
 
@@ -173,11 +179,11 @@ def test_footer_schema_equals_inferred_schema(spark, fts_store, ann_stores, tmp_
     stores, _ = ann_stores
     cases = []  # (label, dirs, base_path)
     for store in (idx, *stores.values()):
-        live = live_generation_dirs(spark, store)
+        live = _live_dirs(spark, store)
         assert any("batch_id=-" in d for d in live), live  # a compacted generation
         cases.append((store, live, store))
         cases.append((f"{store} compacted", [live[0]], store))
-        tombs = _tombstone_dirs(spark, store)
+        tombs = list_store(spark, store).overlays
         assert tombs
         cases += [(f"{store}/{name}", [f"{store}/{name}"], None) for _, name in tombs]
 
@@ -187,24 +193,24 @@ def test_footer_schema_equals_inferred_schema(spark, fts_store, ann_stores, tmp_
     for b in range(2):
         fn(ev.filter(F.col("event_id") % 2 == b), b)
     backfill_rollup(spark, roll, ev.filter(F.col("event_id") % 4 == 0), floor_batch_id=1)
-    floors = [f"{roll}/backfill_floor={k}" for k in backfill_floors(spark, roll)]
+    floors = [f"{roll}/backfill_floor={k}" for k in list_store(spark, roll).floors]
     assert floors
     cases.append((f"{roll} backfill", floors, roll))
-    cases.append((f"{roll} additive", live_generation_dirs(spark, roll), roll))
+    cases.append((f"{roll} additive", _live_dirs(spark, roll), roll))
 
     for label, dirs, base in cases:
         got = read_generation_dirs(spark, dirs, base)
         want = _inferred(spark, dirs, base)
         assert got.schema == want.schema, label
     elem = {
-        t: read_generation_dirs(spark, live_generation_dirs(spark, d), d)
+        t: read_generation_dirs(spark, _live_dirs(spark, d), d)
         .schema["embedding"]
         .dataType.elementType.typeName()
         for t, d in stores.items()
     }
     assert elem == {"float": "float", "double": "double"}
     # rows too, on the hive-partitioned FTS store (repr orders a NULL term)
-    live = live_generation_dirs(spark, idx)
+    live = _live_dirs(spark, idx)
     assert sorted(read_generation_dirs(spark, live, idx).collect(), key=repr) == sorted(
         _inferred(spark, live, idx).collect(), key=repr
     )
@@ -264,16 +270,15 @@ def test_persisted_read_builds_fire_no_inference_jobs(spark, fts_store, ann_stor
     """Reading a store (compacted generation, live batch, tombstones above
     the frontier) fires no job while the read is built; the persisted
     BM25 build fires only its corpus-stats action."""
-    from pdf_brain_spark.streaming.ann_ingest import ivf_search_persisted
-    from pdf_brain_spark.streaming.events import fts_corpus_stats, fts_search_persisted
-    from pdf_brain_spark.streaming.generations import kept_index_rows
+    from pdf_brain_spark.streaming.ann_ingest import IVF_INDEX, ivf_search_persisted
+    from pdf_brain_spark.streaming.events import FTS_INDEX, fts_corpus_stats, fts_search_persisted
 
     idx, _ = fts_store
     stores, centroids = ann_stores
-    keyed = [(idx, "doc_id")]
-    keyed += [(store, "vec_id") for store in stores.values()]
-    for store, key in keyed:
-        _, jobs = _build_jobs(spark, lambda: kept_index_rows(spark, store, [key]))
+    keyed = [(idx, FTS_INDEX)]
+    keyed += [(store, IVF_INDEX) for store in stores.values()]
+    for store, decl in keyed:
+        _, jobs = _build_jobs(spark, lambda: decl.kept(spark, store))
         assert jobs == 0, store
     q = [0.1] * len(centroids[0])
     for store in stores.values():
@@ -314,18 +319,16 @@ def test_kept_rows_drop_a_row_iff_a_tombstone_floor_covers_it(spark, fts_retombs
     rows equal that predicate evaluated on the raw store. The read builds
     with no job, and the corpus-stats action pays one broadcast for the
     tombstones (no aggregate ahead of it)."""
-    from pdf_brain_spark.streaming.events import fts_corpus_stats
+    from pdf_brain_spark.streaming.events import FTS_INDEX, fts_corpus_stats
     from pdf_brain_spark.streaming.generations import (
-        _tombstone_dirs,
-        kept_index_rows,
-        live_generation_dirs,
+        list_store,
         read_generation_dirs,
     )
 
     idx, key = fts_retombstoned
-    raw = read_generation_dirs(spark, live_generation_dirs(spark, idx), idx)
+    raw = read_generation_dirs(spark, _live_dirs(spark, idx), idx)
     floors = {}
-    for k, name in _tombstone_dirs(spark, idx):
+    for k, name in list_store(spark, idx).overlays:
         for r in read_generation_dirs(spark, [f"{idx}/{name}"]).collect():
             floors.setdefault(r["doc_id"], []).append(k)
     assert floors[key["A"]] == [1, 2] and floors[key["B"]] == [1]
@@ -334,7 +337,7 @@ def test_kept_rows_drop_a_row_iff_a_tombstone_floor_covers_it(spark, fts_retombs
         return all(f < r["batch_id"] for f in floors.get(r["doc_id"], []))
 
     want = sorted((tuple(r) for r in raw.collect() if alive(r)), key=repr)
-    kept, jobs = _build_jobs(spark, lambda: kept_index_rows(spark, idx, ["doc_id"]))
+    kept, jobs = _build_jobs(spark, lambda: FTS_INDEX.kept(spark, idx))
     assert jobs == 0
     assert kept.columns == raw.columns
     got = sorted((tuple(r) for r in kept.collect()), key=repr)
@@ -368,3 +371,95 @@ def test_persisted_bm25_no_match_and_partial_match(spark, fts_store):
     assert got == _rows(bm25_scores(live, one_of_three, k=10)) and got
     got = _rows(fts_search_persisted(spark, idx, TERMS, k=10))
     assert got == _rows(bm25_scores(live, TERMS, k=10)) and got
+
+
+# --- one listing per operation --------------------------------------------------
+
+
+def test_persisted_read_builds_list_the_store_root_once(spark, monkeypatch, fts_store, ann_stores):
+    """A persisted BM25 build and a persisted IVF build each list the store
+    root once, on a store with two live generations and a tombstone above
+    the compaction frontier: the generations, the frontier, the
+    tombstones and the layout marker all come from that one listing."""
+    from pdf_brain_spark.streaming import generations
+    from pdf_brain_spark.streaming.ann_ingest import ivf_search_persisted
+    from pdf_brain_spark.streaming.events import fts_search_persisted
+
+    idx, _ = fts_store
+    stores, centroids = ann_stores
+    listed = []
+    real_fs = generations._fs
+
+    class CountingFs:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def listStatus(self, path):
+            listed.append(str(path.toString()))
+            return self._fs.listStatus(path)
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    def counting_fs(spark, path):
+        HPath, fs = real_fs(spark, path)
+        return HPath, CountingFs(fs)
+
+    monkeypatch.setattr(generations, "_fs", counting_fs)
+    builds = {idx: lambda: fts_search_persisted(spark, idx, TERMS, k=10)}
+    q = [0.1] * len(centroids[0])
+    for store in stores.values():
+        builds[store] = lambda store=store: ivf_search_persisted(
+            spark, store, centroids, q, k=5, n_probes=2
+        )
+    for store, build in builds.items():
+        ls = generations.list_store(spark, store)
+        assert len(ls.live) == 2 and ls.m_star >= 0 and ls.floors[-1] > ls.m_star
+        listed.clear()
+        build()
+        assert listed.count(store) == 1, (store, listed)
+
+
+def test_fts_store_in_the_two_store_layout_raises_by_name(spark, tmp_path):
+    """An FTS store written in the earlier two-store layout — postings with
+    a NULL-term marker row per document in bucket 0, no doc-grain
+    partition, and the unversioned `_TERM_BUCKETS.8` marker — raises a
+    named error on read, ingest, delete and compaction, where its stats
+    arm would otherwise find no doc-grain rows and serve N = 0 as an empty
+    result."""
+    from pdf_brain_spark.streaming.events import (
+        compact_fts_index,
+        delete_fts_documents,
+        fts_search_persisted,
+        make_fts_postings_batch_fn,
+        portable_term_bucket,
+    )
+    from pdf_brain_spark.streaming.generations import PROTOCOL_MARKER
+
+    idx = tmp_path / "fts"
+    rows = [
+        (1, "spark", 2, 1, portable_term_bucket("spark")),
+        (1, "joins", 2, 1, portable_term_bucket("joins")),
+        (1, None, 2, 0, 0),
+        (2, "spark", 1, 1, portable_term_bucket("spark")),
+        (2, None, 1, 0, 0),
+    ]
+    schema = "doc_id long, term string, doc_len int, tf long, term_bucket int"
+    spark.createDataFrame(rows, schema).write.partitionBy("term_bucket").parquet(
+        str(idx / "batch_id=0")
+    )
+    for marker in (PROTOCOL_MARKER, "_TERM_BUCKETS.8"):
+        (idx / marker).write_text("")
+    docs = spark.createDataFrame([(3, "spark")], "doc_id long, text string")
+    ops = [
+        lambda: fts_search_persisted(spark, str(idx), ["spark"], k=10),
+        lambda: make_fts_postings_batch_fn(str(idx))(docs, 1),
+        lambda: delete_fts_documents(spark, str(idx), docs.select("doc_id"), 0),
+        lambda: compact_fts_index(spark, str(idx), upto_batch_id=0),
+    ]
+    for op in ops:
+        with pytest.raises(ValueError, match="earlier layout.*Rebuild"):
+            op()
+    assert sorted(p.name for p in idx.iterdir() if not p.name.startswith(".")) == [
+        PROTOCOL_MARKER, "_TERM_BUCKETS.8", "batch_id=0"
+    ]

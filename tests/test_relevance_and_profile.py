@@ -103,7 +103,7 @@ def test_streaming_term_counts_replay_merge_compact(spark, tmp_path):
     """Generation-store term counts: replay leaves partials identical,
     served top-k equals the one-shot count, compaction preserves it."""
     from pdf_brain_spark.streaming.events import TERM_COUNTS, read_top_terms
-    from pdf_brain_spark.streaming.generations import generation_ids
+    from pdf_brain_spark.streaming.generations import list_store
 
     docs = spark.createDataFrame(
         [
@@ -134,7 +134,7 @@ def test_streaming_term_counts_replay_merge_compact(spark, tmp_path):
     want = [("alpha", 3), ("beta", 3), ("gamma", 3), ("delta", 1)]
     assert served() == want
     assert TERM_COUNTS.compact(spark, store, upto_batch_id=1) == 2
-    assert generation_ids(spark, store) == [-2]
+    assert list_store(spark, store).raw == [-2]
     assert served() == want
 
 
