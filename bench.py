@@ -334,18 +334,14 @@ def _calibration(spark) -> dict:
 
 
 def main() -> None:
-    from pdf_brain_spark.queries import CONSOLIDATED, get_queries, lookup_query
+    from pdf_brain_spark.queries import lookup_query
     from pdf_brain_spark.session import get_spark
 
     spark = get_spark("pdf_brain_spark_bench")
-    # resolve through lookup_query: HEADLINE keys stay stable across the
-    # round-9 suite consolidation (consolidated members still run
-    # standalone here, so per-key timings remain comparable round-over-
-    # round)
-    queries = {n: lookup_query(n) for n in HEADLINE
-               if n in get_queries() or n in CONSOLIDATED}
-    names = [n for n in HEADLINE if n in queries]
-    # include any registered query marked as headline via registry growth
+    # resolve through lookup_query: a suite member runs standalone here,
+    # so its per-key timing does not depend on the driver view
+    queries = {n: lookup_query(n) for n in HEADLINE}
+    names = list(HEADLINE)
     timings: dict[str, float] = {}
     # one warm-up pass of the smallest query to absorb JVM/codegen startup,
     # plus a first touch of the two fact tables (parquet footer reads + OS

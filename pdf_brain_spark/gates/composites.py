@@ -22,14 +22,8 @@ from pyspark.sql import functions as F
 from pdf_brain_spark.functions.guards import bounded_axis  # noqa: F401
 from pdf_brain_spark.functions.sql import Fragment
 from pdf_brain_spark.functions.text import md5_long
-from pdf_brain_spark.registry import (  # noqa: F401
-    CONSOLIDATED,
-    ORACLES,
-    QUERIES,
-    lookup_oracle,
-    lookup_query,
-    query,
-)
+from pdf_brain_spark.operators.fts import duck_bm25_sql
+from pdf_brain_spark.registry import query
 from pdf_brain_spark.sources.loaders import load_table  # noqa: F401
 from pdf_brain_spark.gates.replay import replayed_stream
 from pdf_brain_spark.gates.core import FTS_QUERY_TERMS, _DUCK_QUANT_X, _duck_cosine_distance  # noqa: F401
@@ -1106,9 +1100,8 @@ def contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "events_ohlc_bars",
-    oracle="""
+# Shared by the one-shot bars and the streaming store that must equal them.
+_OHLC_BARS_ORACLE = """
     WITH e AS (
       SELECT event_type, date_trunc('hour', ts) AS bar_start,
              CAST(round(value * 100) AS BIGINT) AS c, ts, event_id
@@ -1130,8 +1123,10 @@ def contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) AS BIGINT) AS n_events
     FROM ranked
     GROUP BY event_type, bar_start
-    """,
-)
+    """
+
+
+@query("events_ohlc_bars", oracle=_OHLC_BARS_ORACLE)
 def events_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Open/high/low/close hourly value bars per event type (operators/
     temporal.py::ohlc_bars) — the time-series downsampling primitive.
@@ -1481,7 +1476,7 @@ def _hamming_oracle() -> str:
     """
 
 
-@query("hamming_ann_rerank", oracle=None)  # oracle registered below
+@query("hamming_ann_rerank", oracle=_hamming_oracle())
 def hamming_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-sign-quantized ANN (operators/quantization.py::
     hamming_rerank_topk): the corpus packs to 1 bit/dim (32x beyond
@@ -1499,9 +1494,6 @@ def hamming_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]
     ]
     return hamming_rerank_topk(emb, qvec, k=10, n_candidates=64)
-
-
-ORACLES["hamming_ann_rerank"] = _hamming_oracle()
 
 
 def _hamming_batch_oracle(n_queries: int = 16) -> str:
@@ -1546,7 +1538,7 @@ def _hamming_batch_oracle(n_queries: int = 16) -> str:
     """
 
 
-@query("hamming_ann_batch16", oracle=None)  # oracle registered below
+@query("hamming_ann_batch16", oracle=_hamming_batch_oracle())
 def hamming_ann_batch16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched Hamming ANN (operators/quantization.py::
     hamming_rerank_topk_batch): 16 queries amortize one pass over the
@@ -1562,10 +1554,7 @@ def hamming_ann_batch16(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hamming_rerank_topk_batch(emb, queries, k=10, n_candidates=64)
 
 
-ORACLES["hamming_ann_batch16"] = _hamming_batch_oracle()
-
-
-@query("streaming_incremental_fts", oracle=None)  # oracle registered below
+@query("streaming_incremental_fts", oracle=duck_bm25_sql(FTS_QUERY_TERMS, k=10))
 def streaming_incremental_fts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental FTS index (streaming/events.py::
     streaming_fts_ingest): the documents table streams in as two
@@ -1590,16 +1579,7 @@ def streaming_incremental_fts(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint(eager=True)
 
 
-def _register_streaming_fts_oracle() -> None:
-    from pdf_brain_spark.operators.fts import duck_bm25_sql
-
-    ORACLES["streaming_incremental_fts"] = duck_bm25_sql(FTS_QUERY_TERMS, k=10)
-
-
-_register_streaming_fts_oracle()
-
-
-@query("streaming_incremental_ohlc", oracle=None)  # oracle shared below
+@query("streaming_incremental_ohlc", oracle=_OHLC_BARS_ORACLE)
 def streaming_incremental_ohlc_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental OHLC bars (streaming/events.py) — the first
     NON-SUM instantiation of the mergeable-partials store: open/close
@@ -1618,9 +1598,6 @@ def streaming_incremental_ohlc_gate(spark: SparkSession, sf_dir: str) -> DataFra
         store = f"{root}/store"
         OHLC.stream(stream, store, f"{root}/ckpt").awaitTermination()
         return read_ohlc(spark, store).localCheckpoint(eager=True)
-
-
-ORACLES["streaming_incremental_ohlc"] = ORACLES["events_ohlc_bars"]
 
 
 @query(

@@ -22,14 +22,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_brain_spark.functions.guards import bounded_axis  # noqa: F401
-from pdf_brain_spark.registry import (  # noqa: F401
-    CONSOLIDATED,
-    ORACLES,
-    QUERIES,
-    lookup_oracle,
-    lookup_query,
-    query,
-)
+from pdf_brain_spark.operators.dedup import SHINGLE_DF_CAP
+from pdf_brain_spark.operators.fts import duck_bm25_sql, duck_phrase_bm25_sql
+from pdf_brain_spark.registry import query
 from pdf_brain_spark.sources.loaders import load_table  # noqa: F401
 
 
@@ -465,7 +460,7 @@ def mmr_rerank_batch_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 FTS_QUERY_TERMS = ["spark", "shuffle", "join"]
 
 
-@query("fts_bm25", oracle=None)  # oracle registered below via duck_bm25_sql
+@query("fts_bm25", oracle=duck_bm25_sql(FTS_QUERY_TERMS, k=10))
 def fts_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-10 over the documents table for a fixed term set — the
     Spark re-expression of FTS5 MATCH + rank (J2/W2)."""
@@ -476,15 +471,6 @@ def fts_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.select("doc_id", F.round("bm25", 6).alias("bm25"), "terms_matched")
 
 
-def _register_fts_oracle() -> None:
-    from pdf_brain_spark.operators.fts import duck_bm25_sql
-
-    ORACLES["fts_bm25"] = duck_bm25_sql(FTS_QUERY_TERMS, k=10)
-
-
-_register_fts_oracle()
-
-
 # The reference quotes the whole query string before MATCH
 # (LibSQLDatabase.ts:408: `"${escaped}"`), so its FTS arm is PHRASE
 # search — token adjacency matters. fts_phrase is the parity gate for
@@ -492,7 +478,7 @@ _register_fts_oracle()
 FTS_QUERY_PHRASE = "spark window"
 
 
-@query("fts_phrase", oracle=None)  # oracle registered below
+@query("fts_phrase", oracle=duck_phrase_bm25_sql(FTS_QUERY_PHRASE, k=10))
 def fts_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quoted-phrase FTS MATCH + BM25 rank (J2 parity: adjacency-aware,
     LibSQLDatabase.ts:408). Phrase tf counts start positions; computed
@@ -502,15 +488,6 @@ def fts_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     res = phrase_bm25_scores(docs, FTS_QUERY_PHRASE, k=10)
     return res.select("doc_id", F.round("bm25", 6).alias("bm25"), "phrase_hits")
-
-
-def _register_fts_phrase_oracle() -> None:
-    from pdf_brain_spark.operators.fts import duck_phrase_bm25_sql
-
-    ORACLES["fts_phrase"] = duck_phrase_bm25_sql(FTS_QUERY_PHRASE, k=10)
-
-
-_register_fts_phrase_oracle()
 
 
 # Phrase-BM25 FTS arm for the hybrid/search composites: the reference's
@@ -780,7 +757,7 @@ _DUCK_SHINGLES = """
     -- (documents here have unique contents, so doc-count == content-count)
     kept AS (
       SELECT shingle FROM sh GROUP BY shingle
-      HAVING count(DISTINCT doc_id) <= {{SHINGLE_DF_CAP}}
+      HAVING count(DISTINCT doc_id) <= {SHINGLE_DF_CAP}
     ),
     inter AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS intersection
@@ -2515,9 +2492,9 @@ def cluster_concept_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_minhash_verified",
     oracle=f"""
     WITH {_DUCK_SHINGLES},
-    sig AS ({{MINHASH_SIG}}),
+    sig AS ({_DUCK_MINHASH_SIG}),
     banded AS (
-      {{MINHASH_BANDED}}
+      {_DUCK_MINHASH_BANDED}
     ),
     cands AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b

@@ -23,14 +23,7 @@ from pyspark.sql import functions as F
 from pdf_brain_spark.functions.guards import bounded_axis  # noqa: F401
 from pdf_brain_spark.functions.sql import Fragment
 from pdf_brain_spark.functions.text import md5_long
-from pdf_brain_spark.registry import (  # noqa: F401
-    CONSOLIDATED,
-    ORACLES,
-    QUERIES,
-    lookup_oracle,
-    lookup_query,
-    query,
-)
+from pdf_brain_spark.registry import query
 from pdf_brain_spark.sources.loaders import load_table  # noqa: F401
 from pdf_brain_spark.gates.replay import replayed_stream
 from pdf_brain_spark.gates.core import _CHUNK_ORACLE_CTE, _DUCK_CENTROIDS, _DUCK_COS, _DUCK_EUCLID, _DUCK_MINHASH_BANDED, _DUCK_MINHASH_SIG, _DUCK_NORM, _DUCK_SHINGLES, _duck_cosine_distance  # noqa: F401
@@ -2032,9 +2025,9 @@ def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_components",
     oracle=f"""
     WITH RECURSIVE {_DUCK_SHINGLES.strip()},
-    sig AS ({{MINHASH_SIG}}),
+    sig AS ({_DUCK_MINHASH_SIG}),
     banded AS (
-      {{MINHASH_BANDED}}
+      {_DUCK_MINHASH_BANDED}
     ),
     cands AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -2070,9 +2063,9 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_decision_report",
     oracle=f"""
     WITH RECURSIVE {_DUCK_SHINGLES.strip()},
-    sig AS ({{MINHASH_SIG}}),
+    sig AS ({_DUCK_MINHASH_SIG}),
     banded AS (
-      {{MINHASH_BANDED}}
+      {_DUCK_MINHASH_BANDED}
     ),
     cands AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -2994,25 +2987,6 @@ def llm_json_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_tags"),
     )
-
-
-for _qname in ("dedup_minhash_verified", "dedup_components", "dedup_decision_report"):
-    ORACLES[_qname] = ORACLES[_qname].replace("{MINHASH_SIG}", _DUCK_MINHASH_SIG)
-    ORACLES[_qname] = ORACLES[_qname].replace("{MINHASH_BANDED}", _DUCK_MINHASH_BANDED)
-
-def _sub_shingle_cap() -> None:
-    """Substitute the SHARED stop-shingle cap into every oracle that uses
-    it (registered or not yet registered at call time — tfidf_cosine_pairs
-    registers later, so it re-invokes this)."""
-    from pdf_brain_spark.operators.dedup import SHINGLE_DF_CAP
-
-    for _name in ("dedup_ngram_jaccard", "tfidf_cosine_pairs", "dedup_containment"):
-        if _name in ORACLES:
-            ORACLES[_name] = ORACLES[_name].replace(
-                "{SHINGLE_DF_CAP}", str(SHINGLE_DF_CAP)
-            )
-
-_sub_shingle_cap()
 
 
 # --------------------------------------------------------------------------

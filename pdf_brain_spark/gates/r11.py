@@ -21,14 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_brain_spark.functions.guards import bounded_axis  # noqa: F401
-from pdf_brain_spark.registry import (  # noqa: F401
-    CONSOLIDATED,
-    ORACLES,
-    QUERIES,
-    lookup_oracle,
-    lookup_query,
-    query,
-)
+from pdf_brain_spark.registry import query
 from pdf_brain_spark.sources.loaders import load_table  # noqa: F401
 from pdf_brain_spark.gates.core import _DUCK_MINHASH_BANDED, _DUCK_MINHASH_SIG, _DUCK_QUANT_X, _DUCK_SHINGLES, _duck_kmeans_fit  # noqa: F401
 
@@ -2143,9 +2136,9 @@ def kruskal_wallis_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_edit_distance_verify",
     oracle=f"""
     WITH {_DUCK_SHINGLES},
-    sig AS ({{MINHASH_SIG}}),
+    sig AS ({_DUCK_MINHASH_SIG}),
     banded AS (
-      {{MINHASH_BANDED}}
+      {_DUCK_MINHASH_BANDED}
     ),
     cands AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -2252,15 +2245,6 @@ def dedup_edit_distance_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     # joins + the DP, so the sampling job re-ran all of it). Materialize
     # the bounded scored pairs once; the sort then orders a tiny table.
     return scored.localCheckpoint(eager=True).orderBy("doc_a", "doc_b")
-
-
-# this gate registers after the shared substitution loop above ran
-# (tfidf_cosine_pairs precedent), so it substitutes its own templates here
-ORACLES["dedup_edit_distance_verify"] = (
-    ORACLES["dedup_edit_distance_verify"]
-    .replace("{MINHASH_SIG}", _DUCK_MINHASH_SIG)
-    .replace("{MINHASH_BANDED}", _DUCK_MINHASH_BANDED)
-)
 
 
 @query(

@@ -21,18 +21,12 @@ from pyspark.sql import functions as F
 from pdf_brain_spark.functions.guards import bounded_axis  # noqa: F401
 from pdf_brain_spark.functions.sql import Fragment
 from pdf_brain_spark.functions.text import md5_long
-from pdf_brain_spark.registry import (  # noqa: F401
-    CONSOLIDATED,
-    ORACLES,
-    QUERIES,
-    lookup_oracle,
-    lookup_query,
-    query,
-)
+from pdf_brain_spark.operators.dedup import SHINGLE_DF_CAP
+from pdf_brain_spark.operators.fts import duck_bm25_sql
+from pdf_brain_spark.registry import query
 from pdf_brain_spark.sources.loaders import load_table  # noqa: F401
 from pdf_brain_spark.gates.replay import replayed_stream
 from pdf_brain_spark.gates.core import FTS_QUERY_TERMS, _DUCK_CENTROIDS, _DUCK_SHINGLES  # noqa: F401
-from pdf_brain_spark.gates.quality_temporal import _sub_shingle_cap  # noqa: F401
 from pdf_brain_spark.gates.composites import _hamming_batch_oracle  # noqa: F401
 
 # --------------------------------------------------------------------------
@@ -101,7 +95,7 @@ def kmeans_assign_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("hamming_ann_batch64", oracle=None)  # oracle registered below
+@query("hamming_ann_batch64", oracle=_hamming_batch_oracle(n_queries=64))
 def hamming_ann_batch64(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched Hamming ANN at production batch size (VERDICT r7 item 7):
     hamming_ann_batch16 gates the two-stage replay at 16 queries while
@@ -120,9 +114,6 @@ def hamming_ann_batch64(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     return hamming_rerank_topk_batch(emb, queries, k=10, n_candidates=64)
-
-
-ORACLES["hamming_ann_batch64"] = _hamming_batch_oracle(n_queries=64)
 
 
 @query(
@@ -683,7 +674,7 @@ def _matryoshka_oracle(dims=(8, 16, 32, 64)) -> str:
     )
 
 
-@query("matryoshka_truncation_report", oracle=None)  # oracle registered below
+@query("matryoshka_truncation_report", oracle=_matryoshka_oracle())
 def matryoshka_truncation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka (MRL, Kusupati et al. 2022) truncation quality report:
     for each dimension prefix (8/16/32/64), (a) the average retained-
@@ -748,9 +739,6 @@ def matryoshka_truncation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     for r in reports[1:]:
         out = out.unionByName(r)
     return out.orderBy("dim_prefix")
-
-
-ORACLES["matryoshka_truncation_report"] = _matryoshka_oracle()
 
 
 @query(
@@ -1161,7 +1149,10 @@ def semdedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("fts_compacted_lifecycle", oracle=None)  # oracle registered below
+@query(
+    "fts_compacted_lifecycle",
+    oracle=duck_bm25_sql(FTS_QUERY_TERMS, k=10, where_clause="WHERE doc_id <> 3"),
+)
 def fts_compacted_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL persisted-FTS lifecycle through one gate: two-batch
     index build (even/odd docs), takedown tombstone for doc 3, then
@@ -1196,17 +1187,6 @@ def fts_compacted_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(idx, ignore_errors=True)
-
-
-def _register_fts_lifecycle_oracle():
-    from pdf_brain_spark.operators.fts import duck_bm25_sql
-
-    ORACLES["fts_compacted_lifecycle"] = duck_bm25_sql(
-        FTS_QUERY_TERMS, k=10, where_clause="WHERE doc_id <> 3"
-    )
-
-
-_register_fts_lifecycle_oracle()
 
 
 @query(
@@ -3440,7 +3420,7 @@ def nation_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tfidf_cosine_pairs",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
       SELECT doc_id,
              list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
@@ -3511,7 +3491,6 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     flip the 6-dp hash. At 100 TB: two shuffles (term, then pair),
     DF-capped fan-out, map-side-combinable aggregates throughout."""
     from pdf_brain_spark.functions.text import shingles, tokenize
-    from pdf_brain_spark.operators.dedup import SHINGLE_DF_CAP
 
     docs = load_table(spark, "documents", sf_dir)
     toks = docs.select("doc_id", tokenize("text").alias("tokens"))
@@ -3564,9 +3543,6 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b", F.round(cos, 6).alias("cosine"))
         .orderBy("doc_a", "doc_b")
     )
-
-
-_sub_shingle_cap()  # this oracle registered after the first substitution pass
 
 
 @query(
@@ -3937,7 +3913,7 @@ def part_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes AS (SELECT doc_id, count(*) AS set_size FROM sh GROUP BY doc_id),
     kept AS (
       SELECT shingle FROM sh GROUP BY shingle
-      HAVING count(DISTINCT doc_id) <= {{SHINGLE_DF_CAP}}
+      HAVING count(DISTINCT doc_id) <= {SHINGLE_DF_CAP}
     ),
     inter AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS intersection
@@ -3966,9 +3942,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return containment_pairs(
         load_table(spark, "documents", sf_dir), threshold=0.2
     ).orderBy("doc_a", "doc_b")
-
-
-_sub_shingle_cap()  # dedup_containment registered after earlier passes
 
 
 @query(

@@ -21,14 +21,8 @@ from pyspark.sql import functions as F
 from pdf_brain_spark.functions.guards import bounded_axis  # noqa: F401
 from pdf_brain_spark.functions.sql import Fragment
 from pdf_brain_spark.functions.text import md5_long
-from pdf_brain_spark.registry import (  # noqa: F401
-    CONSOLIDATED,
-    ORACLES,
-    QUERIES,
-    lookup_oracle,
-    lookup_query,
-    query,
-)
+from pdf_brain_spark.operators.fts import duck_bm25f_sql
+from pdf_brain_spark.registry import query
 from pdf_brain_spark.sources.loaders import load_table  # noqa: F401
 from pdf_brain_spark.gates.replay import replayed_stream
 from pdf_brain_spark.gates.core import FTS_QUERY_TERMS  # noqa: F401
@@ -1383,7 +1377,7 @@ def multimodal_frame_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("asset_id", "frame_ts_ms")
 
 
-@query("bm25f_search", oracle=None)  # oracle registered below via duck_bm25f_sql
+@query("bm25f_search", oracle=duck_bm25f_sql(FTS_QUERY_TERMS, k=10))
 def bm25f_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-field BM25F top-10 (Zaragoza et al., CIKM 2004) — field-
     weighted retrieval where a title hit outranks the same hit buried in
@@ -1398,15 +1392,6 @@ def bm25f_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     res = bm25f_scores(docs, FTS_QUERY_TERMS, k=10)
     return res.select("doc_id", F.round("bm25f", 6).alias("bm25f"), "terms_matched")
-
-
-def _register_bm25f_oracle() -> None:
-    from pdf_brain_spark.operators.fts import duck_bm25f_sql
-
-    ORACLES["bm25f_search"] = duck_bm25f_sql(FTS_QUERY_TERMS, k=10)
-
-
-_register_bm25f_oracle()
 
 
 @query(
@@ -4520,9 +4505,8 @@ def shipping_sla_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "dedup_threshold_curve",
-    oracle=f"""
+# Also the curve CTE of lsh_config_planner's oracle (gates/r9_r10.py).
+_THRESHOLD_CURVE_ORACLE = f"""
     WITH toks AS (
       SELECT doc_id,
              list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'), t -> t <> '') AS tokens
@@ -4553,8 +4537,10 @@ def shipping_sla_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT CAST(band AS BIGINT) AS jaccard_band, CAST(count(*) AS BIGINT) AS n_pairs
     FROM banded GROUP BY 1 ORDER BY 1
-    """,
-)
+    """
+
+
+@query("dedup_threshold_curve", oracle=_THRESHOLD_CURVE_ORACLE)
 def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup threshold operating curve — how many candidate pairs each
     Jaccard band contains (band = ⌊10·J⌋, computed as the EXACT integer

@@ -22,17 +22,10 @@ from pyspark.sql import functions as F
 from pdf_brain_spark.functions.guards import bounded_axis  # noqa: F401
 from pdf_brain_spark.functions.sql import Fragment
 from pdf_brain_spark.functions.text import md5_long
-from pdf_brain_spark.registry import (  # noqa: F401
-    CONSOLIDATED,
-    ORACLES,
-    QUERIES,
-    lookup_oracle,
-    lookup_query,
-    query,
-)
+from pdf_brain_spark.registry import query
 from pdf_brain_spark.sources.loaders import load_table  # noqa: F401
 from pdf_brain_spark.gates.core import _CHUNK_ORACLE_CTE, _DUCK_CENTROIDS, _DUCK_EUCLID, _DUCK_MINHASH_BANDED, _DUCK_MINHASH_SIG, _DUCK_QUANT_X, _DUCK_SHINGLES, _duck_cosine_distance, _duck_kmeans_fit  # noqa: F401
-from pdf_brain_spark.gates.r8_corpus_b import dedup_threshold_curve  # noqa: F401
+from pdf_brain_spark.gates.r8_corpus_b import _THRESHOLD_CURVE_ORACLE, dedup_threshold_curve  # noqa: F401
 
 # --------------------------------------------------------------------------
 # Round-9 registrations (the round-10 rotation queue): registered after
@@ -285,7 +278,6 @@ _LSH_PLAN_CONFIGS = [(64, 2), (32, 4), (16, 8), (8, 16)]  # bands x rows = 128
 
 
 def _lsh_planner_oracle() -> str:
-    curve_sql = ORACLES["dedup_threshold_curve"]
     branches = "\nUNION ALL\n".join(
         f"SELECT {b} AS bands, {r} AS rows_per_band, jaccard_band, n_pairs, "
         f"CAST(round({_lsh_p_chain_sql(r, b)} * 1000000) AS BIGINT) AS p_micro "
@@ -293,7 +285,7 @@ def _lsh_planner_oracle() -> str:
         for b, r in _LSH_PLAN_CONFIGS
     )
     return f"""
-    WITH curve AS MATERIALIZED ({curve_sql}),
+    WITH curve AS MATERIALIZED ({_THRESHOLD_CURVE_ORACLE}),
     scored AS (
       {branches}
     )
@@ -312,7 +304,7 @@ def _lsh_planner_oracle() -> str:
     """
 
 
-@query("lsh_config_planner", oracle=None)  # oracle attached below
+@query("lsh_config_planner", oracle=_lsh_planner_oracle())
 def lsh_config_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH banding CONFIG PLANNER: predict, from THIS corpus's measured
     Jaccard pair distribution (the dedup_threshold_curve output), what
@@ -375,9 +367,6 @@ def lsh_config_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("exp_recall_high_micro"),
     ).orderBy(F.col("bands").desc())
-
-
-ORACLES["lsh_config_planner"] = _lsh_planner_oracle()
 
 
 @query(
@@ -568,7 +557,56 @@ def events_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("lag")
 
 
-@query("dedup_keep_best_quality", oracle=None)  # oracle attached below
+def _keep_best_quality_oracle() -> str:
+    return f"""
+    WITH RECURSIVE {_DUCK_SHINGLES.strip()},
+    sig AS ({_DUCK_MINHASH_SIG}),
+    banded AS (
+      {_DUCK_MINHASH_BANDED}
+    ),
+    cands AS (
+      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+      FROM banded a JOIN banded b
+        ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
+    ),
+    edges AS (
+      SELECT doc_a AS src, doc_b AS dst FROM cands
+      UNION
+      SELECT doc_b, doc_a FROM cands
+    ),
+    reach AS (
+      SELECT src AS node, src AS r FROM edges
+      UNION
+      SELECT e.src, reach.r FROM edges e JOIN reach ON reach.node = e.dst
+    ),
+    comp AS (SELECT node, min(r) AS component FROM reach GROUP BY node),
+    q AS (
+      SELECT doc_id, CAST(count(DISTINCT term) AS BIGINT) AS quality
+      FROM (
+        SELECT doc_id,
+               unnest(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
+                      t -> t <> '')) AS term
+        FROM documents
+      ) GROUP BY 1
+    ),
+    labeled AS (
+      SELECT d.doc_id, COALESCE(comp.component, d.doc_id) AS cluster_id
+      FROM documents d LEFT JOIN comp ON comp.node = d.doc_id
+    ),
+    ranked AS (
+      SELECT l.cluster_id, l.doc_id, q.quality,
+             row_number() OVER (PARTITION BY l.cluster_id
+                                ORDER BY q.quality DESC, l.doc_id ASC) AS rn,
+             CAST(count(*) OVER (PARTITION BY l.cluster_id) AS BIGINT) AS cluster_size
+      FROM labeled l JOIN q USING (doc_id)
+    )
+    SELECT cluster_id, doc_id AS kept_doc_id, quality, cluster_size
+    FROM ranked WHERE rn = 1 AND cluster_size > 1
+    ORDER BY cluster_id
+    """
+
+
+@query("dedup_keep_best_quality", oracle=_keep_best_quality_oracle())
 def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-aware duplicate-cluster representative selection: within
     each MinHash-LSH duplicate cluster keep the RICHEST copy (argmax
@@ -627,58 +665,6 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("cluster_id")
     )
-
-
-def _keep_best_quality_oracle() -> str:
-    return f"""
-    WITH RECURSIVE {_DUCK_SHINGLES.strip()},
-    sig AS ({_DUCK_MINHASH_SIG}),
-    banded AS (
-      {_DUCK_MINHASH_BANDED}
-    ),
-    cands AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM banded a JOIN banded b
-        ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-    ),
-    edges AS (
-      SELECT doc_a AS src, doc_b AS dst FROM cands
-      UNION
-      SELECT doc_b, doc_a FROM cands
-    ),
-    reach AS (
-      SELECT src AS node, src AS r FROM edges
-      UNION
-      SELECT e.src, reach.r FROM edges e JOIN reach ON reach.node = e.dst
-    ),
-    comp AS (SELECT node, min(r) AS component FROM reach GROUP BY node),
-    q AS (
-      SELECT doc_id, CAST(count(DISTINCT term) AS BIGINT) AS quality
-      FROM (
-        SELECT doc_id,
-               unnest(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                      t -> t <> '')) AS term
-        FROM documents
-      ) GROUP BY 1
-    ),
-    labeled AS (
-      SELECT d.doc_id, COALESCE(comp.component, d.doc_id) AS cluster_id
-      FROM documents d LEFT JOIN comp ON comp.node = d.doc_id
-    ),
-    ranked AS (
-      SELECT l.cluster_id, l.doc_id, q.quality,
-             row_number() OVER (PARTITION BY l.cluster_id
-                                ORDER BY q.quality DESC, l.doc_id ASC) AS rn,
-             CAST(count(*) OVER (PARTITION BY l.cluster_id) AS BIGINT) AS cluster_size
-      FROM labeled l JOIN q USING (doc_id)
-    )
-    SELECT cluster_id, doc_id AS kept_doc_id, quality, cluster_size
-    FROM ranked WHERE rn = 1 AND cluster_size > 1
-    ORDER BY cluster_id
-    """
-
-
-ORACLES["dedup_keep_best_quality"] = _keep_best_quality_oracle()
 
 
 @query(
@@ -1769,7 +1755,7 @@ def _quality_dedup_grid_oracle() -> str:
     """
 
 
-@query("quality_dedup_grid", oracle=None)  # oracle attached below
+@query("quality_dedup_grid", oracle=_quality_dedup_grid_oracle())
 def quality_dedup_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality × duplication GRID — the data-ablation planning table
     ('what fraction of token mass is low-quality AND heavily duplicated,
@@ -1874,9 +1860,6 @@ def quality_dedup_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["quality_dedup_grid"] = _quality_dedup_grid_oracle()
-
-
 def _minhash_calibration_oracle() -> str:
     from pdf_brain_spark.operators.dedup import MINHASH_HASHES
 
@@ -1927,7 +1910,7 @@ def _minhash_calibration_oracle() -> str:
     """
 
 
-@query("minhash_estimator_calibration", oracle=None)  # oracle attached below
+@query("minhash_estimator_calibration", oracle=_minhash_calibration_oracle())
 def minhash_estimator_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash ESTIMATOR CALIBRATION on this corpus: for every LSH
     candidate pair, the signature estimate (matching components / H)
@@ -2008,9 +1991,6 @@ def minhash_estimator_calibration(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .orderBy("exact_band")
     )
-
-
-ORACLES["minhash_estimator_calibration"] = _minhash_calibration_oracle()
 
 
 @query(

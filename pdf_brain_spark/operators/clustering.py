@@ -684,7 +684,7 @@ def assign_stats_exact_int(
         JVM Math.sqrt; the half-up round is floor(x + 0.5), exact for
         x < 2^51 (d2 < 2^53 ⇒ sqrt < 2^26.5) and the rule Spark's
         F.round(double) applies to non-negative values — pinned by
-        tests/test_r17_optimizations.py against the HOF-ladder path.
+        tests/test_clustering.py against the HOF-ladder path.
       - (md2, mvid) = per-cid lexicographic min (d2, vec_id): the exact
         integer representative tiebreak of kmeans_clusters.
     Only cids with ≥1 member in a task are emitted, so the downstream

@@ -395,7 +395,7 @@ def minhash_signatures_from_sets(
     expressions are IDENTICAL to the former Column form (same functions,
     same literals, same `%` remainder on positive int64 operands), so
     the resolved plan and every result row are unchanged — pinned by
-    tests/test_r17_optimizations.py. Same-session A/B: signature plan
+    tests/test_text_fragments.py. Same-session A/B: signature plan
     construction 0.23-0.28 → 0.04-0.05 s."""
     base = f"transform({sql_ref(set_col)}, s -> {md5_long_sql(Fragment('s'), 7)})"
     d = sets.selectExpr(sql_ref(id_col), f"{base} AS _bases")

@@ -145,7 +145,7 @@ def topk_rows_tiebroken_batch(dist, vid, take: int):
     distances, and each such sort touches only the take+ties candidate
     rows, never B.
 
-    Equivalence is pinned by the tests/test_r16_optimizations.py fuzz
+    Equivalence is pinned by the tests/test_partial_topk.py fuzz
     (300 trials incl. heavy integer-distance ties, vs a verbatim
     argpartition + tied-tail lexsort reference).
     Contract: distances are NaN-free — every caller scores normalized

@@ -1,13 +1,20 @@
-"""Query registry facade: every implemented operator from SURVEY.md §2 (and
-the beyond-reference families) is registered here as a named
-(spark, sf_dir) -> DataFrame callable plus (where SQL-expressible) an
-ANSI-SQL oracle twin that DuckDB runs over the same parquet tables.
+"""The driver view of the surface registry.
 
-The registry dicts + @query decorator live in pdf_brain_spark/registry.py
-and the gate definitions in pdf_brain_spark/gates/*, imported below IN
-REGISTRATION ORDER so the @query side effects fill QUERIES/ORACLES in a
-fixed order. This module exports the registry API only; gate functions
-and their helpers are imported from the gates module that defines them.
+Importing this module registers every surface: the gate modules
+(``pdf_brain_spark.gates``, in registration order), then one suite
+surface per SUITE_PLAN family (``suites.register_suites``). The one
+registry is ``registry.SURFACES``, name -> (fn, oracle); this module
+exports its lookups and derives the driver view from it, once:
+
+  - the driver view is GATE_WINDOW, then every other registered surface
+    that is neither a suite member nor in the window, in registration
+    order;
+  - its first 50 names are exactly GATE_WINDOW;
+  - every suite member is reachable through ``lookup_query()`` /
+    ``lookup_oracle()`` and is verified inside its suite's driver row.
+
+Gate functions and their helpers are imported from the gates module
+that defines them.
 
 Naming rule: every computed column is aliased identically in the Spark
 plan and the oracle SQL — the driver hash-compares values after sorting
@@ -20,32 +27,23 @@ noise does not flip the value hash.
 
 from __future__ import annotations
 
-import os
-
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Gate modules, imported IN REGISTRATION ORDER: each import's @query side
-# effects append to the shared registry dicts.
-import pdf_brain_spark.gates.core  # noqa: F401
-import pdf_brain_spark.gates.quality_temporal  # noqa: F401
-import pdf_brain_spark.gates.composites  # noqa: F401
-import pdf_brain_spark.gates.r8_corpus_a  # noqa: F401
-import pdf_brain_spark.gates.r8_corpus_b  # noqa: F401
-import pdf_brain_spark.gates.r9_r10  # noqa: F401
-import pdf_brain_spark.gates.r11  # noqa: F401
+import pdf_brain_spark.gates  # noqa: F401  (registers every gate and suite member)
 from pdf_brain_spark.registry import (  # noqa: F401  (public re-exports)
-    CONSOLIDATED,
-    ORACLES,
-    QUERIES,
+    SURFACES,
     lookup_oracle,
     lookup_query,
     query,
 )
+from pdf_brain_spark.suites import SUITE_PLAN, register_suites
+
+register_suites()
 
 # Driver gate window: the correctness harness verifies the FIRST 50
-# registered queries, so these are moved to the front of the registry.
+# driver gates, so the driver view lists these first.
 GATE_WINDOW = [
     # the 30 consolidation suites (192 members; suites.py SUITE_PLAN)
     "suite_tpch_a", "suite_tpch_b", "suite_tpch_c",
@@ -76,43 +74,15 @@ GATE_WINDOW = [
 ]
 
 
-def _reorder_registry() -> None:
-    # Reorders IN PLACE (clear+update, not rebinding): registry.py, the
-    # gates modules, and suites.py all hold references to the SAME dict
-    # objects, so a rebinding here would fork the registry into an
-    # ordered copy and a stale original (the split-file hazard).
-    missing = [n for n in GATE_WINDOW if n not in QUERIES]
-    if missing:
-        raise AssertionError(f"GATE_WINDOW references unregistered queries: {missing}")
-    if len(GATE_WINDOW) != 50:
-        raise AssertionError(f"GATE_WINDOW must have exactly 50 entries, has {len(GATE_WINDOW)}")
-    gate = set(GATE_WINDOW)
-    tail = [n for n in QUERIES if n not in gate]
-    ordered = GATE_WINDOW + tail
-    q = {n: QUERIES[n] for n in ordered}
-    o = {n: ORACLES[n] for n in ordered if n in ORACLES}
-    QUERIES.clear()
-    QUERIES.update(q)
-    ORACLES.clear()
-    ORACLES.update(o)
-
-
-# Suite consolidation (VERDICT r8 item 1) runs BEFORE the window reorder:
-# SUITE_PLAN members move into CONSOLIDATED and one suite gate per family
-# registers in their place. SPARK_GRAFT_NO_SUITES=1 exposes the raw
-# registry (tools/gen_suite_specs.py needs the members before suites
-# exist; the GATE_WINDOW check is skipped with it, since the window names
-# suite gates).
-if not os.environ.get("SPARK_GRAFT_NO_SUITES"):
-    from pdf_brain_spark.suites import install_suites
-
-    install_suites(QUERIES, ORACLES, CONSOLIDATED)
-    _reorder_registry()
+_SUITE_MEMBERS = {m for members in SUITE_PLAN.values() for m in members}
+_DRIVER = GATE_WINDOW + [
+    n for n in SURFACES if n not in _SUITE_MEMBERS and n not in GATE_WINDOW
+]
 
 
 def get_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return dict(QUERIES)
+    return {n: lookup_query(n) for n in _DRIVER}
 
 
 def get_oracles() -> dict[str, str]:
-    return dict(ORACLES)
+    return {n: lookup_oracle(n) for n in _DRIVER}

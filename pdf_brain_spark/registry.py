@@ -1,7 +1,15 @@
-"""Query registry: every implemented operator from SURVEY.md §2 gets a named
-entry here, as a (spark, sf_dir) -> DataFrame callable, plus (where
-SQL-expressible) an ANSI-SQL oracle twin that DuckDB runs over the same
+"""The surface registry: one ordered mapping of every named operator
+surface, name -> (fn, oracle). ``fn`` is a (spark, sf_dir) -> DataFrame
+callable; ``oracle`` is its ANSI-SQL twin, which DuckDB runs over the same
 parquet tables.
+
+Invariants:
+  - ``@query(name, oracle)`` is the only writer; the mapping holds
+    surfaces in registration order.
+  - Every surface has an oracle: a non-empty string, given when it is
+    registered.
+  - A name registers once. A second registration raises instead of
+    replacing the first surface's function and oracle in place.
 
 Naming rule: every computed column is aliased identically in the Spark plan
 and the oracle SQL — the driver hash-compares values after sorting columns
@@ -14,57 +22,35 @@ does not flip the value hash.
 
 from __future__ import annotations
 
-import os
-
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from pdf_brain_spark.functions.guards import bounded_axis
-from pdf_brain_spark.sources.loaders import load_table
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-# Suite-consolidated members (VERDICT r8 item 1): name -> (fn, oracle,
-# suite). Not in the driver-facing registry; their oracles are verified
-# INSIDE their suite's driver row every round. Run standalone via
-# lookup_query()/lookup_oracle() or tests/oracle_harness.py.
-CONSOLIDATED: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None, str]] = {}
+SURFACES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]] = {}
 
 
 def lookup_query(name: str) -> Callable[[SparkSession, str], DataFrame]:
-    """Resolve a query by name across the driver registry AND the
-    suite-consolidated members (bench/tests keep stable keys)."""
-    if name in QUERIES:
-        return QUERIES[name]
-    return CONSOLIDATED[name][0]
+    """The Spark plan of a registered surface; KeyError if unknown."""
+    return SURFACES[name][0]
 
 
-def lookup_oracle(name: str) -> str | None:
-    if name in ORACLES:
-        return ORACLES[name]
-    if name in CONSOLIDATED:
-        return CONSOLIDATED[name][1]
-    return None
+def lookup_oracle(name: str) -> str:
+    """The DuckDB oracle of a registered surface; KeyError if unknown."""
+    return SURFACES[name][1]
 
 
-def query(name: str, oracle: str | None = None):
-    """Register a query; optionally its DuckDB oracle SQL. Duplicate
-    names raise at import: a silent re-registration would REPLACE an
-    attested gate's function/oracle while keeping its registry position
-    — the r10 near-miss (a new gate reused `sequence_packing`, already
-    taken at r7) that this assert turns into a loud error."""
+def query(name: str, oracle: str):
+    """Register ``fn`` as surface ``name`` with its DuckDB ``oracle``."""
+    if not isinstance(oracle, str) or not oracle.strip():
+        raise ValueError(f"query {name!r} needs a non-empty oracle SQL string")
 
     def deco(fn):
-        if name in QUERIES or name in CONSOLIDATED:
+        if name in SURFACES:
             raise AssertionError(
                 f"query name {name!r} is already registered; pick a new "
-                "name — re-registration silently replaces the attested gate"
+                "name — re-registration would replace the registered surface"
             )
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
+        SURFACES[name] = (fn, oracle)
         return fn
 
     return deco

@@ -1,20 +1,19 @@
-"""Suite gates: the round-9 consolidation program (VERDICT r8 item 1).
+"""Suite gates: one driver row verifies a whole family of surfaces.
 
-Round 8 registered oracled queries 9x faster than the driver's 50-entry
-gate window could attest them, leaving a 141-entry never-driver-attested
-backlog. This module consolidates that backlog into family SUITE gates,
-the `doc_lookup_suite` play at scale: each suite runs every member's
-FULL Spark plan and its FULL DuckDB oracle, canonicalizes both results
-to a shared (gate, rn, c1..cW) string schema, and union-alls them tagged
-by member name — so ONE driver row per suite hash-verifies every
-member's oracle parity, every round, instead of parking it in a queue.
+Each suite in SUITE_PLAN runs every member's full Spark plan and its full
+DuckDB oracle, canonicalizes both results to a shared (gate, rn, c1..cW)
+string schema, and union-alls them tagged by member name, so one driver
+row hash-verifies every member's oracle parity.
 
-Members leave the top-level driver registry (QUERIES/ORACLES) and move
-to CONSOLIDATED: still importable, still runnable standalone via
-``lookup_query()`` / ``tests/oracle_harness.py``, still unit-tested —
-only the driver-facing surface changes. Nothing is weakened: a member's
-oracle that previously would have waited ~4 rounds for one driver row is
-now re-verified inside its suite's row EVERY round.
+Invariants:
+  - A member stays registered under its own name, runnable standalone
+    through ``lookup_query()`` / ``lookup_oracle()`` and
+    ``tests/oracle_harness.py``. ``register_suites`` adds each suite as
+    one more surface beside its members; the driver view
+    (``queries.get_queries()``) lists the suite in their place.
+  - Each member is in exactly one suite and has a canon spec in
+    suite_specs.py.
+  - A suite's oracle embeds each member's oracle text unchanged.
 
 Canonicalization (the cross-engine string forms both engines agree on,
 derived from the attested pairs' schemas by tools/gen_suite_specs.py and
@@ -51,12 +50,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pdf_brain_spark.functions.guards import bounded_axis
+from pdf_brain_spark.registry import lookup_oracle, lookup_query, query
 from pdf_brain_spark.suite_specs import SUITE_SPECS
 
 # ---------------------------------------------------------------------------
-# The consolidation plan: suite -> members (exact partition of the round-9
-# consolidation set; install_suites asserts every member is registered with
-# an oracle and appears in exactly one suite).
+# The suite plan: suite -> members, each member in exactly one suite.
 # ---------------------------------------------------------------------------
 SUITE_PLAN: dict[str, list[str]] = {
     # classic TPC-H shapes (the 15 never-driver-attested singles + Q2)
@@ -424,10 +422,10 @@ def _member_oracle_sql(member: str, oracle: str, width: int) -> str:
     )
 
 
-def _suite_oracle_sql(suite: str, oracles: dict[str, str]) -> str:
+def _suite_oracle_sql(suite: str) -> str:
     width = suite_width(suite)
     parts = [
-        _member_oracle_sql(m, oracles[m], width) for m in SUITE_PLAN[suite]
+        _member_oracle_sql(m, lookup_oracle(m), width) for m in SUITE_PLAN[suite]
     ]
     body = "\nUNION ALL\n".join(parts)
     return f"SELECT * FROM (\n{body}\n) __s ORDER BY gate, rn"
@@ -483,7 +481,7 @@ SUITE_SHARED_INPUTS: dict[str, Callable] = {
 }
 
 
-def _make_suite_fn(suite: str, consolidated: dict):
+def _make_suite_fn(suite: str):
     members = SUITE_PLAN[suite]
     shared_builder = SUITE_SHARED_INPUTS.get(suite)
 
@@ -503,7 +501,7 @@ def _make_suite_fn(suite: str, consolidated: dict):
             parts = list(
                 ex.map(
                     lambda m: _canon_member_df(
-                        consolidated[m][0](spark, sf_dir, **shared.get(m, {})),
+                        lookup_query(m)(spark, sf_dir, **shared.get(m, {})),
                         m,
                         width,
                     ),
@@ -534,33 +532,8 @@ def _make_suite_fn(suite: str, consolidated: dict):
     return fn
 
 
-def install_suites(queries: dict, oracles: dict, consolidated: dict) -> None:
-    """Move every SUITE_PLAN member from the driver-facing registry into
-    CONSOLIDATED and register one suite gate per family in its place.
-    Idempotent per process: a second call over an already-consolidated
-    registry is a no-op (ADVICE r9 — members were popped from
-    queries/oracles by the first call, so re-running the move would
-    otherwise fail its own is-registered assert)."""
-    if all(
-        m in consolidated
-        for members in SUITE_PLAN.values()
-        for m in members
-    ) and all(s in queries for s in SUITE_PLAN):
-        return
-    seen: set[str] = set()
-    for suite, members in SUITE_PLAN.items():
-        for m in members:
-            if m in seen:
-                raise AssertionError(f"{m} appears in two suites")
-            seen.add(m)
-            if m not in queries:
-                raise AssertionError(f"suite member {m} is not registered")
-            if m not in oracles:
-                raise AssertionError(f"suite member {m} has no oracle")
-            if m not in SUITE_SPECS:
-                raise AssertionError(f"suite member {m} has no canon spec")
-            consolidated[m] = (queries.pop(m), oracles.pop(m), suite)
-        queries[suite] = _make_suite_fn(suite, consolidated)
-        oracles[suite] = _suite_oracle_sql(
-            suite, {m: consolidated[m][1] for m in members}
-        )
+def register_suites() -> None:
+    """Register one suite surface per SUITE_PLAN family, in SUITE_PLAN
+    order. Every member must already be registered."""
+    for suite in SUITE_PLAN:
+        query(suite, _suite_oracle_sql(suite))(_make_suite_fn(suite))

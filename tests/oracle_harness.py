@@ -54,15 +54,12 @@ def _normalize(rows, colnames):
 
 
 def compare(name: str, spark, sf_dir: str, verbose: bool = True) -> bool:
-    # lookup_* resolve suite-consolidated members too, so any member can
-    # still be attested standalone by name
+    # lookup_* resolve every registered surface, suite members too, so
+    # any member can be attested standalone by name
     from pdf_brain_spark.queries import lookup_oracle, lookup_query
 
     q = lookup_query(name)
     sql = lookup_oracle(name)
-    if sql is None:
-        print(f"{name}: NO ORACLE")
-        return False
     sdf = q(spark, sf_dir)
     # toPandas, not collect(): the driver's gate compares pandas-to-pandas,
     # so NULL float -> NaN and NULL timestamp -> NaT on BOTH sides

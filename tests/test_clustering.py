@@ -1,14 +1,105 @@
-"""Equivalence pins for the r17 optimization round: every rewrite must
-pin against the shape it replaced (same results, cheaper plan/kernel).
+"""The exact-integer clustering kernels (operators/clustering.py): the
+in-kernel partial aggregates of kmeans_fit_exact_int and
+assign_stats_exact_int equal the row-level references they replaced, and
+both raise by name past the float64-exactness bound.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 import pandas as pd
 import pytest
 
-pytestmark = pytest.mark.usefixtures("spark")
+
+def test_kmeans_partial_agg_update_matches_exploded_reference(spark):
+    """kmeans_fit_exact_int now partially aggregates (cid, d, s, n)
+    inside the Arrow task instead of returning every row's q array and
+    posexploding it. Pin: the fitted centroid table is IDENTICAL to a
+    driver-local numpy replay of the exploded reference recurrence
+    (integer argmin with lowest-cid ties, truncating-division update)."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from pdf_brain_spark.operators.clustering import kmeans_fit_exact_int
+    from pdf_brain_spark.operators.pca import _trunc_div
+
+    rng = np.random.default_rng(7)
+    n, dim, k, n_iter, scale = 257, 16, 5, 3, 1000
+    X = rng.standard_normal((n, dim)) * 1.7
+    pdf = pd.DataFrame(
+        {"vec_id": np.arange(n, dtype=np.int64), "embedding": [list(map(float, r)) for r in X]}
+    )
+    df = spark.createDataFrame(pdf, "vec_id long, embedding array<double>")
+    got = {
+        (r["cluster_id"], r["dim_idx"]): (r["coord_milli"], r["n_members"])
+        for r in kmeans_fit_exact_int(spark, df, k=k, dim=dim, n_iter=n_iter).collect()
+    }
+
+    # driver-local replay of the documented recurrence on exact integers.
+    # Quantize with Spark's F.round rule — HALF_UP (away from zero) for
+    # doubles — not np.round (half-EVEN), which would diverge on exact
+    # .5-milli boundaries (ADVICE r16).
+    def _half_up(v: float) -> int:
+        return int(math.copysign(math.floor(abs(v) + 0.5), v))
+
+    q = np.array([[_half_up(v) for v in x * scale] for x in X], dtype=np.int64)
+    C = q[:k].copy()
+    sizes = np.zeros(k, dtype=np.int64)
+    for _ in range(n_iter):
+        d2 = ((q[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+        a = d2.argmin(axis=1)  # first minimum == lowest cid on ties
+        C_next = C.copy()
+        counts = np.zeros(k, dtype=np.int64)
+        for j in range(k):
+            members = q[a == j]
+            if len(members):
+                counts[j] = len(members)
+                C_next[j] = np.array(
+                    [_trunc_div(int(s), int(len(members))) for s in members.sum(axis=0)]
+                )
+        C, sizes = C_next, counts
+    want = {
+        (c, d): (int(C[c][d]), int(sizes[c])) for c in range(k) for d in range(dim)
+    }
+    assert got == want
+
+
+def test_kmeans_fit_float64_bound_guard(spark):
+    """Components at/above the DIM-AWARE bound sqrt(2^51/dim) (ADVICE
+    r16: exactness of the expanded x²−2X·Cᵀ+c² form needs
+    4·dim·M² < 2^53, so the old flat 2^22 check was silently lax for
+    dim ≥ ~128) break the float64-exact distance contract and must
+    raise by name, not return wrong argmins."""
+    import math
+
+    import pandas as pd
+
+    from pdf_brain_spark.operators.clustering import kmeans_fit_exact_int
+
+    bound = math.isqrt((1 << 51) // 2)  # dim=2 → 2^25
+    big = float(bound + 7) / 1000.0  # quantizes above the dim-2 bound
+    pdf = pd.DataFrame(
+        {
+            "vec_id": np.arange(4, dtype=np.int64),
+            "embedding": [[big, 0.0], [0.0, 1.0], [1.0, 0.0], [0.5, 0.5]],
+        }
+    )
+    df = spark.createDataFrame(pdf, "vec_id long, embedding array<double>")
+    with pytest.raises(Exception, match="float64-exact"):
+        kmeans_fit_exact_int(spark, df, k=2, dim=2, n_iter=1).collect()
+    # and just UNDER the dim-2 bound must fit cleanly (the flat-2^22
+    # guard would have rejected this legal input)
+    ok = float(bound - 1) / 1000.0
+    pdf2 = pd.DataFrame(
+        {
+            "vec_id": np.arange(4, dtype=np.int64),
+            "embedding": [[ok, 0.0], [0.0, 1.0], [1.0, 0.0], [0.5, 0.5]],
+        }
+    )
+    df2 = spark.createDataFrame(pdf2, "vec_id long, embedding array<double>")
+    assert kmeans_fit_exact_int(spark, df2, k=2, dim=2, n_iter=1).count() == 4
 
 
 def _hof_reference(spark, q, cmat):
@@ -140,114 +231,3 @@ def test_assign_stats_centroid_bound_guard(spark):
     q = spark.createDataFrame([(0, [1, 0])], "vec_id long, q array<long>")
     with pytest.raises(ValueError, match="centroid .*float64-exact"):
         assign_stats_exact_int(q, [[0, 0], [-bound, 1]])
-
-
-def test_minhash_signatures_exprstr_matches_lambda_form(spark):
-    """The selectExpr string form of minhash_signatures_from_sets must
-    reproduce the former python-lambda Column construction exactly."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from pdf_brain_spark.operators.dedup import (
-        MINHASH_HASHES,
-        MINHASH_PRIME,
-        _minhash_coeffs,
-        minhash_signatures_from_sets,
-    )
-
-    pdf = pd.DataFrame(
-        {
-            "doc_id": [1, 2, 3, 4],
-            "sh_set": [
-                ["a b c", "b c d", "c d e"],
-                ["a b c"],
-                ["x y z", "y z w"],
-                ["q r s", "r s t", "s t u", "t u v"],
-            ],
-        }
-    )
-    sets = spark.createDataFrame(pdf, "doc_id long, sh_set array<string>")
-
-    # verbatim pre-r17 construction
-    bases = F.transform(
-        F.col("sh_set"),
-        lambda s: F.conv(F.substring(F.md5(s), 1, 7), 16, 10).cast("long"),
-    )
-    d = sets.select(F.col("doc_id"), bases.alias("_bases"))
-    def _affine(a, b):
-        return lambda x: (x * F.lit(a) + F.lit(b)) % F.lit(MINHASH_PRIME)
-
-    cols = []
-    for j in range(MINHASH_HASHES):
-        a, b = _minhash_coeffs(j)
-        cols.append(
-            F.array_min(
-                F.transform(F.col("_bases"), _affine(a, b))
-            ).alias(f"h{j}")
-        )
-    want = sorted(tuple(r) for r in d.select("doc_id", *cols).collect())
-    got = sorted(tuple(r) for r in minhash_signatures_from_sets(sets).collect())
-    assert got == want
-
-
-def test_tokenize_shingles_sql_fragments_match_lambda_forms(spark):
-    """tokenize()/shingles() built via SQL fragments (tokenize_sql /
-    shingles_sql, r17 §7.3 py4j-chatter fix) must reproduce the verbatim
-    python-lambda Column constructions exactly, across k values and edge
-    texts (empty, whitespace-only, < k tokens, trailing whitespace)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from pdf_brain_spark.functions.text import (
-        shingles,
-        tokenize,
-        tokenize_sql,
-    )
-
-    pdf = pd.DataFrame(
-        {
-            "doc_id": list(range(7)),
-            "text": [
-                "The quick brown Fox  jumps over the lazy dog",
-                "",
-                "   ",
-                "one",
-                "a b",
-                "x  y\tz\nw",
-                "  trailing space  ",
-            ],
-        }
-    )
-    docs = spark.createDataFrame(pdf, "doc_id long, text string")
-
-    # verbatim pre-r17 constructions
-    t = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    tok_old = F.filter(t, lambda x: x != "")
-    for k in (2, 3, 5):
-        n = F.size(tok_old)
-        out = tok_old
-        for j in range(1, k):
-            shifted = F.slice(tok_old, j + 1, F.greatest(n - j, F.lit(0)))
-            out = F.zip_with(
-                out, shifted, lambda a, b: F.concat(a, F.lit(" "), b)
-            )
-        sh_old = F.filter(out, lambda x: x.isNotNull())
-        want = [
-            tuple(r)
-            for r in docs.select(
-                "doc_id", tok_old.alias("t"), sh_old.alias("s")
-            )
-            .orderBy("doc_id")
-            .collect()
-        ]
-        got = [
-            tuple(r)
-            for r in docs.select(
-                "doc_id",
-                tokenize("text").alias("t"),
-                shingles(tokenize_sql("text"), k).alias("s"),
-            )
-            .orderBy("doc_id")
-            .collect()
-        ]
-        assert got == want, f"k={k}"

@@ -134,3 +134,39 @@ def test_ivf_batch_scan_prunes_unprobed_lists(spark):
     found = re.findall(r"list_id#\d+ IN \(([\d,\s]+)\)", plan)
     assert found, plan
     assert {int(x) for x in found[0].split(",")} == union
+
+
+def _topk_per_query_reference(dist_col, vid, take):
+    """The per-query selection (argpartition + tied-tail lexsort) the
+    serving kernels once called in a Python loop, kept verbatim as the
+    reference the vectorized path must match."""
+    b = dist_col.shape[0]
+    if take >= b:
+        cand = np.arange(b)
+    else:
+        part = np.argpartition(dist_col, take - 1)[:take]
+        kth = dist_col[part].max()
+        cand = np.flatnonzero(dist_col <= kth)
+    order = np.lexsort((vid[cand], dist_col[cand]))
+    return cand[order[:take]]
+
+
+def test_topk_rows_tiebroken_batch_matches_per_query():
+    from pdf_brain_spark.operators.vector_search import topk_rows_tiebroken_batch
+
+    rng = np.random.default_rng(0)
+    for trial in range(300):
+        b = int(rng.integers(1, 60))
+        q = int(rng.integers(1, 12))
+        take = int(rng.integers(1, 70))
+        if trial % 2:
+            dist = rng.random(size=(b, q))
+        else:
+            # heavy integer ties — the adversarial case for truncation
+            dist = rng.integers(0, 4, size=(b, q)).astype(np.float64)
+        vid = rng.permutation(100000)[:b]
+        got = topk_rows_tiebroken_batch(dist, vid, take)
+        assert got.shape == (min(take, b), q)
+        for j in range(q):
+            ref = _topk_per_query_reference(dist[:, j], vid, min(take, b))
+            assert np.array_equal(got[:, j], ref)

@@ -973,20 +973,25 @@ def test_bpe_doubled_delimiter_merge_matches_list_reference():
 
 def test_query_registry_rejects_duplicate_names():
     """The @query decorator must refuse a name that is already a
-    registered gate or a suite-consolidated member — a silent
-    re-registration would replace an attested gate's function and oracle
-    while keeping its registry position (the r10 near-miss)."""
+    registered driver gate or suite member — a silent re-registration
+    would replace the surface's function and oracle while keeping its
+    registry position — and a surface without an oracle."""
     import pytest
 
-    from pdf_brain_spark.queries import CONSOLIDATED, QUERIES, query
+    from pdf_brain_spark.queries import get_queries, lookup_query, query
+    from pdf_brain_spark.suites import SUITE_PLAN
 
-    taken = next(iter(QUERIES))
+    taken = next(iter(get_queries()))
+    before = lookup_query(taken)
     with pytest.raises(AssertionError, match="already registered"):
-        query(taken)(lambda spark, sf: None)
-    member = next(iter(CONSOLIDATED))
+        query(taken, "SELECT 1")(lambda spark, sf: None)
+    member = next(iter(SUITE_PLAN.values()))[0]
     with pytest.raises(AssertionError, match="already registered"):
-        query(member)(lambda spark, sf: None)
-    assert callable(QUERIES[taken])  # original untouched
+        query(member, "SELECT 1")(lambda spark, sf: None)
+    assert lookup_query(taken) is before  # original untouched
+    for oracle in (None, "", "  \n"):
+        with pytest.raises(ValueError, match="non-empty oracle"):
+            query("no_such_gate_anywhere", oracle)
 
 
 def test_kneser_ney_integer_closed_form_mass_identity():

@@ -1,4 +1,4 @@
-"""Suite-gate machinery (round 9 consolidation): registry invariants,
+"""The surface registry and the suite gates: registry invariants,
 lookup resolution, and the union-canonicalization's structural
 guarantees. Oracle parity itself is attested by tests/oracle_harness.py
 at three scales (the driver-mirror path); these tests pin the plumbing."""
@@ -11,38 +11,39 @@ SF = "/root/testdata/sf0.001"
 
 def test_registry_invariants():
     from pdf_brain_spark.queries import (
-        CONSOLIDATED,
+        SURFACES,
         GATE_WINDOW,
-        ORACLES,
-        QUERIES,
+        get_oracles,
+        get_queries,
         lookup_oracle,
         lookup_query,
     )
     from pdf_brain_spark.suites import SUITE_PLAN
 
-    # window is the first 50 registered, exactly
-    assert list(QUERIES)[:50] == GATE_WINDOW and len(GATE_WINDOW) == 50
-    # every suite is registered with an oracle; every member consolidated
+    # every surface resolves to a callable and a non-empty oracle
+    for n in SURFACES:
+        assert callable(lookup_query(n)), n
+        assert isinstance(lookup_oracle(n), str) and lookup_oracle(n).strip(), n
+    # the driver view opens with the window, then the standalone gates
+    driver = list(get_queries())
+    assert driver[:50] == GATE_WINDOW and len(GATE_WINDOW) == 50
+    assert list(get_oracles()) == driver
     members = [m for ms in SUITE_PLAN.values() for m in ms]
-    assert len(members) == len(set(members)) == len(CONSOLIDATED)
-    for s in SUITE_PLAN:
-        assert s in QUERIES and s in ORACLES
-    for m in members:
-        # members are verified inside their suite's row, never standalone
-        assert m not in QUERIES and m not in ORACLES
-        assert callable(lookup_query(m))
-        assert isinstance(lookup_oracle(m), str)
-        fn, sql, suite = CONSOLIDATED[m]
-        assert suite in SUITE_PLAN and m in SUITE_PLAN[suite]
-        # the member's full oracle text is embedded in its suite's oracle
-        assert sql.strip() in ORACLES[suite]
+    assert len(members) == len(set(members))
+    assert not set(driver) & set(members)
+    assert set(driver) | set(members) == set(SURFACES)
+    for suite, ms in SUITE_PLAN.items():
+        assert suite in driver
+        for m in ms:
+            # the member's full oracle text is embedded in its suite's oracle
+            assert lookup_oracle(m).strip() in lookup_oracle(suite), m
 
 
 def test_gate_window_is_fixed():
     """The window is a constant: the 30 suites in SUITE_PLAN order, then
     20 named standalone gates (11 flagship spares and 9 gates on the
     shared kernels' and the benchmark's paths), none a suite member."""
-    from pdf_brain_spark.queries import CONSOLIDATED, GATE_WINDOW
+    from pdf_brain_spark.queries import GATE_WINDOW
     from pdf_brain_spark.suites import SUITE_PLAN
 
     assert GATE_WINDOW[:30] == list(SUITE_PLAN)
@@ -57,26 +58,25 @@ def test_gate_window_is_fixed():
         "events_sessionize", "tpch_q3_shipping_priority",
         "streaming_incremental_fts",
     ]
-    assert not set(GATE_WINDOW) & set(CONSOLIDATED)
+    members = {m for ms in SUITE_PLAN.values() for m in ms}
+    assert not set(GATE_WINDOW) & members
 
 
 def test_registry_pinned_counts():
-    """VERDICT r10 item 7: the registry counts are PINNED per round so
-    any registration path that bypasses @query's duplicate guard (or a
-    collision the guard can't see, e.g. a suite name shadowing a gate)
-    is caught by a count audit, the way the r10 near-miss was. Update
-    these three numbers deliberately, in the same commit that changes
-    the registry — a drive-by drift here is the bug this test exists
-    to catch. Current state: 183 driver-facing gates, 192
-    suite-consolidated members across 30 suites = 375 named surfaces."""
-    from pdf_brain_spark.queries import CONSOLIDATED, ORACLES, QUERIES
+    """The registry counts are pinned, so a registration that bypasses
+    @query's duplicate guard (or a collision the guard cannot see, e.g.
+    a suite name shadowing a gate) fails a count audit. Update these
+    numbers deliberately, in the same commit that changes the registry.
+    Current state: 183 driver-facing gates, 192 suite members across 30
+    suites = 375 named surfaces."""
+    from pdf_brain_spark.queries import SURFACES, get_oracles, get_queries
     from pdf_brain_spark.suites import SUITE_PLAN
 
-    assert len(QUERIES) == 183
-    assert len(ORACLES) == 183
-    assert len(CONSOLIDATED) == 192
+    assert len(get_queries()) == 183
+    assert len(get_oracles()) == 183
+    assert sum(len(ms) for ms in SUITE_PLAN.values()) == 192
     assert len(SUITE_PLAN) == 30
-    assert len(QUERIES) + len(CONSOLIDATED) == 375
+    assert len(SURFACES) == 375
 
 
 def test_streaming_gates_share_the_replay_harness():
@@ -100,30 +100,13 @@ def test_streaming_gates_share_the_replay_harness():
     assert "globals()[" not in (pkg / "queries.py").read_text()
 
 
-def test_membership_history_latest_snapshot_matches_current_plan():
-    """The per-round membership history (ADVICE r13: suite-green
-    inheritance must be round-aware) stays in sync: the LATEST snapshot
-    in tools/suite_membership_history.json equals current SUITE_PLAN, so
-    a fold committed without `never_attested.py --snapshot N` fails here
-    instead of silently under-inheriting in the audit."""
-    import json
-    import os
-
-    from pdf_brain_spark.suites import SUITE_PLAN
-
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                        "tools", "suite_membership_history.json")
-    with open(path) as f:
-        hist = json.load(f)
-    latest = hist[str(max(int(k) for k in hist))]
-    assert latest == {s: list(ms) for s, ms in SUITE_PLAN.items()}
-
-
 def test_lookup_query_unknown_name_raises():
-    from pdf_brain_spark.queries import lookup_query
+    from pdf_brain_spark.queries import lookup_oracle, lookup_query
 
     with pytest.raises(KeyError):
         lookup_query("no_such_gate_anywhere")
+    with pytest.raises(KeyError):
+        lookup_oracle("no_such_gate_anywhere")
 
 
 @pytest.mark.parametrize("suite", ["suite_rank_stats", "suite_lm_planning"])
@@ -132,7 +115,7 @@ def test_suite_rows_equal_member_rows(spark, suite):
     (nothing dropped, nothing duplicated), tagged by member name, with
     rn a 1..n_member permutation — pinned for one r9-era suite and one
     r13 steady-state suite."""
-    from pdf_brain_spark.queries import CONSOLIDATED, get_queries
+    from pdf_brain_spark.queries import get_queries, lookup_query
     from pdf_brain_spark.suites import SUITE_PLAN
 
     out = get_queries()[suite](spark, SF).collect()
@@ -141,7 +124,7 @@ def test_suite_rows_equal_member_rows(spark, suite):
         by_gate.setdefault(r["gate"], []).append(r["rn"])
     assert set(by_gate) == set(SUITE_PLAN[suite])
     for m in SUITE_PLAN[suite]:
-        n = CONSOLIDATED[m][0](spark, SF).count()
+        n = lookup_query(m)(spark, SF).count()
         assert sorted(by_gate[m]) == list(range(1, n + 1)), m
 
 
@@ -196,17 +179,6 @@ def test_bench_median_rule_drops_warmup():
     # <4 samples: median over all (single-shot and min-of-2 keys)
     assert bench._median_rule([2.0]) == 2.0
     assert bench._median_rule([1.0, 3.0, 2.0]) == 2.0
-
-
-def test_install_suites_is_idempotent():
-    """A second install_suites over the already-consolidated registry is
-    a no-op, not an AssertionError (ADVICE r9)."""
-    from pdf_brain_spark import queries as q
-    from pdf_brain_spark.suites import install_suites
-
-    before = list(q.QUERIES)
-    install_suites(q.QUERIES, q.ORACLES, q.CONSOLIDATED)
-    assert list(q.QUERIES) == before
 
 
 def test_float_canon_nan_inf_sentinels_match_both_engines(spark):

@@ -406,3 +406,114 @@ def test_md5_prefix_hash_built_only_by_md5_long():
         and ("F.conv(F.substring(F.md5(" in p.read_text() or "conv(substring(md5(" in p.read_text())
     ]
     assert offenders == []
+
+
+def test_minhash_signatures_exprstr_matches_lambda_form(spark):
+    """The selectExpr string form of minhash_signatures_from_sets must
+    reproduce the former python-lambda Column construction exactly."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from pdf_brain_spark.operators.dedup import (
+        MINHASH_HASHES,
+        MINHASH_PRIME,
+        _minhash_coeffs,
+        minhash_signatures_from_sets,
+    )
+
+    pdf = pd.DataFrame(
+        {
+            "doc_id": [1, 2, 3, 4],
+            "sh_set": [
+                ["a b c", "b c d", "c d e"],
+                ["a b c"],
+                ["x y z", "y z w"],
+                ["q r s", "r s t", "s t u", "t u v"],
+            ],
+        }
+    )
+    sets = spark.createDataFrame(pdf, "doc_id long, sh_set array<string>")
+
+    # verbatim pre-r17 construction
+    bases = F.transform(
+        F.col("sh_set"),
+        lambda s: F.conv(F.substring(F.md5(s), 1, 7), 16, 10).cast("long"),
+    )
+    d = sets.select(F.col("doc_id"), bases.alias("_bases"))
+    def _affine(a, b):
+        return lambda x: (x * F.lit(a) + F.lit(b)) % F.lit(MINHASH_PRIME)
+
+    cols = []
+    for j in range(MINHASH_HASHES):
+        a, b = _minhash_coeffs(j)
+        cols.append(
+            F.array_min(
+                F.transform(F.col("_bases"), _affine(a, b))
+            ).alias(f"h{j}")
+        )
+    want = sorted(tuple(r) for r in d.select("doc_id", *cols).collect())
+    got = sorted(tuple(r) for r in minhash_signatures_from_sets(sets).collect())
+    assert got == want
+
+
+def test_tokenize_shingles_sql_fragments_match_lambda_forms(spark):
+    """tokenize()/shingles() built via SQL fragments (tokenize_sql /
+    shingles_sql, r17 §7.3 py4j-chatter fix) must reproduce the verbatim
+    python-lambda Column constructions exactly, across k values and edge
+    texts (empty, whitespace-only, < k tokens, trailing whitespace)."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from pdf_brain_spark.functions.text import (
+        shingles,
+        tokenize,
+        tokenize_sql,
+    )
+
+    pdf = pd.DataFrame(
+        {
+            "doc_id": list(range(7)),
+            "text": [
+                "The quick brown Fox  jumps over the lazy dog",
+                "",
+                "   ",
+                "one",
+                "a b",
+                "x  y\tz\nw",
+                "  trailing space  ",
+            ],
+        }
+    )
+    docs = spark.createDataFrame(pdf, "doc_id long, text string")
+
+    # verbatim pre-r17 constructions
+    t = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    tok_old = F.filter(t, lambda x: x != "")
+    for k in (2, 3, 5):
+        n = F.size(tok_old)
+        out = tok_old
+        for j in range(1, k):
+            shifted = F.slice(tok_old, j + 1, F.greatest(n - j, F.lit(0)))
+            out = F.zip_with(
+                out, shifted, lambda a, b: F.concat(a, F.lit(" "), b)
+            )
+        sh_old = F.filter(out, lambda x: x.isNotNull())
+        want = [
+            tuple(r)
+            for r in docs.select(
+                "doc_id", tok_old.alias("t"), sh_old.alias("s")
+            )
+            .orderBy("doc_id")
+            .collect()
+        ]
+        got = [
+            tuple(r)
+            for r in docs.select(
+                "doc_id",
+                tokenize("text").alias("t"),
+                shingles(tokenize_sql("text"), k).alias("s"),
+            )
+            .orderBy("doc_id")
+            .collect()
+        ]
+        assert got == want, f"k={k}"

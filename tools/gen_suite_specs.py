@@ -5,13 +5,15 @@ oracle schema (DESCRIBE over the same views). Deriving the kind from
 BOTH schemas at generation time is what guarantees the Spark-side cast
 and the SQL-side cast agree about every column's canonical string form.
 
-Usage:  SPARK_GRAFT_NO_SUITES=1 python3 tools/gen_suite_specs.py [sf_dir]
-        SPARK_GRAFT_NO_SUITES=1 python3 tools/gen_suite_specs.py [sf_dir] \
-            --only member [member ...]
+Usage:  python3 tools/gen_suite_specs.py [sf_dir]
+        python3 tools/gen_suite_specs.py [sf_dir] --only member [member ...]
 
 --only regenerates specs for just the named members and MERGES them into
 the existing SUITE_SPECS (new suites' members get specs without
 re-deriving — and risking churn in — the 120+ already-attested ones).
+
+The tool imports the gate modules only, never the suites' registration,
+so a member that has no spec yet still resolves.
 """
 
 from __future__ import annotations
@@ -19,7 +21,6 @@ from __future__ import annotations
 import os
 import sys
 
-os.environ.setdefault("SPARK_GRAFT_NO_SUITES", "1")
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 _argv = sys.argv[1:]
@@ -74,7 +75,8 @@ def kind_for(spark_t: str, duck_t: str) -> str:
 
 
 def main() -> None:
-    from pdf_brain_spark.queries import ORACLES, QUERIES
+    import pdf_brain_spark.gates  # noqa: F401  (registers every suite member)
+    from pdf_brain_spark.registry import lookup_oracle, lookup_query
     from pdf_brain_spark.session import get_spark
     from pdf_brain_spark.suites import SUITE_PLAN
     from tests.oracle_harness import duck_connect
@@ -95,9 +97,9 @@ def main() -> None:
     failures: list[str] = []
     for n, m in enumerate(todo, 1):
         try:
-            sdf = QUERIES[m](spark, SF)
+            sdf = lookup_query(m)(spark, SF)
             stypes = {f.name: f.dataType.simpleString() for f in sdf.schema.fields}
-            dd = con.execute(f"DESCRIBE SELECT * FROM ({ORACLES[m]}) __d").fetchall()
+            dd = con.execute(f"DESCRIBE SELECT * FROM ({lookup_oracle(m)}) __d").fetchall()
             dtypes = {r[0]: r[1] for r in dd}
             if sorted(stypes) != sorted(dtypes):
                 raise ValueError(

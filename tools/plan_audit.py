@@ -140,10 +140,9 @@ def main() -> None:
 
     with open(BASELINE) as f:
         raw = json.load(f)
-    # pre-r15 baselines were a bare {gate: flags} map with no pin scale
-    base = raw["gates"] if "gates" in raw else raw
-    base_sf = raw.get("sf_dir")
-    if base_sf is not None and base_sf != sf_dir:
+    base = raw["gates"]
+    base_sf = raw["sf_dir"]
+    if base_sf != sf_dir:
         print(f"PLAN AUDIT FAILED: baseline pinned at {base_sf}, audit run "
               f"at {sf_dir} — bnlj/broadcast counts are scale-dependent; "
               f"run at the pin scale or re-pin deliberately")
