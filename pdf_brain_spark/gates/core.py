@@ -1387,7 +1387,7 @@ def events_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Recursive transitive closure (SURVEY §2.3 J5) — iterative frontier join
+# Recursive transitive closure (SURVEY §2.3 J5) — path doubling
 # --------------------------------------------------------------------------
 
 
@@ -1420,10 +1420,11 @@ def transitive_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BOTH closure directions of the implicit binary tree parent(k)=k//2
     over order keys — the reference's recursive-CTE taxonomy closure
     (TaxonomyService.ts:387-423) serves ancestors AND descendants; here
-    each is an iterative frontier join with a fixpoint stop, unioned with
-    a direction tag. Spark has no recursive CTE; each iteration is one
-    broadcast join + anti-join dedup. The descendants arm is key-bounded
-    (≤ 4096) so the bench cost stays proportional to the ancestors arm."""
+    each is a path-doubling closure (operators/taxonomy.py), unioned with
+    a direction tag: one broadcast join per round, ⌊log₂ depth⌋ + 1
+    rounds, each stopped by a test observed on its checkpoint job. The
+    descendants arm is key-bounded (≤ 4096) so the bench cost stays
+    proportional to the ancestors arm."""
     from pdf_brain_spark.operators.taxonomy import descendants, transitive_ancestors
 
     orders = load_table(spark, "orders", sf_dir)
@@ -1433,7 +1434,7 @@ def transitive_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     # closure iterates over a key-bounded dimension, not the fact table —
     # the same partition pruning a partitioned taxonomy table gives at
     # 100 TB. The key graph is a tree (one parent per node), so the
-    # acyclic fast path drops the per-level seen/anti-join maintenance.
+    # acyclic path doubling applies: tree paths are unique, no dedup.
     # materialize the key-bounded edge dimension ONCE (single partition —
     # ≤ 4095 rows) so the two closure arms below don't each re-run the
     # parquet scan + distinct shuffle (r16 optimization, guide §2.4)
@@ -1448,9 +1449,10 @@ def transitive_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
 
-    # The two arms are independent eager loops (one localCheckpoint job
-    # per level); run them from a 2-thread pool so one arm's per-level
-    # scheduling gaps back-fill with the other arm's tasks (guide §2.6 —
+    # The two arms are independent eager loops (a broadcast and a
+    # localCheckpoint job per round); run them from a 2-thread pool so
+    # one arm's per-round scheduling gaps back-fill with the other arm's
+    # tasks (guide §2.6 —
     # actions are only sequential because driver code calls them
     # sequentially). Results are unioned afterwards; determinism is
     # untouched because each arm's output is independent of the other's.

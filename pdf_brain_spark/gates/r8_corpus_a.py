@@ -1375,9 +1375,9 @@ def taxonomy_subtree_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical subtree aggregation — the OLAP rollup along a
     taxonomy (the reference's TaxonomyService closure feeding its
     library stats): for each root concept, aggregate a measure over its
-    ENTIRE descendant subtree, computed as the iterative frontier
-    closure (operators/taxonomy.py::descendants, the recursive-CTE
-    stand-in) joined to the fact measure and aggregated at root grain.
+    ENTIRE descendant subtree, computed as the path-doubling closure
+    (operators/taxonomy.py::descendants, the recursive-CTE stand-in)
+    joined to the fact measure and aggregated at root grain.
     The closure runs over the key-bounded dimension slice (pushed scan
     filter), the (root, member) pair set is tree-bounded, and the fact
     join is one key equi-join — the shape that survives a fact table

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pdf_brain_spark.functions.guards import spread_scan
-from pdf_brain_spark.functions.sql import Fragment, sql_ref
+from pdf_brain_spark.functions.sql import Fragment, checkpoint_observed, sql_ref
 from pdf_brain_spark.functions.text import (
     kgrams_sql,
     md5_long,
@@ -672,26 +672,17 @@ def connected_components(
             .groupBy("src")
             .agg(F.min("component").alias("_nmin"))
         )
-        updated = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
+        # the round's checkpoint job also counts the labels it moved
+        labels, seen = checkpoint_observed(
+            labels.join(neighbor_min, labels.node == neighbor_min.src, "left").selectExpr(
                 "node",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("_nmin"), F.col("component"))
-                ).alias("component"),
-            )
-            .localCheckpoint()
+                "least(component, coalesce(_nmin, component)) AS component",
+                "component AS _was",
+            ),
+            moved="count_if(component <> _was)",
         )
-        settled = (
-            updated.join(
-                labels.withColumnRenamed("component", "_old"), "node"
-            )
-            .filter(F.col("component") != F.col("_old"))
-            .isEmpty()
-        )
-        labels = updated
-        if settled:
-            return labels
+        if not seen["moved"]:
+            return labels.drop("_was")
     raise ValueError(
         f"connected components did not converge in max_iterations="
         f"{max_iterations} rounds (min-label propagation needs as many rounds "

@@ -81,3 +81,22 @@ def exact_tie_corpus(spark, tied_copies):
         "query_id long, query_vec array<double>",
     )
     return tied_copies(base), queries
+
+
+@pytest.fixture
+def jobs_fired(spark):
+    """fn(build) -> (build(), Spark jobs submitted while it ran), read from
+    the status store's job ids once the listener bus has drained."""
+    sc = spark.sparkContext._jsc.sc()
+    as_java = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+
+    def last_job():
+        sc.listenerBus().waitUntilEmpty()
+        return max((j.jobId() for j in as_java(sc.statusStore().jobsList(None))), default=-1)
+
+    def run(build):
+        before = last_job()
+        out = build()
+        return out, last_job() - before
+
+    return run

@@ -597,3 +597,17 @@ def test_connected_components_distributed_branch_raises_unconverged(spark, monke
         dedup.connected_components(pairs, max_iterations=3)
     distributed = sorted(tuple(r) for r in dedup.connected_components(pairs).collect())
     assert distributed == union_find
+
+
+def test_connected_components_distributed_branch_build_jobs(spark, monkeypatch, jobs_fired):
+    """The distributed branch's stop test rides on each round's checkpoint
+    job: on the 10-node path (10 rounds) it fires at most 77 jobs, where a
+    separate changed-label join plus `isEmpty` per round fired 117."""
+    from pdf_brain_spark.operators import dedup
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)] + [(20, 21)], "doc_a long, doc_b long"
+    )
+    monkeypatch.setattr(dedup, "UNION_FIND_MAX_EDGES", 0)
+    _, jobs = jobs_fired(lambda: dedup.connected_components(pairs))
+    assert jobs <= 77

@@ -81,6 +81,96 @@ def test_closure_past_the_cap_raises_instead_of_truncating(spark):
         )
 
 
+def _random_forest(depth, seed, n=60):
+    """(node, parent) edges of a seeded random forest whose deepest
+    root-to-leaf path has exactly `depth` edges: node levels 0..depth, each
+    level non-empty, every node's parent a random node one level up."""
+    import random
+
+    rng = random.Random(seed)
+    level = {i: i for i in range(depth + 1)}  # one full-depth chain
+    level.update({i: rng.randint(0, depth) for i in range(depth + 1, n)})
+    by_level = {lv: [i for i in level if level[i] == lv] for lv in range(depth + 1)}
+    return [(i, rng.choice(by_level[lv - 1])) for i, lv in level.items() if lv > 0]
+
+
+CLOSURE_SQL = {
+    "up": """
+        WITH RECURSIVE c(node, other, depth) AS (
+          SELECT node, parent, 1 FROM seeds
+          UNION ALL
+          SELECT c.node, e.parent, c.depth + 1 FROM c JOIN edges e ON e.node = c.other
+        ) SELECT node, other, depth FROM c""",
+    "down": """
+        WITH RECURSIVE c(node, other, depth) AS (
+          SELECT parent, node, 1 FROM seeds
+          UNION ALL
+          SELECT c.node, e.node, c.depth + 1 FROM c JOIN edges e ON e.parent = c.other
+        ) SELECT node, other, depth FROM c""",
+}
+
+
+@pytest.mark.parametrize("depth", [3, 4, 5, 7, 8, 9])
+def test_doubling_closure_matches_recursive_cte(spark, depth):
+    """Path doubling (acyclic=True) returns DuckDB's WITH RECURSIVE rows,
+    each path once, in both directions, on random forests whose depth is
+    2^k − 1, 2^k or 2^k + 1 (where the number of doubling rounds steps),
+    for all edges, a strict seed subset, and no seeds at all."""
+    import duckdb
+
+    from pdf_brain_spark.operators.taxonomy import descendants, transitive_ancestors
+
+    forest = _random_forest(depth, seed=depth)
+    edges = spark.createDataFrame(forest, "node long, parent long")
+    con = duckdb.connect()
+    con.register("edges", edges.toPandas())
+    for seed_filter in ["true", "node % 3 = 0", "false"]:
+        seeds = edges.where(seed_filter)
+        con.register("seeds", seeds.toPandas())
+        for direction, closure in [("up", transitive_ancestors), ("down", descendants)]:
+            got = sorted(tuple(r) for r in closure(seeds, edges, acyclic=True).collect())
+            want = sorted(con.sql(CLOSURE_SQL[direction]).fetchall())
+            assert got == want, (direction, seed_filter)
+            if seed_filter == "false":
+                assert got == []
+            elif seed_filter == "true" and direction == "up":
+                assert max(d for _, _, d in got) == depth
+
+
+@pytest.mark.parametrize("max_iterations,acyclic", [(6, True), (50, True), (6, False)])
+def test_closure_cap_boundary(spark, max_iterations, acyclic):
+    """A chain exactly max_iterations + 1 levels deep returns all its rows;
+    one level deeper raises."""
+    from pdf_brain_spark.operators.taxonomy import transitive_ancestors
+
+    def chain(levels):
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(levels)], "node long, parent long"
+        )
+        return transitive_ancestors(
+            edges.where("node = 0"), edges, max_iterations=max_iterations, acyclic=acyclic
+        )
+
+    cap = max_iterations + 1
+    assert sorted(tuple(r) for r in chain(cap).collect()) == [
+        (0, d, d) for d in range(1, cap + 1)
+    ]
+    with pytest.raises(ValueError, match="did not reach its fixpoint"):
+        chain(cap + 1).collect()
+
+
+def test_transitive_closure_build_jobs(spark, jobs_fired):
+    """Building the transitive_closure gate at sf0.001 fires at most 20
+    Spark jobs (61 with the one-level-per-round frontier loop): a doubling
+    round is one broadcast and one checkpoint job, with its stop test
+    observed on the checkpoint's own job."""
+    from pdf_brain_spark.gates.core import transitive_closure
+
+    df, jobs = jobs_fired(lambda: transitive_closure(spark, SF_DIR))
+    assert jobs <= 20
+    assert df.count() > 0
+
+
 def test_transitive_closure_leaves_no_persistent_rdd(spark):
     """Every RDD the transitive_closure gate persists (its per-level
     local checkpoints) is released once its result is: the closure holds

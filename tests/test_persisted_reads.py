@@ -12,16 +12,6 @@ SF = "/root/testdata/sf0.001"
 TERMS = ["spark", "shuffle", "join"]
 
 
-def _build_jobs(spark, build):
-    """(result, number of Spark jobs started while `build()` ran)."""
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    before = set(sc.statusTracker().getJobIdsForGroup())
-    out = build()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(set(sc.statusTracker().getJobIdsForGroup()) - before)
-
-
 def _live_dirs(spark, store):
     """Paths of a store's live generations."""
     from pdf_brain_spark.streaming.generations import list_store
@@ -266,7 +256,7 @@ def test_generation_store_reads_go_through_the_helper():
 # --- job guards ---------------------------------------------------------------
 
 
-def test_persisted_read_builds_fire_no_inference_jobs(spark, fts_store, ann_stores):
+def test_persisted_read_builds_fire_no_inference_jobs(spark, fts_store, ann_stores, jobs_fired):
     """Reading a store (compacted generation, live batch, tombstones above
     the frontier) fires no job while the read is built; the persisted
     BM25 build fires only its corpus-stats action."""
@@ -278,16 +268,16 @@ def test_persisted_read_builds_fire_no_inference_jobs(spark, fts_store, ann_stor
     keyed = [(idx, FTS_INDEX)]
     keyed += [(store, IVF_INDEX) for store in stores.values()]
     for store, decl in keyed:
-        _, jobs = _build_jobs(spark, lambda: decl.kept(spark, store))
+        _, jobs = jobs_fired(lambda: decl.kept(spark, store))
         assert jobs == 0, store
     q = [0.1] * len(centroids[0])
     for store in stores.values():
-        _, jobs = _build_jobs(
-            spark, lambda: ivf_search_persisted(spark, store, centroids, q, k=5, n_probes=2)
+        _, jobs = jobs_fired(
+            lambda: ivf_search_persisted(spark, store, centroids, q, k=5, n_probes=2)
         )
         assert jobs == 0, store
-    _, stats_jobs = _build_jobs(spark, lambda: fts_corpus_stats(spark, idx).collect())
-    _, jobs = _build_jobs(spark, lambda: fts_search_persisted(spark, idx, TERMS, k=10))
+    _, stats_jobs = jobs_fired(lambda: fts_corpus_stats(spark, idx).collect())
+    _, jobs = jobs_fired(lambda: fts_search_persisted(spark, idx, TERMS, k=10))
     assert jobs == stats_jobs, (jobs, stats_jobs)
 
 
@@ -295,7 +285,7 @@ def test_persisted_read_builds_fire_no_inference_jobs(spark, fts_store, ann_stor
     "state, bound",
     [("fts_compacted", 2), ("fts_two_live", 3), ("fts_store", 4)],
 )
-def test_persisted_bm25_build_jobs_per_read_state(spark, request, state, bound):
+def test_persisted_bm25_build_jobs_per_read_state(spark, request, state, bound, jobs_fired):
     """Jobs a repeated persisted BM25 build fires, per store state: one
     live (compacted) generation, two live batch generations, and a
     tombstone above the compaction frontier. The build is the stats
@@ -307,12 +297,14 @@ def test_persisted_bm25_build_jobs_per_read_state(spark, request, state, bound):
 
     idx, live = request.getfixturevalue(state)
     for _ in range(2):
-        df, jobs = _build_jobs(spark, lambda: fts_search_persisted(spark, idx, TERMS, k=10))
+        df, jobs = jobs_fired(lambda: fts_search_persisted(spark, idx, TERMS, k=10))
         assert jobs <= bound, (state, jobs)
     assert _rows(df) == _rows(bm25_scores(live, TERMS, k=10))
 
 
-def test_kept_rows_drop_a_row_iff_a_tombstone_floor_covers_it(spark, fts_retombstoned, fts_store):
+def test_kept_rows_drop_a_row_iff_a_tombstone_floor_covers_it(
+    spark, fts_retombstoned, fts_store, jobs_fired
+):
     """A row is dead iff some tombstone for its key has a floor >= the
     row's coverage: with a key tombstoned twice, a key re-inserted above
     its floor, and tombstones below and at a row's coverage, the kept
@@ -337,7 +329,7 @@ def test_kept_rows_drop_a_row_iff_a_tombstone_floor_covers_it(spark, fts_retombs
         return all(f < r["batch_id"] for f in floors.get(r["doc_id"], []))
 
     want = sorted((tuple(r) for r in raw.collect() if alive(r)), key=repr)
-    kept, jobs = _build_jobs(spark, lambda: FTS_INDEX.kept(spark, idx))
+    kept, jobs = jobs_fired(lambda: FTS_INDEX.kept(spark, idx))
     assert jobs == 0
     assert kept.columns == raw.columns
     got = sorted((tuple(r) for r in kept.collect()), key=repr)
@@ -349,8 +341,8 @@ def test_kept_rows_drop_a_row_iff_a_tombstone_floor_covers_it(spark, fts_retombs
     assert by_doc[key["B"]] == [3] and by_doc[key["C"]] == [2]
 
     # an aggregate over the tombstones ahead of their broadcast adds a job to each
-    _, four = _build_jobs(spark, lambda: fts_corpus_stats(spark, idx).collect())
-    _, tombstoned = _build_jobs(spark, lambda: fts_corpus_stats(spark, fts_store[0]).collect())
+    _, four = jobs_fired(lambda: fts_corpus_stats(spark, idx).collect())
+    _, tombstoned = jobs_fired(lambda: fts_corpus_stats(spark, fts_store[0]).collect())
     assert (four, tombstoned) == (4, 4)
 
 
