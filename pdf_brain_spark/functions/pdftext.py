@@ -139,11 +139,6 @@ def _expand_object_streams(objs: dict[int, tuple[bytes, bytes | None]]) -> None:
 _REF_RE = re.compile(rb"(\d+)\s+\d+\s+R")
 
 
-def _resolve_ref(token: bytes) -> int | None:
-    m = _REF_RE.search(token)
-    return int(m.group(1)) if m else None
-
-
 def _page_order(objs: dict[int, tuple[bytes, bytes | None]]) -> list[int]:
     """Object numbers of /Type /Page nodes in catalog tree order."""
     root = None

@@ -180,11 +180,6 @@ def score_threshold_to_distance(threshold: float) -> float:
     return 2.0 * (1.0 - threshold)
 
 
-def similarity_score(a: Vec, b: Vec) -> Column:
-    """End-to-end score = 1 - cos_distance/2 = (1 + cos_sim)/2."""
-    return F.expr(_score_sql(f"({_cosine_distance_sql(a, b, None)})"))
-
-
 def euclidean_distance(a: Vec, b: Vec, dim: int | None = None) -> Column:
     """√Σ(aᵢ-bᵢ)² (reference Clustering.ts:189-191)."""
     return F.expr(f"sqrt({_sum_sql(a, b, _resolve_dim(dim, a, b), _squared_difference)})")

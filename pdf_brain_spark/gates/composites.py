@@ -267,10 +267,7 @@ def clustering_model_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     T=0.5, floor 0.1). The DuckDB twin replays the per-k chains, picks
     the BIC argmin itself (lowest-k ties), and reports the winner's
     clusters — so even WHICH k the lifecycle selects is hash-checked.
-    The stochastic float lifecycle (bic_select_k warm-start fits +
-    check_model_invariants fail-fast) moved to
-    clustering_model_report_float below, still pytest-driven including
-    the poisoned-WSSSE fixture. Plan: per candidate one Arrow fit pass +
+    Plan: per candidate one Arrow fit pass +
     one RSS aggregate; the winner adds one map-side argmin+softmax pass
     feeding two cluster-grain aggregates; only model-grain tables are
     collected."""
@@ -377,76 +374,6 @@ def clustering_model_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("cluster_id")
     )
-
-
-def clustering_model_report_float(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The STOCHASTIC clustering lifecycle (seeded-sample MLlib-style
-    fits): BIC selection via bic_select_k's warm-start-and-grow chain,
-    cluster_summaries, BLAS soft_assignments — kept as an unregistered,
-    pytest-driven surface (including the poisoned-WSSSE fixture in
-    tests/test_graph_and_ann.py, which needs check_model_invariants to
-    RAISE on a broken model). The registered clustering_model_report
-    gate runs the deterministic exact-integer lifecycle with a DuckDB
-    twin; this float path is where the production fit quality
-    invariants live."""
-    from pdf_brain_spark.operators.clustering import (
-        bic_select_k,
-        check_model_invariants,
-        cluster_summaries,
-        kmeans_assign,
-        soft_assignments,
-    )
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    emb.cache()
-    # unpersist in finally: a raised invariant violation must not leak the
-    # cache entry into a long-lived session's CacheManager
-    try:
-        n_points = emb.count()
-        rss_by_k: dict = {}
-        best, scores = bic_select_k(emb, range(2, 9, 3), rss_out=rss_by_k)
-        assigned, centroids = kmeans_assign(emb, k=best, seed=42)
-        summaries = cluster_summaries(assigned)
-        soft = (
-            soft_assignments(emb, centroids)
-            .groupBy("cluster_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_soft_members"),
-                F.round(F.avg("probability"), 6).alias("mean_probability"),
-            )
-        )
-        out = (
-            summaries.join(soft, "cluster_id", "left")
-            .withColumn("chosen_k", F.lit(int(best)))
-            .withColumn("bic", F.lit(round(float(scores[best]), 4)))
-            .withColumn("n_points", F.lit(int(n_points)))
-            .withColumn("wssse_chosen_k", F.lit(round(float(rss_by_k[best]), 4)))
-            .orderBy("cluster_id")
-            # pin the tiny (≤ k rows) result so the invariant collect below
-            # and the driver's own collect read the same materialization
-            .localCheckpoint(eager=True)
-        )
-        # fail-fast self-check (VERDICT r3 item 5): RAISE on any violated
-        # invariant instead of returning plausible-but-wrong rows; the
-        # invariants_ok column is therefore True on every row the driver
-        # ever sees, and a poisoned model makes the query error rather than
-        # pass the rows-only gate (tests/test_graph_and_ann.py poisoned
-        # fixture).
-        rows = out.collect()
-        check_model_invariants(
-            int(n_points),
-            {int(k): float(v) for k, v in rss_by_k.items()},
-            int(best),
-            [r["chunk_count"] for r in rows],
-            [r["mean_probability"] for r in rows],
-        )
-        return out.select(
-            "cluster_id", "chunk_count", "mean_distance", "representative_id",
-            "n_soft_members", "mean_probability", "chosen_k", "bic",
-            "n_points", "wssse_chosen_k", F.lit(True).alias("invariants_ok"),
-        )
-    finally:
-        emb.unpersist()
 
 
 # --------------------------------------------------------------------------

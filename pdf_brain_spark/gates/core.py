@@ -1783,16 +1783,14 @@ _DUCK_QUANT_X = """
 )
 def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster summaries (M3/A7/A10 shape: sizes + mean distance +
-    medoid-ish representative, cluster_summaries semantics), ORACLED: the
+    medoid-ish representative), ORACLED: the
     model is the exact-integer 2-iteration Lloyd's fit (kmeans_fit_2iter,
     k=8), assignment to the FINAL centroids is integer argmin with
     lowest-cid ties, per-member distance quantizes ONCE to milli-units
     via the correctly-rounded (hence bit-identical) sqrt, and the means
     are one double division of exact integers, 6dp-rounded on both
     engines. Representative = argmin (d2, vec_id) per cluster — exact
-    integer ties. The stochastic production path (kmeans_assign +
-    cluster_summaries on the seeded sample fit) keeps its pytest
-    coverage; this gate makes the SUMMARY TABLE hash-checkable. Plan:
+    integer ties. Plan:
     fit = one Arrow pass + one (cid,dim) model-grain aggregate per
     iteration; summary = one more map-side argmin pass + one
     cluster-grain aggregate — the corpus is never shuffled."""
@@ -1930,9 +1928,7 @@ def soft_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     SOFT_BOUNDARY_EPS_MICRO from a 6dp rounding boundary and the nearest
     rounded value further than SOFT_FLOOR_EPS from the 0.1 floor — so a
     testdata regen that lands a probability on a boundary fails the
-    driver hash BY NAME instead of by silent hash diff. The production
-    float soft_assignments (Arrow-batched BLAS softmax over the
-    seeded-sample fit) keeps its pytest coverage. Bounded output: query
+    driver hash BY NAME instead of by silent hash diff. Bounded output: query
     rows are vec_id < 100 at every scale; the softmax itself is
     map-side over broadcast centroids."""
     from pdf_brain_spark.operators.clustering import (

@@ -133,8 +133,7 @@ def bic_model_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     k wins, is hash-compared against a DuckDB replay. Unit note: RSS is
     in milli-units²; the constant −2n·ln(1000) shift it induces in every
     candidate's BIC is k-independent and cannot change the argmin.
-    The production float bic_select_k stays pytest-covered
-    (clustering_model_report / tests). Plan per k: the oracled fit's
+    Plan per k: the oracled fit's
     one Arrow pass + (cid,dim) aggregate, then one map-side integer
     aggregate for RSS; only k x dim model tables are collected."""
     from pdf_brain_spark.operators.clustering import (

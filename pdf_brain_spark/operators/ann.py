@@ -1,22 +1,17 @@
 """Approximate nearest-neighbor search — the scale path standing in for the
 reference's DiskANN index (LibSQLDatabase.ts:723-727). Exact brute-force
-(operators/vector_search.py) is the correctness baseline; these trade exact
+(operators/vector_search.py) is the correctness baseline; this trades exact
 recall for pruned scans, mirroring the reference's own stance that ANN is
 approximate (float8 index compression accepts 1-2% recall loss).
 
-Two strategies:
-
-  * IVF (inverted file): KMeans-partition the corpus; a query probes only
-    the `n_probes` nearest partitions. At 100 TB the assignment is a
-    persisted partition column → partition pruning makes the probe a
-    fraction-of-corpus scan. Recall tunable via n_probes.
-
-  * Random-hyperplane LSH: sign-bit sketch against `n_planes` fixed random
-    hyperplanes (deterministic seed). Bucket join → candidates → exact
-    re-rank. Same banding idea as MinHash-LSH for text.
-
-Both re-rank candidates with the exact cosine expression, so returned
-scores are exact; only candidate generation is approximate.
+IVF (inverted file): KMeans-partition the corpus; a query probes only the
+`n_probes` nearest partitions and re-ranks their rows with the exact
+cosine expression, so returned scores are exact and only candidate
+generation is approximate. At 100 TB the assignment is a persisted
+partition column → partition pruning makes the probe a fraction-of-corpus
+scan. Recall tunable via n_probes. The other approximate paths are the
+IVF-PQ and binary-sign (Hamming) serving kernels of
+operators/quantization.py.
 """
 
 from __future__ import annotations
@@ -117,62 +112,6 @@ def ivf_search(
     probe_ids = ", ".join(str(int(i)) for i in np.argsort(-sims)[:n_probes])
     return (
         indexed.filter(F.expr(f"list_id IN ({probe_ids})"))
-        .withColumn("distance", cosine_distance(vec_col, query_vec))
-        .withColumn("score", distance_to_score("distance"))
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
-    )
-
-
-def _hyperplanes(dim: int, n_planes: int, seed: int) -> np.ndarray:
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((n_planes, dim))
-
-
-def lsh_sketch(
-    emb: DataFrame, dim: int, n_planes: int = 16, seed: int = 7, vec_col: str = "embedding"
-) -> DataFrame:
-    """Sign-bit sketch: bucket = Σ (v·hᵢ > 0) << i. Computed as an
-    Arrow-batched matmul against the broadcast hyperplane matrix (one
-    BLAS call per batch, then a bit-weight dot): map-only, no shuffle.
-    An unrolled native expression was tried and rejected — n_planes·dim
-    terms blow Janino's 64 KB generated-method limit and every action
-    then pays a compile-fail-and-fallback penalty of ~10 s."""
-    planes = _hyperplanes(dim, n_planes, seed)
-    from pyspark.sql.functions import pandas_udf
-
-    P = planes.T.copy()  # dim × n_planes
-    weights = (1 << np.arange(n_planes, dtype=np.int64))
-
-    @pandas_udf("long")
-    def bucket(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="int64")
-        X = np.asarray([np.asarray(x, dtype=np.float64) for x in v])
-        bits = (X @ P) > 0
-        return pd.Series((bits @ weights).astype(np.int64))
-
-    return emb.withColumn("bucket", bucket(F.col(vec_col)))
-
-
-def lsh_search(
-    sketched: DataFrame,
-    dim: int,
-    query_vec: list[float],
-    k: int = 10,
-    n_planes: int = 16,
-    seed: int = 7,
-    max_hamming: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Candidates = buckets within `max_hamming` bits of the query bucket
-    (bit_count(xor)), then exact re-rank."""
-    planes = _hyperplanes(dim, n_planes, seed)
-    q = np.asarray(query_vec, dtype=np.float64)
-    qbucket = int(sum((1 << i) for i, h in enumerate(planes) if float(h @ q) > 0))
-    return (
-        sketched.filter(F.bit_count(F.col("bucket").bitwiseXOR(F.lit(qbucket))) <= max_hamming)
         .withColumn("distance", cosine_distance(vec_col, query_vec))
         .withColumn("score", distance_to_score("distance"))
         .orderBy(F.col("distance").asc(), F.col(id_col).asc())

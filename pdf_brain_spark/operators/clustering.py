@@ -1,19 +1,18 @@
 """Clustering operators — the reference's RAPTOR-style k-means stack
-(src/services/Clustering.ts) re-expressed on MLlib:
+(src/services/Clustering.ts) re-expressed on Spark:
 
-  * k-means (Lloyd's + k-means++ init, Clustering.ts:233-320) →
-    pyspark.ml.clustering.KMeans (distributed Lloyd's, k-means|| init).
-    The reference's mini-batch variant (Clustering.ts:411-508) exists only
-    because it is single-process; distributed KMeans supersedes it.
-  * BIC model selection (Clustering.ts:336-359,657-676):
-    BIC = n·ln(RSS/n) + params·ln(n), params = k·(dim+1); argmin over k.
-  * soft clustering (Clustering.ts:217-224,520-557): softmax(-distance/T)
-    over centroids per point, temperature 0.5, filter p ≥ minProbability.
-  * cluster summaries (ClusterSummarizer.ts extractive fallback):
-    per-cluster centroid + member count + representative members.
-  * cluster→concept mapping (ClusterConceptMapper.ts:80-117): argmax
-    cosine(centroid, concept_embedding) with threshold — a crossJoin against
-    broadcast concepts + rank-1 window.
+  * k-means (Lloyd's + k-means++ init, Clustering.ts:233-320): kmeans_assign
+    fits seeded Lloyd's on a bounded sample and assigns every vector in one
+    map-only pass. The reference's mini-batch variant (Clustering.ts:411-508)
+    exists only because it is single-process.
+  * exact-integer k-means (kmeans_fit_exact_int, assign_stats_exact_int,
+    fit_centroid_matrix over milli-quantized vectors): the fit every
+    registered clustering gate runs, so BIC model selection, soft
+    clustering, cluster summaries and the clustering model report
+    (gates/core.py, gates/quality_temporal.py, gates/composites.py) each
+    have a DuckDB twin.
+  * label_centroids: per-label mean vectors, the centroid table that
+    cluster→concept mapping (gates/core.py::cluster_concept_map) ranks.
 
 Scale: the fit runs on a bounded uniform sample (KMEANS_FIT_SAMPLE_CAP,
 constant driver memory — the same collect-candidates-then-local-refine
@@ -30,8 +29,6 @@ import math
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-SOFTMAX_TEMPERATURE = 0.5  # Clustering.ts:217-224
 
 
 def _to_mllib_vectors(emb: DataFrame, vec_col: str) -> DataFrame:
@@ -88,17 +85,8 @@ def _lloyd_fit(X, k: int, seed: int, max_iter: int, tol: float):
         else:
             C[j] = X[rng.choice(n, p=d2 / total)]
         d2 = np.minimum(d2, ((X - C[j]) ** 2).sum(axis=1))
-    return _lloyd_refine(X, C, max_iter, tol)
-
-
-def _lloyd_refine(X, C, max_iter: int, tol: float):
-    """Vectorized Lloyd's iterations from a GIVEN centroid matrix —
-    pairwise distances via matmul (n×k, no n×k×dim temporary). Split out
-    of _lloyd_fit so bic_select_k can warm-start k from the previous k's
-    converged solution."""
-    import numpy as np
-
-    k = C.shape[0]
+    # Lloyd's iterations: pairwise distances via matmul (n×k, no n×k×dim
+    # temporary)
     x2 = (X ** 2).sum(axis=1)[:, None]
     for _ in range(max_iter):
         d = x2 - 2.0 * (X @ C.T) + (C ** 2).sum(axis=1)[None, :]
@@ -110,32 +98,6 @@ def _lloyd_refine(X, C, max_iter: int, tol: float):
         C = newC
         if shift < tol:
             break
-    return C
-
-
-def _grow_centroids(X, C_prev, k: int):
-    """Extend a converged centroid set to k centroids by deterministic
-    farthest-point addition (each new centroid = the sample point with the
-    largest squared distance to its nearest current centroid). The grown
-    set is a SUPERSET of C_prev, so for any fixed point set the
-    min-distance of every point can only shrink — RSS(grown) ≤ RSS(C_prev)
-    is a theorem, which is what makes the WSSSE-non-increasing model
-    invariant checkable as a hard failure (see bic_select_k)."""
-    import numpy as np
-
-    C = np.asarray(C_prev, dtype=np.float64)
-    k = min(k, X.shape[0])
-    if C.shape[0] >= k:
-        return C[:k]
-    d2 = np.min(
-        (X ** 2).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + (C ** 2).sum(axis=1)[None, :],
-        axis=1,
-    )
-    np.maximum(d2, 0.0, out=d2)
-    while C.shape[0] < k:
-        j = int(d2.argmax())
-        C = np.vstack([C, X[j]])
-        d2 = np.minimum(d2, ((X - X[j]) ** 2).sum(axis=1))
     return C
 
 
@@ -202,202 +164,14 @@ def kmeans_assign(
     return assigned, centroids
 
 
-def kmeans_rss(assigned: DataFrame) -> float:
-    """Residual sum of squares Σ distance² (BIC input)."""
-    return float(assigned.select(F.sum(F.col("distance") ** 2).alias("rss")).collect()[0]["rss"])
-
-
-def bic_select_k(
-    emb: DataFrame,
-    k_range: range,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    max_iter: int = 10,
-    rss_out: dict | None = None,
-) -> tuple[int, dict[int, float]]:
-    """BIC = n·ln(RSS/n) + k·(dim+1)·ln(n); argmin over k
-    (Clustering.ts:657-676). Coarse fits (max_iter=10) rank k reliably;
-    refit the winner at full iterations for the final model. Pass a dict
-    as `rss_out` to also receive the per-k WSSSE.
-
-    WSSSE is GUARANTEED non-increasing in k (the model invariant
-    check_model_invariants hard-raises on): each k warm-starts from the
-    previous k's converged centroids grown by farthest-point addition
-    (_grow_centroids) and is Lloyd-refined on the sample. Because the
-    sample-refined set can in principle drift for the FULL corpus, the
-    corpus RSS of the refined set is compared against the previous k's,
-    and on the rare regression the un-refined grown set is used instead —
-    a superset of the previous centroids, whose corpus RSS can only be
-    lower (per-point min distance over more centroids). Independent
-    per-k k-means++ inits (the previous shape) carry no such guarantee:
-    each k converges to its own local optimum (ADVICE r4)."""
-    import math
-
-    def _corpus_rss(C) -> float:
-        assign = _assign_udf(C.tolist())
-        return float(
-            emb.select(
-                F.sum(assign(F.col(vec_col))["distance"] ** 2).alias("rss")
-            ).collect()[0]["rss"]
-        )
-
-    n = emb.count()
-    dim = len(emb.select(vec_col).first()[0])
-    # one bounded sample shared by every candidate k: fits are driver-local
-    # (milliseconds), so the per-k cost is exactly one distributed
-    # assignment+RSS pass over the corpus
-    X = _sample_feature_matrix(emb, vec_col, seed)
-    scores: dict[int, float] = {}
-    prev_C = None
-    prev_rss = None
-    for k in sorted(k_range):
-        if prev_C is None:
-            C0 = None
-            C = _lloyd_fit(X, k, seed, max_iter, tol=5e-3)
-        else:
-            C0 = _grow_centroids(X, prev_C, k)
-            C = _lloyd_refine(X, C0, max_iter, tol=5e-3)
-        rss = _corpus_rss(C)
-        if prev_rss is not None and rss > prev_rss and C0 is not None:
-            # sample-refined centroids regressed on the corpus: fall back
-            # to the grown (superset) set, provably ≤ prev_rss
-            C, rss = C0, _corpus_rss(C0)
-        if rss_out is not None:
-            rss_out[k] = rss
-        params = k * (dim + 1)
-        scores[k] = n * math.log(max(rss, 1e-12) / n) + params * math.log(n)
-        prev_C, prev_rss = C, rss
-    best = min(scores, key=scores.get)
-    return best, scores
-
-
-def soft_assignments(
-    emb: DataFrame,
-    centroids: list[list[float]],
-    temperature: float = SOFTMAX_TEMPERATURE,
-    min_probability: float = 0.1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Softmax(-distance/T) membership probabilities, max-shifted for
-    stability exactly like the reference (Clustering.ts:217-224); rows with
-    p < min_probability dropped.
-
-    The softmax is per-row over the k broadcast centroids, so it is
-    computed map-side in one Arrow batch (distances via BLAS matmul,
-    softmax across the k columns) and emitted as an array that a map-side
-    explode unpacks — no shuffle. The previous shape (explode to N×k rows,
-    window partitionBy(id) for max/sum) shuffled the whole exploded table
-    just to see a row's own k values together."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    C = np.asarray(centroids, dtype=np.float64)
-    c2 = (C ** 2).sum(axis=1)
-
-    @pandas_udf("array<struct<cluster_id:int, probability:double>>")
-    def soft(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype=object)
-        X = np.asarray([np.asarray(x, dtype=np.float64) for x in v])
-        d2 = (X ** 2).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + c2[None, :]
-        np.maximum(d2, 0.0, out=d2)
-        neg = -np.sqrt(d2) / temperature
-        neg -= neg.max(axis=1, keepdims=True)
-        e = np.exp(neg)
-        p = e / e.sum(axis=1, keepdims=True)
-        out = [
-            [
-                {"cluster_id": int(j), "probability": round(float(row[j]), 6)}
-                for j in range(len(row))
-                if row[j] >= min_probability
-            ]
-            for row in p
-        ]
-        return pd.Series(out)
-
-    return (
-        emb.select(F.col(id_col), F.explode(soft(F.col(vec_col))).alias("_m"))
-        .select(
-            id_col,
-            F.col("_m.cluster_id").alias("cluster_id"),
-            F.col("_m.probability").alias("probability"),
-        )
-    )
-
-
-def cluster_summaries(assigned: DataFrame, id_col: str = "vec_id") -> DataFrame:
-    """Per-cluster rollup: size + mean distance + closest member (the
-    extractive-summary stand-in: the medoid-ish representative)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("cluster_id").orderBy(F.col("distance").asc(), F.col(id_col).asc())
-    rep = (
-        assigned.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("cluster_id", F.col(id_col).alias("representative_id"))
-    )
-    stats = assigned.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("chunk_count"),
-        F.round(F.avg("distance"), 6).alias("mean_distance"),
-    )
-    return stats.join(rep, "cluster_id")
-
-
-def check_model_invariants(
-    n_points: int,
-    rss_by_k: dict[int, float],
-    chosen_k: int,
-    member_counts: list[int],
-    mean_probabilities: list[float],
-) -> None:
-    """Fail-fast validation of the clustering-model lifecycle: the gate's
-    rows-only row is SELF-CHECKING because the query raises instead of
-    returning plausible-but-wrong rows (VERDICT r3 item 5). Invariants:
-      * WSSSE non-increasing in k — a guaranteed property of
-        bic_select_k's warm-start-and-grow fit (each k starts from the
-        previous k's centroids grown by farthest-point addition, with a
-        provable superset fallback), so a violation means corrupted
-        inputs, not an unlucky independent init (ADVICE r4);
-      * the chosen k has a recorded, non-negative WSSSE;
-      * hard assignment is lossless — cluster sizes sum to n_points
-        (every vector routed to exactly one cluster);
-      * per-cluster mean soft-membership probabilities lie in (0, 1]
-        (NULL allowed: a cluster may have no member above the soft
-        min-probability floor — a left-join absence, not a violation)."""
-    ks = sorted(rss_by_k)
-    if not all(rss_by_k[a] >= rss_by_k[b] - 1e-9 for a, b in zip(ks, ks[1:])):
-        raise AssertionError(
-            f"clustering invariant violated: WSSSE not non-increasing in k: {rss_by_k}"
-        )
-    if chosen_k not in rss_by_k:
-        raise AssertionError(
-            f"clustering invariant violated: chosen k={chosen_k} has no recorded WSSSE"
-        )
-    if rss_by_k[chosen_k] < 0:
-        raise AssertionError(
-            f"clustering invariant violated: negative WSSSE {rss_by_k[chosen_k]} at k={chosen_k}"
-        )
-    if n_points <= 0 or sum(member_counts) != n_points:
-        raise AssertionError(
-            "clustering invariant violated: cluster sizes "
-            f"{member_counts} do not sum to n_points={n_points}"
-        )
-    bad = [p for p in mean_probabilities if p is not None and not (0.0 < p <= 1.0)]
-    if bad:
-        raise AssertionError(
-            f"clustering invariant violated: mean probabilities outside (0, 1]: {bad}"
-        )
-
-
 def label_centroids(
     emb: DataFrame, label_col: str = "label", vec_col: str = "embedding"
 ) -> DataFrame:
     """Deterministic per-group mean vector (label, centroid) — the
-    oracle-able stand-in for k-means centroids (cluster_summaries.centroid,
-    LibSQLDatabase.ts:859-870). Uses MLlib Summarizer.mean: one pass with
-    map-side partial aggregation — the per-dimension shuffle is bounded by
-    groups × partitions, never rows."""
+    oracle-able stand-in for k-means centroids (the reference's stored
+    cluster centroid, LibSQLDatabase.ts:859-870). Uses MLlib
+    Summarizer.mean: one pass with map-side partial aggregation — the
+    per-dimension shuffle is bounded by groups × partitions, never rows."""
     from pyspark.ml.functions import vector_to_array
     from pyspark.ml.stat import Summarizer
 
@@ -406,30 +180,6 @@ def label_centroids(
         v.groupBy(label_col)
         .agg(Summarizer.mean(F.col("_features")).alias("_mean"))
         .select(F.col(label_col), vector_to_array(F.col("_mean")).alias("centroid"))
-    )
-
-
-def nearest_concept(
-    centroids_df: DataFrame,
-    concepts: DataFrame,
-    threshold: float = 0.5,
-    cent_col: str = "centroid",
-    concept_vec_col: str = "embedding",
-) -> DataFrame:
-    """Cluster→concept: argmax cosine(centroid, concept_emb) ≥ threshold
-    (ClusterConceptMapper.ts:80-117). Concepts broadcast (dimension-sized)."""
-    from pyspark.sql import Window
-
-    from pdf_brain_spark.functions.vector import cosine_similarity
-
-    crossed = centroids_df.crossJoin(F.broadcast(concepts)).withColumn(
-        "sim", cosine_similarity(cent_col, concept_vec_col)
-    )
-    w = Window.partitionBy("cluster_id").orderBy(F.col("sim").desc())
-    return (
-        crossed.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("sim") >= threshold))
-        .drop("rn", cent_col, concept_vec_col)
     )
 
 

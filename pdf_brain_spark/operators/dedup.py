@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pdf_brain_spark.functions.guards import spread_scan
@@ -92,53 +92,24 @@ def containment_pairs(
     |short|/|long|. Pairs emit when the LARGER containment (intersection
     over the smaller set) clears the threshold.
 
-    Same inverted-index shape as ngram_jaccard_pairs — pairs meet only on
-    shared shingles, per-shingle groups bounded by the df cap, one
-    postings shuffle then one pair-count shuffle — so the subquadratic
-    100 TB argument carries over unchanged. Counts and set sizes are
+    The same inverted-index pair count as ngram_jaccard_pairs
+    (_shared_shingle_pairs: pairs meet only on shared shingles,
+    per-shingle groups bounded by the df cap), so the subquadratic 100 TB
+    argument carries over unchanged. Counts and set sizes are
     exact integers; the two containments are single divisions (identical
     IEEE results on any engine)."""
     sets = _shingle_set_df(docs, id_col, text_col, k).localCheckpoint(eager=True)
-    sh = sets.select(
-        F.col(id_col),
-        F.explode(F.transform("sh_set", lambda s: F.xxhash64(s))).alias("shingle"),
-    )
-    sizes = sets.select(F.col(id_col), F.size("sh_set").alias("set_size"))
-    ids = F.array_sort(F.collect_list(F.col(id_col)))
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("_ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("_ids"), i + 2, F.size(F.col("_ids"))),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
-    inter = (
-        sh.groupBy("shingle")
-        .agg(ids.alias("_ids"))
-        .filter(F.size("_ids") <= F.lit(df_cap))
-        .select(F.explode(pair_structs).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("common_shingles"))
-    )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("set_size").alias("size_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("set_size").alias("size_b"))
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(
-            (F.col("common_shingles") / F.least("size_a", "size_b")) >= threshold
-        )
+        _shared_shingle_pairs(sets, id_col, df_cap)
+        .filter((F.col("intersection") / F.least("size_a", "size_b")) >= threshold)
         .select(
             "doc_a",
             "doc_b",
-            "common_shingles",
-            F.round(F.col("common_shingles") / F.col("size_a"), 6).alias(
+            F.col("intersection").alias("common_shingles"),
+            F.round(F.col("intersection") / F.col("size_a"), 6).alias(
                 "containment_a"
             ),
-            F.round(F.col("common_shingles") / F.col("size_b"), 6).alias(
+            F.round(F.col("intersection") / F.col("size_b"), 6).alias(
                 "containment_b"
             ),
         )
@@ -197,26 +168,26 @@ def ngram_jaccard_pairs(
         )
         .localCheckpoint(eager=True)
     )
-    rep_pairs = _jaccard_pairs_from_sets(rsets, threshold, id_col, df_cap)
+    rep_pairs = (
+        _shared_shingle_pairs(rsets, id_col, df_cap)
+        .withColumn(
+            "jaccard",
+            F.col("intersection")
+            / (F.col("size_a") + F.col("size_b") - F.col("intersection")),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
+    )
 
     # within-group pairs: every member pair of a duplicated content is a
     # jaccard-1.0 pair (when the content has ≥1 shingle)
     nonempty = rsets.select(
         F.col(id_col).alias("_chash"), (F.size("sh_set") > 0).alias("_has_sh")
     )
-    within_structs = F.flatten(
-        F.transform(
-            F.col("_members"),
-            lambda x, i: F.transform(
-                F.slice(F.col("_members"), i + 2, F.size(F.col("_members"))),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
     within = (
         members.join(nonempty, "_chash")
         .filter(F.col("_has_sh") & (F.size("_members") > 1) & F.lit(1.0 >= threshold))
-        .select(F.explode(within_structs).alias("p"))
+        .select(F.explode(_ordered_pairs("_members")).alias("p"))
         .select("p.doc_a", "p.doc_b", F.lit(1.0).alias("jaccard"))
     )
 
@@ -246,19 +217,31 @@ def ngram_jaccard_pairs(
     )
 
 
-def _jaccard_pairs_from_sets(
-    sets: DataFrame,
-    threshold: float,
-    id_col: str,
-    df_cap: int = SHINGLE_DF_CAP,
-) -> DataFrame:
-    """Inverted-index Jaccard over precomputed distinct (id, sh_set) rows
+def _ordered_pairs(ids: str) -> Column:
+    """Every (doc_a, doc_b) pair of the sorted id array column `ids`, doc_a
+    before doc_b, as an array of structs: emitted map-side by a flatten of
+    nested transforms, with no self-join."""
+    return F.flatten(
+        F.transform(
+            F.col(ids),
+            lambda x, i: F.transform(
+                F.slice(F.col(ids), i + 2, F.size(F.col(ids))),
+                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
+            ),
+        )
+    )
+
+
+def _shared_shingle_pairs(sets: DataFrame, id_col: str, df_cap: int) -> DataFrame:
+    """(doc_a, doc_b, intersection, size_a, size_b) for every pair of
+    precomputed distinct (id, sh_set) rows sharing a shingle: the one
+    inverted-index pair count, over which each caller computes its metric
     (callers guarantee uniqueness of content per id)."""
     # hash each shingle to int64 BEFORE the explode/shuffle: the postings
     # shuffle then carries 8-byte keys instead of ~25-byte 3-gram strings
     # (the dominant shuffle of this operator). xxhash64 collisions at
-    # corpus scale (~n²/2⁶⁴) are orders below the 6-decimal jaccard
-    # rounding noise the gate tolerates.
+    # corpus scale (~n²/2⁶⁴) are orders below the 6-decimal rounding noise
+    # the gates tolerate.
     sh = sets.select(
         F.col(id_col),
         F.explode(F.transform("sh_set", lambda s: F.xxhash64(s))).alias("shingle"),
@@ -266,20 +249,11 @@ def _jaccard_pairs_from_sets(
     # per-doc set sizes straight off the cached sets (map-side, no explode)
     sizes = sets.select(F.col(id_col), F.size("sh_set").alias("set_size"))
     # inverted-index pair generation: group docs per shingle ONCE, then
-    # emit each group's ordered pairs map-side (flatten of nested
-    # transform) — one shuffle of the postings instead of a two-sided
-    # self-join. Per-shingle groups are bounded by the df cap (stop-
-    # shingles dropped), which is what keeps this subquadratic at 100 TB.
+    # emit each group's ordered pairs map-side — one shuffle of the
+    # postings instead of a two-sided self-join. Per-shingle groups are
+    # bounded by the df cap (stop-shingles dropped), which is what keeps
+    # this subquadratic at 100 TB.
     ids = F.array_sort(F.collect_list(F.col(id_col)))
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("_ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("_ids"), i + 2, F.size(F.col("_ids"))),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
     # r17 (profiled, VERDICT r16 item 3): AQE coalesces the postings
     # shuffle by its MAP-OUTPUT bytes — the grouped id-lists are small —
     # but the very next operator fans each m-member group out to
@@ -305,24 +279,14 @@ def _jaccard_pairs_from_sets(
             sets.sparkSession.sparkContext.defaultParallelism,
             F.xxhash64("shingle"),
         )
-        .select(F.explode(pair_structs).alias("p"))
+        .select(F.explode(_ordered_pairs("_ids")).alias("p"))
         .select("p.doc_a", "p.doc_b")
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("intersection"))
     )
     sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("set_size").alias("size_a"))
     sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("set_size").alias("size_b"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("intersection")
-            / (F.col("size_a") + F.col("size_b") - F.col("intersection")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    return inter.join(sa, "doc_a").join(sb, "doc_b")
 
 
 MINHASH_HASHES = 16
@@ -617,16 +581,16 @@ def connected_components(
     # materialize the pair list ONCE before symmetrizing — the union
     # references it twice and would re-run the whole candidate pipeline
     pairs = pairs.select(a_col, b_col).localCheckpoint()
-    edges = (
+    # the edge count that picks the branch rides on the checkpoint's job
+    edges, seen = checkpoint_observed(
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .unionByName(
             pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
         )
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        n="count(1)",
     )
-    n_edges = edges.count()
-    if n_edges < UNION_FIND_MAX_EDGES:
+    if seen["n"] < UNION_FIND_MAX_EDGES:
         parent: dict = {}
 
         def find(x):

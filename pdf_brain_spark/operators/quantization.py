@@ -121,8 +121,9 @@ def pq_encode(
 
 
 def pq_reconstruct_np(codes, codebooks):
-    """Reconstructed (unit-sphere) vectors from codes — test/report helper
-    (serving never reconstructs; that is the point of ADC)."""
+    """Reconstructed (unit-sphere) vectors from codes — the reference the
+    ADC identity is checked against (serving never reconstructs; that is
+    the point of ADC)."""
     import numpy as np
 
     CB = np.asarray(codebooks, dtype=np.float64)
@@ -239,77 +240,6 @@ def pq_topk_adc_rerank(
     )
 
 
-def pq_compression_report(
-    emb: DataFrame,
-    k: int = 10,
-    n_queries: int = 32,
-    m: int = PQ_SUBSPACES,
-    n_codes: int = PQ_CODES,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """One-row report of the PQ trade: recall@k of the ADC serving path
-    against the exact float path for n_queries corpus queries, mean
-    squared reconstruction error on the unit sphere, and the storage
-    compression ratio (float32 dim·4 bytes → m one-byte codes). Rows-only
-    at the driver (the codebook fit is seeded Lloyd's, not
-    SQL-expressible); the ADC==reconstructed-distance identity and
-    monotone-in-m error are pytest-asserted in tests/test_quantization.py."""
-    import numpy as np
-
-    from pdf_brain_spark.operators.vector_search import similarity_join_topk
-
-    spark = emb.sparkSession
-    books = pq_train(emb, m=m, n_codes=n_codes, seed=seed, vec_col=vec_col)
-    codes = pq_encode(emb, books, id_col=id_col, vec_col=vec_col).localCheckpoint(
-        eager=True
-    )
-    queries = emb.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
-    )
-    approx = pq_topk_adc_batch(codes, books, queries, k=k, id_col=id_col)
-    rerank = pq_topk_adc_rerank(
-        codes, books, queries, emb, k=k, id_col=id_col, vec_col=vec_col
-    )
-    exact = similarity_join_topk(queries, emb, k=k, id_col=id_col, vec_col=vec_col)
-    a = {(r["query_id"], r[id_col]) for r in approx.collect()}
-    rr = {(r["query_id"], r[id_col]) for r in rerank.collect()}
-    e = {(r["query_id"], r[id_col]) for r in exact.collect()}
-    # reconstruction MSE on a BOUNDED sample (deterministic id order) —
-    # the estimate is corpus-size-independent, and an unbounded collect
-    # here would be the one scale violation in the module
-    sample = (
-        codes.join(emb.select(id_col, vec_col), id_col)
-        .orderBy(id_col)
-        .limit(2048)
-        .collect()
-    )
-    V = np.asarray([np.asarray(r[vec_col], dtype=np.float64) for r in sample])
-    V = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-    R = pq_reconstruct_np([r["codes"] for r in sample], books)
-    mse = float(((V - R) ** 2).sum(axis=1).mean())
-    dim = V.shape[1]
-    row = [
-        (
-            int(dim),
-            int(m),
-            int(n_codes),
-            float(round(dim * 4.0 / m, 2)),
-            int(len(e)),
-            float(round(len(a & e) / max(len(e), 1), 4)),
-            float(round(len(rr & e) / max(len(e), 1), 4)),
-            float(round(mse, 6)),
-        )
-    ]
-    return spark.createDataFrame(
-        row,
-        "dim int, m int, n_codes int, compression_x double, "
-        "n_exact_pairs int, recall_at_k double, recall_rerank double, "
-        "recon_mse double",
-    )
-
-
 def ivfpq_index(
     emb: DataFrame,
     n_lists: int = 16,
@@ -377,8 +307,8 @@ def ivfpq_topk_adc_batch(
     scores every row and the result EQUALS pq_topk_adc_batch over the
     full codes table — probe routing loses nothing beyond the probe
     choice itself. Recall at n_probes < n_lists is the product of the
-    IVF candidate recall and the PQ code resolution; measure with
-    ivfpq_recall_report before trusting an operating point."""
+    IVF candidate recall and the PQ code resolution; measure with the
+    ivfpq_recall_report gate before trusting an operating point."""
     import numpy as np
 
     C = np.asarray(centroids, dtype=np.float64)
@@ -394,84 +324,6 @@ def ivfpq_topk_adc_batch(
     return partial_topk_batch(
         queries, indexed_codes, k, prepare, ["codes"],
         query_id=query_id, query_col=query_col, id_col=id_col,
-    )
-
-
-def ivfpq_recall_report(
-    emb: DataFrame,
-    k: int = 10,
-    n_queries: int = 32,
-    n_lists: int = 16,
-    n_probes: int = 4,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """One-row report for an IVF-PQ operating point, with the losslessness
-    invariant enforced fail-fast (the clustering_model_report discipline:
-    a violated invariant RAISES rather than reporting plausible numbers):
-
-      * invariant — the EXHAUSTIVE probe (n_probes = n_lists) must equal
-        flat ADC over the full codes table on every (query, rank, id,
-        distance); probe routing may only ever REMOVE unprobed lists.
-      * recall_vs_adc — what the probe choice costs, isolated from code
-        resolution (IVF candidate recall).
-      * recall_vs_exact — the full trade against exact float search
-        (probe loss × PQ resolution loss), the number a 100 TB operator
-        actually tunes n_probes/m against.
-    """
-    import numpy as np
-
-    from pdf_brain_spark.operators.vector_search import similarity_join_topk
-
-    spark = emb.sparkSession
-    indexed_codes, centroids, books = ivfpq_index(
-        emb, n_lists=n_lists, seed=seed, id_col=id_col, vec_col=vec_col
-    )
-    indexed_codes = indexed_codes.localCheckpoint(eager=True)
-    queries = emb.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
-    )
-    flat = pq_topk_adc_batch(
-        indexed_codes.drop("list_id"), books, queries, k=k, id_col=id_col
-    )
-    exhaustive = ivfpq_topk_adc_batch(
-        indexed_codes, centroids, books, queries, k=k, n_probes=n_lists, id_col=id_col
-    )
-    flat_rows = {
-        (r["query_id"], r["rank"], r[id_col], round(r["distance"], 9))
-        for r in flat.collect()
-    }
-    exh_rows = {
-        (r["query_id"], r["rank"], r[id_col], round(r["distance"], 9))
-        for r in exhaustive.collect()
-    }
-    if flat_rows != exh_rows:
-        raise AssertionError(
-            "ivfpq invariant violated: exhaustive probe != flat ADC "
-            f"({len(flat_rows ^ exh_rows)} differing rows)"
-        )
-    probed = ivfpq_topk_adc_batch(
-        indexed_codes, centroids, books, queries, k=k, n_probes=n_probes, id_col=id_col
-    )
-    exact = similarity_join_topk(queries, emb, k=k, id_col=id_col, vec_col=vec_col)
-    p = {(r["query_id"], r[id_col]) for r in probed.collect()}
-    a = {(q, vid) for (q, _rank, vid, _d) in flat_rows}
-    e = {(r["query_id"], r[id_col]) for r in exact.collect()}
-    row = [
-        (
-            int(n_lists),
-            int(n_probes),
-            int(len(e)),
-            float(round(len(p & a) / max(len(a), 1), 4)),
-            float(round(len(p & e) / max(len(e), 1), 4)),
-            float(round(len(a & e) / max(len(e), 1), 4)),
-        )
-    ]
-    return spark.createDataFrame(
-        row,
-        "n_lists int, n_probes int, n_exact_pairs int, "
-        "recall_vs_adc double, recall_vs_exact double, adc_recall_vs_exact double",
     )
 
 
@@ -731,26 +583,6 @@ def pack_query_words(query_vec: list[float], word_bits: int = BSQ_WORD_BITS) -> 
                 acc |= 1 << j
         words.append(acc)
     return words
-
-
-def hamming_topk(
-    vectors: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Top-k by Hamming distance over the packed sign bits — the
-    integer candidate stage. TakeOrdered on (distance, id); every
-    operation from packing to ranking is exact integer arithmetic."""
-    qw = pack_query_words([float(x) for x in query_vec])
-    packed = binary_sign_pack(vectors, vec_col=vec_col, dim=len(query_vec))
-    return (
-        packed.withColumn("hamming_dist", hamming_distance_expr(qw, len(qw)))
-        .orderBy(F.col("hamming_dist").asc(), F.col(id_col).asc())
-        .limit(k)
-        .select(id_col, "hamming_dist")
-    )
 
 
 def hamming_rerank_topk(

@@ -116,16 +116,6 @@ def _unreached(max_iterations: int) -> ValueError:
     )
 
 
-def one_hop_broader(concepts: DataFrame, hierarchy: DataFrame) -> DataFrame:
-    """Direct parents of each concept (TaxonomyService.ts:359-385) —
-    broadcast equi-join, concepts is dimension-sized."""
-    return hierarchy.join(
-        F.broadcast(concepts.select(F.col("concept_id").alias("broader_id"),
-                                    F.col("pref_label").alias("broader_label"))),
-        "broader_id",
-    )
-
-
 def descendants(seeds: DataFrame, edges: DataFrame, **kw) -> DataFrame:
     """Transitive narrower: the same closure with edges reversed. NOTE: a
     tree is only acyclic=True-safe downward when descent paths are unique,

@@ -14,8 +14,10 @@ standard formulations are:
 
 At 100 TB both sides co-partition by the key and the window is a single
 pass; skewed keys (one user with millions of events) are the only
-hotspot, mitigated upstream by salting once the per-key row count breaks
-executor memory.
+hotspot. Sessionization has a skew-salted form (sessionize_salted: the
+per-key window split by time bucket, plus a bucket-axis carry); the as-of
+join does not, so a key whose rows break executor memory is salted
+upstream of it.
 """
 
 from __future__ import annotations
@@ -77,8 +79,7 @@ def asof_backward_join(
     # includes the tie. Among right rows at the SAME timestamp the carried
     # row is otherwise arbitrary (window order within equal sort keys is
     # not deterministic), so the payload struct is a final sort key: the
-    # winner is the max payload — deterministic, and identical to the
-    # salted variant's max_by tie-break.
+    # winner is the max payload — deterministic.
     r_tie = F.when(
         F.col("_side") == 0,
         F.struct(*[F.col(f"_p_{p}").alias(p) for p in payload_cols]),
@@ -167,131 +168,6 @@ def tiered_time_rollup(
     return out
 
 
-def asof_backward_join_salted(
-    left: DataFrame,
-    right: DataFrame,
-    key_col: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    payload_cols: tuple[str, ...] = ("value",),
-    prefix: str = "asof_",
-    bucket_span: str = "1 hour",
-) -> DataFrame:
-    """Skew-hardened as-of: identical semantics to asof_backward_join,
-    but the per-key window is SALTED BY TIME BUCKET so a hot key (one
-    user with millions of events) never lands in a single task.
-
-    Two exact passes instead of one skewed one:
-      1. within-bucket as-of — the same union-and-window carry, with the
-         window partitioned by (key, bucket): per-task input is bounded
-         by the bucket's row count, not the key's.
-      2. boundary carry-in — per (key, bucket) the LAST right row is a
-         one-row summary; a window over the per-key bucket axis (rows =
-         buckets, not events) carries the most recent summary from
-         STRICTLY EARLIER buckets into each bucket; a left row whose
-         bucket had no preceding right row coalesces to that carry-in.
-
-    The bucket axis is the union of both sides' buckets, so a left
-    bucket with no right rows still receives carry-in. Tune bucket_span
-    so the hottest (key, bucket) fits a task — the same knob as any
-    salt count."""
-    from pyspark.sql import Window
-
-    r_ts_type = dict(right.dtypes)[right_ts]
-    p_types = dict(right.dtypes)
-
-    bkt = lambda c: F.window(F.col(c), bucket_span)["start"]  # noqa: E731
-
-    l_struct = F.struct(*[F.col(c) for c in left.columns])
-    l2 = left.select(
-        F.col(key_col).alias("_key"),
-        bkt(left_ts).alias("_bkt"),
-        F.col(left_ts).alias("_ts"),
-        F.lit(1).alias("_side"),
-        l_struct.alias("_lrow"),
-        F.lit(None).cast(r_ts_type).alias("_rts"),
-        *[F.lit(None).cast(p_types[p]).alias(f"_p_{p}") for p in payload_cols],
-    )
-    r2 = right.select(
-        F.col(key_col).alias("_key"),
-        bkt(right_ts).alias("_bkt"),
-        F.col(right_ts).alias("_ts"),
-        F.lit(0).alias("_side"),
-        F.lit(None).cast(l2.schema["_lrow"].dataType).alias("_lrow"),
-        F.col(right_ts).alias("_rts"),
-        *[F.col(p).alias(f"_p_{p}") for p in payload_cols],
-    )
-    # pass 1: carry within (key, bucket) — bounded per-task input. Same
-    # payload-struct tie-break as the unsalted path: among right rows at
-    # an identical timestamp the max payload wins, so salted == unsalted
-    # even on corpora with duplicate right timestamps per key.
-    r_tie = F.when(
-        F.col("_side") == 0,
-        F.struct(*[F.col(f"_p_{p}").alias(p) for p in payload_cols]),
-    )
-    w = (
-        Window.partitionBy("_key", "_bkt")
-        .orderBy(F.col("_ts").asc(), F.col("_side").asc(), r_tie.asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    rstruct = F.when(
-        F.col("_side") == 0,
-        F.struct(
-            F.col("_rts").alias("_rts"),
-            *[F.col(f"_p_{p}").alias(p) for p in payload_cols],
-        ),
-    )
-    within = (
-        l2.unionByName(r2)
-        .withColumn("_in_bkt", F.last(rstruct, ignorenulls=True).over(w))
-        .filter(F.col("_side") == 1)
-        .select("_key", "_bkt", "_lrow", "_in_bkt")
-    )
-
-    # pass 2: per-(key, bucket) last right row — one summary row per
-    # bucket. The max_by ordering key is (ts, payload struct) so equal-ts
-    # ties resolve to the max payload, matching pass 1 and the unsalted
-    # window path.
-    summaries = (
-        r2.groupBy("_key", "_bkt")
-        .agg(
-            F.max_by(
-                rstruct,
-                F.struct(
-                    F.col("_ts").alias("_ts"),
-                    *[F.col(f"_p_{p}").alias(p) for p in payload_cols],
-                ),
-            ).alias("_last")
-        )
-    )
-    axis = (
-        l2.select("_key", "_bkt")
-        .unionByName(r2.select("_key", "_bkt"))
-        .distinct()
-        .join(summaries, ["_key", "_bkt"], "left")
-    )
-    # window over BUCKETS per key (tiny), strictly-earlier carry
-    wb = (
-        Window.partitionBy("_key")
-        .orderBy(F.col("_bkt").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carry = axis.select(
-        "_key", "_bkt", F.last("_last", ignorenulls=True).over(wb).alias("_carry")
-    )
-
-    eff = F.coalesce(F.col("_in_bkt"), F.col("_carry"))
-    return (
-        within.join(carry, ["_key", "_bkt"], "left")
-        .withColumn("_eff", eff)
-        .select(
-            "_lrow.*",
-            F.col("_eff._rts").alias(f"{prefix}ts"),
-            *[F.col(f"_eff.{p}").alias(f"{prefix}{p}") for p in payload_cols],
-        )
-    )
-
-
 def sessionize_salted(
     events: DataFrame,
     key_col: str,
@@ -303,8 +179,7 @@ def sessionize_salted(
     """Skew-hardened gap sessionization: identical semantics to the
     classic lag+running-sum formulation (queries.events_sessionize), but
     the per-key window is SALTED BY TIME BUCKET so a hot key's rows never
-    serialize through one task — the same two-pass shape as
-    asof_backward_join_salted.
+    serialize through one task, in two exact passes:
 
       1. within-bucket: window on (key, bucket) ordered by
          (ts, *order_cols); a row opens a session when its gap from the

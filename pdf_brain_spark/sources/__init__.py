@@ -1,3 +1,3 @@
-from pdf_brain_spark.sources.loaders import TABLES, load_table, load_tables
+from pdf_brain_spark.sources.loaders import TABLES, load_table
 
-__all__ = ["TABLES", "load_table", "load_tables"]
+__all__ = ["TABLES", "load_table"]

@@ -62,10 +62,6 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {name: load_table(spark, name, sf_dir) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
     """Register every table as a temp view for spark.sql() use."""
     for name in TABLES:

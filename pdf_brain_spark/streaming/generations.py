@@ -336,10 +336,13 @@ def read_generation_dirs(
 # (stream batch ids / backfill floors), so `asof` time travel answers
 # "corrected history as of batch N" — a backfill written LATER with floor
 # <= N participates. To also answer "what batch N's READER saw" (the
-# reproduce-a-training-run's-input question) each generation dir gets a
-# monotone WRITE-SEQUENCE marker at write time: an empty `_wseq.<k>` file
-# inside the dir (underscore-prefixed, so parquet readers ignore it; it
-# travels with the dir through compaction's atomic rename). k is
+# reproduce-a-training-run's-input question) each generation dir of a
+# partials store gets a monotone WRITE-SEQUENCE marker at write time: an
+# empty `_wseq.<k>` file inside the dir (underscore-prefixed, so parquet
+# readers ignore it; a compaction writes it into the temp dir, so it moves
+# in with the atomic rename). Only the partials store's write-time read
+# (PartialsStore._kept, `asof_wseq`) reads it, so the row-index stores do
+# not stamp their generations or tombstones. k is
 # max(existing)+1 under the store's single-writer discipline (one stream +
 # serialized repair/compaction — the same assumption the floor contracts
 # already make). A foreachBatch REPLAY overwrites its dir and re-records,
@@ -354,9 +357,8 @@ _WSEQ_PREFIX = "_wseq."
 
 
 def _dir_wseq(fs, HPath, dir_path: str) -> int | None:
-    """The write-sequence of one generation dir (None if never recorded —
-    e.g. a compactor crash between rename and record; treated as newer
-    than any snapshot, the conservative reading)."""
+    """The write-sequence of one generation dir (None if never recorded;
+    treated as newer than any snapshot, the conservative reading)."""
     p = HPath(dir_path)
     if not fs.exists(p):
         return None
@@ -448,7 +450,6 @@ def commit_compaction(
             f"compaction of {ls.root}: rename {tmp} -> {dest} failed; "
             "aborting with sources intact (nothing was deleted)"
         )
-    record_wseq(spark, ls, dest)
     consumed = [f"batch_id={g}" for g in src] + [n for _, n in overlays]
     for name in consumed:
         if name != dest:
@@ -693,6 +694,8 @@ class PartialsStore:
             self._merged(spark, ls, upto=upto_batch_id).coalesce(1).write.mode(
                 "overwrite"
             ).parquet(tmp)
+            # stamped in the temp dir, so the marker moves in with the rename
+            record_wseq(spark, ls, tmp.rsplit("/", 1)[1])
 
         return commit_compaction(spark, ls, upto_batch_id, _write)
 
@@ -809,7 +812,6 @@ class IndexStore:
             name, serial = f"tombstone_floor={floor_batch_id}_{serial}", serial + 1
         _stamp(spark, ls, self.layout)
         keys.select(self.key).distinct().write.mode("overwrite").parquet(f"{index_dir}/{name}")
-        record_wseq(spark, ls, name)
 
     def compact(self, spark: SparkSession, index_dir: str, upto_batch_id: int) -> int:
         """Tombstone-aware compaction (commit_compaction): the compacted

@@ -601,8 +601,9 @@ def test_connected_components_distributed_branch_raises_unconverged(spark, monke
 
 def test_connected_components_distributed_branch_build_jobs(spark, monkeypatch, jobs_fired):
     """The distributed branch's stop test rides on each round's checkpoint
-    job: on the 10-node path (10 rounds) it fires at most 77 jobs, where a
-    separate changed-label join plus `isEmpty` per round fired 117."""
+    job, and the edge count on the edges checkpoint's: on the 10-node path
+    (10 rounds) it fires at most 75 jobs, where a separate changed-label
+    join plus `isEmpty` per round fired 117."""
     from pdf_brain_spark.operators import dedup
 
     pairs = spark.createDataFrame(
@@ -610,4 +611,21 @@ def test_connected_components_distributed_branch_build_jobs(spark, monkeypatch, 
     )
     monkeypatch.setattr(dedup, "UNION_FIND_MAX_EDGES", 0)
     _, jobs = jobs_fired(lambda: dedup.connected_components(pairs))
-    assert jobs <= 77
+    assert jobs <= 75
+
+
+def test_connected_components_driver_branch_build_jobs(spark, monkeypatch, jobs_fired):
+    """The union-find branch reads its edge count from the edges
+    checkpoint's own job, so it builds with at most 4 jobs; both branches
+    return no rows for no pairs."""
+    from pdf_brain_spark.operators import dedup
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)] + [(20, 21)], "doc_a long, doc_b long"
+    )
+    _, jobs = jobs_fired(lambda: dedup.connected_components(pairs))
+    assert jobs <= 4
+    empty = pairs.limit(0)
+    assert dedup.connected_components(empty).collect() == []
+    monkeypatch.setattr(dedup, "UNION_FIND_MAX_EDGES", 0)
+    assert dedup.connected_components(empty).collect() == []

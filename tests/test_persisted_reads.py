@@ -368,18 +368,13 @@ def test_persisted_bm25_no_match_and_partial_match(spark, fts_store):
 # --- one listing per operation --------------------------------------------------
 
 
-def test_persisted_read_builds_list_the_store_root_once(spark, monkeypatch, fts_store, ann_stores):
-    """A persisted BM25 build and a persisted IVF build each list the store
-    root once, on a store with two live generations and a tombstone above
-    the compaction frontier: the generations, the frontier, the
-    tombstones and the layout marker all come from that one listing."""
+@pytest.fixture
+def listed(monkeypatch):
+    """The paths every `listStatus` of the generation lifecycle lists, in
+    call order (a counting wrapper around `generations._fs`)."""
     from pdf_brain_spark.streaming import generations
-    from pdf_brain_spark.streaming.ann_ingest import ivf_search_persisted
-    from pdf_brain_spark.streaming.events import fts_search_persisted
 
-    idx, _ = fts_store
-    stores, centroids = ann_stores
-    listed = []
+    paths = []
     real_fs = generations._fs
 
     class CountingFs:
@@ -387,7 +382,7 @@ def test_persisted_read_builds_list_the_store_root_once(spark, monkeypatch, fts_
             self._fs = fs
 
         def listStatus(self, path):
-            listed.append(str(path.toString()))
+            paths.append(str(path.toString()))
             return self._fs.listStatus(path)
 
         def __getattr__(self, name):
@@ -398,6 +393,20 @@ def test_persisted_read_builds_list_the_store_root_once(spark, monkeypatch, fts_
         return HPath, CountingFs(fs)
 
     monkeypatch.setattr(generations, "_fs", counting_fs)
+    return paths
+
+
+def test_persisted_read_builds_list_the_store_root_once(spark, listed, fts_store, ann_stores):
+    """A persisted BM25 build and a persisted IVF build each list the store
+    root once, on a store with two live generations and a tombstone above
+    the compaction frontier: the generations, the frontier, the
+    tombstones and the layout marker all come from that one listing."""
+    from pdf_brain_spark.streaming import generations
+    from pdf_brain_spark.streaming.ann_ingest import ivf_search_persisted
+    from pdf_brain_spark.streaming.events import fts_search_persisted
+
+    idx, _ = fts_store
+    stores, centroids = ann_stores
     builds = {idx: lambda: fts_search_persisted(spark, idx, TERMS, k=10)}
     q = [0.1] * len(centroids[0])
     for store in stores.values():
@@ -410,6 +419,34 @@ def test_persisted_read_builds_list_the_store_root_once(spark, monkeypatch, fts_
         listed.clear()
         build()
         assert listed.count(store) == 1, (store, listed)
+
+
+def test_index_delete_and_compaction_listings_do_not_grow_with_generations(
+    spark, listed, tmp_path
+):
+    """A row-index delete and compaction make as many `listStatus` calls
+    on a store with 5 live generations as on one with 1: row-index
+    generations carry no write-sequence marker, whose next value would be
+    found by listing every generation dir."""
+    from pdf_brain_spark.streaming.events import BAND_INDEX
+
+    def listings(n_gens):
+        idx = str(tmp_path / f"band_{n_gens}")
+        for b in range(n_gens):
+            rows = spark.createDataFrame(
+                [(b * 10 + i, i % 3, f"{b}-{i}") for i in range(4)],
+                "doc_id long, band int, bucket string",
+            )
+            BAND_INDEX.write(spark, BAND_INDEX.listing(spark, idx), rows, b)
+        keys = spark.createDataFrame([(0,), (1,)], "doc_id long")
+        listed.clear()
+        BAND_INDEX.delete(spark, idx, keys, n_gens - 1)
+        n_delete = len(listed)
+        listed.clear()
+        assert BAND_INDEX.compact(spark, idx, n_gens - 1) == n_gens + 1
+        return n_delete, len(listed)
+
+    assert listings(1) == listings(5)
 
 
 def test_fts_store_in_the_two_store_layout_raises_by_name(spark, tmp_path):

@@ -90,24 +90,6 @@ def test_kmeans_assignment_is_map_only_and_deterministic(spark):
     assert r1 == r2
 
 
-def test_soft_assignments_map_only(spark):
-    """Per-row softmax over broadcast centroids must not shuffle: the
-    previous explode+window shape repartitioned N×k rows just to compute
-    a row-local max/sum."""
-    from pdf_brain_spark.operators.clustering import kmeans_assign, soft_assignments
-
-    from pdf_brain_spark.sources.loaders import load_table
-
-    emb = load_table(spark, "embeddings", "/root/testdata/sf0.001")
-    _, centroids = kmeans_assign(emb, k=4, seed=42)
-    soft = soft_assignments(emb, centroids)
-    assert "Exchange" not in _plan(soft)
-    rows = soft.collect()
-    assert len(rows) > 0
-    # probabilities for one vec sum to <= 1 and every row passes the floor
-    assert all(r.probability >= 0.1 for r in rows)
-
-
 def test_range_clustering_enables_file_pruning(spark, tmp_path):
     """Range-clustered writes must produce narrow disjoint per-file
     [min,max] spans so footer stats prune files; a hash-shuffled write of

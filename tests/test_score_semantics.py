@@ -10,7 +10,6 @@ from pdf_brain_spark.functions.vector import (
     cosine_distance,
     distance_to_score,
     score_threshold_to_distance,
-    similarity_score,
 )
 
 
@@ -38,8 +37,9 @@ def test_score_mapping_known_answers(spark, vec_df):
         for r in vec_df.select(
             "name",
             cosine_distance("a", "b").alias("d"),
-            similarity_score("a", "b").alias("s"),
-        ).collect()
+        )
+        .select("name", "d", distance_to_score("d").alias("s"))
+        .collect()
     }
     assert rows["same"]["d"] == pytest.approx(0.0)
     assert rows["same"]["s"] == pytest.approx(1.0)
